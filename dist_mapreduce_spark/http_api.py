@@ -28,6 +28,9 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from dist_mapreduce_spark.api import COMPLETED, JobRunner
 
+#: Largest POST /jobs body accepted; a job request is a list of paths.
+MAX_BODY_BYTES = 1 << 20
+
 
 def _make_handler(runner: JobRunner):
     class Handler(BaseHTTPRequestHandler):
@@ -72,16 +75,36 @@ def _make_handler(runner: JobRunner):
                 self._text(404, "Not found")
 
         def _submit(self) -> None:
+            # The body comes from outside the program: bound it before
+            # reading (a negative length would make rfile.read block
+            # until the client closes) and check every field's type.
             try:
                 n = int(self.headers.get("Content-Length", "0"))
+            except ValueError:
+                n = -1
+            if not 0 <= n <= MAX_BODY_BYTES:
+                self._text(400, "Invalid Content-Length")
+                return
+            try:
                 req = json.loads(self.rfile.read(n) or b"{}")
             except (ValueError, json.JSONDecodeError):
                 self._text(400, "Invalid request body")
                 return
-            files = req.get("files") or []
+            if not isinstance(req, dict):
+                self._text(400, "Invalid request body")
+                return
+            files = req.get("files")
             n_reduce = req.get("nReduce", 0)
-            # Validation mirrors handleJobs (server.go:62-65).
-            if not files or not isinstance(n_reduce, int) or n_reduce <= 0:
+            # Validation mirrors handleJobs (server.go:62-65), plus the
+            # types Go's json.Unmarshal into []string / int enforces.
+            if (
+                not isinstance(files, list)
+                or not files
+                or not all(isinstance(f, str) for f in files)
+                or not isinstance(n_reduce, int)
+                or isinstance(n_reduce, bool)
+                or n_reduce <= 0
+            ):
                 self._text(400, "Invalid parameters")
                 return
             job_id = runner.submit_job(files, n_reduce)

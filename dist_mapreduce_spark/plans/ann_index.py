@@ -64,7 +64,6 @@ from dist_mapreduce_spark.plans.similarity import (
     TRAINED_CELLS_CTE,
     TRAINED_NPROBE_CTES,
     assign_cells,
-    gemm_assign_cells,
     ivf_cells_df,
     ivf_probes_df,
     ivf_py_probe_cells,
@@ -72,7 +71,6 @@ from dist_mapreduce_spark.plans.similarity import (
     lsh_candidates,
     py_dot,
     trained_n_probe,
-    trained_probes_cte,
     trained_quantizer,
     trained_topk_oracle,
 )
@@ -138,7 +136,7 @@ def build_ivf_index(
     integer k-means, K from the corpus-size rule); n_corpus feeds the
     probe-count rule at serving time. The write is the ingest-time
     step a 100 TB deployment runs once: cell assignment is a pure map
-    over one corpus scan (literal centroids), and partitionBy('cell')
+    over one corpus scan (the GEMM stage), and partitionBy('cell')
     lays each cell in its own directory so probes become partition
     pruning. Within one process the build (and the training) really
     does run once — subsequent calls (the serving queries) reuse the
@@ -154,9 +152,7 @@ def build_ivf_index(
     # Same assignment as ivf_cells_df, with `label` riding along so
     # metadata-filtered serving (sim_topk_filtered_ivf) can push its
     # predicate into the pruned scan (PushedFilters) instead of
-    # joining attributes back at query time. Routed through the
-    # assignment dispatcher: literal expression by default, numpy GEMM
-    # under SPARK_GRAFT_ASSIGN=gemm (the stress-scale path).
+    # joining attributes back at query time.
     cells = assign_cells(spark, emb, cent_rows).select(
         "vec_id", "embedding", "label", "cell"
     )
@@ -202,65 +198,6 @@ def q_sim_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.parquet(path)
     return (
         back.groupBy(F.col("cell").cast("long").alias("cell"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.expr(
-                f"CAST(sum(CAST(vec_id AS DECIMAL(38,0))) % {CHECKSUM_MOD}"
-                f" AS BIGINT)"
-            ).alias("id_sum"),
-            F.min("vec_id").alias("min_id"),
-            F.max("vec_id").alias("max_id"),
-            F.sum(F.size("embedding").cast("long")).alias("dim_sum"),
-        )
-    )
-
-
-@query(
-    "sim_index_build_gemm",
-    oracle=(
-        f"WITH {TRAINED_CELLS_CTE}"
-        f" SELECT CAST(cell AS BIGINT) AS cell,"
-        f"  CAST(count(*) AS BIGINT) AS n_vecs,"
-        f"  CAST(sum(CAST(vec_id AS HUGEINT)) % {CHECKSUM_MOD} AS BIGINT)"
-        f"   AS id_sum,"
-        f"  min(vec_id) AS min_id, max(vec_id) AS max_id,"
-        f"  CAST(sum(CAST(len(embedding) AS BIGINT)) AS BIGINT) AS dim_sum"
-        f" FROM cells GROUP BY cell"
-    ),
-)
-def q_sim_index_build_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim_index_build's per-cell audit with the assignment stage run
-    as the numpy GEMM (round-11 verdict item #1, mode FORCED — not the
-    env default): scores computed as one batch×k×dim BLAS multiply per
-    Arrow batch inside mapInPandas instead of the O(N·k·dim) literal
-    generated expression. The oracle is sim_index_build's VERBATIM —
-    DuckDB replays the sequential-fold literal semantics — so a PASS
-    value-proves the GEMM argmax lands every vector in the same cell
-    the expression path does, on the full gate corpus including its
-    degenerate rows. This is the production assignment for stress-
-    scale k·dim (SCALE.md names the literal assignment as the dominant
-    trained-index cost at 20×+); the literal path stays the default.
-
-    Scale shape: one corpus scan, no shuffle (mapInPandas is
-    partition-preserving after the dispatcher's repartition); driver
-    state is the k×dim centroid matrix (≤ K_MAX·64 doubles), shipped
-    once per executor via the closure."""
-    emb = _emb(spark, sf_dir)
-    cent_rows, _n = trained_quantizer(emb)
-    if not cent_rows:
-        return spark.createDataFrame(
-            [],
-            "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
-            " max_id bigint, dim_sum bigint",
-        )
-    # Project BEFORE the Arrow stage: mapInPandas is opaque to column
-    # pruning, so an un-projected input would drag `label` through the
-    # scan and the Python transfer for nothing.
-    cells = assign_cells(
-        spark, emb.select("vec_id", "embedding"), cent_rows, mode="gemm"
-    )
-    return (
-        cells.groupBy(F.col("cell").cast("long").alias("cell"))
         .agg(
             F.count(F.lit(1)).alias("n_vecs"),
             F.expr(
@@ -687,7 +624,7 @@ def q_sim_cand_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     if cent_rows:
         ranked = ivf_ranked_cells_sql(cent_rows)
         ivf_c = (
-            ivf_cells_df(spark, emb, ranked, cent_rows)
+            ivf_cells_df(spark, emb, cent_rows)
             .join(
                 F.broadcast(
                     ivf_probes_df(
@@ -1032,7 +969,7 @@ def q_sim_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized ANN index live at 100 TB: the corpus is split into a
     base (16/17) and a deterministic 'new arrivals' batch (1/17); the
     base is written as the partitioned index, then the new batch is
-    assigned cells with the SAME literal centroids and appended into
+    assigned cells with the SAME frozen centroids and appended into
     the existing cell directories (`mode('append')` under
     partitionBy — new files land inside each cell's directory, no
     rewrite of the base). The audit is sim_index_build's oracle
@@ -1056,13 +993,12 @@ def q_sim_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
             " max_id bigint, dim_sum bigint",
         )
-    ranked = ivf_ranked_cells_sql(cent_rows)
     is_new = F.col("vec_id") % APPEND_MOD == APPEND_REM
-    base = ivf_cells_df(spark, emb.filter(~is_new), ranked, cent_rows)
+    base = ivf_cells_df(spark, emb.filter(~is_new), cent_rows)
     # Overwrite clears any previous run's directory, so the append
     # below is idempotent run-to-run.
     base.write.mode("overwrite").partitionBy("cell").parquet(path)
-    batch = ivf_cells_df(spark, emb.filter(is_new), ranked, cent_rows)
+    batch = ivf_cells_df(spark, emb.filter(is_new), cent_rows)
     batch.write.mode("append").partitionBy("cell").parquet(path)
     back = spark.read.parquet(path)
     return (
@@ -1163,17 +1099,16 @@ def q_sim_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
             " max_id bigint, dim_sum bigint",
         )
-    ranked = ivf_ranked_cells_sql(cent_rows)
     # Fresh full build each run (the demo needs a pre-delete index; a
     # production deployment starts from the live one).
-    write_index_base(ivf_cells_df(spark, emb, ranked, cent_rows), path)
+    write_index_base(ivf_cells_df(spark, emb, cent_rows), path)
     is_del = F.expr(_DELETE_PRED_SQL)
     tomb = emb.filter(is_del).select("vec_id")
     # Affected cells: assign ONLY the tombstone batch (pure map over
     # ~1% of rows), pull the distinct cell ids — bounded by k.
     del_cells = sorted(
         int(r["cell"])
-        for r in ivf_cells_df(spark, emb.filter(is_del), ranked, cent_rows)
+        for r in ivf_cells_df(spark, emb.filter(is_del), cent_rows)
         .select("cell")
         .distinct()
         .collect()
@@ -1280,9 +1215,8 @@ def q_sim_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
             " max_id bigint, dim_sum bigint",
         )
-    ranked = ivf_ranked_cells_sql(cent_rows)
     # Fresh full build each run (pre-upsert state).
-    write_index_base(ivf_cells_df(spark, emb, ranked, cent_rows), path)
+    write_index_base(ivf_cells_df(spark, emb, cent_rows), path)
     is_ups = F.expr(_UPSERT_PRED_SQL)
     new_batch = (
         emb.filter(is_ups)
@@ -1290,12 +1224,12 @@ def q_sim_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     old_cells = {
         int(r["cell"])
-        for r in ivf_cells_df(spark, emb.filter(is_ups), ranked, cent_rows)
+        for r in ivf_cells_df(spark, emb.filter(is_ups), cent_rows)
         .select("cell")
         .distinct()
         .collect()
     }
-    new_assigned = ivf_cells_df(spark, new_batch, ranked, cent_rows)
+    new_assigned = ivf_cells_df(spark, new_batch, cent_rows)
     new_cells = {
         int(r["cell"])
         for r in new_assigned.select("cell").distinct().collect()
@@ -1522,17 +1456,16 @@ def staleness_decision_df(
         train_sample_stride,
     )
 
-    ranked = ivf_ranked_cells_sql(cent_frozen)
     upsnn = ups.filter(F.col("embedding").isNotNull())
-    cells = ivf_cells_df(spark, upsnn, ranked, cent_frozen)
+    cells = ivf_cells_df(spark, upsnn, cent_frozen)
     # The statistic runs on the fresh TRAINER'S SAMPLE (the oracle's
     # fe frame — stride 1 = everything at gate scales; round 10).
     q = cells.filter(
         F.expr(train_sample_pred_spark(train_sample_stride(n2)))
     ).select("vec_id", "cell", kmeans_quantize_col().alias("q"))
-    fcells = ivf_cells_df(
-        spark, upsnn, ivf_ranked_cells_sql(cent_fresh), cent_fresh
-    ).select("vec_id", F.col("cell").alias("fcell"))
+    fcells = ivf_cells_df(spark, upsnn, cent_fresh).select(
+        "vec_id", F.col("cell").alias("fcell")
+    )
     gvec = [
         int(r["g"])
         for r in (
@@ -1660,9 +1593,7 @@ def build_retrained_index(
     fp = _corpus_fingerprint(sf_dir)
     if _RETRAINED_BUILT.get(path) == fp and os.path.isdir(path):
         return path, cent_fresh, n
-    cells = ivf_cells_df(
-        spark, ups, ivf_ranked_cells_sql(cent_fresh), cent_fresh
-    )
+    cells = ivf_cells_df(spark, ups, cent_fresh)
     # Atomic publish (round-13): the fresh assignment lands as a new
     # generation and ONE manifest flip replaces the old index — a
     # crash mid-retrain leaves the previous generation current.
@@ -1704,9 +1635,8 @@ def q_sim_index_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     →staleness-to-zero walk is pytest-pinned on the shifted fixture.
 
     Scale shape: one training run (on the trainer's sample), one
-    corpus scan for assignment (literal path by default; the GEMM
-    stage under SPARK_GRAFT_ASSIGN=gemm — a retrain is exactly the
-    stress-scale full-corpus assignment the GEMM exists for), one
+    corpus scan for assignment (the GEMM stage — a retrain is exactly
+    the stress-scale full-corpus assignment it exists for), one
     partitioned write, one narrow read-back aggregate. Unlike
     upsert/delete this rewrite is intentionally FULL: fresh centroids
     can move any vector, so there is no affected-cell subset to stage."""
@@ -1990,13 +1920,12 @@ def q_sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
             " max_id bigint, dim_sum bigint",
         )
-    ranked = ivf_ranked_cells_sql(cent_rows)
     mod = COMPACT_BATCHES + 1
     # Assign cells ONCE and cache (reads only the immutable source
     # parquet, never the index path this query rewrites) — the 7
     # micro-batch writes then filter the cached assignment instead of
     # re-evaluating the centroid expression per batch.
-    cells_all = ivf_cells_df(spark, emb, ranked, cent_rows).withColumn(
+    cells_all = ivf_cells_df(spark, emb, cent_rows).withColumn(
         "b", F.col("vec_id") % mod
     )
     cells_all.cache()
@@ -2094,7 +2023,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("canonical_id"),
             F.lit(False).alias("is_dup"),
         )
-    cells = ivf_cells_df(spark, emb, ivf_ranked_cells_sql(cent_rows), cent_rows)
+    cells = ivf_cells_df(spark, emb, cent_rows)
     a, b = cells.alias("a"), cells.alias("b")
     dup = (
         a.join(
@@ -2132,7 +2061,7 @@ def q_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING ingest into the materialized ANN index — the live form
     of sim_index_append, which is how a production vector store is
     actually fed: embeddings arrive on a stream, each micro-batch is
-    assigned cells with the frozen literal quantizer (a pure map inside
+    assigned cells with the frozen quantizer (a pure map inside
     foreachBatch) and appended into the existing cell directories. The
     arrivals slice (1/17 of the corpus) is staged as 3 files and
     consumed with maxFilesPerTrigger=1, so the append really exercises
@@ -2172,7 +2101,7 @@ def q_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = F.col("vec_id") % APPEND_MOD == APPEND_REM
     # Bulk backfill: base index, overwrite (clears prior runs), staged
     # as ingest_batch=-1 under each cell directory.
-    ivf_cells_df(spark, emb.filter(~is_new), ranked, cent_rows).withColumn(
+    ivf_cells_df(spark, emb.filter(~is_new), cent_rows).withColumn(
         "ingest_batch", F.lit(-1)
     ).write.mode("overwrite").partitionBy("cell", "ingest_batch").parquet(path)
     # Stage the streaming tail as 3 files -> 3 micro-batches.
@@ -3542,7 +3471,7 @@ def q_contamination_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ranked = ivf_ranked_cells_sql(cent_rows)
     is_eval = F.col("vec_id") % CONTAM_MOD == CONTAM_REM
-    tr = ivf_cells_df(spark, emb.filter(~is_eval), ranked, cent_rows)
+    tr = ivf_cells_df(spark, emb.filter(~is_eval), cent_rows)
     ev = (
         emb.filter(is_eval & F.col("embedding").isNotNull())
         .select(
@@ -3780,10 +3709,10 @@ def q_sim_index_delete_fm(spark: SparkSession, sf_dir: str) -> DataFrame:
     protocol (partition columns as data columns, untouched cells
     carried by manifest RE-LISTING with zero data movement, reads off
     the pruned explicit file list via index_read) is content-exact to
-    the id-checksum level — the certification pattern
-    sim_index_build_gemm established for the GEMM kernel, applied to
-    the publication layer. Kill-mid-swap in this mode is pinned
-    separately in tests/test_index_commit.py.
+    the id-checksum level — the verbatim-oracle certification pattern
+    of the index lifecycle, applied to the publication layer.
+    Kill-mid-swap in this mode is pinned separately in
+    tests/test_index_commit.py.
 
     Scale shape: identical to sim_index_delete (tombstone assignment
     is a pure map over the ~1% batch; the rewrite reads only affected
@@ -3806,9 +3735,8 @@ def q_sim_index_delete_fm(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
             " max_id bigint, dim_sum bigint",
         )
-    ranked = ivf_ranked_cells_sql(cent_rows)
     write_index_base(
-        ivf_cells_df(spark, emb, ranked, cent_rows),
+        ivf_cells_df(spark, emb, cent_rows),
         path,
         mode="file_manifest",
     )
@@ -3816,7 +3744,7 @@ def q_sim_index_delete_fm(spark: SparkSession, sf_dir: str) -> DataFrame:
     tomb = emb.filter(is_del).select("vec_id")
     del_cells = sorted(
         int(r["cell"])
-        for r in ivf_cells_df(spark, emb.filter(is_del), ranked, cent_rows)
+        for r in ivf_cells_df(spark, emb.filter(is_del), cent_rows)
         .select("cell")
         .distinct()
         .collect()
@@ -3900,8 +3828,7 @@ def q_sim_index_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _index_dir("ivf_index_pin", sf_dir)
     if not cent_rows:
         return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
-    ranked = ivf_ranked_cells_sql(cent_rows)
-    write_index_base(ivf_cells_df(spark, emb, ranked, cent_rows), path)
+    write_index_base(ivf_cells_df(spark, emb, cent_rows), path)
     # The pin is NOT context-managed here: the returned DataFrame is
     # lazy and the harness materializes it after this function exits,
     # so releasing on exit would drop the protection before the read
@@ -3915,9 +3842,7 @@ def q_sim_index_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tomb = emb.filter(is_del).select("vec_id")
     del_cells = sorted(
         int(r["cell"])
-        for r in ivf_cells_df(
-            spark, emb.filter(is_del), ranked, cent_rows
-        )
+        for r in ivf_cells_df(spark, emb.filter(is_del), cent_rows)
         .select("cell")
         .distinct()
         .collect()
@@ -3974,8 +3899,7 @@ def q_sim_index_migrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _index_dir("ivf_index_mig", sf_dir)
     if not cent_rows:
         return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
-    ranked = ivf_ranked_cells_sql(cent_rows)
-    cells = ivf_cells_df(spark, emb, ranked, cent_rows)
+    cells = ivf_cells_df(spark, emb, cent_rows)
     write_index_base(cells, path, mode="hardlink")
     # The migration: same content, explicit new mode, one rebuild.
     write_index_base(cells, path, mode="file_manifest")
@@ -3984,7 +3908,7 @@ def q_sim_index_migrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tomb = emb.filter(is_del).select("vec_id")
     del_cells = sorted(
         int(r["cell"])
-        for r in ivf_cells_df(spark, emb.filter(is_del), ranked, cent_rows)
+        for r in ivf_cells_df(spark, emb.filter(is_del), cent_rows)
         .select("cell")
         .distinct()
         .collect()

@@ -64,7 +64,6 @@ from dist_mapreduce_spark.plans.similarity import (
     TRAINED_CELLS_CTE,
     TRAINED_NPROBE_CTES,
     ivf_cells_df,
-    ivf_ranked_cells_sql,
     trained_quantizer,
 )
 from dist_mapreduce_spark.sources.tables import load_table
@@ -159,10 +158,8 @@ def q_sim_codebook_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ints = {
         cid: [int(x * KMEANS_SCALE) for x in fv] for cid, fv in cent_rows
     }
-    ranked = ivf_ranked_cells_sql(cent_rows)
     cells = ivf_cells_df(
-        spark, emb.filter(F.col("embedding").isNotNull()), ranked,
-        cent_rows,
+        spark, emb.filter(F.col("embedding").isNotNull()), cent_rows
     )
     # The statistic runs on the TRAINER'S SAMPLE (round 10 — the
     # oracle's gm/st read the e frame, which is the sampled trainer

@@ -260,36 +260,22 @@ def kmeans_sqdist(vec, c: list[int]):
     )
 
 
-def kmeans_assign(df: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """(vec_id, q, cluster): nearest-centroid assignment — argmin over
-    (dist, cid) structs; lexicographic struct ordering IS the
-    deterministic tie-break both dialects share."""
-    dists = F.array(
-        *[
-            F.struct(
-                kmeans_sqdist(F.col("q"), c).alias("d"),
-                F.lit(i).cast("int").alias("cid"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    return df.select("vec_id", "q", F.array_min(dists)["cid"].alias("cluster"))
-
-
 def kmeans_assign_gemm(df: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """kmeans_assign as one int64 numpy GEMM per Arrow batch — and
-    unlike the FLOAT serving assignment (similarity.gemm_assign_cells,
-    which matches the literal path only set-equal because BLAS reorders
-    IEEE additions), this twin is BIT-IDENTICAL BY CONSTRUCTION: the
+    """(vec_id, q, cluster): nearest-centroid assignment by exact int64
+    squared L2, as one numpy GEMM per Arrow batch. Unlike the FLOAT
+    serving assignment (similarity.gemm_assign_cells, whose BLAS
+    accumulation order differs from the oracle's sequential fold),
+    this is BIT-IDENTICAL to the DuckDB replay BY CONSTRUCTION: the
     quantized frame and centroids are int64, ||x−c||² expands to
     ||x||² − 2x·c + ||c||² in exact integer arithmetic (|x·c| ≤
     64·2^21·2^21 = 2^48, no overflow), the per-row constant ||x||²
     drops out of the argmin, and numpy int64 matmul has no rounding to
-    reorder. Tie-break: np.argmin's first index = the literal path's
+    reorder. Tie-break: np.argmin's first index = the oracle's
     lexicographic (d, cid) minimum, centroid index being the cid.
     Degenerate rows (q NULL / ragged length / NULL element) make EVERY
-    literal distance NULL, so the struct minimum falls to cid 0 —
-    replicated here. Pinned bit-equal by tests/test_gemm_assign.py."""
+    SQL distance NULL, so the struct minimum falls to cid 0 —
+    replicated here. Pinned against a SQL reference by
+    tests/test_gemm_assign.py."""
     import numpy as _np
 
     cmat = _np.asarray(centroids, dtype=_np.int64)      # k×dim
@@ -315,8 +301,8 @@ def kmeans_assign_gemm(df: DataFrame, centroids: list[list[int]]) -> DataFrame:
                 a = _np.asarray(v)
                 if a.shape != (dim,) or a.dtype.kind not in "iu":
                     # object dtype = a None element rode along; ragged
-                    # lengths NULL every literal distance — both fall
-                    # to cluster 0 like the literal path.
+                    # lengths NULL every SQL distance — both fall to
+                    # cluster 0 like the oracle.
                     continue
                 idx.append(i)
                 rows.append(a.astype(_np.int64, copy=False))
@@ -333,19 +319,6 @@ def kmeans_assign_gemm(df: DataFrame, centroids: list[list[int]]) -> DataFrame:
     return df.mapInPandas(_assign, out_schema).select(
         "vec_id", "q", "cluster"
     )
-
-
-def _assign_dispatch(df: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """The trainer's assignment stage under the global assignment-mode
-    switch (SPARK_GRAFT_ASSIGN): literal generated expression by
-    default, the bit-identical int64 GEMM under 'gemm' — per Lloyd's
-    round this is the O(S·k·dim) term, the trainer's dominant cost at
-    stress-scale k."""
-    from dist_mapreduce_spark.plans.similarity import assign_mode
-
-    if assign_mode() == "gemm":
-        return kmeans_assign_gemm(df, centroids)
-    return kmeans_assign(df, centroids)
 
 
 def train_kmeans_centroids(
@@ -393,7 +366,7 @@ def train_kmeans_centroids_df(emb, k: int) -> list[list[int]]:
     # +3–8 s per training run at the 20× stress. The explode is the
     # form that keeps codegen.)
     for _ in range(N_ITER):
-        assigned = _assign_dispatch(emb, centroids)
+        assigned = kmeans_assign_gemm(emb, centroids)
         new_rows = (
             assigned.select("cluster", F.posexplode("q").alias("dim", "val"))
             .groupBy("cluster", "dim")
@@ -424,10 +397,10 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     every round is bit-reproducible and DuckDB replays the identical
     5 rounds as an unrolled CTE chain (_duck_kmeans_oracle).
 
-    Per round, entirely declarative:
-    1. assignment: integer squared-L2 per broadcast centroid via an
-       aggregate() fold; argmin = array_min over (dist, cid) structs —
-       lexicographic struct ordering IS the deterministic tie-break;
+    Per round:
+    1. assignment: exact int64 squared-L2 argmin as one numpy GEMM per
+       Arrow batch (kmeans_assign_gemm); the first-index argmin is the
+       oracle's (dist, cid) struct-minimum tie-break;
     2. update: posexplode the vector, ONE shuffle of k×dim partial
        sums (map-side combine), floor-div means, collect k×dim ints to
        the driver and rebuild centroid literals for the next round.
@@ -447,7 +420,7 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cluster int, n_vectors bigint, centroid_sum bigint,"
             " centroid_norm2 bigint",
         )
-    final = _assign_dispatch(emb, centroids)
+    final = kmeans_assign_gemm(emb, centroids)
     sizes = final.groupBy("cluster").agg(F.count("*").alias("n_vectors"))
     sum_lit = F.array(*[F.lit(sum(c)).cast("long") for c in centroids])
     norm2_lit = F.array(

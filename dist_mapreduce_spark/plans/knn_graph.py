@@ -85,37 +85,19 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _residency_explode(
-    spark: SparkSession,
-    emb: DataFrame,
-    cent_rows: list,
-    mode: str | None = None,
+    spark: SparkSession, emb: DataFrame, cent_rows: list
 ) -> DataFrame:
     """(vec_id, embedding, rcell): each vector exploded to its
-    KNN_RESIDENCY nearest cells. Literal ranked expression by default
-    (bit-tied to the oracle's rkd chain); under SPARK_GRAFT_ASSIGN=gemm
-    the top-R ranking runs as one numpy GEMM per Arrow batch
-    (gemm_rank_cells — the same prefix, stable-argsort tiebreak), which
-    removes the O(N·k·dim) generated expression from the build's
-    assignment stage (round-12 verdict item #1)."""
-    from dist_mapreduce_spark.plans.similarity import (
-        assign_mode,
-        gemm_rank_cells,
-    )
+    KNN_RESIDENCY nearest cells. The top-R ranking runs as one numpy
+    GEMM per Arrow batch (gemm_rank_cells — the oracle's rkd prefix,
+    stable-argsort tiebreak, exact rescore on near-ties), so the
+    build's assignment stage never evaluates an O(N·k·dim) generated
+    expression."""
+    from dist_mapreduce_spark.plans.similarity import gemm_rank_cells
 
     spread = emb.repartition(spark.sparkContext.defaultParallelism)
-    if (mode or assign_mode()) == "gemm":
-        return gemm_rank_cells(spread, cent_rows, KNN_RESIDENCY).select(
-            "vec_id", "embedding", F.explode("rcells").alias("rcell")
-        )
-    ranked = ivf_ranked_cells_sql(cent_rows)
-    return spread.select(
-        "vec_id",
-        "embedding",
-        F.explode(
-            F.expr(
-                f"transform(slice({ranked}, 1, {KNN_RESIDENCY}), x -> x.c)"
-            )
-        ).alias("rcell"),
+    return gemm_rank_cells(spread, cent_rows, KNN_RESIDENCY).select(
+        "vec_id", "embedding", F.explode("rcells").alias("rcell")
     )
 
 
@@ -135,12 +117,12 @@ def _residency_explode(
 #: evicted eagerly (their session is dead; the blocks died with its
 #: JVM, unpersist is a best-effort no-op). (2) Live-session entries
 #: use LRU (a memo hit refreshes recency) with a cap sized well above
-#: the gate sweep's working set (3 scales × 2 modes = 6 keys;
-#: append/delete insert 2 keys per call). Contract for callers that
-#: HOLD returned frames across further knn_res_frame calls: a frame
-#: is guaranteed alive only for the next _RES_MEMO_CAP-1 distinct
-#: (corpus, mode) keys touched — re-call knn_res_frame (a hit is
-#: free and refreshes recency) rather than caching frames externally.
+#: the gate sweep's working set (3 scales = 3 keys; append/delete
+#: insert 2 keys per call). Contract for callers that HOLD returned
+#: frames across further knn_res_frame calls: a frame is guaranteed
+#: alive only for the next _RES_MEMO_CAP-1 distinct corpus keys
+#: touched — re-call knn_res_frame (a hit is free and refreshes
+#: recency) rather than caching frames externally.
 from collections import OrderedDict as _OrderedDict
 
 _RES_MEMO: "_OrderedDict" = _OrderedDict()
@@ -148,10 +130,7 @@ _RES_MEMO_CAP = 16
 
 
 def knn_res_frame(
-    spark: SparkSession,
-    emb: DataFrame,
-    cent_rows: list,
-    mode: str | None = None,
+    spark: SparkSession, emb: DataFrame, cent_rows: list
 ) -> tuple[DataFrame, DataFrame]:
     """(res, rsplit): the blocked-residency frame every build query
     joins on — each conforming vector exploded to its KNN_RESIDENCY
@@ -164,15 +143,10 @@ def knn_res_frame(
     Memoized + localCheckpoint'd per (corpus fingerprint, centroid
     set): build, refine, and monitor share ONE materialization — at
     100 TB this is the residency table an ingest job writes once."""
-    from dist_mapreduce_spark.plans.similarity import (
-        _frame_fingerprint,
-        assign_mode,
-    )
+    from dist_mapreduce_spark.plans.similarity import _frame_fingerprint
 
-    mode = mode or assign_mode()
     key = (
         spark.sparkContext.applicationId,
-        mode,
         _frame_fingerprint(emb),
         tuple((cid, tuple(cv)) for cid, cv in cent_rows),
     )
@@ -180,7 +154,7 @@ def knn_res_frame(
     if hit is not None:
         _RES_MEMO.move_to_end(key)  # LRU: refresh recency on hit
         return hit
-    res0 = _residency_explode(spark, emb, cent_rows, mode)
+    res0 = _residency_explode(spark, emb, cent_rows)
     wc = Window.partitionBy("rcell").orderBy("vec_id")
     rpos = res0.withColumn("gpos", F.row_number().over(wc) - 1)
     rsplit = (
@@ -281,7 +255,7 @@ _KNN_RES_CTES = (
 #: has a GEMM score within EPS of the GEMM kth best — keeping
 #: everything ≥ kth−EPS guarantees the exact top-K survives
 #: pre-selection (the selected pairs are then EXACT-rescored, so the
-#: output is bit-identical to the literal build).
+#: output's top-K is bit-identical to the oracle's full pair chain).
 _GEMM_PAIR_EPS = 1e-9
 
 
@@ -361,7 +335,7 @@ def _gemm_block_candidates(
       reasoning.
 
     Plan: one shuffle of the res frame on (rcell, sub) — the SAME key
-    the literal path's self-join hashes on — then one Arrow stage per
+    the oracle's self-join hashes on — then one Arrow stage per
     block; output is ~N·R·K narrow id pairs, never the m² score rows."""
     import numpy as _np
     import pandas as _pd
@@ -401,8 +375,8 @@ def _gemm_block_candidates(
                 G = (V @ V.T) / nrm[None, :] / nrm[:, None]
             diag = _np.eye(c, dtype=bool)
             # allowed[i, j]: is (i -> j) inside the candidate pool?
-            # The diagonal is ALWAYS masked (the literal predicate's
-            # vec_id != vec_id — the round-13 self-pair fix).
+            # The diagonal is ALWAYS masked (the oracle predicate's
+            # vec_id <> vec_id — the round-13 self-pair fix).
             allowed = ~diag
             if flags is not None:
                 fb = flags[clean]
@@ -492,7 +466,7 @@ def _gemm_block_candidates(
 
 
 def _exact_pair_rescore(cand: DataFrame, vecs: DataFrame) -> DataFrame:
-    """Exact (literal-fold) cosine for surviving candidate id pairs by
+    """Exact (sequential-fold) cosine for surviving candidate id pairs by
     id-join against the vector frame — the rescore stage every GEMM
     pre-selection feeds (bit-identical scores by construction)."""
     va = vecs.select(
@@ -512,46 +486,22 @@ def _exact_pair_rescore(cand: DataFrame, vecs: DataFrame) -> DataFrame:
     )
 
 
-def pair_scores(
-    res: DataFrame, vecs: DataFrame, mode: str | None = None
-) -> DataFrame:
+def pair_scores(res: DataFrame, vecs: DataFrame) -> DataFrame:
     """DISTINCT (src_id, dst_id, score) over the in-block candidate
-    pairs of `res` — the quadratic stage of the kNN build, behind the
-    repo's assignment-mode switch. Literal (default): the self-join on
-    (rcell, sub) with the per-pair JVM cosine fold, exactly the
-    oracle's pr CTE. GEMM (SPARK_GRAFT_ASSIGN=gemm): blockwise BLAS
-    pre-selection of each source's top-K±EPS cohabitants
+    pairs of `res` that can reach a source's top-KNN_K — the quadratic
+    stage of the kNN build. Blockwise
+    BLAS pre-selection of each source's top-K±EPS cohabitants
     (_gemm_block_candidates), then an EXACT rescore of only the
-    surviving ~N·R·K pairs by id-join against `vecs` — the output is
-    bit-identical to the literal path (pytest-pinned; the gate rows
-    pass under both modes), but the m²-per-block scoring runs as one
+    surviving ~N·R·K pairs by id-join against `vecs`: the top-K equals
+    the oracle's pr CTE (the self-join on (rcell, sub) with the
+    per-pair cosine fold), but the m²-per-block scoring runs as one
     matrix product per block instead of m² expression folds.
 
-    At 100 TB: the GEMM path shuffles the res frame once on the same
-    (rcell, sub) key the literal join uses, moves only narrow id pairs
-    afterward, and fetches vectors for surviving pairs by id-join —
-    the same rescore shape knn_graph_refine already proved."""
-    from dist_mapreduce_spark.plans.similarity import assign_mode
-
-    if (mode or assign_mode()) == "gemm":
-        return _exact_pair_rescore(_gemm_block_candidates(res), vecs)
-    a, b = res.alias("a"), res.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.rcell") == F.col("b.rcell"))
-            & (F.col("a.sub") == F.col("b.sub"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("src_id"),
-            F.col("b.vec_id").alias("dst_id"),
-            F.expr(cosine_spark_sql("a.embedding", "b.embedding")).alias(
-                "score"
-            ),
-        )
-        .distinct()
-    )
+    At 100 TB: the res frame shuffles once on the (rcell, sub) key,
+    only narrow id pairs move afterward, and vectors for surviving
+    pairs are fetched by id-join — the same rescore shape
+    knn_graph_refine already proved."""
+    return _exact_pair_rescore(_gemm_block_candidates(res), vecs)
 
 
 def _knn_oracle() -> str:
@@ -580,12 +530,12 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     conforming vector, its KNN_K nearest cell-cohabitants by exact
     cosine, candidates blocked by KNN_RESIDENCY-cell IVF assignment.
 
-    Plan: ONE map-side scan assigns each vector its top-R cells (the
-    literal-centroid ranked expression sim_topk_ivf/dedup_semantic
-    use, exploded — no join, no shuffle for assignment), one equi-join
-    on rcell generates in-block pairs (DISTINCT collapses pairs that
-    share both cells), exact cosine runs only on candidates, and a
-    per-src window keeps the top KNN_K. Vectors whose blocks hold no
+    Plan: ONE map-side scan assigns each vector its top-R cells
+    (gemm_rank_cells, exploded — no join, no shuffle for assignment),
+    a blockwise GEMM per (rcell, sub) block pre-selects each source's
+    candidate pairs (DISTINCT collapses pairs that share both cells),
+    exact cosine rescores only the survivors, and a per-src window
+    keeps the top KNN_K. Vectors whose blocks hold no
     cohabitant emit no rows — the honest partial-graph semantics every
     blocked kNN build has (knn_graph_recall publishes exactly what
     that costs on this near-orthogonal corpus, and what the NN-Descent
@@ -595,16 +545,9 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     index co-partitioned (zero-exchange), pair volume is Σ|cell|²·R²
     (never N²), and the window shuffles candidate EDGES, not the
     corpus. NULL embeddings are filtered out explicitly BEFORE cell
-    assignment — the ranked-cells transform yields a non-NULL array of
-    NULL-scored structs for a NULL vector, so explode() alone would
-    NOT drop such rows; the filter mirrors the oracle's
+    assignment — the rank stage routes a NULL vector to the smallest
+    cent_ids instead of dropping it; the filter mirrors the oracle's
     `embedding IS NOT NULL` exactly."""
-    return _knn_graph_impl(spark, sf_dir, mode=None)
-
-
-def _knn_graph_impl(
-    spark: SparkSession, sf_dir: str, mode: str | None
-) -> DataFrame:
     emb = _emb(spark, sf_dir).filter(F.col("embedding").isNotNull())
     cent_rows = ivf_cent_rows(emb)
     empty = spark.createDataFrame(
@@ -612,28 +555,14 @@ def _knn_graph_impl(
     )
     if not cent_rows:
         return empty
-    res, _rsplit = knn_res_frame(spark, emb, cent_rows, mode)
-    pr = pair_scores(res, emb, mode)
+    res, _rsplit = knn_res_frame(spark, emb, cent_rows)
+    pr = pair_scores(res, emb)
     w = Window.partitionBy("src_id").orderBy(F.desc("score"), F.asc("dst_id"))
     return (
         pr.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= KNN_K)
         .select("src_id", "dst_id", "score", "rk")
     )
-
-
-@query("knn_graph_gemm", oracle=_knn_oracle())
-def q_knn_graph_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """knn_graph with the BLAS path FORCED (sim_index_build_gemm's
-    convention — not the env default): residency ranked by
-    gemm_rank_cells, in-block candidates pre-selected by the blockwise
-    GEMM, survivors exact-rescored. The oracle is knn_graph's VERBATIM
-    literal chain, so a PASS value-proves the accelerated build emits
-    the bit-identical graph (scores included — the exact rescore is
-    what makes this provable, not just set-plausible) inside every
-    literal-mode gate run, exactly as the A/B measures it at stress
-    scale (×100: 150.7 s → 9.7 s, docs/SCALE.md)."""
-    return _knn_graph_impl(spark, sf_dir, mode="gemm")
 
 
 def _refine_ctes() -> str:
@@ -746,7 +675,7 @@ def q_knn_graph_refine_incremental(
 
     Scale shape: append's cost ∝ batch pairs (SCALE.md round-13
     table: ~1.4 s delta at ×50); the refine expansion is pairs-linear
-    (≤(2k)²·N id-joins + rescore, 11.7 s at ×50 in gemm mode) — the
+    (≤(2k)²·N id-joins + rescore, 11.7 s at ×50) — the
     composed loop never touches the m²-per-block build stage."""
     g = (
         q_knn_graph_append(spark, sf_dir)
@@ -875,59 +804,44 @@ def _gemm_probe_candidates(
     return corpus.mapInPandas(_gen, "src_id long, dst_id long").distinct()
 
 
-def _probe_truth(emb: DataFrame, mode: str | None = None) -> DataFrame:
+def _probe_truth(emb: DataFrame) -> DataFrame:
     """The exact brute-force edge truth on the bounded probe set
     (src_id < KNN_PROBE): every probe's true top-KNN_K neighbors by
     cosine, (score DESC, dst_id ASC) tie-break — THE one definition of
     the published recall statistic, shared by knn_graph_recall (the
     monitor) and knn_graph_maintain (the policy that acts on it) so
     the decision statistic can never drift from the metric it claims
-    to replay. Corpus-linear in both modes. Literal mode is the
-    oracle-shaped chain: one broadcast of ≤KNN_PROBE query rows
-    against the corpus, every pair through the JVM expression fold.
-    Under the production default (SPARK_GRAFT_ASSIGN=gemm) the pair
-    scoring rides _gemm_probe_candidates — GEMM pre-selection + exact
-    rescore, bit-identical output (the ×100 statistic dropped ~240 s
-    → seconds; it was costing 10× the maintenance arms it audits)."""
-    from dist_mapreduce_spark.plans.similarity import assign_mode
-
+    to replay. Corpus-linear: the pair scoring rides
+    _gemm_probe_candidates — GEMM pre-selection + exact rescore, the
+    oracle's top-K by construction."""
     probe = emb.filter(
         (F.col("vec_id") < KNN_PROBE) & F.col("embedding").isNotNull()
     ).select(F.col("vec_id").alias("src_id"), F.col("embedding").alias("qv"))
     corpus = emb.filter(F.col("embedding").isNotNull()).select(
         F.col("vec_id").alias("dst_id"), F.col("embedding").alias("ev")
     )
-    if (mode or assign_mode()) == "gemm":
-        probe = probe.cache()  # consumed twice: collect + rescore join
-        # NULL ELEMENTS survive the driver pull (float(None) would
-        # raise here, aborting the whole statistic in gemm mode only
-        # — the literal fold scores such probes NULL); the kernel's
-        # parse classifies them un-stackable and keeps all their
-        # pairs for the exact rescore to order.
-        probe_rows = sorted(
-            (
-                int(r["src_id"]),
-                [None if x is None else float(x) for x in r["qv"]],
-            )
-            for r in probe.collect()
+    probe = probe.cache()  # consumed twice: collect + rescore join
+    # NULL ELEMENTS survive the driver pull (float(None) would raise
+    # here and abort the whole statistic — the oracle's fold scores
+    # such probes NULL); the kernel's parse classifies them
+    # un-stackable and keeps all their pairs for the exact rescore to
+    # order.
+    probe_rows = sorted(
+        (
+            int(r["src_id"]),
+            [None if x is None else float(x) for x in r["qv"]],
         )
-        if not probe_rows:
-            return probe.select("src_id", F.col("src_id").alias("dst_id"))
-        cand = _gemm_probe_candidates(corpus, probe_rows)
-        scored = (
-            cand.join(F.broadcast(probe), "src_id")
-            .join(corpus, "dst_id")
-            .withColumn("score", F.expr(cosine_spark_sql("qv", "ev")))
-            .select("src_id", "dst_id", "score")
-        )
-    else:
-        scored = (
-            corpus.join(
-                F.broadcast(probe), F.col("dst_id") != F.col("src_id")
-            )
-            .withColumn("score", F.expr(cosine_spark_sql("qv", "ev")))
-            .select("src_id", "dst_id", "score")
-        )
+        for r in probe.collect()
+    )
+    if not probe_rows:
+        return probe.select("src_id", F.col("src_id").alias("dst_id"))
+    cand = _gemm_probe_candidates(corpus, probe_rows)
+    scored = (
+        cand.join(F.broadcast(probe), "src_id")
+        .join(corpus, "dst_id")
+        .withColumn("score", F.expr(cosine_spark_sql("qv", "ev")))
+        .select("src_id", "dst_id", "score")
+    )
     w = Window.partitionBy("src_id").orderBy(F.desc("score"), F.asc("dst_id"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
@@ -1027,52 +941,32 @@ def _knn_batch_pred():
 
 
 def _rederive_sources(
-    res: DataFrame, aff_srcs: DataFrame, vecs: DataFrame, mode: str
+    res: DataFrame, aff_srcs: DataFrame, vecs: DataFrame
 ) -> DataFrame:
     """Full candidate re-derive for the AFFECTED sources of an
     incremental graph mutation: every (affected src, cohabitant) pair
-    under the given blocking, exact-scored. GEMM mode restricts the
-    kernel to blocks that actually contain an affected source and
-    pre-selects each affected source's top-K at BLAS speed (the "src"
-    mask), then exact-rescores — cost ∝ affected blocks, never the
-    corpus; literal mode is the per-pair fold the oracle replays."""
-    if mode == "gemm":
-        flagged = res.join(
-            aff_srcs, res["vec_id"] == aff_srcs["src_id"], "semi"
-        )
-        blocks = flagged.select("rcell", "sub").distinct()
-        mark = aff_srcs.withColumn("aff", F.lit(True))
-        res_aff = (
-            res.join(blocks, ["rcell", "sub"])
-            .join(mark, res["vec_id"] == mark["src_id"], "left")
-            .select(
-                "vec_id",
-                "embedding",
-                "rcell",
-                "sub",
-                F.coalesce("aff", F.lit(False)).alias("aff"),
-            )
-        )
-        return _exact_pair_rescore(
-            _gemm_block_candidates(res_aff, pair_mask="src", flag_col="aff"),
-            vecs,
-        )
-    ga, gb = res.alias("ga"), res.alias("gb")
-    return (
-        ga.join(aff_srcs, F.col("ga.vec_id") == F.col("src_id"), "semi")
-        .join(
-            gb,
-            (F.col("ga.rcell") == F.col("gb.rcell"))
-            & (F.col("ga.sub") == F.col("gb.sub"))
-            & (F.col("ga.vec_id") != F.col("gb.vec_id")),
-        )
+    under the given blocking that can reach the source's top-K,
+    exact-scored. The kernel runs only on blocks that actually contain
+    an affected source and pre-selects each affected source's top-K at
+    BLAS speed (the "src" mask), then exact-rescores — cost ∝ affected
+    blocks, never the corpus."""
+    flagged = res.join(aff_srcs, res["vec_id"] == aff_srcs["src_id"], "semi")
+    blocks = flagged.select("rcell", "sub").distinct()
+    mark = aff_srcs.withColumn("aff", F.lit(True))
+    res_aff = (
+        res.join(blocks, ["rcell", "sub"])
+        .join(mark, res["vec_id"] == mark["src_id"], "left")
         .select(
-            F.col("ga.vec_id").alias("src_id"),
-            F.col("gb.vec_id").alias("dst_id"),
-            F.expr(cosine_spark_sql("ga.embedding", "gb.embedding")).alias(
-                "score"
-            ),
+            "vec_id",
+            "embedding",
+            "rcell",
+            "sub",
+            F.coalesce("aff", F.lit(False)).alias("aff"),
         )
+    )
+    return _exact_pair_rescore(
+        _gemm_block_candidates(res_aff, pair_mask="src", flag_col="aff"),
+        vecs,
     )
 
 
@@ -1152,51 +1046,25 @@ def q_knn_graph_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         if affected_cells
         else None
     )
-    # Batch-involving pairs in UNAFFECTED blocks (both directions come
-    # from the OR — the predicate admits (base,batch), (batch,base),
-    # and (batch,batch) rows). GEMM mode (round 13): the either-flagged
+    # Batch-involving pairs in UNAFFECTED blocks: the either-flagged
     # mask pre-selects each source's top-K of ITS allowed pool at BLAS
     # speed (a batch source ranks against all cohabitants, a base
     # source against batch cohabitants only — its other candidates are
-    # already in g_base), then exact-rescores survivors — before this
-    # the batch-pair stage was a literal per-pair fold and the ×50
-    # gemm-mode append cost 132.8 s against a 15.3 s rebuild.
-    from dist_mapreduce_spark.plans.similarity import assign_mode
-
-    mode = assign_mode()
+    # already in g_base), then exact-rescores survivors.
     res_un = res_g.filter(~F.col("rcell").isin(affected_cells)).withColumn(
         "isb", is_batch
     )
-    if mode == "gemm":
-        scored_new = _exact_pair_rescore(
-            _gemm_block_candidates(res_un, pair_mask="either", flag_col="isb"),
-            emb,
-        )
-    else:
-        a, b = res_un.alias("a"), res_un.alias("b")
-        scored_new = (
-            a.join(
-                b,
-                (F.col("a.rcell") == F.col("b.rcell"))
-                & (F.col("a.sub") == F.col("b.sub"))
-                & (F.col("a.vec_id") != F.col("b.vec_id"))
-                & (F.col("a.isb") | F.col("b.isb")),
-            )
-            .select(
-                F.col("a.vec_id").alias("src_id"),
-                F.col("b.vec_id").alias("dst_id"),
-                F.expr(cosine_spark_sql("a.embedding", "b.embedding")).alias(
-                    "score"
-                ),
-            )
-        )
+    scored_new = _exact_pair_rescore(
+        _gemm_block_candidates(res_un, pair_mask="either", flag_col="isb"),
+        emb,
+    )
     merged = g_base.unionByName(scored_new)
     if aff_srcs is not None:
         # Affected sources: full re-derive of their candidate pairs
         # under the grown blocking (their unaffected-cell blocks too —
         # a source's top-K spans all its residency blocks).
         merged = merged.join(aff_srcs, "src_id", "left_anti")
-        fresh = _rederive_sources(res_g, aff_srcs, emb, mode)
+        fresh = _rederive_sources(res_g, aff_srcs, emb)
         merged = merged.unionByName(fresh)
     return (
         merged.distinct()
@@ -1341,9 +1209,7 @@ def q_knn_graph_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep = g_full.join(
         del_ids, g_full["src_id"] == del_ids["del_id"], "left_anti"
     ).join(aff, "src_id", "left_anti")
-    from dist_mapreduce_spark.plans.similarity import assign_mode
-
-    fresh = _rederive_sources(res_s, aff, surv, assign_mode())
+    fresh = _rederive_sources(res_s, aff, surv)
     return (
         keep.unionByName(fresh)
         .distinct()

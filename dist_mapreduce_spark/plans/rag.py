@@ -541,8 +541,7 @@ def q_sim_topk_mmr_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ranked = ivf_ranked_cells_sql(cent_rows)
     cells = ivf_cells_df(
-        spark, emb.filter(F.col("embedding").isNotNull()), ranked,
-        cent_rows,
+        spark, emb.filter(F.col("embedding").isNotNull()), cent_rows
     )
     probes = ivf_probes_df(
         emb.filter(F.col("embedding").isNotNull()),
@@ -953,10 +952,8 @@ def build_dense_index(
         return path, cent_rows, n_chunks
     from dist_mapreduce_spark.plans.similarity import assign_cells
 
-    # Assignment dispatcher: literal expression by default, numpy GEMM
-    # under SPARK_GRAFT_ASSIGN=gemm — at stress scale the full-corpus
-    # assignment is THE dominant build cost (SCALE.md), and the GEMM
-    # stage removes the O(N·k·dim) generated expression.
+    # GEMM assignment stage: at stress scale the full-corpus
+    # assignment is THE dominant build cost (SCALE.md).
     (
         assign_cells(spark, cv, cent_rows)
         .select("vec_id", "doc_id", "chunk_id", "embedding", "cell")
@@ -1812,9 +1809,9 @@ def q_dense_index_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     is intentionally FULL: fresh centroids can move any chunk.
 
     Scale shape: one training run (sampled), one corpus-linear
-    assignment scan (the GEMM stage under SPARK_GRAFT_ASSIGN=gemm —
-    a retrain is exactly the full-corpus assignment the GEMM exists
-    for), one partitioned write, one narrow read-back aggregate."""
+    assignment scan (the GEMM stage — a retrain is exactly the
+    full-corpus assignment it exists for), one partitioned write, one
+    narrow read-back aggregate."""
     from dist_mapreduce_spark.plans.index_commit import index_data_dir
 
     path, cent_fresh, _n2 = build_dense_retrained_index(spark, sf_dir)

@@ -554,51 +554,13 @@ def ivf_ranked_cells_sql(
 def ivf_cells_df(
     spark: SparkSession,
     emb: DataFrame,
-    ranked_cells: str,
-    cent_rows: list[tuple[int, list[float]]] | None = None,
+    cent_rows: list[tuple[int, list[float]]],
 ) -> DataFrame:
     """(vec_id, embedding, cell) — nearest-centroid assignment as one
-    map-side scan. Repartition so the CPU-bound per-row evaluation
-    spreads across the cluster even when the source parquet arrives as
-    few splits. When the caller supplies cent_rows AND the run is in
-    GEMM mode (SPARK_GRAFT_ASSIGN=gemm), the assignment runs as the
-    numpy GEMM stage instead of the literal expression — same argmax,
-    ~10× smaller constant at stress-scale k·dim (see assign_cells)."""
-    if cent_rows is not None and assign_mode() == "gemm":
-        return assign_cells(spark, emb, cent_rows).select(
-            "vec_id", "embedding", "cell"
-        )
-    return (
-        emb.repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("cell", F.expr(f"{ranked_cells}[0].c"))
-        .select("vec_id", "embedding", "cell")
+    map-side scan through the numpy GEMM stage (see assign_cells)."""
+    return assign_cells(spark, emb, cent_rows).select(
+        "vec_id", "embedding", "cell"
     )
-
-
-#: Assignment-path switch: "gemm" (DEFAULT since round 13 — numpy/BLAS
-#: inside mapInPandas, the production configuration) or "literal" (the
-#: generated-expression argmax that is exact to the DuckDB replay by
-#: construction — the oracle-certification mode, which
-#: tools/check_correctness.py pins when the env var is unset). The
-#: GEMM path computes the same dot/|c| argmax with BLAS accumulation
-#: order; everywhere a final ulp could change a decision it carries a
-#: guard band + exact rescore (gemm_rank_cells' near-tie band,
-#: _gemm_block_candidates' EPS superset + rescore) or is exact integer
-#: arithmetic (the kmeans trainer's int64 GEMM twin), so its outputs
-#: are BIT-IDENTICAL to the literal chain — proven by the committed
-#: three-scale full-registry gate in BOTH modes (docs/LOCAL_GATE.md,
-#: guard-tested). Round-13 default decision (verdict item #8): the
-#: mode a deployment gets without remembering an env var must be the
-#: one that finishes the job — literal-mode ×20 dense staleness DNF'd
-#: at 28 minutes where gemm runs the class at ~35 s; the literal chain
-#: stays one env var away for certification sweeps.
-ASSIGN_MODE_ENV = "SPARK_GRAFT_ASSIGN"
-
-
-def assign_mode() -> str:
-    import os
-
-    return os.environ.get(ASSIGN_MODE_ENV, "gemm")
 
 
 def gemm_assign_cells(
@@ -607,35 +569,35 @@ def gemm_assign_cells(
 ) -> DataFrame:
     """Append ``cell`` (nearest trained centroid by dot/|c|, cent_id
     tiebreak) to every row of ``df`` with the score matrix computed as
-    ONE numpy GEMM per Arrow batch — the production alternative to the
-    literal-centroid expression for large k·dim (SCALE.md: the
-    full-corpus literal assignment is the dominant stress-scale cost
-    of the trained-index family; a batch×k×dim BLAS multiply is the
-    same flops at a ~10× smaller constant, off the expression
-    interpreter entirely).
+    ONE numpy GEMM per Arrow batch — the repo's one cell-assignment
+    kernel (SCALE.md: a generated per-row expression over k·dim
+    centroid literals was the dominant stress-scale cost of the
+    trained-index family; a batch×k×dim BLAS multiply is the same
+    flops at a ~10× smaller constant, off the expression interpreter
+    entirely).
 
-    Exact-semantics contract with ivf_ranked_cells_sql (pinned by
-    tests/test_gemm_assign.py against the literal path):
+    Exact-semantics contract with ivf_ranked_cells_sql[0] — the
+    oracle's cell CTE (pinned by tests/test_gemm_assign.py against
+    that expression):
     - valid rows (len == dim, all elements finite): argmax of
       dot(v, c)/|c| over centroids, first-index (= smallest cent_id,
-      cent_rows being cid-sorted) on exact ties — the literal path's
+      cent_rows being cid-sorted) on exact ties — the expression's
       array_sort((s, c)) order. BLAS accumulation differs from the
       sequential fold only in final ulps; gate corpora are pinned
       set-equal.
     - degenerate rows (NULL vector, ragged length, NULL/NaN element):
-      every dot folds to NULL in the literal path, so ALL centroids
-      tie and the smallest cent_id wins — replicated here verbatim.
-      A ±inf ELEMENT raises ValueError (round-12): the literal path
+      every dot folds to NULL in the expression, so ALL centroids tie
+      and the smallest cent_id wins — replicated here verbatim.
+      A ±inf ELEMENT raises ValueError (round-12): the expression
       does NOT share the min-cent_id routing there (inf·0 = NaN for
       some centroids, ±inf for others, so it can rank a real winner),
       so rather than silently misplacing such vectors this path
       refuses them loudly — embeddings with infinities are outside
       the contract, and the embedding_audit ingest gate is the
-      upstream fix (the contract is now self-enforcing instead of
-      trusted).
-    - a zero-norm CENTROID makes the literal path's dot/|c| abort
-      under ANSI (DIVIDE_BY_ZERO), so this path raises ValueError up
-      front rather than inventing semantics the default path lacks.
+      upstream fix.
+    - a zero-norm CENTROID makes the expression's dot/|c| abort under
+      ANSI (DIVIDE_BY_ZERO), so this path raises ValueError up front
+      rather than inventing semantics the oracle lacks.
 
     Preserves every input column; no shuffle (mapInPandas is
     partition-preserving — repartition upstream for CPU spread, as
@@ -659,8 +621,8 @@ def gemm_assign_cells(
     norms = _np.sqrt((cmat * cmat).sum(axis=1))
     if bool((norms == 0.0).any()):
         raise ValueError(
-            "gemm_assign_cells: zero-norm centroid — the literal"
-            " assignment path aborts on this too (ANSI DIVIDE_BY_ZERO)"
+            "gemm_assign_cells: zero-norm centroid — the oracle's"
+            " ranking expression aborts on this too (ANSI DIVIDE_BY_ZERO)"
         )
     cid_arr = _np.asarray(cids, dtype=_np.int64)
     # A FRESH StructType: StructType.add mutates in place, and
@@ -687,9 +649,9 @@ def gemm_assign_cells(
                     continue
                 if not _np.isfinite(a).all():
                     # NULL elements arrive as NaN through the float64
-                    # conversion; NaN folds the literal dot to NULL →
+                    # conversion; NaN folds the SQL dot to NULL →
                     # min-cent_id, replicated by skipping the GEMM.
-                    # ±inf is DIFFERENT: the literal path can rank a
+                    # ±inf is DIFFERENT: the SQL fold can rank a
                     # real winner there, so fail loudly instead of
                     # silently diverging (the documented contract,
                     # now enforced inline).
@@ -697,7 +659,7 @@ def gemm_assign_cells(
                         raise ValueError(
                             "gemm_assign_cells: embedding with a ±inf"
                             " element — outside the GEMM path's"
-                            " contract (the literal path can rank a"
+                            " contract (the SQL fold can rank a"
                             " real winner here); reject such rows"
                             " upstream (embedding_audit) before"
                             " assignment"
@@ -727,7 +689,7 @@ def gemm_assign_cells(
 
 
 #: Guard band for the residency prefix (mirror of knn_graph's
-#: _GEMM_PAIR_EPS): BLAS and the sequential literal fold agree to
+#: _GEMM_PAIR_EPS): BLAS and the sequential SQL fold agree to
 #: ~dim·ulp ≈ 1.4e-14 on unit-scale cosines, so 1e-9 over-covers by
 #: ~5 orders of magnitude while still never triggering on real score
 #: gaps.
@@ -741,34 +703,34 @@ def gemm_rank_cells(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Append ``rcells`` (the TOP-``r`` centroid ids by dot/|c| DESC,
-    cent_id ASC — i.e. the first r entries of the literal path's
+    cent_id ASC — i.e. the first r entries of ivf_ranked_cells_sql's
     array_sort'ed ranked-cells array) to every row of ``df``, scores
     computed as one numpy GEMM per Arrow batch. gemm_assign_cells is
     the r=1 special case; this is the RESIDENCY assignment the kNN
     graph build needs (round-12 verdict item #1 — the build explodes
     each vector to its KNN_RESIDENCY nearest cells, which before this
-    ran the full O(N·k·dim) literal ranked expression).
+    ran the full O(N·k·dim) ranked expression per row).
 
     Same exact-semantics contract as gemm_assign_cells, extended to
     the prefix: valid rows take the stable argsort of the GEMM scores
     (stable = cid-ascending tiebreak, cent_rows being cid-sorted);
-    degenerate rows (NULL/ragged/NaN) fold every literal score to
+    degenerate rows (NULL/ragged/NaN) fold every SQL score to
     NULL so ALL centroids tie and the r SMALLEST cent_ids win —
     replicated verbatim; ±inf elements raise (the enforced contract);
-    zero-norm centroids raise up front. Set-equality with the literal
-    prefix is pinned by tests/test_gemm_assign.py.
+    zero-norm centroids raise up front. Set-equality with the
+    expression's prefix is pinned by tests/test_gemm_assign.py.
 
-    NEAR-TIE exactness (round-13, advice item): BLAS and the literal
+    NEAR-TIE exactness (round-13, advice item): BLAS and the SQL
     sequential fold agree only to ~dim·ulp, so a GEMM score within
     _GEMM_RANK_EPS of the Rth-best (or of its in-prefix neighbor)
     could flip the prefix if ranked from GEMM numbers alone. Whenever
     any such near-tie exists, the contender band (every centroid with
-    GEMM score >= Rth - EPS) is EXACT-RESCORED with the literal
+    GEMM score >= Rth - EPS) is EXACT-RESCORED with the sequential
     left-fold (py_dot / _py_norm — the same doubles the SQL literal
     inlines) and the prefix is finalized from the exact scores — the
     same guard-band-then-rescore contract _gemm_block_candidates uses
     for pairs. Normal data (score gaps >> 1e-9) never pays; the
-    division uses _py_norm so the only GEMM-vs-literal divergence the
+    division uses _py_norm so the only GEMM-vs-SQL divergence the
     band must absorb is the dot's accumulation order."""
     import numpy as _np
 
@@ -784,14 +746,14 @@ def gemm_rank_cells(
     r = min(r, len(cent_rows))
     dim = len(cent_rows[0][1])
     cmat = _np.asarray([cv for _, cv in cent_rows], dtype=_np.float64)
-    # EXACT norms (the literal SQL inlines _py_norm literals), so the
-    # only BLAS-vs-literal divergence left is the dot's fold order —
+    # EXACT norms (the SQL expression inlines _py_norm literals), so
+    # the only BLAS-vs-SQL divergence left is the dot's fold order —
     # that is what the near-tie rescore band absorbs.
     norms = _np.asarray([_py_norm(cv) for _, cv in cent_rows])
     if bool((norms == 0.0).any()):
         raise ValueError(
-            "gemm_rank_cells: zero-norm centroid — the literal"
-            " assignment path aborts on this too (ANSI DIVIDE_BY_ZERO)"
+            "gemm_rank_cells: zero-norm centroid — the oracle's"
+            " ranking expression aborts on this too (ANSI DIVIDE_BY_ZERO)"
         )
     cvecs = [list(map(float, cv)) for _, cv in cent_rows]
     cid_arr = _np.asarray(cids, dtype=_np.int64)
@@ -833,7 +795,7 @@ def gemm_rank_cells(
                     scores /= norms
                     # Stable argsort of -score = score DESC with the
                     # ORIGINAL (cid-ascending) order kept on exact
-                    # ties — the literal array_sort's (s, c) key.
+                    # ties — the SQL array_sort's (s, c) key.
                     order = _np.argsort(-scores, axis=1, kind="stable")
                     for b, row_ord in enumerate(order):
                         srow = scores[b]
@@ -849,7 +811,7 @@ def gemm_rank_cells(
                             # Near-tie at (or inside) the prefix: the
                             # GEMM ordering is not trustworthy to the
                             # last ulp — finalize from the EXACT
-                            # literal fold over the contender band.
+                            # sequential fold over the contender band.
                             v = rows[lo + b]
                             ex = sorted(
                                 (
@@ -877,21 +839,14 @@ def assign_cells(
     df: DataFrame,
     cent_rows: list[tuple[int, list[float]]],
     vec_col: str = "embedding",
-    mode: str | None = None,
 ) -> DataFrame:
-    """The assignment-stage dispatcher every index build/lifecycle op
-    routes through: append ``cell`` to ``df`` via the literal
-    generated-expression argmax (default — bit-tied to the DuckDB
-    oracles) or the numpy GEMM (mode="gemm", or SPARK_GRAFT_ASSIGN=gemm
-    for a whole run — the stress harness's A/B lever). Both paths
-    repartition first: assignment is CPU-bound per row and the source
-    parquet's split count must not serialize it."""
-    mode = mode or assign_mode()
+    """The assignment stage every index build/lifecycle op routes
+    through: append ``cell`` to ``df`` via the numpy GEMM argmax
+    (gemm_assign_cells). Repartitions first: assignment is CPU-bound
+    per row and the source parquet's split count must not serialize
+    it."""
     df = df.repartition(spark.sparkContext.defaultParallelism)
-    if mode == "gemm":
-        return gemm_assign_cells(df, cent_rows, vec_col)
-    ranked = ivf_ranked_cells_sql(cent_rows, col=vec_col)
-    return df.withColumn("cell", F.expr(f"{ranked}[0].c"))
+    return gemm_assign_cells(df, cent_rows, vec_col)
 
 
 def ivf_probes_df(
@@ -945,7 +900,7 @@ def ivf_py_probe_cells(
 # centroids, which are dequantized to EXACT doubles (int / 2^20 — a
 # power-of-two division, one exact IEEE op) and flow through the SAME
 # dot/|c| assignment/probing machinery as before — so everything
-# downstream (literal-centroid pure-map assignment, partition-pruned
+# downstream (pure-map cell assignment, partition-pruned
 # probes, the lifecycle oracles' frozen-quantizer surgery) is
 # unchanged; only the centroid SET changed from a vec_id-predicate
 # sample to density-tracking trained centroids. The measured round-8
@@ -1226,12 +1181,11 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (re-planned in round 4, was 10 shuffles / 3 corpus
     scans): the quantizer is k ≤ K_MAX centroids — small enough to
     pull to the driver once (k×dim floats, the same pull
-    `kmeans_embeddings` makes) and inline as literals, so cell
-    assignment becomes a PURE MAP over one corpus scan: an
-    `array_sort` of (−dot/|c|, cent_id) structs picks the nearest
-    cell with the oracle's exact tie-break, no N·k join and no
-    corpus-wide window shuffle. Queries rank the same literal
-    centroids on a second, `vec_id < N_QUERIES`-pruned scan and
+    `kmeans_embeddings` makes), so cell assignment becomes a PURE MAP
+    over one corpus scan: a numpy GEMM stage (gemm_assign_cells)
+    picks the nearest cell with the oracle's exact tie-break, no N·k
+    join and no corpus-wide window shuffle. Queries rank the centroids,
+    inlined as literals, on a second, `vec_id < N_QUERIES`-pruned scan and
     explode their np nearest cells; search is a broadcast equi-join
     on cell id touching ~np/k of the corpus. At 100 TB the cell id is
     precomputed at ingest and the table is partitioned by it, so
@@ -1255,7 +1209,7 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "query_id bigint, vec_id bigint, score double, rk int"
         )
     ranked_cells = ivf_ranked_cells_sql(cent_rows)
-    cells = ivf_cells_df(spark, emb, ranked_cells, cent_rows)
+    cells = ivf_cells_df(spark, emb, cent_rows)
     probes = ivf_probes_df(
         emb, ranked_cells, n_probe=trained_n_probe(len(cent_rows), n)
     )
@@ -1285,7 +1239,7 @@ def q_sim_topk_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the quantizer a deployment uses before its first training
     run (or when training data is unrepresentative), and it remains
     the blocking heuristic for the kNN-graph family. Same plan shape
-    as sim_topk_ivf: literal-centroid pure-map assignment, broadcast
+    as sim_topk_ivf: pure-map GEMM assignment, broadcast
     probes, one window top-k."""
     emb = _emb(spark, sf_dir)
     cent_rows = ivf_cent_rows(emb)
@@ -1294,7 +1248,7 @@ def q_sim_topk_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "query_id bigint, vec_id bigint, score double, rk int"
         )
     ranked_cells = ivf_ranked_cells_sql(cent_rows)
-    cells = ivf_cells_df(spark, emb, ranked_cells, cent_rows)
+    cells = ivf_cells_df(spark, emb, cent_rows)
     probes = ivf_probes_df(emb, ranked_cells)
     scored = (
         cells.join(

@@ -58,7 +58,7 @@ from dist_mapreduce_spark.plans.ann_index import (
 from dist_mapreduce_spark.plans.iterative import (
     KMEANS_SCALE,
     N_ITER,
-    _assign_dispatch,
+    kmeans_assign_gemm,
     kmeans_dist_duck,
     kmeans_quantized,
     kmeans_train_ctes,
@@ -133,9 +133,9 @@ def build_trained_index(
     key = _corpus_fingerprint(sf_dir)
     if _BUILT.get(path) == key and os.path.isdir(path):
         return path, centroids
-    cells = _assign_dispatch(kmeans_quantized(spark, sf_dir), centroids).select(
-        "vec_id", F.col("cluster").alias("cell")
-    )
+    cells = kmeans_assign_gemm(
+        kmeans_quantized(spark, sf_dir), centroids
+    ).select("vec_id", F.col("cluster").alias("cell"))
     emb = _emb(spark, sf_dir).filter(F.col("embedding").isNotNull())
     if os.path.isdir(path):
         shutil.rmtree(path)
@@ -416,7 +416,7 @@ def q_sim_cand_stats_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent_rows = ivf_cent_rows(emb)
     ranked = ivf_ranked_cells_sql(cent_rows)
     scand = (
-        ivf_cells_df(spark, emb, ranked, cent_rows)
+        ivf_cells_df(spark, emb, cent_rows)
         .join(
             F.broadcast(ivf_probes_df(emb, ranked).select("query_id", "pcell")),
             (F.col("cell") == F.col("pcell"))

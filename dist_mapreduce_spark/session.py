@@ -18,6 +18,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: The one logger get_spark quiets below WARN (to ERROR).
+WINDOW_EXEC_LOGGER = "org.apache.spark.sql.execution.window.WindowExec"
+
 
 def get_spark(
     app_name: str = "dist_mapreduce_spark",
@@ -68,4 +71,12 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # WindowExec warns "No Partition Defined" for every global window;
+    # those windows sit over bounded aggregates (pinned by
+    # test_global_windows_sit_over_bounded_frames), so the warning is
+    # noise that floods bench and gate stderr.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        WINDOW_EXEC_LOGGER, jvm.org.apache.logging.log4j.Level.ERROR
+    )
     return spark

@@ -434,16 +434,14 @@ def test_compact_rewrites_hot_cells_only(spark, tmp_path):
     from dist_mapreduce_spark.plans.similarity import (
         ivf_cells_df,
         ivf_cent_rows,
-        ivf_ranked_cells_sql,
     )
 
     emb = spark.read.parquet(SF + "/embeddings.parquet")
     cent_rows = ivf_cent_rows(emb)
-    ranked = ivf_ranked_cells_sql(cent_rows)
     path = str(tmp_path / "idx")
     # repartition(1): exactly one base file per cell, so fragmentation
     # is entirely under the test's control.
-    cells = ivf_cells_df(spark, emb, ranked).repartition(1).cache()
+    cells = ivf_cells_df(spark, emb, cent_rows).repartition(1).cache()
     cells.write.mode("overwrite").partitionBy("cell").parquet(path)
     hot = int(
         cells.groupBy("cell")
@@ -1017,7 +1015,7 @@ def test_retrain_walk_monitor_fires_then_staleness_rezeroes(spark, tmp_path):
         q_sim_index_staleness,
     )
     from dist_mapreduce_spark.plans.similarity import (
-        assign_cells,
+        ivf_ranked_cells_sql,
         trained_quantizer,
     )
 
@@ -1050,7 +1048,10 @@ def test_retrain_walk_monitor_fires_then_staleness_rezeroes(spark, tmp_path):
         .alias("embedding"),
     )
     cent_fresh, _n = trained_quantizer(ups)
-    want_cells = assign_cells(spark, ups, cent_fresh, mode="literal")
+    # Reference: the oracle's cell expression evaluated directly.
+    want_cells = ups.withColumn(
+        "cell", F.expr(f"{ivf_ranked_cells_sql(cent_fresh)}[0].c")
+    )
     want = {
         int(r["cell"]): (int(r["n"]), int(r["s"]))
         for r in want_cells.groupBy("cell")
@@ -1073,9 +1074,10 @@ def test_retrain_walk_monitor_fires_then_staleness_rezeroes(spark, tmp_path):
     assert cent_again == cent_fresh
     re_cells = {
         int(r["vec_id"]): int(r["cell"])
-        for r in assign_cells(spark, ups, cent_again, mode="literal")
-        .select("vec_id", "cell")
-        .collect()
+        for r in ups.select(
+            "vec_id",
+            F.expr(f"{ivf_ranked_cells_sql(cent_again)}[0].c").alias("cell"),
+        ).collect()
     }
     first_cells = {
         int(r["vec_id"]): int(r["cell"])

@@ -121,6 +121,94 @@ def test_http_facade_loopback(spark, corpus, tmp_path):
         srv.stop()
 
 
+@pytest.fixture()
+def api_server(spark):
+    """A loopback ApiServer and the runner behind it."""
+    from dist_mapreduce_spark.api import JobRunner
+    from dist_mapreduce_spark.http_api import ApiServer
+
+    runner = JobRunner(spark)
+    srv = ApiServer(runner).start()
+    yield srv, runner
+    srv.stop()
+
+
+def _post_jobs(port: int, body: bytes, length: str | None = None):
+    """POST /jobs over a raw connection so the test controls the
+    Content-Length header; the timeout turns a server that blocks on
+    the body into a test failure instead of a hang."""
+    import http.client
+
+    conn = http.client.HTTPConnection("127.0.0.1", port, timeout=10)
+    try:
+        conn.putrequest("POST", "/jobs")
+        conn.putheader(
+            "Content-Length", str(len(body)) if length is None else length
+        )
+        conn.endheaders()
+        conn.send(body)
+        resp = conn.getresponse()
+        return resp.status, resp.read()
+    finally:
+        conn.close()
+
+
+def _assert_healthy(port: int) -> None:
+    import urllib.request
+
+    with urllib.request.urlopen(
+        f"http://127.0.0.1:{port}/health", timeout=10
+    ) as resp:
+        assert resp.read() == b"OK"
+
+
+def test_http_rejects_negative_content_length(api_server):
+    srv, runner = api_server
+    status, _ = _post_jobs(srv.port, b'{"files": ["f"], "nReduce": 1}', "-1")
+    assert status == 400
+    assert runner._jobs == {}
+    _assert_healthy(srv.port)
+
+
+def test_http_rejects_oversized_content_length(api_server):
+    from dist_mapreduce_spark.http_api import MAX_BODY_BYTES
+
+    srv, runner = api_server
+    status, _ = _post_jobs(srv.port, b"{}", str(MAX_BODY_BYTES + 1))
+    assert status == 400
+    assert runner._jobs == {}
+    _assert_healthy(srv.port)
+
+
+def test_http_rejects_non_object_body(api_server):
+    srv, runner = api_server
+    for body in (b'["f"]', b"3", b'"files"', b"null"):
+        status, _ = _post_jobs(srv.port, body)
+        assert status == 400, body
+    assert runner._jobs == {}
+    _assert_healthy(srv.port)
+
+
+def test_http_rejects_files_not_a_list_of_strings(api_server):
+    srv, runner = api_server
+    for files in ('"abc"', "[]", '["a", 1]', '{"a": 1}', "null"):
+        body = f'{{"files": {files}, "nReduce": 1}}'.encode()
+        status, _ = _post_jobs(srv.port, body)
+        assert status == 400, files
+    assert runner._jobs == {}
+    _assert_healthy(srv.port)
+
+
+def test_http_rejects_bool_nreduce(api_server):
+    srv, runner = api_server
+    for n in ("true", "false", "1.5", '"2"'):
+        body = f'{{"files": ["f"], "nReduce": {n}}}'.encode()
+        status, _ = _post_jobs(srv.port, body)
+        assert status == 400, n
+    assert runner._jobs == {}
+    _assert_healthy(srv.port)
+
+
 def test_job_failure_surfaces(spark):
     from dist_mapreduce_spark.api import FAILED, JobRunner
 

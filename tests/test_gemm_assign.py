@@ -1,14 +1,17 @@
-"""GEMM assignment path (round 11): the numpy/BLAS centroid
-assignment must land every vector in the same cell as the
-oracle-gated literal-expression path — on the real gate corpus, on
-the dense chunk corpus, and on every degenerate row shape the literal
-path tolerates (the contract gemm_assign_cells documents)."""
+"""GEMM assignment (round 11): the numpy/BLAS centroid assignment
+must land every vector in the same cell as the oracle's
+literal-centroid expression (ivf_ranked_cells_sql, evaluated here as
+the reference) — on the real gate corpus, on the dense chunk corpus,
+and on every degenerate row shape that expression tolerates (the
+contract gemm_assign_cells documents). The kNN kernels are pinned the
+same way against SQL-shaped reference chains or the DuckDB oracle."""
 
 from __future__ import annotations
 
 import math
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -16,6 +19,80 @@ from tests.conftest import SF_SMOKE
 
 def _cells_map(df):
     return {int(r["vec_id"]): int(r["cell"]) for r in df.collect()}
+
+
+def _literal_cells(df, cent_rows, vec_col="embedding"):
+    """Reference: the oracle's cell CTE as the literal-centroid Spark
+    expression (first entry of the (score DESC, cent_id) ranking)."""
+    from dist_mapreduce_spark.plans.similarity import ivf_ranked_cells_sql
+
+    ranked = ivf_ranked_cells_sql(cent_rows, col=vec_col)
+    return _cells_map(
+        df.select("vec_id", F.expr(f"{ranked}[0].c").alias("cell"))
+    )
+
+
+def _literal_kmeans_assign(df, centroids):
+    """Reference: the trainer's assignment as the SQL-shaped argmin
+    over (int64 squared L2, cid) structs — the oracle's tie-break."""
+    from dist_mapreduce_spark.plans.iterative import kmeans_sqdist
+
+    dists = F.array(
+        *[
+            F.struct(
+                kmeans_sqdist(F.col("q"), c).alias("d"),
+                F.lit(i).cast("int").alias("cid"),
+            )
+            for i, c in enumerate(centroids)
+        ]
+    )
+    return df.select("vec_id", "q", F.array_min(dists)["cid"].alias("cluster"))
+
+
+def _literal_pair_scores(res):
+    """Reference: the oracle's pr CTE — every in-block pair of `res`
+    scored by the per-pair cosine fold."""
+    from dist_mapreduce_spark.functions.vectors import cosine_spark_sql
+
+    a, b = res.alias("a"), res.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.rcell") == F.col("b.rcell"))
+            & (F.col("a.sub") == F.col("b.sub"))
+            & (F.col("a.vec_id") != F.col("b.vec_id")),
+        )
+        .select(
+            F.col("a.vec_id").alias("src_id"),
+            F.col("b.vec_id").alias("dst_id"),
+            F.expr(cosine_spark_sql("a.embedding", "b.embedding")).alias(
+                "score"
+            ),
+        )
+        .distinct()
+    )
+
+
+def _literal_probe_truth(emb):
+    """Reference: the oracle's brute-force probe truth — every probe
+    against the whole corpus through the per-pair cosine fold."""
+    from dist_mapreduce_spark.functions.vectors import cosine_spark_sql
+    from dist_mapreduce_spark.plans.knn_graph import KNN_K, KNN_PROBE
+
+    probe = emb.filter(
+        (F.col("vec_id") < KNN_PROBE) & F.col("embedding").isNotNull()
+    ).select(F.col("vec_id").alias("src_id"), F.col("embedding").alias("qv"))
+    corpus = emb.filter(F.col("embedding").isNotNull()).select(
+        F.col("vec_id").alias("dst_id"), F.col("embedding").alias("ev")
+    )
+    w = Window.partitionBy("src_id").orderBy(F.desc("score"), F.asc("dst_id"))
+    return (
+        corpus.join(F.broadcast(probe), F.col("dst_id") != F.col("src_id"))
+        .withColumn("score", F.expr(cosine_spark_sql("qv", "ev")))
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= KNN_K)
+        .select("src_id", "dst_id")
+    )
 
 
 def test_gemm_matches_literal_on_gate_corpus(spark):
@@ -30,15 +107,9 @@ def test_gemm_matches_literal_on_gate_corpus(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     cent_rows, _n = trained_quantizer(emb)
     assert cent_rows
-    lit = _cells_map(
-        assign_cells(spark, emb, cent_rows, mode="literal").select(
-            "vec_id", "cell"
-        )
-    )
+    lit = _literal_cells(emb, cent_rows)
     gem = _cells_map(
-        assign_cells(spark, emb, cent_rows, mode="gemm").select(
-            "vec_id", "cell"
-        )
+        assign_cells(spark, emb, cent_rows).select("vec_id", "cell")
     )
     assert lit == gem
     assert len(lit) == emb.count()
@@ -56,15 +127,9 @@ def test_gemm_matches_literal_on_dense_chunks(spark):
     cv = _dense_chunk_vectors(spark, SF_SMOKE).localCheckpoint()
     cent_rows, _n = trained_quantizer(cv.select("vec_id", "embedding"))
     assert cent_rows
-    lit = _cells_map(
-        assign_cells(spark, cv, cent_rows, mode="literal").select(
-            "vec_id", "cell"
-        )
-    )
+    lit = _literal_cells(cv, cent_rows)
     gem = _cells_map(
-        assign_cells(spark, cv, cent_rows, mode="gemm").select(
-            "vec_id", "cell"
-        )
+        assign_cells(spark, cv, cent_rows).select("vec_id", "cell")
     )
     assert lit == gem
 
@@ -85,13 +150,9 @@ def test_gemm_degenerate_rows_match_literal(spark):
         (6, [0.0, 0.0, 1.0]),        # → cid 9
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    lit = _cells_map(
-        assign_cells(spark, df, cents, mode="literal").select(
-            "vec_id", "cell"
-        )
-    )
+    lit = _literal_cells(df, cents)
     gem = _cells_map(
-        assign_cells(spark, df, cents, mode="gemm").select("vec_id", "cell")
+        assign_cells(spark, df, cents).select("vec_id", "cell")
     )
     assert lit == gem
     # The degenerate rows all land in the smallest cent_id.
@@ -111,18 +172,14 @@ def test_gemm_inf_element_raises_literal_unchanged(spark):
     cents = [(3, [1.0, 0.0, 0.0]), (7, [0.0, 1.0, 0.0])]
     rows = [(1, [0.9, 0.1, 0.0]), (2, [float("inf"), 1.0, 0.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # Literal mode: no error; the inf row ranks a real winner (dot with
-    # cid 3 = +inf beats cid 7's finite score).
-    lit = _cells_map(
-        assign_cells(spark, df, cents, mode="literal").select(
-            "vec_id", "cell"
-        )
-    )
+    # The literal expression: no error; the inf row ranks a real
+    # winner (dot with cid 3 = +inf beats cid 7's finite score).
+    lit = _literal_cells(df, cents)
     assert lit[1] == 3 and lit[2] == 3
-    # GEMM mode: the contract is enforced inline — loud failure, never
-    # a silent misplacement.
+    # GEMM: the contract is enforced inline — loud failure, never a
+    # silent misplacement.
     with pytest.raises(Exception, match="inf"):
-        assign_cells(spark, df, cents, mode="gemm").collect()
+        assign_cells(spark, df, cents).collect()
 
 
 def test_gemm_zero_norm_centroid_raises(spark):
@@ -148,13 +205,9 @@ def test_gemm_tiebreak_is_min_cent_id(spark):
         [(1, [1.0, 1.0]), (2, [-1.0, 0.5])],
         "vec_id long, embedding array<double>",
     )
-    lit = _cells_map(
-        assign_cells(spark, df, cents, mode="literal").select(
-            "vec_id", "cell"
-        )
-    )
+    lit = _literal_cells(df, cents)
     gem = _cells_map(
-        assign_cells(spark, df, cents, mode="gemm").select("vec_id", "cell")
+        assign_cells(spark, df, cents).select("vec_id", "cell")
     )
     assert lit == gem == {1: 2, 2: 2}
 
@@ -181,17 +234,13 @@ def test_kmeans_gemm_assignment_bit_identical(spark):
     set-equal): exact integer arithmetic has no accumulation order to
     disagree about. Pin (a) per-row cluster equality of one assignment
     pass including degenerate rows, and (b) the trained centroids of a
-    full 5-round run being list-equal under both modes."""
-    import os
-
-    from pyspark.sql import functions as F
-
+    full 5-round run being list-equal with the SQL-shaped argmin
+    swapped in."""
+    from dist_mapreduce_spark.plans import iterative
     from dist_mapreduce_spark.plans.iterative import (
-        kmeans_assign,
         kmeans_assign_gemm,
         train_kmeans_centroids_df,
     )
-    from dist_mapreduce_spark.plans.similarity import ASSIGN_MODE_ENV
     from dist_mapreduce_spark.sources.tables import load_table
 
     emb = (
@@ -211,7 +260,7 @@ def test_kmeans_gemm_assignment_bit_identical(spark):
     ]
     lit = {
         int(r["vec_id"]): int(r["cluster"])
-        for r in kmeans_assign(emb, cents).collect()
+        for r in _literal_kmeans_assign(emb, cents).collect()
     }
     gem = {
         int(r["vec_id"]): int(r["cluster"])
@@ -227,7 +276,7 @@ def test_kmeans_gemm_assignment_bit_identical(spark):
     c2 = [[5] * 64, [0] * 64]
     lit2 = {
         int(r["vec_id"]): int(r["cluster"])
-        for r in kmeans_assign(dg, c2).collect()
+        for r in _literal_kmeans_assign(dg, c2).collect()
     }
     gem2 = {
         int(r["vec_id"]): int(r["cluster"])
@@ -235,18 +284,15 @@ def test_kmeans_gemm_assignment_bit_identical(spark):
     }
     assert lit2 == gem2 == {1: 0, 2: 0, 3: 0}
 
-    # Full training run: centroids list-equal under both modes
-    # (explicit env pins — the process default is gemm since r13).
-    os.environ[ASSIGN_MODE_ENV] = "literal"
+    # Full training run: centroids list-equal with the reference
+    # assignment swapped into the trainer's loop.
+    real = iterative.kmeans_assign_gemm
+    iterative.kmeans_assign_gemm = _literal_kmeans_assign
     try:
         want = train_kmeans_centroids_df(emb, 13)
     finally:
-        os.environ.pop(ASSIGN_MODE_ENV, None)
-    os.environ[ASSIGN_MODE_ENV] = "gemm"
-    try:
-        got = train_kmeans_centroids_df(emb, 13)
-    finally:
-        os.environ.pop(ASSIGN_MODE_ENV, None)
+        iterative.kmeans_assign_gemm = real
+    got = train_kmeans_centroids_df(emb, 13)
     assert got == want
 
 
@@ -364,40 +410,27 @@ def test_knn_graph_gemm_equals_literal(spark):
     """Round-12 verdict item #1's pin: the GEMM-accelerated kNN graph
     build (gemm residency ranking + blockwise BLAS candidate
     pre-selection + exact rescore) is BIT-IDENTICAL to the literal
-    build — full (src, dst, score, rk) row equality, not just the
-    edge set, because the surviving pairs are exact-rescored."""
-    import os
+    chain — the DuckDB oracle's full (src, dst, score, rk) rows, not
+    just the edge set, because the surviving pairs are
+    exact-rescored."""
+    import duckdb
 
-    from dist_mapreduce_spark.plans.knn_graph import (
-        q_knn_graph,
-        q_knn_graph_collapsed,
+    from dist_mapreduce_spark.plans import registry
+
+    registry.load_all()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS"
+        f" SELECT * FROM '{SF_SMOKE}/embeddings.parquet'"
     )
-    from dist_mapreduce_spark.plans.similarity import ASSIGN_MODE_ENV
-
-    os.environ[ASSIGN_MODE_ENV] = "literal"
-    try:
-        lit = sorted(
-            tuple(r) for r in q_knn_graph(spark, SF_SMOKE).collect()
+    for name in ("knn_graph", "knn_graph_collapsed"):
+        got = sorted(
+            tuple(r) for r in registry.QUERIES[name](spark, SF_SMOKE).collect()
         )
-        litc = sorted(
-            tuple(r)
-            for r in q_knn_graph_collapsed(spark, SF_SMOKE).collect()
+        want = sorted(
+            tuple(r) for r in con.execute(registry.ORACLES[name]).fetchall()
         )
-    finally:
-        os.environ.pop(ASSIGN_MODE_ENV, None)
-    os.environ[ASSIGN_MODE_ENV] = "gemm"
-    try:
-        gem = sorted(
-            tuple(r) for r in q_knn_graph(spark, SF_SMOKE).collect()
-        )
-        gemc = sorted(
-            tuple(r)
-            for r in q_knn_graph_collapsed(spark, SF_SMOKE).collect()
-        )
-    finally:
-        os.environ.pop(ASSIGN_MODE_ENV, None)
-    assert lit and lit == gem
-    assert litc and litc == gemc
+        assert got and got == want, name
 
 
 def test_gemm_block_candidates_superset_with_degenerates(spark):
@@ -409,10 +442,6 @@ def test_gemm_block_candidates_superset_with_degenerates(spark):
     import numpy as np
 
     from dist_mapreduce_spark.plans.knn_graph import pair_scores
-    from dist_mapreduce_spark.plans.similarity import ASSIGN_MODE_ENV
-    import os
-
-    from pyspark.sql import functions as F
 
     rows = [
         (0, [1.0, 0.0, 0.0]),
@@ -433,16 +462,12 @@ def test_gemm_block_candidates_superset_with_degenerates(spark):
     )
     lit = sorted(
         (int(r["src_id"]), int(r["dst_id"]), r["score"])
-        for r in pair_scores(res, df, mode="literal").collect()
+        for r in _literal_pair_scores(res).collect()
     )
-    os.environ[ASSIGN_MODE_ENV] = "gemm"
-    try:
-        gem = sorted(
-            (int(r["src_id"]), int(r["dst_id"]), r["score"])
-            for r in pair_scores(res, df).collect()
-        )
-    finally:
-        os.environ.pop(ASSIGN_MODE_ENV, None)
+    gem = sorted(
+        (int(r["src_id"]), int(r["dst_id"]), r["score"])
+        for r in pair_scores(res, df).collect()
+    )
     # K=5, block of 7 → every pair survives pre-selection here, so the
     # scored sets must be IDENTICAL (NaN-safe compare).
     def norm(t):
@@ -464,15 +489,10 @@ def test_gemm_small_finite_block_no_self_pairs(spark):
     (The degenerate-corpus test above routes through the non-finite
     branch, which masks the diagonal correctly — this block must stay
     all-finite to hit the fast path.)"""
-    import os
-
-    from pyspark.sql import functions as F
-
     from dist_mapreduce_spark.plans.knn_graph import (
         _gemm_block_candidates,
         pair_scores,
     )
-    from dist_mapreduce_spark.plans.similarity import ASSIGN_MODE_ENV
 
     rows = [
         (0, [1.0, 0.0, 0.0]),
@@ -494,14 +514,8 @@ def test_gemm_small_finite_block_no_self_pairs(spark):
     }
     assert cand, "pre-selection must keep the finite pairs"
     assert not any(s == d for s, d in cand), "self-pairs leaked"
-    lit = sorted(
-        tuple(r) for r in pair_scores(res, df, mode="literal").collect()
-    )
-    os.environ[ASSIGN_MODE_ENV] = "gemm"
-    try:
-        gem = sorted(tuple(r) for r in pair_scores(res, df).collect())
-    finally:
-        os.environ.pop(ASSIGN_MODE_ENV, None)
+    lit = sorted(tuple(r) for r in _literal_pair_scores(res).collect())
+    gem = sorted(tuple(r) for r in pair_scores(res, df).collect())
     assert lit == gem
     assert not any(r[0] == r[1] for r in gem)
 
@@ -524,9 +538,7 @@ def test_probe_truth_gemm_equals_literal_and_adversarial(spark, tmp_path):
         return sorted(tuple(r) for r in df.collect())
 
     e = _emb(spark, SF_SMOKE)
-    assert rows(_probe_truth(e, mode="literal")) == rows(
-        _probe_truth(e, mode="gemm")
-    )
+    assert rows(_literal_probe_truth(e)) == rows(_probe_truth(e))
 
     data = []
     for v in range(60):
@@ -540,6 +552,6 @@ def test_probe_truth_gemm_equals_literal_and_adversarial(spark, tmp_path):
     df = spark.createDataFrame(
         data, "vec_id long, embedding array<float>, label int"
     )
-    lit = rows(_probe_truth(df, mode="literal"))
-    gem = rows(_probe_truth(df, mode="gemm"))
+    lit = rows(_literal_probe_truth(df))
+    gem = rows(_probe_truth(df))
     assert lit == gem and len(lit) > 0

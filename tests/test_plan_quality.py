@@ -33,21 +33,10 @@ pytestmark = pytest.mark.skipif(
 
 
 def _audit(spark, name):
-    """Audit the LITERAL certification plan (docs/EXPLAIN.md's
-    convention): the gemm default (round 13) intentionally adds one
-    Arrow-batched BLAS stage to every assignment-bearing plan, which
-    would trip the py==0 pins that exist to catch ACCIDENTAL
-    row-Python — so these shape pins certify the literal chain, and
-    the gemm plans are certified by value in docs/LOCAL_GATE.md."""
     from dist_mapreduce_spark.plans import registry
-    from dist_mapreduce_spark.plans.similarity import ASSIGN_MODE_ENV
 
     registry.load_all()
-    os.environ[ASSIGN_MODE_ENV] = "literal"
-    try:
-        return audit(name, registry.QUERIES[name], spark, SF)
-    finally:
-        os.environ.pop(ASSIGN_MODE_ENV, None)
+    return audit(name, registry.QUERIES[name], spark, SF)
 
 
 def test_winnow_is_map_side_only(spark):
@@ -74,11 +63,12 @@ def test_lsh_plan_shape(spark):
 
 def test_ivf_plan_shape(spark):
     """Round-4 re-plan: map-side cell assignment — no N·k join, no
-    corpus-wide ranking window; was 10 shuffles / 3 scans."""
+    corpus-wide ranking window; was 10 shuffles / 3 scans. Exactly
+    one Python stage: the GEMM cell assignment."""
     info = _audit(spark, "sim_topk_ivf")
     assert info["shuffles"] <= 3, info
     assert len(info["scan_cols"]) <= 2, info
-    assert info["python_stages"] == 0, info
+    assert info["python_stages"] == 1, info
 
 
 def test_dedup_minhash_no_cartesian_no_python(spark):
@@ -231,11 +221,18 @@ def test_global_windows_sit_over_bounded_frames(spark):
     result (≤ n_languages / |sources|×|langs| rows). Pin that every
     Window in these plans consumes an aggregation, not a corpus scan —
     a refactor that slides the window below the groupBy would
-    single-partition the corpus and must fail here."""
+    single-partition the corpus and must fail here. Because this pin
+    holds, get_spark silences WindowExec's "No Partition Defined"
+    warning: its logger must sit at ERROR."""
     for q in ("sample_temperature", "data_mix_report"):
         info = _audit(spark, q)
         assert info["windows_over_agg"], (q, info)
         assert all(info["windows_over_agg"]), (q, info)
+    from dist_mapreduce_spark.session import WINDOW_EXEC_LOGGER
+
+    log4j = spark.sparkContext._jvm.org.apache.logging.log4j
+    level = log4j.LogManager.getLogger(WINDOW_EXEC_LOGGER).getLevel()
+    assert level.toString() == "ERROR"
 
 
 def test_image_phash_single_shuffle_one_python_stage(spark):
@@ -375,11 +372,12 @@ def test_passage_maxp_two_shuffles_beyond_scan(spark):
 
 def test_contamination_eval_side_broadcasts(spark):
     """The eval slice (benchmark-sized) must broadcast onto the
-    cell-blocked train side — never a shuffled join of the corpus."""
+    cell-blocked train side — never a shuffled join of the corpus.
+    Exactly one Python stage: the GEMM cell assignment."""
     info = _audit(spark, "contamination_embedding")
     assert info["broadcast_joins"] >= 1, info
     assert info["sortmerge_joins"] == 0, info
-    assert info["python_stages"] == 0, info
+    assert info["python_stages"] == 1, info
 
 
 def test_interval_overlap_is_equi_join_on_bins(spark):

@@ -371,7 +371,7 @@ def test_dense_upsert_changes_chunk_cardinality(spark, tmp_path):
         q_dense_index_upsert,
     )
     from dist_mapreduce_spark.plans.similarity import (
-        assign_cells,
+        ivf_ranked_cells_sql,
         trained_quantizer,
     )
 
@@ -412,12 +412,12 @@ def test_dense_upsert_changes_chunk_cardinality(spark, tmp_path):
             G.concat(G.col("text"), G.lit(DENSE_EDIT_SUFFIX)).alias("text"),
         ),
     )
+    # Reference: the oracle's cell expression evaluated directly.
+    ranked = ivf_ranked_cells_sql(cent_rows)
     want = {
         int(r["vec_id"]): int(r["cell"])
-        for r in assign_cells(
-            spark, post.unionByName(edited), cent_rows, mode="literal"
-        )
-        .select("vec_id", "cell")
+        for r in post.unionByName(edited)
+        .select("vec_id", G.expr(f"{ranked}[0].c").alias("cell"))
         .collect()
     }
     from dist_mapreduce_spark.plans.index_commit import index_data_dir
@@ -521,7 +521,7 @@ def test_dense_retrain_walk_fires_rebuilds_and_serves(spark, tmp_path):
         q_search_dense_maxp_retrained,
     )
     from dist_mapreduce_spark.plans.similarity import (
-        assign_cells,
+        ivf_ranked_cells_sql,
         trained_quantizer,
     )
 
@@ -545,7 +545,10 @@ def test_dense_retrain_walk_fires_rebuilds_and_serves(spark, tmp_path):
     }
     cu = _dense_cu_frame(spark, sfdir)
     cent_fresh, _n = trained_quantizer(cu.select("vec_id", "embedding"))
-    want_cells = assign_cells(spark, cu, cent_fresh, mode="literal")
+    # Reference: the oracle's cell expression evaluated directly.
+    want_cells = cu.withColumn(
+        "cell", F.expr(f"{ivf_ranked_cells_sql(cent_fresh)}[0].c")
+    )
     want = {
         int(r["cell"]): (int(r["n"]), int(r["s"]))
         for r in want_cells.groupBy("cell")

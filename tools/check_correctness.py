@@ -8,13 +8,6 @@ and with tolerance so FP-order mismatches are visible before the real
 driver sees them.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
-
-Assignment modes: with SPARK_GRAFT_ASSIGN unset, every selected query
-is certified in BOTH modes — literal in-process, then the gemm
-production mode in a fresh subprocess (rows tagged ``name@gemm``) —
-so the path deployments run by default can never silently outrun its
-certification (round-13 advice). Set the env var to pin one mode
-(what the six-sweep gate scripts do).
 """
 
 from __future__ import annotations
@@ -84,20 +77,6 @@ def _release_arenas() -> None:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-
-    # Certification default (round 14, from round-13 advice): an unset
-    # SPARK_GRAFT_ASSIGN certifies BOTH assignment modes — the literal
-    # chain (the DuckDB replay's construction-exact twin) in this
-    # process, then the GEMM production mode in a FRESH subprocess
-    # (fresh because the per-corpus index/trainer memos don't key on
-    # the mode: an in-process switch would silently reuse
-    # literal-built artifacts and certify nothing). The gemm pass's
-    # rows are re-tagged `name@gemm` so a combined log stays
-    # unambiguous. Setting the env var pins ONE mode (what the
-    # six-sweep gate scripts do).
-    both_modes = "SPARK_GRAFT_ASSIGN" not in os.environ
-    if both_modes:
-        os.environ["SPARK_GRAFT_ASSIGN"] = "literal"
 
     import __spark_entry__ as e
     from dist_mapreduce_spark.session import get_spark
@@ -204,28 +183,7 @@ def main() -> int:
         else:
             print(f"PASS  {name} ({len(sdf)} rows, {time.time()-t0:.1f}s)")
     print(f"\n{n_run - len(failures)}/{n_run} ok")
-    rc = 1 if failures else 0
-    if both_modes:
-        # The production-mode pass: same queries, fresh process,
-        # SPARK_GRAFT_ASSIGN=gemm. Output rows re-tagged name@gemm.
-        import re as _re
-        import subprocess
-
-        print("\n== gemm-mode pass (fresh process) ==", flush=True)
-        env = dict(os.environ, SPARK_GRAFT_ASSIGN="gemm")
-        proc = subprocess.Popen(
-            [sys.executable, os.path.abspath(__file__), sf_dir, *sys.argv[2:]],
-            env=env,
-            stdout=subprocess.PIPE,
-            stderr=subprocess.DEVNULL,
-            text=True,
-        )
-        tag = _re.compile(r"^(PASS  |FAIL  |ok\?   )(\S+?)([: (])")
-        for line in proc.stdout:
-            print(tag.sub(r"\1\2@gemm\3", line), end="", flush=True)
-        proc.wait()
-        rc = rc or proc.returncode
-    return rc
+    return 1 if failures else 0
 
 
 if __name__ == "__main__":

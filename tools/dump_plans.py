@@ -17,14 +17,20 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> None:
+def main() -> int:
     sf_dir, outdir, tag, *names = sys.argv[1:]
     import __spark_entry__ as e
+
+    qs = e.queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        print(f"unknown queries: {unknown}; valid names:", file=sys.stderr)
+        print("\n".join(sorted(qs)), file=sys.stderr)
+        return 2
     from dist_mapreduce_spark.session import get_spark
 
     spark = get_spark("dump_plans")
-    jvm = spark.sparkContext._jvm
-    qs = e.queries()
+    utils = spark.sparkContext._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
     root = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
@@ -33,7 +39,7 @@ def main() -> None:
     os.makedirs(root, exist_ok=True)
     for name in names:
         df = qs[name](spark, sf_dir)
-        txt = jvm.PythonSQLUtils.explainString(
+        txt = utils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
         path = os.path.join(root, f"{name}_{tag}.txt")
@@ -42,7 +48,8 @@ def main() -> None:
         n_ex = txt.count("Exchange")
         n_scan = txt.count("Scan parquet") + txt.count("Scan ExistingRDD")
         print(f"{name}: {n_ex} Exchange, {n_scan} scans -> {path}")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())
