@@ -1289,14 +1289,12 @@ def _staleness_oracle() -> str:
         N_ITER,
         kmeans_dist_duck,
         kmeans_train_ctes,
+        train_sample_pred_duck,
     )
 
     from dist_mapreduce_spark.functions.vectors import _dot_duckdb
 
     clast = f"c{N_ITER}"
-    from dist_mapreduce_spark.plans.similarity import (
-        _train_sample_pred_duck,
-    )
 
     fresh = ", ".join(
         kmeans_train_ctes(
@@ -1304,7 +1302,7 @@ def _staleness_oracle() -> str:
             null_guard=True,
             prefix="f",
             source="ups",
-            extra_where=_train_sample_pred_duck(),
+            extra_where=train_sample_pred_duck(),
         )
     )
     d_frozen = kmeans_dist_duck("e.q", "c.cq")
@@ -1388,12 +1386,13 @@ def q_sim_index_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution-shifted batch fires the statistic (pytest-pinned on
     the shifted fixture).
 
-    Scale shape: two training runs (each one scan + k×dim shuffles —
-    at 100 TB, on the trainer's sample), one statistics scan for the
-    three distance sums (frozen centroids ride the existing cells
-    frame; fresh centroids are ≤ K_MAX×64 int literals), one 64-row
-    mean pull. This is the monitoring query a deployment schedules
-    after every N upsert batches; the decision column is its alert."""
+    Scale shape: two training runs (each one count + one collect of
+    the trainer's capped sample, rounds on the driver), one statistics
+    scan for the three distance sums (frozen centroids ride the
+    existing cells frame; fresh centroids are ≤ K_MAX×64 int
+    literals), one 64-row mean pull. This is the monitoring query a
+    deployment schedules after every N upsert batches; the decision
+    column is its alert."""
     from dist_mapreduce_spark.plans.iterative import (
         KMEANS_SCALE,
         kmeans_quantize_col,
@@ -1451,18 +1450,15 @@ def staleness_decision_df(
     fre_ints = [
         [int(x * KMEANS_SCALE) for x in fv] for _cid, fv in cent_fresh
     ]
-    from dist_mapreduce_spark.plans.similarity import (
-        train_sample_pred_spark,
-        train_sample_stride,
-    )
+    from dist_mapreduce_spark.plans.iterative import train_sample
 
     upsnn = ups.filter(F.col("embedding").isNotNull())
     cells = ivf_cells_df(spark, upsnn, cent_frozen)
     # The statistic runs on the fresh TRAINER'S SAMPLE (the oracle's
     # fe frame — stride 1 = everything at gate scales; round 10).
-    q = cells.filter(
-        F.expr(train_sample_pred_spark(train_sample_stride(n2)))
-    ).select("vec_id", "cell", kmeans_quantize_col().alias("q"))
+    q = train_sample(cells, n2).select(
+        "vec_id", "cell", kmeans_quantize_col().alias("q")
+    )
     fcells = ivf_cells_df(spark, upsnn, cent_fresh).select(
         "vec_id", F.col("cell").alias("fcell")
     )

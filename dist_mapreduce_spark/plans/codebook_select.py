@@ -142,10 +142,7 @@ def q_sim_codebook_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the centroid table broadcasts as k×dim literals) — both
     statistics jobs, no shuffle wider than 64 rows. At 100 TB this
     runs on the same sample the trainer uses."""
-    from dist_mapreduce_spark.plans.similarity import (
-        train_sample_pred_spark,
-        train_sample_stride,
-    )
+    from dist_mapreduce_spark.plans.iterative import train_sample
 
     emb = load_table(spark, sf_dir, "embeddings")
     cent_rows, _n = trained_quantizer(emb)
@@ -164,9 +161,9 @@ def q_sim_codebook_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The statistic runs on the TRAINER'S SAMPLE (round 10 — the
     # oracle's gm/st read the e frame, which is the sampled trainer
     # input; stride 1 = the whole corpus at gate scales).
-    q = cells.filter(
-        F.expr(train_sample_pred_spark(train_sample_stride(_n)))
-    ).select("vec_id", "cell", kmeans_quantize_col().alias("q"))
+    q = train_sample(cells, _n).select(
+        "vec_id", "cell", kmeans_quantize_col().alias("q")
+    )
     gvec = [
         int(r["g"])
         for r in (

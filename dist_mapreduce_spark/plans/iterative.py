@@ -8,14 +8,14 @@ every run, every cluster size, and the predicate pushes down to the
 scan. (This is how training corpora hold out eval slices: membership
 is a pure function of the key.)
 
-Iteration: Lloyd's k-means over the embeddings table, expressed as a
-per-round Spark plan — broadcast centroids into a codegen'd
-assignment expression, recompute centroids with posexplode + a single
-(cluster, dim) aggregation. No Python touches row data; the driver
-loop only carries k×dim centroid floats per round. That is the 100 TB
-shape: per-iteration cost = one scan + one shuffle of (k·dim) partial
-sums, with deterministic seeding (first-k by vec_id) so results are
-reproducible run-to-run.
+Iteration: Lloyd's k-means over the embeddings table in exact int64
+fixed point. The trainer collects its md5-stride training sample (at
+most 2·TRAIN_SAMPLE_CAP rows) to the driver once and runs every round
+in numpy; the full corpus is then assigned by one GEMM map stage over
+one scan. Seeding is deterministic (first k by vec_id), so results are
+reproducible run-to-run and replayable by the DuckDB oracle. The graph
+algorithms (components, PageRank) run as per-round DataFrame plans
+over one symmetric edge list.
 """
 
 from __future__ import annotations
@@ -100,6 +100,52 @@ DIM = 64
 # in int64.
 KMEANS_SCALE = 1 << 20
 
+#: Training-sample cap (round 10): Lloyd's needs ~k·10³ points, not N —
+#: above this corpus size every trainer runs on a deterministic
+#: md5-stride sample (stride = n // CAP, keeping 2^17..2^18 rows, ≥32
+#: points per centroid at similarity.K_MAX) while K, n_probe,
+#: ASSIGNMENT and every serving stage still use the FULL corpus. The
+#: rule is identical in both dialects (the stride is exact integer
+#: division of the same count(*) statistic; membership is an
+#: md5-prefix mod — the house cross-engine hash), so trained centroids
+#: stay hash-exact. Below 2·CAP rows the stride is 1 and the sample is
+#: every row with a non-NULL vec_id. The cap also bounds the frame the
+#: trainer collects to the driver (train_kmeans_centroids_df).
+TRAIN_SAMPLE_CAP = 1 << 17
+
+#: The count(*) statistic and the sample stride as scalar CTEs (the
+#: oracle twins of train_sample's count and train_sample_stride).
+TRAIN_NSTAT_CTE = (
+    "nstat AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings)"
+)
+TRAIN_SRULE_CTE = (
+    f"srule AS (SELECT greatest(1, n // {TRAIN_SAMPLE_CAP}) AS st FROM nstat)"
+)
+
+
+def train_sample_pred_duck() -> str:
+    """Deterministic training-sample membership, DuckDB dialect: the
+    48-bit md5 prefix of the vector id mod the srule stride."""
+    h = md5_prefix_long_duckdb_sql("CAST(vec_id AS VARCHAR)")
+    return f"({h} % (SELECT st FROM srule)) = 0"
+
+
+def train_sample_pred_spark(stride: int) -> str:
+    """The Spark twin with the driver-computed stride inlined."""
+    h = md5_prefix_long_spark_sql("CAST(vec_id AS STRING)")
+    return f"({h} % {stride}) = 0"
+
+
+def train_sample_stride(n: int) -> int:
+    """The srule rule, exactly: stride over the full-table count."""
+    return max(1, n // TRAIN_SAMPLE_CAP)
+
+
+def train_sample(df: DataFrame, n: int) -> DataFrame:
+    """The rows of `df` (which has vec_id) in the training sample of a
+    corpus of `n` rows."""
+    return df.filter(F.expr(train_sample_pred_spark(train_sample_stride(n))))
+
 
 def kmeans_dist_duck(lhs: str = "e.q", rhs: str = "c.cq") -> str:
     """DuckDB int64 squared-L2 between two quantized-vector columns.
@@ -119,6 +165,29 @@ def kmeans_dist_duck(lhs: str = "e.q", rhs: str = "c.cq") -> str:
         for j in range(1, DIM + 1)
     )
     return f"(CAST(0 AS BIGINT) + {terms})"
+
+
+def kmeans_quantized_duck(source: str = "embeddings") -> str:
+    """DuckDB (vec_id, q) over `source`: the kmeans_quantize_col twin."""
+    return (
+        f"SELECT vec_id, list_transform(embedding,"
+        f" x -> CAST(floor(CAST(x AS DOUBLE) * {KMEANS_SCALE}) AS BIGINT)) AS q"
+        f" FROM {source}"
+    )
+
+
+def kmeans_assign_duck(clast: str) -> str:
+    """(vec_id, cid): every corpus vector (not just the training
+    sample) at its nearest `clast` centroid, rank-1 over (dist, cid) —
+    the same deterministic argmin tie-break the Spark side uses."""
+    return (
+        f"SELECT vec_id, cid FROM ("
+        f" SELECT e.vec_id, c.cid,"
+        f" row_number() OVER (PARTITION BY e.vec_id"
+        f"  ORDER BY {kmeans_dist_duck()}, c.cid) AS rn"
+        f" FROM ({kmeans_quantized_duck()}) e CROSS JOIN {clast} c)"
+        f" sub WHERE rn = 1"
+    )
 
 
 def kmeans_train_ctes(
@@ -151,9 +220,10 @@ def kmeans_train_ctes(
     post-upsert corpus, a chunk-vector CTE, …). Inner aliases stay `e`
     and `c`, so the distance expression is prefix-invariant.
     ``extra_where`` appends a predicate to the e CTE — the round-10
-    TRAINING SAMPLE (the trainer needs ~k·10³ points, not N; the
-    default serving chain passes the deterministic md5-stride rule so
-    training cost is capped at any corpus size)."""
+    TRAINING SAMPLE (the trainer needs ~k·10³ points, not N; every
+    trained chain passes the deterministic md5-stride rule,
+    train_sample_pred_duck, so training cost is capped at any corpus
+    size)."""
     dist = kmeans_dist_duck()
     limit = k_sql if k_sql is not None else str(K)
     guard = " WHERE embedding IS NOT NULL" if null_guard else ""
@@ -166,9 +236,7 @@ def kmeans_train_ctes(
     mat = " MATERIALIZED" if materialized else ""
     p = prefix
     parts = [
-        f"{p}e AS{mat} (SELECT vec_id, list_transform(embedding,"
-        f" x -> CAST(floor(CAST(x AS DOUBLE) * {KMEANS_SCALE}) AS BIGINT)) AS q"
-        f" FROM {source}{guard})",
+        f"{p}e AS{mat} ({kmeans_quantized_duck(source)}{guard})",
         f"{p}c0 AS{mat} (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, q AS cq"
         f" FROM {p}e ORDER BY vec_id LIMIT {limit})",
     ]
@@ -196,23 +264,21 @@ def kmeans_train_ctes(
 
 def _duck_kmeans_oracle() -> str:
     """The N_ITER-round unrolled Lloyd's iteration as one DuckDB
-    WITH-chain (kmeans_train_ctes): c0 = first K quantized vectors; per
-    round an assignment CTE (rank-1 over (dist, cid) — the same
-    deterministic argmin tie-break the Spark side uses) and an update
-    CTE (per-dim integer floor-division mean via the sign-safe
-    (s - nonneg_mod) // n construction, COALESCE keeps empty clusters'
-    previous centroid); final assignment against c{N} yields sizes +
-    integer centroid checksums. Exact integer math end-to-end = full
-    value oracle for an iterative ML algorithm."""
-    dist = kmeans_dist_duck()
-    parts = list(kmeans_train_ctes())
+    WITH-chain (kmeans_train_ctes) over the md5-stride training sample
+    (nstat/srule — the train_sample twins): c0 = first K sampled
+    quantized vectors; per round an assignment CTE (rank-1 over
+    (dist, cid) — the same deterministic argmin tie-break the Spark
+    side uses) and an update CTE (per-dim integer floor-division mean
+    via the sign-safe (s - nonneg_mod) // n construction, COALESCE
+    keeps empty clusters' previous centroid); the final assignment of
+    the FULL corpus against c{N} yields sizes + integer centroid
+    checksums. Exact integer math end-to-end = full value oracle for
+    an iterative ML algorithm."""
     last = f"c{N_ITER}"
-    parts.append(
-        f"af AS (SELECT vec_id, cid FROM ("
-        f" SELECT e.vec_id, c.cid,"
-        f" row_number() OVER (PARTITION BY e.vec_id ORDER BY {dist}, c.cid)"
-        f" AS rn FROM e CROSS JOIN {last} c) sub WHERE rn = 1)"
+    parts = [TRAIN_NSTAT_CTE, TRAIN_SRULE_CTE] + kmeans_train_ctes(
+        extra_where=train_sample_pred_duck()
     )
+    parts.append(f"af AS ({kmeans_assign_duck(last)})")
     return (
         "WITH " + ", ".join(parts)
         + f" SELECT c.cid AS cluster, cnt.n_vectors,"
@@ -260,26 +326,60 @@ def kmeans_sqdist(vec, c: list[int]):
     )
 
 
+def kmeans_argmin(vmat, cmat):
+    """Row-wise argmin over centroids of the int64 squared L2 between
+    the rows of `vmat` (n×dim) and `cmat` (k×dim), EXACT: ||v−c||²
+    expands to ||v||² − 2v·c + ||c||², the per-row constant ||v||²
+    drops out, and the rest is integer arithmetic with np.argmin's
+    first index winning ties (= the oracle's lexicographic (d, cid)
+    minimum, the centroid index being the cid).
+
+    The score ||c||² − 2v·c runs in float64 (one BLAS GEMM against
+    −2c, plus ||c||²) when every partial sum is provably an integer
+    below 2^53 — dim·max|c|·(max|c| + 2·max|v|) < 2^53; at the 2^-20
+    quantization |q| < 2^21, so the scores stay below 2^50 — which
+    makes it exact in any summation order; otherwise it runs as int64
+    matmul. Measured on one 131,072×64 sample against 4,096 centroids
+    (4 vCPU, 2 BLAS threads): int64 matmul ~31 s per round, float64
+    2.5–3.1 s, identical argmins. Rows run in blocks so the n×k score
+    matrix is never whole."""
+    import numpy as _np
+
+    out = _np.zeros(len(vmat), dtype=_np.int64)
+    if vmat.size == 0:
+        return out
+    c2 = (cmat * cmat).sum(axis=1)                       # ||c||², exact
+    mv, mc = int(_np.abs(vmat).max()), int(_np.abs(cmat).max())
+    exact_f64 = cmat.shape[1] * mc * (mc + 2 * mv) < (1 << 53)
+    if exact_f64:
+        cneg2 = (-2.0 * cmat.astype(_np.float64)).T
+        c2 = c2.astype(_np.float64)
+    step = max(1, (1 << 20) // len(cmat))    # 8 MB score blocks
+    for lo in range(0, len(vmat), step):
+        blk = vmat[lo:lo + step]
+        if exact_f64:
+            scores = blk.astype(_np.float64) @ cneg2
+        else:
+            scores = -2 * (blk @ cmat.T)
+        scores += c2
+        out[lo:lo + step] = _np.argmin(scores, axis=1)
+    return out
+
+
 def kmeans_assign_gemm(df: DataFrame, centroids: list[list[int]]) -> DataFrame:
     """(vec_id, q, cluster): nearest-centroid assignment by exact int64
-    squared L2, as one numpy GEMM per Arrow batch. Unlike the FLOAT
+    squared L2 (kmeans_argmin) per Arrow batch. Unlike the FLOAT
     serving assignment (similarity.gemm_assign_cells, whose BLAS
     accumulation order differs from the oracle's sequential fold),
     this is BIT-IDENTICAL to the DuckDB replay BY CONSTRUCTION: the
-    quantized frame and centroids are int64, ||x−c||² expands to
-    ||x||² − 2x·c + ||c||² in exact integer arithmetic (|x·c| ≤
-    64·2^21·2^21 = 2^48, no overflow), the per-row constant ||x||²
-    drops out of the argmin, and numpy int64 matmul has no rounding to
-    reorder. Tie-break: np.argmin's first index = the oracle's
-    lexicographic (d, cid) minimum, centroid index being the cid.
-    Degenerate rows (q NULL / ragged length / NULL element) make EVERY
-    SQL distance NULL, so the struct minimum falls to cid 0 —
-    replicated here. Pinned against a SQL reference by
+    quantized frame and centroids are int64 and every distance term is
+    exact. Degenerate rows (q NULL / ragged length / NULL element)
+    make EVERY SQL distance NULL, so the struct minimum falls to cid 0
+    — replicated here. Pinned against a SQL reference by
     tests/test_gemm_assign.py."""
     import numpy as _np
 
     cmat = _np.asarray(centroids, dtype=_np.int64)      # k×dim
-    c2 = (cmat * cmat).sum(axis=1)                       # ||c||², exact
     dim = cmat.shape[1]
     # Fresh StructType — StructType.add mutates the frame's cached
     # schema instance (see similarity.gemm_assign_cells).
@@ -307,11 +407,9 @@ def kmeans_assign_gemm(df: DataFrame, centroids: list[list[int]]) -> DataFrame:
                 idx.append(i)
                 rows.append(a.astype(_np.int64, copy=False))
             if idx:
-                vmat = _np.stack(rows)                       # b×dim
-                scores = (-2) * (vmat @ cmat.T) + c2          # exact int64
-                clusters[_np.asarray(idx)] = _np.argmin(
-                    scores, axis=1
-                ).astype(_np.int32)
+                clusters[_np.asarray(idx)] = kmeans_argmin(
+                    _np.stack(rows), cmat
+                )
             out = pdf.copy()
             out["cluster"] = clusters
             yield out
@@ -324,65 +422,96 @@ def kmeans_assign_gemm(df: DataFrame, centroids: list[list[int]]) -> DataFrame:
 def train_kmeans_centroids(
     spark: SparkSession, sf_dir: str
 ) -> list[list[int]]:
-    """Run the N_ITER fixed-point Lloyd's loop and return the trained
+    """Run the N_ITER fixed-point Lloyd's loop on the md5-stride
+    training sample of the embeddings table and return the trained
     integer centroids (k_eff ≤ K lists of DIM int64) — the shared
     trainer behind kmeans_embeddings and the trained-quantizer index
     family. Deterministic and bit-reproducible: seeded from the first
-    K vectors by vec_id, every round exact int64."""
-    return train_kmeans_centroids_df(kmeans_quantized(spark, sf_dir), K)
+    K sampled vectors by vec_id, every round exact int64."""
+    emb = kmeans_quantized(spark, sf_dir)
+    return train_kmeans_centroids_df(train_sample(emb, emb.count()), K)
 
 
-def train_kmeans_centroids_df(emb, k: int) -> list[list[int]]:
-    """The same fixed-point Lloyd's loop over an arbitrary quantized
-    frame (vec_id, q) with an arbitrary centroid count — the trainer
-    behind the DEFAULT serving quantizer (plans/similarity.py), whose
-    K follows the corpus-size rule rather than the fixed module K.
-    Identical arithmetic to train_kmeans_centroids: c0 = first k rows
-    by vec_id, every round exact int64, empty clusters keep their
-    previous centroid."""
-    init = emb.orderBy("vec_id").limit(k).collect()
-    centroids = [[int(x) for x in r["q"]] for r in init]
+def train_kmeans_centroids_df(emb: DataFrame, k: int) -> list[list[int]]:
+    """The fixed-point Lloyd's loop over a DRIVER-SIZED quantized frame
+    (vec_id, q) with an arbitrary centroid count — the trainer behind
+    train_kmeans_centroids and the DEFAULT serving quantizer
+    (plans/similarity.py), whose K follows the corpus-size rule.
+    Callers bound the frame with train_sample (≤ 2·TRAIN_SAMPLE_CAP
+    rows).
+
+    ONE Spark job collects the frame as Arrow; the N_ITER rounds then
+    run in numpy, bit-identical to the oracle's CTE chain
+    (kmeans_train_ctes):
+    - c0 = the first k rows by vec_id (NULLs first, Spark's ASC order);
+    - assignment = kmeans_argmin, exact, first index wins ties;
+    - update = per-(cluster, dim) integer sums s and counts n, new
+      centroid s // n (Python/numpy floor division IS the oracle's
+      sign-safe (s - nonneg_mod) DIV n for n > 0); an empty cluster
+      keeps its previous centroid.
+    A row that is not a full-length integer vector sits in cluster 0
+    (every SQL distance is NULL) and adds what posexplode + sum/count
+    adds: a NULL q nothing, each element position one to n and its
+    value, unless NULL, to s. Rounds run on the driver because the
+    sample cap makes the frame driver-sized, while per-round Spark jobs
+    (two per round) cost more in fixed per-stage overhead than the
+    k×dim arithmetic at benchmark scale."""
+    import numpy as _np
+    import pyarrow.compute as _pc
+
+    tbl = emb.select("vec_id", "q").toArrow()
+    ids = tbl.column("vec_id").combine_chunks()
+    q = tbl.column("q").combine_chunks()
+    order = _np.lexsort((
+        _pc.fill_null(ids, 0).to_numpy(zero_copy_only=False),
+        ids.is_valid().to_numpy(zero_copy_only=False),
+    ))
+    centroids = [[int(x) for x in r] for r in q.take(order[:k]).to_pylist()]
     # Fewer rows than K: the oracle's LIMIT K simply yields fewer
-    # centroids and completes; run with what exists instead of
-    # indexing past the list in the empty-cluster fallback below.
+    # centroids and completes; run with what exists.
     k_eff = len(centroids)
     if k_eff == 0:
         return []
-    # Per-round update: the codegen'd posexplode + (cluster, dim)
-    # partial aggregate stays (map-side combine ships k×DIM partial
-    # sums per task), but the SECOND shuffle the old plan used to
-    # re-assemble dims per cluster (groupBy(cluster) + collect_list +
-    # array_sort) is gone — the final (cluster, dim, s, n) frame is
-    # k×DIM rows, so the driver collects it directly and assembles the
-    # centroids in plain Python (round 16, guide §2.3 / round-15
-    # verdict item #3; plans/r16/kmeans_update_round_*.txt). Values
-    # are bit-identical: Python's s // n for n > 0 IS the sign-safe
-    # (s - nonneg_mod) DIV n floor division the oracle uses, and a dim
-    # no row reaches emits no group, exactly as collect_list skipped
-    # it. (A first attempt replaced the explode with one
-    # groupBy(cluster) carrying 2·DIM sum/count columns — 129 output
-    # fields is over spark.sql.codegen.maxFields, the aggregate fell
-    # out of whole-stage codegen, and the interpreted update measured
-    # +3–8 s per training run at the 20× stress. The explode is the
-    # form that keeps codegen.)
+    dim = _np.asarray(centroids, dtype=_np.int64).shape[1]
+
+    # Element layout: the elements of the non-NULL rows back to back
+    # (a NULL q has none), each tagged with its row and its dim.
+    lens = _pc.fill_null(_pc.list_value_length(q), 0).to_numpy(
+        zero_copy_only=False
+    ).astype(_np.int64)
+    flat = q.flatten()
+    ok = flat.is_valid().to_numpy(zero_copy_only=False)
+    vals = _pc.fill_null(flat, 0).to_numpy(zero_copy_only=False).astype(
+        _np.int64, copy=False
+    )
+    row = _np.repeat(_np.arange(len(lens)), lens)
+    pos = _np.arange(len(vals)) - _np.repeat(_np.cumsum(lens) - lens, lens)
+    full = (lens == dim) & (_np.bincount(row[~ok], minlength=len(lens)) == 0)
+    xmat = vals[full[row]].reshape(-1, dim)
+    width = max(dim, int(lens.max()))
+    cells = k_eff * width
+
     for _ in range(N_ITER):
-        assigned = kmeans_assign_gemm(emb, centroids)
-        new_rows = (
-            assigned.select("cluster", F.posexplode("q").alias("dim", "val"))
-            .groupBy("cluster", "dim")
-            .agg(F.sum("val").alias("s"), F.count("*").alias("n"))
-            .collect()
+        cluster = _np.zeros(len(lens), dtype=_np.int64)
+        cluster[full] = kmeans_argmin(
+            xmat, _np.asarray(centroids, dtype=_np.int64)
         )
-        dims: dict[int, list] = {}
-        for r in new_rows:
-            dims.setdefault(int(r["cluster"]), []).append(
-                (int(r["dim"]), int(r["s"]) // int(r["n"]))
-            )
-        by_cluster = {
-            c: [m for _d, m in sorted(pairs)] for c, pairs in dims.items()
-        }
-        # Empty clusters keep their previous centroid.
-        centroids = [by_cluster.get(i, centroids[i]) for i in range(k_eff)]
+        key = cluster[row] * width + pos
+        n = _np.bincount(key, minlength=cells).reshape(k_eff, width)
+        s = _np.zeros(cells, dtype=_np.int64)
+        _np.add.at(s, key[ok], vals[ok])
+        s = s.reshape(k_eff, width)
+        has = _np.bincount(key[ok], minlength=cells).reshape(k_eff, width) > 0
+        # Each row fills dims 0..len-1, so a cluster's dims are a
+        # prefix and a cluster with any element has one at dim 0;
+        # empty clusters keep their previous centroid.
+        new = list(centroids)
+        for c in _np.flatnonzero(n[:, 0]):
+            w = int(_np.count_nonzero(n[c]))
+            means = (s[c, :w] // n[c, :w]).tolist()
+            # sum() over only-NULL values is NULL: a NULL mean.
+            new[c] = [m if h else None for m, h in zip(means, has[c, :w])]
+        centroids = new
     return centroids
 
 
@@ -397,17 +526,18 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     every round is bit-reproducible and DuckDB replays the identical
     5 rounds as an unrolled CTE chain (_duck_kmeans_oracle).
 
-    Per round:
-    1. assignment: exact int64 squared-L2 argmin as one numpy GEMM per
-       Arrow batch (kmeans_assign_gemm); the first-index argmin is the
-       oracle's (dist, cid) struct-minimum tie-break;
-    2. update: posexplode the vector, ONE shuffle of k×dim partial
-       sums (map-side combine), floor-div means, collect k×dim ints to
-       the driver and rebuild centroid literals for the next round.
+    Training (train_kmeans_centroids): one count fixes the md5-stride
+    sample (every vector below 2·TRAIN_SAMPLE_CAP), one Arrow collect
+    brings it to the driver, and the 5 rounds run in numpy — exact
+    int64 argmin (kmeans_argmin; first index = the oracle's (dist, cid)
+    tie-break), per-(cluster, dim) integer sums, floor-div means.
+    Final assignment of the FULL corpus: one GEMM map stage
+    (kmeans_assign_gemm) + one k-row aggregate.
 
-    Scale: per-round cost = one scan + one k×dim-wide shuffle; the
-    driver holds only k×dim integers. Quantization error is bounded by
-    2^-20 per coordinate — far below any clustering-relevant signal —
+    Scale: training costs two Spark jobs whatever N_ITER is, and the
+    driver holds at most 2·TRAIN_SAMPLE_CAP×64 integers; the corpus is
+    scanned once more for the final assignment. Quantization error is
+    bounded by 2^-20 per coordinate — far below any clustering signal —
     and buys exactness: the 100 TB lesson is that deterministic
     integer ML (same trick as graph_pagerank) is re-runnable and
     auditable across engines, while float avg() depends on partition
@@ -483,9 +613,9 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("c.node").alias("src"), F.col("p.node").alias("dst"))
     # Lazy checkpoint (round 16): the round-0 frontier count is the
     # first action, so one job materializes edges and init labels.
-    edges_sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
+    edges_sym = symmetric_edges(edges, "src", "dst").localCheckpoint(
+        eager=False
+    )
 
     # Round-0 fusion (round 15, same rewrite as propagate_min_labels):
     # with identity initial labels, the first round reduces to
@@ -692,7 +822,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    edges = e0.union(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = symmetric_edges(e0, "src", "dst")
     deg = edges.groupBy("src").agg(F.count("*").alias("d"))
     edges_deg = edges.join(deg, "src").localCheckpoint()
 
@@ -771,6 +901,7 @@ def q_sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from dist_mapreduce_spark.plans.llm_pipeline import (  # noqa: E402
     _duck_minhash_oracle,
+    symmetric_edges,
 )
 
 
@@ -914,9 +1045,9 @@ def q_graph_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dist_mapreduce_spark.plans.llm_pipeline import q_dedup_minhash
 
     pairs = q_dedup_minhash(spark, sf_dir).select("doc_a", "doc_b")
-    edges = pairs.select(F.col("doc_a").alias("v")).union(
-        pairs.select(F.col("doc_b").alias("v"))
-    )
+    # Both endpoints from one evaluation of the pair lineage (a union
+    # would run dedup_minhash's band and verify stages once per branch).
+    edges = pairs.select(F.explode(F.array("doc_a", "doc_b")).alias("v"))
     deg = edges.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("d"))
     bkt = deg.select(
         (F.length(F.bin("d")) - 1).cast("long").alias("log2_bucket"), "d"

@@ -1429,6 +1429,21 @@ def _duck_cluster_oracle() -> str:
     )
 
 
+def symmetric_edges(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """(a, b) plus its swap (b, a) for every row of `pairs` — the same
+    multiset as pairs ∪ swapped(pairs), but from ONE evaluation of
+    `pairs`: a union would plan the whole pair lineage (for minhash
+    pairs: the band exchange and the verify stage) once per branch."""
+    return pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(a).alias(a), F.col(b).alias(b)),
+                F.struct(F.col(b).alias(a), F.col(a).alias(b)),
+            )
+        ).alias("_e")
+    ).select(f"_e.{a}", f"_e.{b}")
+
+
 def propagate_min_labels(pairs: DataFrame) -> DataFrame:
     """Min-label propagation WITH POINTER DOUBLING over a
     (doc_a, doc_b) pair frame → one (node, label) row per edge-incident
@@ -1458,13 +1473,12 @@ def propagate_min_labels(pairs: DataFrame) -> DataFrame:
     one narrow join per round against O(diameter)-many fewer
     checkpoint barriers + convergence collects. Shared by
     dedup_cluster and dedup_cluster_collapsed."""
-    pairs = pairs.select("doc_a", "doc_b")
     # Lazy checkpoint (round 16): the round-0 frontier count below is
     # the first action, so ONE job materializes the edge blocks AND the
     # init labels instead of paying a separate eager-checkpoint job.
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint(eager=False)
+    edges = symmetric_edges(pairs, "doc_a", "doc_b").localCheckpoint(
+        eager=False
+    )
     # Round-0 fusion (round 15): with labels initialized to self, the
     # first round's join+union+groupBy reduces to
     # label0(v) = min({v} ∪ neighbors(v)) — ONE aggregation over the

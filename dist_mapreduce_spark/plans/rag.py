@@ -1575,13 +1575,11 @@ def _dense_fresh_chain_ctes() -> str:
         KMEANS_SCALE,
         N_ITER,
         kmeans_train_ctes,
-    )
-    from dist_mapreduce_spark.plans.similarity import (
-        _train_sample_pred_duck,
+        train_sample_pred_duck,
     )
 
-    fsample = _train_sample_pred_duck().replace("srule", "fsrule")
-    assert fsample != _train_sample_pred_duck()
+    fsample = train_sample_pred_duck().replace("srule", "fsrule")
+    assert fsample != train_sample_pred_duck()
     fresh = ", ".join(
         kmeans_train_ctes(
             k_sql="(SELECT k FROM fkrule)",

@@ -930,27 +930,22 @@ K_DIV = 3
 NPROBE_MIN = 3
 NPROBE_BUDGET = 50 * TOP_K   # expected scored candidates per query
 
-#: Training-sample cap (round 10): the trainer needs ~k·10³ points,
-#: not N — above this corpus size, training runs on a deterministic
-#: md5-stride sample (stride = n // CAP, keeping 2^17..2^18 rows, ≥32
-#: points per centroid at K_MAX) while K, n_probe, ASSIGNMENT, and
-#: every serving stage still use the FULL corpus. Identical rule in
-#: both dialects (the stride is exact integer division of the same
-#: count(*) statistic; membership is an md5-prefix mod — the house
-#: cross-engine hash), so the trained centroids stay hash-exact. At
-#: every gate scale n < CAP ⟹ stride 1 ⟹ byte-identical to the
-#: unsampled trainer; the 20×+ stress corpora are where it binds —
-#: measured: the x20 dense index build fell from 234.7 s (training
-#: dominated) with the full-corpus trainer to the sampled cost
-#: recorded in docs/SCALE.md.
-TRAIN_SAMPLE_CAP = 1 << 17
-
+# Training sample (round 10): the trainer runs on the deterministic
+# md5-stride sample that iterative.TRAIN_SAMPLE_CAP defines (stride 1
+# at every gate scale; the 20×+ stress corpora are where it binds —
+# measured: the x20 dense index build fell from 234.7 s, training
+# dominated, with the full-corpus trainer to the sampled cost recorded
+# in docs/SCALE.md).
 from dist_mapreduce_spark.plans.iterative import (  # noqa: E402
     KMEANS_SCALE,
     N_ITER,
+    TRAIN_NSTAT_CTE,
+    TRAIN_SRULE_CTE,
     kmeans_quantize_col,
     kmeans_train_ctes,
     train_kmeans_centroids_df,
+    train_sample,
+    train_sample_pred_duck,
 )
 
 _CLAST = f"c{N_ITER}"
@@ -958,39 +953,12 @@ _CLAST = f"c{N_ITER}"
 #: count(*) statistic + the K rule + the training-sample stride as
 #: scalar CTEs.
 _TRAINED_RULE_CTES = (
-    f"nstat AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),"
+    f"{TRAIN_NSTAT_CTE},"
     f" krule AS (SELECT greatest(least(CAST(floor(sqrt(CAST(greatest(n, 1)"
     f" AS DOUBLE))) AS BIGINT) // {K_DIV}, {K_MAX}), {K_MIN}) AS k"
     f" FROM nstat),"
-    f" srule AS (SELECT greatest(1, n // {TRAIN_SAMPLE_CAP}) AS st"
-    f" FROM nstat)"
+    f" {TRAIN_SRULE_CTE}"
 )
-
-
-def _train_sample_pred_duck() -> str:
-    """Deterministic training-sample membership, DuckDB dialect: the
-    48-bit md5 prefix of the vector id mod the srule stride."""
-    from dist_mapreduce_spark.functions.hashing import (
-        md5_prefix_long_duckdb_sql,
-    )
-
-    h = md5_prefix_long_duckdb_sql("CAST(vec_id AS VARCHAR)")
-    return f"({h} % (SELECT st FROM srule)) = 0"
-
-
-def train_sample_pred_spark(stride: int) -> str:
-    """The Spark twin with the driver-computed stride inlined."""
-    from dist_mapreduce_spark.functions.hashing import (
-        md5_prefix_long_spark_sql,
-    )
-
-    h = md5_prefix_long_spark_sql("CAST(vec_id AS STRING)")
-    return f"({h} % {stride}) = 0"
-
-
-def train_sample_stride(n: int) -> int:
-    """The srule rule, exactly: stride over the full-table count."""
-    return max(1, n // TRAIN_SAMPLE_CAP)
 
 #: Trained centroids dequantized to exact doubles, feeding the SHARED
 #: assignment suffix under the same `cent (cent_id, cvec)` contract.
@@ -1010,7 +978,7 @@ TRAINED_CELLS_CTE = (
         kmeans_train_ctes(
             k_sql="(SELECT k FROM krule)",
             null_guard=True,
-            extra_where=_train_sample_pred_duck(),
+            extra_where=train_sample_pred_duck(),
         )
     )
     + ","
@@ -1100,12 +1068,13 @@ def trained_quantizer(
     ivf_py_probe_cells). Memoized per corpus fingerprint.
 
     Scale note: the trainer needs ~k·10³ points, not N — above
-    TRAIN_SAMPLE_CAP rows it trains on the deterministic md5-stride
+    2·TRAIN_SAMPLE_CAP rows it trains on the deterministic md5-stride
     sample (round 10; the srule/predicate twins keep the sample —
     hence the centroids — hash-exact cross-engine), while K, n_probe,
-    and every serving stage still use the full corpus; per round it is
-    one sample scan + one k×dim shuffle, and the driver holds k×dim
-    integers (bounded by K_MAX·64)."""
+    and every serving stage still use the full corpus. Training is one
+    count plus one collect of the sample (≤ 2·TRAIN_SAMPLE_CAP×64
+    integers on the driver) whatever N_ITER is; the rounds run in
+    numpy (iterative.train_kmeans_centroids_df)."""
     import math as _math
 
     # `key` lets a caller that pre-materialized the frame pass the
@@ -1134,23 +1103,15 @@ def trained_quantizer(
         K_MIN,
         min(K_MAX, int(_math.floor(_math.sqrt(float(max(n, 1))))) // K_DIV),
     )
-    # Training sample (round 10): above TRAIN_SAMPLE_CAP rows, train on
-    # the deterministic md5-stride subset — stride 1 (= everything) at
-    # every gate scale, capped cost at any larger one. K and all
-    # serving statistics still derive from the FULL count n.
-    stride = train_sample_stride(n)
-    q = emb.filter(
-        F.col("embedding").isNotNull()
-        & F.expr(train_sample_pred_spark(stride))
-    ).select("vec_id", kmeans_quantize_col().alias("q"))
-    # Materialize the quantized frame ONCE before the Lloyd's loop:
-    # every training round is its own action, and without this each
-    # round re-evaluates the source lineage — harmless on a raw
-    # parquet scan, catastrophic when the frame is derived (the dense
-    # chunk corpus re-runs its md5 stub encoder per round: observed
-    # single-core minutes per pass at the 20× stress). At 100 TB this
-    # is the trainer's sample materialization, a few GB.
-    q = q.localCheckpoint()
+    # Training sample (round 10): above 2·TRAIN_SAMPLE_CAP rows, train
+    # on the deterministic md5-stride subset — stride 1 (= everything)
+    # at every gate scale, capped cost at any larger one. K and all
+    # serving statistics still derive from the FULL count n. The
+    # trainer collects the sample in one action, so nothing needs
+    # materializing first.
+    q = train_sample(emb.filter(F.col("embedding").isNotNull()), n).select(
+        "vec_id", kmeans_quantize_col().alias("q")
+    )
     ints = train_kmeans_centroids_df(q, k)
     cent_rows = [
         (cid, [c / float(KMEANS_SCALE) for c in cq])

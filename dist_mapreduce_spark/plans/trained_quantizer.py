@@ -58,11 +58,15 @@ from dist_mapreduce_spark.plans.ann_index import (
 from dist_mapreduce_spark.plans.iterative import (
     KMEANS_SCALE,
     N_ITER,
+    TRAIN_NSTAT_CTE,
+    TRAIN_SRULE_CTE,
+    kmeans_assign_duck,
     kmeans_assign_gemm,
     kmeans_dist_duck,
     kmeans_quantized,
     kmeans_train_ctes,
     train_kmeans_centroids,
+    train_sample_pred_duck,
 )
 from dist_mapreduce_spark.plans.registry import query
 from dist_mapreduce_spark.plans.similarity import (
@@ -87,7 +91,8 @@ _CLAST = f"c{N_ITER}"
 
 #: Assignment + indexable-cell CTEs shared by every oracle here:
 #: af = full-corpus nearest-trained-centroid assignment (EXACTLY the
-#: kmeans final-assignment CTE); tcells = the indexable rows (NULL
+#: kmeans final-assignment CTE — training reads only the md5-stride
+#: sample e, assignment every vector); tcells = the indexable rows (NULL
 #: embeddings cannot be indexed — same exclusion the materialized
 #: sampled index applies on write).
 _TRAINED_CELLS_CTES = (
@@ -95,11 +100,7 @@ _TRAINED_CELLS_CTES = (
     # unrolled distance expression, letting DuckDB inline a
     # multi-referenced CTE re-expands the 64-term chains and blows up
     # planner memory.
-    f"af AS MATERIALIZED (SELECT vec_id, cid FROM ("
-    f" SELECT e.vec_id, c.cid,"
-    f" row_number() OVER (PARTITION BY e.vec_id"
-    f"  ORDER BY {kmeans_dist_duck()}, c.cid) AS rn"
-    f" FROM e CROSS JOIN {_CLAST} c) sub WHERE rn = 1),"
+    f"af AS MATERIALIZED ({kmeans_assign_duck(_CLAST)}),"
     f" tcells AS MATERIALIZED (SELECT a.vec_id, em.embedding, a.cid AS cell"
     f"  FROM af a JOIN embeddings em ON em.vec_id = a.vec_id"
     f"  WHERE em.embedding IS NOT NULL)"
@@ -108,7 +109,10 @@ _TRAINED_CELLS_CTES = (
 
 def _with_trained(*extra: str) -> str:
     return "WITH " + ", ".join(
-        list(kmeans_train_ctes()) + [_TRAINED_CELLS_CTES] + list(extra)
+        [TRAIN_NSTAT_CTE, TRAIN_SRULE_CTE]
+        + kmeans_train_ctes(extra_where=train_sample_pred_duck())
+        + [_TRAINED_CELLS_CTES]
+        + list(extra)
     )
 
 
@@ -122,10 +126,10 @@ _BUILT: dict[str, str] = {}
 def build_trained_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str | None, list[list[int]]]:
-    """Train the quantizer (fixed-point Lloyd's, shared trainer) and
-    materialize the corpus hive-partitioned by trained cell. Memoized
-    per corpus fingerprint like build_ivf_index — ingest runs once,
-    serving reads."""
+    """Train the quantizer (fixed-point Lloyd's on the training sample,
+    shared trainer) and materialize the corpus hive-partitioned by
+    trained cell. Memoized per corpus fingerprint like build_ivf_index
+    — ingest runs once, serving reads."""
     centroids = train_kmeans_centroids(spark, sf_dir)
     if not centroids:
         return None, []
@@ -172,12 +176,11 @@ def q_sim_index_build_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts/id-checksums against what Spark actually wrote: a PASS
     proves the trained index layout is exactly the trained assignment.
 
-    Scale shape: training cost is N_ITER scans + k×dim-wide shuffles
-    (the kmeans_embeddings plan); the build itself is unchanged — one
-    scan + a directory-partitioned write. At 100 TB the trainer runs
-    on a corpus SAMPLE (k-means needs ~k·1000 points, not N) and the
-    assignment map uses the same k×dim literal broadcast this plan
-    uses — training never becomes the bottleneck."""
+    Scale shape: training is one count + one collect of the md5-stride
+    sample (k-means needs ~k·1000 points, not N; the rounds run on the
+    driver — the kmeans_embeddings trainer); the build itself is one
+    scan through the GEMM assignment stage + a directory-partitioned
+    write — training never becomes the bottleneck."""
     path, centroids = build_trained_index(spark, sf_dir)
     if path is None:
         return spark.createDataFrame(

@@ -49,6 +49,37 @@ def _literal_kmeans_assign(df, centroids):
     return df.select("vec_id", "q", F.array_min(dists)["cid"].alias("cluster"))
 
 
+def _spark_lloyd_reference(emb, k):
+    """Reference: the trainer's Lloyd's loop as per-round Spark jobs —
+    c0 = first k rows by vec_id, the SQL-shaped argmin above, and the
+    posexplode + groupBy(cluster, dim) sum/count update collected to
+    the driver (s // n per dim; an empty cluster keeps its centroid; a
+    dim whose values are all NULL has a NULL sum, hence a NULL mean)."""
+    from dist_mapreduce_spark.plans.iterative import N_ITER
+
+    init = emb.orderBy("vec_id").limit(k).collect()
+    centroids = [[int(x) for x in r["q"]] for r in init]
+    for _ in range(N_ITER):
+        rows = (
+            _literal_kmeans_assign(emb, centroids)
+            .select("cluster", F.posexplode("q").alias("dim", "val"))
+            .groupBy("cluster", "dim")
+            .agg(F.sum("val").alias("s"), F.count("*").alias("n"))
+            .collect()
+        )
+        dims: dict[int, list] = {}
+        for r in rows:
+            m = None if r["s"] is None else int(r["s"]) // int(r["n"])
+            dims.setdefault(int(r["cluster"]), []).append((int(r["dim"]), m))
+        by_cluster = {
+            c: [m for _d, m in sorted(pairs)] for c, pairs in dims.items()
+        }
+        centroids = [
+            by_cluster.get(i, centroids[i]) for i in range(len(centroids))
+        ]
+    return centroids
+
+
 def _literal_pair_scores(res):
     """Reference: the oracle's pr CTE — every in-block pair of `res`
     scored by the per-pair cosine fold."""
@@ -234,9 +265,9 @@ def test_kmeans_gemm_assignment_bit_identical(spark):
     set-equal): exact integer arithmetic has no accumulation order to
     disagree about. Pin (a) per-row cluster equality of one assignment
     pass including degenerate rows, and (b) the trained centroids of a
-    full 5-round run being list-equal with the SQL-shaped argmin
-    swapped in."""
-    from dist_mapreduce_spark.plans import iterative
+    full 5-round run of the driver-side trainer being list-equal with
+    the per-round Spark reference loop (_spark_lloyd_reference), on the
+    smoke corpus and on a frame with degenerate rows."""
     from dist_mapreduce_spark.plans.iterative import (
         kmeans_assign_gemm,
         train_kmeans_centroids_df,
@@ -284,16 +315,29 @@ def test_kmeans_gemm_assignment_bit_identical(spark):
     }
     assert lit2 == gem2 == {1: 0, 2: 0, 3: 0}
 
-    # Full training run: centroids list-equal with the reference
-    # assignment swapped into the trainer's loop.
-    real = iterative.kmeans_assign_gemm
-    iterative.kmeans_assign_gemm = _literal_kmeans_assign
-    try:
-        want = train_kmeans_centroids_df(emb, 13)
-    finally:
-        iterative.kmeans_assign_gemm = real
+    # Full training run: the driver-side trainer's centroids are
+    # list-equal with the per-round Spark reference loop's.
+    want = _spark_lloyd_reference(emb, 13)
     got = train_kmeans_centroids_df(emb, 13)
     assert got == want
+
+    # ... also when the training frame carries degenerate rows, which
+    # all sit in cluster 0: a NULL q (adds nothing), short ragged rows
+    # (count in dims 0-1 only), NULL elements (count in n, not in s).
+    base = [(10 + i, [100 * (i % 3) + j for j in range(64)]) for i in range(9)]
+    dg_train = spark.createDataFrame(
+        base
+        + [
+            (101, None),
+            (102, [7, -9]),
+            (103, [None] + [-3] * 63),
+            (104, [None, None]),
+        ],
+        "vec_id long, q array<long>",
+    )
+    want = _spark_lloyd_reference(dg_train, 3)
+    assert train_kmeans_centroids_df(dg_train, 3) == want
+    assert all(len(c) == 64 for c in want)
 
 
 def test_gemm_rank_cells_matches_literal_prefix(spark):

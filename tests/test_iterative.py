@@ -118,3 +118,33 @@ def test_pagerank_symmetry_mass_and_determinism(spark, monkeypatch):
     assert part > s1
     assert 0 < it.PR_SCALE - (part + s1 + s2) < 100 * (it.PR_ITERS + 1)
     assert {r["node"]: r["rank_fp"] for r in q(spark, SF).collect()} == rows
+
+
+def test_trained_quantizer_job_count_does_not_grow_with_rounds(spark, monkeypatch):
+    """One trained_quantizer training run on the smoke corpus is a fixed
+    number of Spark jobs — the corpus count (its scan and its final
+    aggregate) and one collect of the training sample — whatever N_ITER
+    is: the Lloyd's rounds run on the driver, not as Spark jobs."""
+    import uuid
+
+    from dist_mapreduce_spark.plans import iterative
+    from dist_mapreduce_spark.plans.similarity import trained_quantizer
+    from dist_mapreduce_spark.sources.tables import load_table
+
+    sc = spark.sparkContext
+    emb = load_table(spark, SF, "embeddings")
+
+    def jobs_for_one_run(n_iter):
+        monkeypatch.setattr(iterative, "N_ITER", n_iter)
+        group = f"train-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "trained_quantizer job count")
+        try:
+            # A fresh memo key forces a real training run.
+            cent_rows, _n = trained_quantizer(emb, key=(group,))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert cent_rows
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    jobs = {n_iter: jobs_for_one_run(n_iter) for n_iter in (1, 5, 9)}
+    assert jobs == {1: 3, 5: 3, 9: 3}, jobs

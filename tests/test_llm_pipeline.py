@@ -1029,3 +1029,32 @@ def test_min_label_propagation_multi_component(spark):
         assert labels[v] == 100
     for v in range(200, 230):
         assert labels[v] == 200
+
+
+def test_min_label_propagation_evaluates_pairs_once(spark):
+    """The symmetric edge list comes from ONE evaluation of the pair
+    frame: a Python UDF on the pair lineage bumps an accumulator once
+    per row it sees, so pairs ∪ swapped(pairs) — which plans the whole
+    lineage once per branch — would count every pair twice."""
+    from pyspark.sql import functions as F
+
+    from dist_mapreduce_spark.plans.llm_pipeline import propagate_min_labels
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def tap(x):
+        seen.add(1)
+        return x
+
+    tap_udf = F.udf(tap, "long")
+    raw = [(i, i + 1) for i in range(0, 40)] + [(100, j) for j in range(101, 120)]
+    pairs = spark.createDataFrame(raw, "doc_a long, doc_b long").select(
+        tap_udf("doc_a").alias("doc_a"), "doc_b"
+    )
+    labels = {
+        int(r["node"]): int(r["label"])
+        for r in propagate_min_labels(pairs).collect()
+    }
+    assert seen.value == len(raw)
+    assert {labels[v] for v in range(0, 41)} == {0}
+    assert {labels[v] for v in range(100, 120)} == {100}

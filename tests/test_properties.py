@@ -640,7 +640,7 @@ def test_train_sample_predicate_cross_engine_parity(spark):
     from dist_mapreduce_spark.functions.hashing import (
         md5_prefix_long_duckdb_sql,
     )
-    from dist_mapreduce_spark.plans.similarity import (
+    from dist_mapreduce_spark.plans.iterative import (
         TRAIN_SAMPLE_CAP,
         train_sample_pred_spark,
         train_sample_stride,
