@@ -21,6 +21,8 @@ operators.wordcount.write_sorted_text.
 
 from __future__ import annotations
 
+import os
+import tempfile
 import threading
 import time
 from dataclasses import dataclass, field
@@ -57,6 +59,11 @@ class JobRunner:
         self._jobs: dict[int, Job] = {}
         self._next_id = 1
         self._lock = threading.Lock()
+        # Default outputs land under one directory unique to this
+        # runner (made on first use): job ids restart at 1 in every
+        # process, so a shared /tmp/mr-out-{id} would let a restarted or
+        # second server overwrite earlier jobs' output.
+        self._out_root: str | None = None
 
     def submit_job(
         self, files: list[str], n_reduce: int | None = None, output_dir: str | None = None
@@ -71,7 +78,9 @@ class JobRunner:
         with self._lock:
             job_id = self._next_id
             self._next_id += 1
-            out = output_dir or f"/tmp/mr-out-{job_id}"
+            if output_dir is None and self._out_root is None:
+                self._out_root = tempfile.mkdtemp(prefix="mr-out-")
+            out = output_dir or os.path.join(self._out_root, str(job_id))
             job = Job(job_id, list(files), n_reduce, out, status=PENDING)
             self._jobs[job_id] = job
         t = threading.Thread(target=self._run, args=(job,), daemon=True)

@@ -10,8 +10,9 @@ a probe is partition pruning". This module executes it:
   write lossless with per-cell stats against the DuckDB cell oracle.
 - ``sim_topk_ivf_pruned`` serves the query batch FROM that index as
   ONE batched plan (round 6; round 5 looped per query): probes are
-  ranked in-plan, the union of probed cells — bounded by the trained k (K_MAX at most)
-  regardless of batch size — lands as a literal ``cell IN (...)``
+  ranked by the numpy GEMM stage (ivf_probes_df), the union of probed
+  cells — bounded by the trained k (K_MAX at most) regardless of batch
+  size — lands as a literal ``cell IN (...)``
   partition filter, and a single pruned scan broadcast-joins the probe
   frame. EXPLAIN shows PartitionFilters; tests/test_ann_index.py pins
   one index scan reading exactly the probed directories; docs/SCALE.md
@@ -64,11 +65,10 @@ from dist_mapreduce_spark.plans.similarity import (
     TRAINED_CELLS_CTE,
     TRAINED_NPROBE_CTES,
     assign_cells,
-    ivf_cells_df,
     ivf_probes_df,
     ivf_py_probe_cells,
-    ivf_ranked_cells_sql,
     lsh_candidates,
+    probe_cells,
     py_dot,
     trained_n_probe,
     trained_quantizer,
@@ -94,6 +94,10 @@ def _index_dir(kind: str, sf_dir: str) -> str:
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings")
+
+
+#: The columns of a lifecycle index row (label stays out).
+_INDEX_COLS = ("vec_id", "embedding", "cell")
 
 
 #: Index paths already built by THIS process, keyed to a fingerprint
@@ -149,7 +153,7 @@ def build_ivf_index(
     fp = _corpus_fingerprint(sf_dir)
     if _BUILT_THIS_SESSION.get(path) == fp and os.path.isdir(path):
         return path, cent_rows, n_corpus
-    # Same assignment as ivf_cells_df, with `label` riding along so
+    # The lifecycle indexes' assignment, with `label` riding along so
     # metadata-filtered serving (sim_topk_filtered_ivf) can push its
     # predicate into the pruned scan (PushedFilters) instead of
     # joining attributes back at query time.
@@ -218,8 +222,8 @@ def serve_batched_from_index(
     (the round-5 verdict's top item: the per-query driver loop made job
     count and plan size linear in batch size).
 
-    Shape: the query batch ranks the literal centroids IN-PLAN
-    (ivf_probes_df — the same pure-map expression sim_topk_ivf uses)
+    Shape: the query batch ranks the centroids in one numpy GEMM stage
+    (ivf_probes_df — the same probe stage sim_topk_ivf uses)
     and explodes to (query_id, qv, pcell); the only driver pull is the
     DISTINCT probed-cell set, which is bounded by the trained k REGARDLESS of
     batch size, and becomes the literal ``cell IN (...)`` partition
@@ -237,9 +241,8 @@ def serve_batched_from_index(
     )
     if not cent_rows:
         return empty
-    ranked = ivf_ranked_cells_sql(cent_rows)
     probes = ivf_probes_df(
-        emb, ranked, n_queries,
+        emb, cent_rows, n_queries,
         n_probe=trained_n_probe(len(cent_rows), n_corpus),
     )
     # Bounded driver pull: ≤ k cell ids, independent of n_queries.
@@ -344,16 +347,7 @@ def _filtered_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not cent_rows:
         return empty
-    ranked = ivf_ranked_cells_sql(cent_rows)
-    probes = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.explode(
-            F.expr(
-                f"transform(slice({ranked}, 1, {FILTER_OVER_PROBE}), x -> x.c)"
-            )
-        ).alias("pcell"),
-    )
+    probes = ivf_probes_df(emb, cent_rows, n_probe=FILTER_OVER_PROBE)
     union_cells = sorted(
         int(r["pcell"]) for r in probes.select("pcell").distinct().collect()
     )
@@ -622,14 +616,13 @@ def q_sim_cand_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cent_rows, n_all = trained_quantizer(emb)
     if cent_rows:
-        ranked = ivf_ranked_cells_sql(cent_rows)
         ivf_c = (
-            ivf_cells_df(spark, emb, cent_rows)
+            assign_cells(spark, emb, cent_rows)
             .join(
                 F.broadcast(
                     ivf_probes_df(
                         emb,
-                        ranked,
+                        cent_rows,
                         n_probe=trained_n_probe(len(cent_rows), n_all),
                     ).select("query_id", "pcell")
                 ),
@@ -823,11 +816,11 @@ def q_sim_ivf_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Execution mirrors the 100 TB deployment end-to-end: the corpus is
     written hive-partitioned by assigned cell (ingest), the query batch
-    is served by ONE batched plan — probes ranked in-plan, the union of
-    probed cells (≤ K_CLUST ids regardless of batch size) as a LITERAL
-    partition filter (EXPLAIN: PartitionFilters; a 1-query probe reads
-    1 of 16 directories — tests/test_ann_index.py pins it), exact
-    cosine inside the probed cells, top-k per query, then recall
+    is served by ONE batched plan — probes ranked by the GEMM stage,
+    the union of probed cells (≤ K_CLUST ids regardless of batch size)
+    as a LITERAL partition filter (EXPLAIN: PartitionFilters; a 1-query
+    probe reads 1 of 16 directories — tests/test_ann_index.py pins it),
+    exact cosine inside the probed cells, top-k per query, then recall
     against a full-scan brute-force truth.
     Everything lands in one hash-checked row: (n_truth, n_hit, recall,
     n_cand, n_corpus, cand_frac)."""
@@ -836,11 +829,9 @@ def q_sim_ivf_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cvec", F.expr(_CVEC_SPARK)
     ).drop("g")
     cents = [(g, _py_clust_centroid(g)) for g in range(K_CLUST)]
-    ranked = ivf_ranked_cells_sql(cents, col="cvec")
     path = _index_dir("ivf_clustered", sf_dir)
     (
-        corp.repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("cell", F.expr(f"{ranked}[0].c"))
+        assign_cells(spark, corp, cents, vec_col="cvec")
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(path)
@@ -867,21 +858,16 @@ def q_sim_ivf_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Approx: BATCHED pruned serving — one plan for the whole query
     # batch (same shape as serve_batched_from_index): the query rows
-    # rank the literal centroids in-plan and explode to (query_id, qv,
+    # rank the centroids (probe_cells) and explode to (query_id, qv,
     # pcell); the union of probed cells (≤ K_CLUST ids, independent of
     # batch size) becomes the literal partition filter; one pruned scan
     # + broadcast equi-join on cell replaces round 5's per-query loop.
-    ranked_q = ivf_ranked_cells_sql(cents, col="qv")
-    probes = (
+    probes = probe_cells(
         back.filter(F.col("vec_id").isin(q_ids) if q_ids else F.lit(False))
-        .select(F.col("vec_id").alias("query_id"), F.col("cvec").alias("qv"))
-        .select(
-            "query_id",
-            "qv",
-            F.explode(
-                F.expr(f"transform(slice({ranked_q}, 1, {CLUST_PROBE}), x -> x.c)")
-            ).alias("pcell"),
-        )
+        .select(F.col("vec_id").alias("query_id"), F.col("cvec").alias("qv")),
+        cents,
+        CLUST_PROBE,
+        vec_col="qv",
     )
     union_cells = sorted(
         int(r["pcell"]) for r in probes.select("pcell").distinct().collect()
@@ -994,11 +980,15 @@ def q_sim_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             " max_id bigint, dim_sum bigint",
         )
     is_new = F.col("vec_id") % APPEND_MOD == APPEND_REM
-    base = ivf_cells_df(spark, emb.filter(~is_new), cent_rows)
+    base = assign_cells(spark, emb.filter(~is_new), cent_rows).select(
+        *_INDEX_COLS
+    )
     # Overwrite clears any previous run's directory, so the append
     # below is idempotent run-to-run.
     base.write.mode("overwrite").partitionBy("cell").parquet(path)
-    batch = ivf_cells_df(spark, emb.filter(is_new), cent_rows)
+    batch = assign_cells(spark, emb.filter(is_new), cent_rows).select(
+        *_INDEX_COLS
+    )
     batch.write.mode("append").partitionBy("cell").parquet(path)
     back = spark.read.parquet(path)
     return (
@@ -1101,14 +1091,16 @@ def q_sim_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # Fresh full build each run (the demo needs a pre-delete index; a
     # production deployment starts from the live one).
-    write_index_base(ivf_cells_df(spark, emb, cent_rows), path)
+    write_index_base(
+        assign_cells(spark, emb, cent_rows).select(*_INDEX_COLS), path
+    )
     is_del = F.expr(_DELETE_PRED_SQL)
     tomb = emb.filter(is_del).select("vec_id")
     # Affected cells: assign ONLY the tombstone batch (pure map over
     # ~1% of rows), pull the distinct cell ids — bounded by k.
     del_cells = sorted(
         int(r["cell"])
-        for r in ivf_cells_df(spark, emb.filter(is_del), cent_rows)
+        for r in assign_cells(spark, emb.filter(is_del), cent_rows)
         .select("cell")
         .distinct()
         .collect()
@@ -1216,7 +1208,9 @@ def q_sim_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             " max_id bigint, dim_sum bigint",
         )
     # Fresh full build each run (pre-upsert state).
-    write_index_base(ivf_cells_df(spark, emb, cent_rows), path)
+    write_index_base(
+        assign_cells(spark, emb, cent_rows).select(*_INDEX_COLS), path
+    )
     is_ups = F.expr(_UPSERT_PRED_SQL)
     new_batch = (
         emb.filter(is_ups)
@@ -1224,12 +1218,12 @@ def q_sim_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     old_cells = {
         int(r["cell"])
-        for r in ivf_cells_df(spark, emb.filter(is_ups), cent_rows)
+        for r in assign_cells(spark, emb.filter(is_ups), cent_rows)
         .select("cell")
         .distinct()
         .collect()
     }
-    new_assigned = ivf_cells_df(spark, new_batch, cent_rows)
+    new_assigned = assign_cells(spark, new_batch, cent_rows)
     new_cells = {
         int(r["cell"])
         for r in new_assigned.select("cell").distinct().collect()
@@ -1243,8 +1237,8 @@ def q_sim_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cell").isin(ups_cells)
         )
         survivors = affected.join(F.broadcast(tomb), "vec_id", "left_anti")
-        merged = survivors.select("vec_id", "embedding", "cell").unionByName(
-            new_assigned.select("vec_id", "embedding", "cell")
+        merged = survivors.select(*_INDEX_COLS).unionByName(
+            new_assigned.select(*_INDEX_COLS)
         )
         merged.write.mode("overwrite").partitionBy("cell").parquet(stage)
         commit_cell_swap(path, stage, ups_cells)
@@ -1453,13 +1447,13 @@ def staleness_decision_df(
     from dist_mapreduce_spark.plans.iterative import train_sample
 
     upsnn = ups.filter(F.col("embedding").isNotNull())
-    cells = ivf_cells_df(spark, upsnn, cent_frozen)
+    cells = assign_cells(spark, upsnn, cent_frozen)
     # The statistic runs on the fresh TRAINER'S SAMPLE (the oracle's
     # fe frame — stride 1 = everything at gate scales; round 10).
     q = train_sample(cells, n2).select(
         "vec_id", "cell", kmeans_quantize_col().alias("q")
     )
-    fcells = ivf_cells_df(spark, upsnn, cent_fresh).select(
+    fcells = assign_cells(spark, upsnn, cent_fresh).select(
         "vec_id", F.col("cell").alias("fcell")
     )
     gvec = [
@@ -1589,7 +1583,7 @@ def build_retrained_index(
     fp = _corpus_fingerprint(sf_dir)
     if _RETRAINED_BUILT.get(path) == fp and os.path.isdir(path):
         return path, cent_fresh, n
-    cells = ivf_cells_df(spark, ups, cent_fresh)
+    cells = assign_cells(spark, ups, cent_fresh)
     # Atomic publish (round-13): the fresh assignment lands as a new
     # generation and ONE manifest flip replaces the old index — a
     # crash mid-retrain leaves the previous generation current.
@@ -1687,9 +1681,9 @@ def q_sim_serve_retrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     not just the right index statistics.
 
     Scale shape: serve_batched_from_index's exact plan over the
-    retrained path — probes ranked in-plan, ≤ k distinct probed cell
-    ids pulled, literal IN-list partition filter, one broadcast join,
-    one top-k window."""
+    retrained path — probes ranked by the GEMM stage, ≤ k distinct
+    probed cell ids pulled, literal IN-list partition filter, one
+    broadcast join, one top-k window."""
     path, cent_fresh, n = build_retrained_index(spark, sf_dir)
     empty = spark.createDataFrame(
         [], "query_id bigint, vec_id bigint, score double, rk int"
@@ -1697,9 +1691,8 @@ def q_sim_serve_retrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not cent_fresh:
         return empty
     ups = _ups_frame(spark, sf_dir)
-    ranked = ivf_ranked_cells_sql(cent_fresh)
     probes = ivf_probes_df(
-        ups, ranked, N_QUERIES, trained_n_probe(len(cent_fresh), n)
+        ups, cent_fresh, N_QUERIES, trained_n_probe(len(cent_fresh), n)
     )
     union_cells = sorted(
         int(r["pcell"]) for r in probes.select("pcell").distinct().collect()
@@ -1920,9 +1913,11 @@ def q_sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Assign cells ONCE and cache (reads only the immutable source
     # parquet, never the index path this query rewrites) — the 7
     # micro-batch writes then filter the cached assignment instead of
-    # re-evaluating the centroid expression per batch.
-    cells_all = ivf_cells_df(spark, emb, cent_rows).withColumn(
-        "b", F.col("vec_id") % mod
+    # re-running the GEMM assignment per batch.
+    cells_all = (
+        assign_cells(spark, emb, cent_rows)
+        .select(*_INDEX_COLS)
+        .withColumn("b", F.col("vec_id") % mod)
     )
     cells_all.cache()
     try:
@@ -2019,7 +2014,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("canonical_id"),
             F.lit(False).alias("is_dup"),
         )
-    cells = ivf_cells_df(spark, emb, cent_rows)
+    cells = assign_cells(spark, emb, cent_rows)
     a, b = cells.alias("a"), cells.alias("b")
     dup = (
         a.join(
@@ -2088,7 +2083,6 @@ def q_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
             " max_id bigint, dim_sum bigint",
         )
-    ranked = ivf_ranked_cells_sql(cent_rows)
     path = _index_dir("ivf_index_stream", sf_dir)
     stage = _index_dir("ivf_stream_stage", sf_dir)
     ckpt = _index_dir("ivf_stream_ckpt", sf_dir)
@@ -2097,8 +2091,8 @@ def q_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = F.col("vec_id") % APPEND_MOD == APPEND_REM
     # Bulk backfill: base index, overwrite (clears prior runs), staged
     # as ingest_batch=-1 under each cell directory.
-    ivf_cells_df(spark, emb.filter(~is_new), cent_rows).withColumn(
-        "ingest_batch", F.lit(-1)
+    assign_cells(spark, emb.filter(~is_new), cent_rows).select(
+        *_INDEX_COLS, F.lit(-1).alias("ingest_batch")
     ).write.mode("overwrite").partitionBy("cell", "ingest_batch").parquet(path)
     # Stage the streaming tail as 3 files -> 3 micro-batches.
     arrivals = emb.filter(is_new).select("vec_id", "embedding")
@@ -2110,7 +2104,7 @@ def q_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch produces, so a checkpoint-replayed batch rewrites its
         # own output instead of duplicating rows.
         (
-            batch_df.withColumn("cell", F.expr(f"{ranked}[0].c"))
+            assign_cells(spark, batch_df, cent_rows)
             .withColumn("ingest_batch", F.lit(batch_id))
             .select("vec_id", "embedding", "cell", "ingest_batch")
             .write.mode("overwrite")
@@ -2286,11 +2280,9 @@ def q_sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "query_id bigint, vec_id bigint, score double, rk int"
         )
-    ranked = ivf_ranked_cells_sql(cent_rows)
     codebook = pq_codebook(cb_rows)
     rows = (
-        emb.repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("cell", F.expr(f"{ranked}[0].c"))
+        assign_cells(spark, emb.select("vec_id", "embedding"), cent_rows)
         .withColumn("codes", F.expr(pq_cells_expr(codebook)))
         .select("vec_id", "cell", "codes")
     )
@@ -2433,11 +2425,9 @@ def build_ivfpq_index(spark: SparkSession, sf_dir: str) -> tuple:
     fp = _corpus_fingerprint(sf_dir)
     if _BUILT_THIS_SESSION.get(path) == fp and os.path.isdir(path):
         return path, cent_rows, cb_rows
-    ranked = ivf_ranked_cells_sql(cent_rows)
     codebook = pq_codebook(cb_rows)
     (
-        emb.repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("cell", F.expr(f"{ranked}[0].c"))
+        assign_cells(spark, emb.select("vec_id", "embedding"), cent_rows)
         .withColumn("codes", F.expr(pq_cells_expr(codebook)))
         .select("vec_id", "embedding", "codes", "cell")
         .write.mode("overwrite")
@@ -2614,8 +2604,8 @@ def q_stream_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (staged as multiple files, maxFilesPerTrigger=1 → real micro-
     batches), and each micro-batch is served inside foreachBatch with
     the SAME batched pruned plan serve_batched_from_index uses — rank
-    the batch's probes in-plan, collect the ≤k distinct probed cells
-    as the literal partition filter, one pruned scan broadcast-joined
+    the batch's probes (probe_cells), collect the ≤k distinct probed
+    cells as the literal partition filter, one pruned scan broadcast-joined
     on cell, window top-k per query. Results land partitioned by
     ``serve_batch=<batch_id>`` with dynamic partition overwrite, so a
     checkpoint-replayed batch rewrites its own results — the
@@ -2640,7 +2630,6 @@ def q_stream_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not cent_rows:
         return empty
-    ranked = ivf_ranked_cells_sql(cent_rows)
     np_ = trained_n_probe(len(cent_rows), n_corpus)
     stage = _index_dir("serve_stream_stage", sf_dir)
     out = _index_dir("serve_stream_out", sf_dir)
@@ -2656,12 +2645,14 @@ def q_stream_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df.repartition(3).write.mode("overwrite").parquet(stage)
 
     def serve_batch(batch_df: DataFrame, batch_id: int) -> None:
-        probes = batch_df.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            F.explode(
-                F.expr(f"transform(slice({ranked}, 1, {np_}), x -> x.c)")
-            ).alias("pcell"),
+        probes = probe_cells(
+            batch_df.select(
+                F.col("vec_id").alias("query_id"),
+                F.col("embedding").alias("qv"),
+            ),
+            cent_rows,
+            np_,
+            vec_col="qv",
         )
         cells = sorted(
             int(r["pcell"]) for r in probes.select("pcell").distinct().collect()
@@ -2831,14 +2822,7 @@ def _pred_filtered_candidates(
     )
     if not cent_rows:
         return empty
-    ranked = ivf_ranked_cells_sql(cent_rows)
-    probes = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.explode(
-            F.expr(f"transform(slice({ranked}, 1, {n_over}), x -> x.c)")
-        ).alias("pcell"),
-    )
+    probes = ivf_probes_df(emb, cent_rows, n_probe=n_over)
     union_cells = sorted(
         int(r["pcell"]) for r in probes.select("pcell").distinct().collect()
     )
@@ -3250,7 +3234,7 @@ def q_sim_topk_ivfpq_res(spark: SparkSession, sf_dir: str) -> DataFrame:
       and the 16-sample residual codebook mixes residuals taken
       against different centroids — strictly worse conditioning.
     - clustered corpus (the repo's closed-form fixture, 5 000 vectors,
-      16 cells, 1-probe; tools/residual_pq_eval.py): residual wins at
+      16 cells, 1-probe; a round-8 one-off script): residual wins at
       every useful depth — depth 64: 0.22 vs 0.12, 128: 0.56 vs 0.42,
       256: 0.84 vs 0.80. In-cell raw subvectors all quantize to their
       cluster's codeword (ADC cannot discriminate within a cell);
@@ -3282,15 +3266,13 @@ def q_sim_topk_ivfpq_res(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "query_id bigint, vec_id bigint, score double, rk int"
         )
-    ranked = ivf_ranked_cells_sql(cent_rows)
     rcb = _res_codebook(cent_rows, cb_rows)
     cmap = dict(cent_rows)
     cent_df = spark.createDataFrame(
         [(int(cid), cv) for cid, cv in cent_rows], "cell long, cvec array<double>"
     )
     rows = (
-        emb.repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("cell", F.expr(f"{ranked}[0].c"))
+        assign_cells(spark, emb.select("vec_id", "embedding"), cent_rows)
         .join(F.broadcast(cent_df), "cell")
         .withColumn("res", F.expr(sub_spark_sql("embedding", "cvec")))
         .withColumn("codes", F.expr(pq_cells_expr(rcb, "res")))
@@ -3465,18 +3447,17 @@ def q_contamination_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "vec_id bigint, eval_id bigint, cos_sim double"
         )
-    ranked = ivf_ranked_cells_sql(cent_rows)
     is_eval = F.col("vec_id") % CONTAM_MOD == CONTAM_REM
-    tr = ivf_cells_df(spark, emb.filter(~is_eval), cent_rows)
-    ev = (
-        emb.filter(is_eval & F.col("embedding").isNotNull())
-        .select(
+    tr = assign_cells(spark, emb.filter(~is_eval), cent_rows)
+    ev = probe_cells(
+        emb.filter(is_eval & F.col("embedding").isNotNull()).select(
             F.col("vec_id").alias("eval_id"),
             F.col("embedding").alias("ev_emb"),
-            F.explode(
-                F.expr(f"transform(slice({ranked}, 1, {CONTAM_RES}), x -> x.c)")
-            ).alias("cell"),
-        )
+        ),
+        cent_rows,
+        CONTAM_RES,
+        vec_col="ev_emb",
+        out_col="cell",
     )
     hit = (
         tr.join(F.broadcast(ev), "cell")
@@ -3512,14 +3493,12 @@ def build_ivfpq_res_index(spark: SparkSession, sf_dir: str) -> tuple:
     fp = _corpus_fingerprint(sf_dir)
     if _BUILT_THIS_SESSION.get(path) == fp and os.path.isdir(path):
         return path, cent_rows, cb_rows
-    ranked = ivf_ranked_cells_sql(cent_rows)
     rcb = _res_codebook(cent_rows, cb_rows)
     cent_df = spark.createDataFrame(
         [(int(cid), cv) for cid, cv in cent_rows], "cell long, cvec array<double>"
     )
     (
-        emb.repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("cell", F.expr(f"{ranked}[0].c"))
+        assign_cells(spark, emb.select("vec_id", "embedding"), cent_rows)
         .join(F.broadcast(cent_df), "cell")
         .withColumn("res", F.expr(sub_spark_sql("embedding", "cvec")))
         .withColumn("codes", F.expr(pq_cells_expr(rcb, "res")))
@@ -3732,7 +3711,7 @@ def q_sim_index_delete_fm(spark: SparkSession, sf_dir: str) -> DataFrame:
             " max_id bigint, dim_sum bigint",
         )
     write_index_base(
-        ivf_cells_df(spark, emb, cent_rows),
+        assign_cells(spark, emb, cent_rows).select(*_INDEX_COLS),
         path,
         mode="file_manifest",
     )
@@ -3740,7 +3719,7 @@ def q_sim_index_delete_fm(spark: SparkSession, sf_dir: str) -> DataFrame:
     tomb = emb.filter(is_del).select("vec_id")
     del_cells = sorted(
         int(r["cell"])
-        for r in ivf_cells_df(spark, emb.filter(is_del), cent_rows)
+        for r in assign_cells(spark, emb.filter(is_del), cent_rows)
         .select("cell")
         .distinct()
         .collect()
@@ -3824,7 +3803,9 @@ def q_sim_index_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _index_dir("ivf_index_pin", sf_dir)
     if not cent_rows:
         return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
-    write_index_base(ivf_cells_df(spark, emb, cent_rows), path)
+    write_index_base(
+        assign_cells(spark, emb, cent_rows).select(*_INDEX_COLS), path
+    )
     # The pin is NOT context-managed here: the returned DataFrame is
     # lazy and the harness materializes it after this function exits,
     # so releasing on exit would drop the protection before the read
@@ -3838,7 +3819,7 @@ def q_sim_index_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tomb = emb.filter(is_del).select("vec_id")
     del_cells = sorted(
         int(r["cell"])
-        for r in ivf_cells_df(spark, emb.filter(is_del), cent_rows)
+        for r in assign_cells(spark, emb.filter(is_del), cent_rows)
         .select("cell")
         .distinct()
         .collect()
@@ -3895,7 +3876,7 @@ def q_sim_index_migrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _index_dir("ivf_index_mig", sf_dir)
     if not cent_rows:
         return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
-    cells = ivf_cells_df(spark, emb, cent_rows)
+    cells = assign_cells(spark, emb, cent_rows).select(*_INDEX_COLS)
     write_index_base(cells, path, mode="hardlink")
     # The migration: same content, explicit new mode, one rebuild.
     write_index_base(cells, path, mode="file_manifest")
@@ -3904,7 +3885,7 @@ def q_sim_index_migrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tomb = emb.filter(is_del).select("vec_id")
     del_cells = sorted(
         int(r["cell"])
-        for r in ivf_cells_df(spark, emb.filter(is_del), cent_rows)
+        for r in assign_cells(spark, emb.filter(is_del), cent_rows)
         .select("cell")
         .distinct()
         .collect()

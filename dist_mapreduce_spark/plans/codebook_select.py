@@ -63,7 +63,7 @@ from dist_mapreduce_spark.plans.similarity import (
     TOP_K,
     TRAINED_CELLS_CTE,
     TRAINED_NPROBE_CTES,
-    ivf_cells_df,
+    assign_cells,
     trained_quantizer,
 )
 from dist_mapreduce_spark.sources.tables import load_table
@@ -155,7 +155,7 @@ def q_sim_codebook_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ints = {
         cid: [int(x * KMEANS_SCALE) for x in fv] for cid, fv in cent_rows
     }
-    cells = ivf_cells_df(
+    cells = assign_cells(
         spark, emb.filter(F.col("embedding").isNotNull()), cent_rows
     )
     # The statistic runs on the TRAINER'S SAMPLE (round 10 — the

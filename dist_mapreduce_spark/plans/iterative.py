@@ -369,7 +369,7 @@ def kmeans_argmin(vmat, cmat):
 def kmeans_assign_gemm(df: DataFrame, centroids: list[list[int]]) -> DataFrame:
     """(vec_id, q, cluster): nearest-centroid assignment by exact int64
     squared L2 (kmeans_argmin) per Arrow batch. Unlike the FLOAT
-    serving assignment (similarity.gemm_assign_cells, whose BLAS
+    serving assignment (similarity.gemm_rank_cells, whose BLAS
     accumulation order differs from the oracle's sequential fold),
     this is BIT-IDENTICAL to the DuckDB replay BY CONSTRUCTION: the
     quantized frame and centroids are int64 and every distance term is
@@ -382,7 +382,7 @@ def kmeans_assign_gemm(df: DataFrame, centroids: list[list[int]]) -> DataFrame:
     cmat = _np.asarray(centroids, dtype=_np.int64)      # k×dim
     dim = cmat.shape[1]
     # Fresh StructType — StructType.add mutates the frame's cached
-    # schema instance (see similarity.gemm_assign_cells).
+    # schema instance (see similarity.gemm_rank_cells).
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     out_schema = StructType(
@@ -566,8 +566,6 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- connected components
 
-CC_MAX_ITERS = 20
-
 
 @query(
     "graph_components",
@@ -587,16 +585,15 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     state them in closed form, while the Spark side runs the general
     algorithm with no knowledge of that structure.
 
-    Per round: join labels into the symmetric edge list (one shuffle on
-    node id), union with self-labels, min-aggregate — converged when
-    sum(label) stops falling (it is monotone non-increasing).
-    localCheckpoint truncates lineage each round so the plan does not
-    grow with iterations. Tree diameter is O(log n) — ~9 rounds at
-    SF 1, ~15 at SF 100; CC_MAX_ITERS=20 covers up to ~2^20 suppliers
-    per nation and the loop RAISES if it ever exits unconverged
-    (silently returning partial labels would be wrong answers). At
-    100 TB scale the same loop runs with the edge list pre-partitioned
-    by src and AQE handling skew."""
+    The rounds are dedup_cluster's: llm_pipeline.propagate_min_labels
+    (round-0 fusion, frontier propagation, pointer doubling, one
+    localCheckpoint per round, RAISES if it exits unconverged at
+    CLUSTER_MAX_ITERS). It labels the edge-incident nodes only, so a
+    left join from the supplier list keeps every singleton (a nation
+    of one supplier) as its own component. Tree diameter is O(log n)
+    and the pointer jump halves the rounds again. At 100 TB scale the
+    same loop runs with the edge list pre-partitioned by src and AQE
+    handling skew."""
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     rk_w = F.row_number().over(
         Window.partitionBy("s_nationkey").orderBy("s_suppkey")
@@ -610,87 +607,13 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         parent,
         (F.col("c.s_nationkey") == F.col("p.s_nationkey"))
         & (F.col("p.rk") == F.expr("c.rk DIV 2")),
-    ).select(F.col("c.node").alias("src"), F.col("p.node").alias("dst"))
-    # Lazy checkpoint (round 16): the round-0 frontier count is the
-    # first action, so one job materializes edges and init labels.
-    edges_sym = symmetric_edges(edges, "src", "dst").localCheckpoint(
-        eager=False
+    ).select(F.col("c.node").alias("doc_a"), F.col("p.node").alias("doc_b"))
+    labels = propagate_min_labels(edges)
+    return (
+        s.select(F.col("s_suppkey").alias("node"))
+        .join(labels, "node", "left")
+        .select("node", F.coalesce("label", "node").alias("component"))
     )
-
-    # Round-0 fusion (round 15, same rewrite as propagate_min_labels):
-    # with identity initial labels, the first round reduces to
-    # label0(v) = min({v} ∪ neighbors(v)) — one aggregation + one join
-    # instead of a full propagation round; singleton nodes (no edges)
-    # fall through the left join and keep themselves (least() skips the
-    # NULL). Identical labeling after round 0, identical fixpoint.
-    # FRONTIER (delta) propagation (round 16, guide §2.3, the same
-    # rewrite as propagate_min_labels): `chg` marks the nodes whose
-    # label changed this round; only those message neighbors next round
-    # (a label that did not change was already delivered the round
-    # after it was acquired, and min-folds are monotone, so re-sending
-    # it can never change anything). Per round the edge join touches
-    # frontier-incident edges only — instead of ALL edges × ALL labels,
-    # the dominant shuffle term — while the min-fold keeps the one
-    # union-aggregate exchange of the full algorithm (same stage count
-    # per round; `old` is the unique labels-side value per node, so the
-    # frontier flag falls out of the same aggregation). Per-round
-    # labelings, round count, and the fixpoint are identical;
-    # singletons keep mn NULL → chg NULL → never frontier members.
-    nbr_min = edges_sym.groupBy("src").agg(F.min("dst").alias("mn"))
-    labels = (
-        ranked.select("node")
-        .join(nbr_min, F.col("node") == nbr_min["src"], "left")
-        .select(
-            "node",
-            F.least(F.col("node"), F.col("mn")).alias("label"),
-            (F.col("mn") < F.col("node")).alias("chg"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    # Lazy checkpoint: the frontier-count action below materializes the
-    # round's label blocks AND returns the convergence test in ONE job
-    # (labels are monotone non-increasing, so `frontier empty` ⇔ the
-    # old sum(label)-unchanged test).
-    n_changed = labels.filter("chg").count()
-    converged = n_changed == 0
-    for _ in range(1, CC_MAX_ITERS):
-        if converged:
-            break
-        delta = labels.filter("chg").select("node", "label")
-        msgs = edges_sym.join(delta, edges_sym["src"] == delta["node"]).select(
-            F.col("dst").alias("node"), "label"
-        )
-        folded = labels.select(
-            "node", "label", F.lit(0).alias("src")
-        ).union(msgs.select("node", "label", F.lit(1).alias("src")))
-        labels = (
-            folded.groupBy("node")
-            .agg(
-                F.min("label").alias("mn"),
-                F.min(F.when(F.col("src") == 0, F.col("label"))).alias(
-                    "old"
-                ),
-            )
-            .select(
-                "node",
-                F.col("mn").alias("label"),
-                (F.col("mn") < F.col("old")).alias("chg"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        n_changed = labels.filter("chg").count()
-        converged = n_changed == 0
-    if not converged:
-        # Min-label propagation moves a root's label one hop per round,
-        # so convergence needs ~diameter rounds. Returning silently
-        # here would hand back WRONG components; fail loudly so the
-        # caller raises CC_MAX_ITERS (or pre-contracts the graph)
-        # instead of trusting unconverged labels.
-        raise RuntimeError(
-            f"graph_components did not converge in {CC_MAX_ITERS} rounds;"
-            " raise CC_MAX_ITERS for graphs with larger diameter"
-        )
-    return labels.select("node", F.col("label").alias("component"))
 
 
 # Temperature-based language rebalancing (the multilingual-corpus
@@ -901,6 +824,7 @@ def q_sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from dist_mapreduce_spark.plans.llm_pipeline import (  # noqa: E402
     _duck_minhash_oracle,
+    propagate_min_labels,
     symmetric_edges,
 )
 

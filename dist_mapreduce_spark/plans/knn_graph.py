@@ -43,8 +43,10 @@ from dist_mapreduce_spark.functions.vectors import cosine_duckdb_sql, cosine_spa
 from dist_mapreduce_spark.plans.registry import query
 from dist_mapreduce_spark.plans.similarity import (
     IVF_CELLS_CTE,
+    assign_cells,
     ivf_cent_rows,
-    ivf_ranked_cells_sql,
+    ivf_probes_df,
+    probe_cells,
 )
 from dist_mapreduce_spark.sources.tables import load_table
 
@@ -89,16 +91,12 @@ def _residency_explode(
 ) -> DataFrame:
     """(vec_id, embedding, rcell): each vector exploded to its
     KNN_RESIDENCY nearest cells. The top-R ranking runs as one numpy
-    GEMM per Arrow batch (gemm_rank_cells — the oracle's rkd prefix,
-    stable-argsort tiebreak, exact rescore on near-ties), so the
-    build's assignment stage never evaluates an O(N·k·dim) generated
-    expression."""
-    from dist_mapreduce_spark.plans.similarity import gemm_rank_cells
-
+    GEMM per Arrow batch (probe_cells — the oracle's rkd prefix,
+    stable-argsort tiebreak, exact rescore on near-ties)."""
     spread = emb.repartition(spark.sparkContext.defaultParallelism)
-    return gemm_rank_cells(spread, cent_rows, KNN_RESIDENCY).select(
-        "vec_id", "embedding", F.explode("rcells").alias("rcell")
-    )
+    return probe_cells(
+        spread, cent_rows, KNN_RESIDENCY, out_col="rcell"
+    ).select("vec_id", "embedding", "rcell")
 
 
 #: One materialization of the blocked-residency frame per (session,
@@ -531,7 +529,7 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine, candidates blocked by KNN_RESIDENCY-cell IVF assignment.
 
     Plan: ONE map-side scan assigns each vector its top-R cells
-    (gemm_rank_cells, exploded — no join, no shuffle for assignment),
+    (probe_cells — no join, no shuffle for assignment),
     a blockwise GEMM per (rcell, sub) block pre-selects each source's
     candidate pairs (DISTINCT collapses pairs that share both cells),
     exact cosine rescores only the survivors, and a per-src window
@@ -1304,8 +1302,6 @@ def q_knn_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One hash-checked row: (method, n_truth, n_hit, recall, n_pairs,
     n_corpus, pair_frac)."""
-    from dist_mapreduce_spark.plans.similarity import ivf_ranked_cells_sql as _r
-
     emb = _emb(spark, sf_dir)
     corpv = (
         emb.select("vec_id")
@@ -1315,8 +1311,7 @@ def q_knn_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("g")
     )
     cents = [(g, _py_clust_centroid(g)) for g in range(K_CLUST)]
-    ranked = _r(cents, col="cvec")
-    cells = corpv.withColumn("cell", F.expr(f"{ranked}[0].c"))
+    cells = assign_cells(spark, corpv, cents, vec_col="cvec")
     a, b = cells.alias("a"), cells.alias("b")
     pr = (
         a.join(
@@ -1575,7 +1570,7 @@ def q_knn_graph_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sampled members, rescores exactly, merges with the previous
     graph (monotone) and re-tops per source; KNN_ITERS = 3 iterations
     under the full oracle. Measured trajectory on sf0.1
-    (tools/knn_trajectory.py, published in docs/SCALE.md): seed 0.352
+    (a one-off script, published in docs/SCALE.md): seed 0.352
     → 0.352/0.356/0.364 over iterations 1-3, FIXPOINT 0.376 at
     iteration 5, exactly flat through 10 — the isotropic ceiling is a
     fixpoint of the sampled iteration, converging slightly below the
@@ -1920,12 +1915,7 @@ def graph_seed_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "query_id bigint, vec_id bigint, score double"
         )
-    ranked = ivf_ranked_cells_sql(tcent)
-    qp = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.expr(f"{ranked}[0].c").cast("long").alias("pcell"),
-    )
+    qp = ivf_probes_df(emb, tcent, N_QUERIES, n_probe=1)
     pcells = sorted(
         int(r["pcell"]) for r in qp.select("pcell").distinct().collect()
     )

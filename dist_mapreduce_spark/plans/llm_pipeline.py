@@ -13,8 +13,6 @@ from __future__ import annotations
 
 import os
 import random
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -26,24 +24,6 @@ from dist_mapreduce_spark.sources.tables import load_table
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
-
-
-def _pin(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Materialize an intermediate that several downstream branches
-    re-consume. Default: ``.cache()`` — fine while the table fits in
-    cluster memory. Set ``SPARK_GRAFT_MATERIALIZE=parquet`` to write a
-    temp parquet and re-scan it instead: the 100 TB shape, where e.g.
-    the shingle table (largest intermediate of dedup_minhash, ~30×
-    corpus size) cannot live in cache and recomputing it per consumer
-    would quadruple the heaviest pass. See docs/SCALE.md.
-    """
-    if os.environ.get("SPARK_GRAFT_MATERIALIZE") == "parquet":
-        path = os.path.join(
-            tempfile.gettempdir(), f"spark_graft_pin_{uuid.uuid4().hex}"
-        )
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-    return df.cache()
 
 
 #: DuckDB/RE2 whitespace class — the twin of ta.WS_CHARS (Java's \s
@@ -532,7 +512,7 @@ def minhash_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
     # column — the full hashing pass evaluated twice (measured 12 s vs
     # 1.2 s at sf0.1). Above the pin it is a size() check on cached
     # rows.
-    doc_sh = _pin(
+    doc_sh = (
         tok_df.select("doc_id", shingles.alias("sh"))
         .select(
             "doc_id",
@@ -540,9 +520,10 @@ def minhash_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
                 "transform(sh, s ->"
                 " cast(conv(substr(md5(s), 1, 12), 16, 10) as bigint))"
             ).alias("harr"),
-        ),
-        spark,
-    ).filter(F.size("harr") > 0)
+        )
+        .cache()
+        .filter(F.size("harr") > 0)
+    )
     # Per-doc minhash signature, map-side: min over the SAME universal
     # hash of the SAME 48-bit values the old shingle-table aggregation
     # folded — array_min and the MIN aggregate are the same fold, so
@@ -801,7 +782,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows before, hence no sizes row, hence never paired — identical
     # membership; and below the pin the filter would collapse into the
     # projection and inline the gram chain twice, the round-15 trap).
-    gram_arr = _pin(
+    gram_arr = (
         docs.selectExpr(
             "doc_id",
             "lang",
@@ -809,9 +790,10 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             " transform(sequence(1, greatest(length(text) - 2, 1)),"
             "  i -> substring(text, i, 3)),"
             " 1, greatest(length(text) - 2, 0))) AS garr",
-        ),
-        spark,
-    ).filter(F.size("garr") > 0)
+        )
+        .cache()
+        .filter(F.size("garr") > 0)
+    )
     # Set sizes are now a map-side size(garr) over the pin — the old
     # plan's first groupBy(doc_id, lang) aggregation (an exchange of
     # the full exploded gram table) is gone; the exploded x/y sides
@@ -932,16 +914,17 @@ def q_dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its shuffle are gone), and the self-join sides re-explode the
     # cached array on the fly. Docs with no shingles had no exploded
     # rows before, so filtering them keeps membership identical.
-    doc_sh = _pin(
+    doc_sh = (
         tok_df.select("doc_id", shingles.alias("sh")).select(
             "doc_id",
             F.expr(
                 "transform(sh, s ->"
                 " cast(conv(substr(md5(s), 1, 12), 16, 10) as bigint))"
             ).alias("harr"),
-        ),
-        spark,
-    ).filter(F.size("harr") > 0)
+        )
+        .cache()
+        .filter(F.size("harr") > 0)
+    )
     sizes = doc_sh.select("doc_id", F.size("harr").cast("long").alias("n"))
     shingle = doc_sh.select("doc_id", F.explode("harr").alias("h"))
     x = shingle.filter(F.col("doc_id") % RECALL_PROBE_MOD == 0).alias("x")
@@ -1312,15 +1295,15 @@ def q_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exploded rows are expression-identical to the old
     # select(explode(shingles)) chain, so every downstream value is
     # unchanged.
-    doc_sh = _pin(
+    doc_sh = (
         tok_df.select("doc_id", shingles.alias("sh")).select(
             "doc_id",
             F.expr(
                 "transform(sh, s ->"
                 " cast(conv(substr(md5(s), 1, 12), 16, 10) as bigint))"
             ).alias("harr"),
-        ),
-        spark,
+        )
+        .cache()
     )
     shingle = doc_sh.select("doc_id", F.explode("harr").alias("h"))
     n_docs = docs.agg(F.count(F.lit(1)).alias("_n_docs"))
@@ -1472,7 +1455,7 @@ def propagate_min_labels(pairs: DataFrame) -> DataFrame:
     the (tiny) label frame — at 100 TB the trade is strictly good:
     one narrow join per round against O(diameter)-many fewer
     checkpoint barriers + convergence collects. Shared by
-    dedup_cluster and dedup_cluster_collapsed."""
+    dedup_cluster, dedup_cluster_collapsed and graph_components."""
     # Lazy checkpoint (round 16): the round-0 frontier count below is
     # the first action, so ONE job materializes the edge blocks AND the
     # init labels instead of paying a separate eager-checkpoint job.
@@ -1602,7 +1585,7 @@ def propagate_min_labels(pairs: DataFrame) -> DataFrame:
     # so fail loudly instead (the oracle computes the full closure).
     raise RuntimeError(
         f"label propagation did not converge in {CLUSTER_MAX_ITERS} rounds;"
-        " raise CLUSTER_MAX_ITERS for longer near-dup chains"
+        " raise CLUSTER_MAX_ITERS for graphs with a longer diameter"
     )
 
 
@@ -2044,13 +2027,13 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in-batch minima) would otherwise each re-scan the text and
     # re-hash it (audited: 3 scans → 1). At 100 TB the corpus side of
     # this is the persisted index, not a recomputation at all.
-    fp = _pin(
+    fp = (
         _docs(spark, sf_dir).select(
             "doc_id",
             ta.normalized_fingerprint(F.col("text")).alias("fp"),
             (F.col("doc_id") % INCR_MOD == INCR_REM).alias("is_new"),
-        ),
-        spark,
+        )
+        .cache()
     )
     idx = (
         fp.filter(~F.col("is_new"))
@@ -2273,7 +2256,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.expr(f"md5(array_join(slice(t, s, {SPAN_WORDS}), ' '))").alias("h"),
     )
-    sh = _pin(sh, spark)  # two consumers: df aggregate + position join
+    sh = sh.cache()  # two consumers: df aggregate + position join
     df_h = sh.groupBy("h").agg(F.count_distinct("doc_id").alias("nd"))
     return (
         sh.join(df_h, "h")
@@ -2828,7 +2811,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = d.select(
         "doc_id", F.explode(F.split("text", TOKEN_SEP)).alias("word")
     ).filter(F.col("word") != "")
-    words = _pin(words, spark)  # two consumers: vocab build + final join
+    words = words.cache()  # two consumers: vocab build + final join
     enc = words.select("word").distinct().selectExpr(
         "word", f"{_BPE_WRAP_SPARK} AS sym"
     )
@@ -2899,13 +2882,13 @@ def q_quality_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab agg, per-doc rollup); no window, nothing quadratic; docs
     with zero tokens have no surprisal and drop out in both engines."""
     d = _docs(spark, sf_dir)
-    tokc = _pin(
+    tokc = (
         d.select(
             "doc_id", F.explode(ta.ws_tokens(F.col("text"))).alias("word")
         )
         .groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("cnt_dw")),
-        spark,
+        .agg(F.count(F.lit(1)).alias("cnt_dw"))
+        .cache()
     )
     ug = tokc.groupBy("word").agg(F.sum("cnt_dw").alias("c"))
     # Σ c over the vocab == Σ cnt_dw over the pinned (doc, word) table,

@@ -525,9 +525,8 @@ def q_sim_topk_mmr_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the pruned scan sim_topk_ivf_pruned pins); everything downstream
     is ≤ MMR_CAND rows per query exactly as in sim_topk_mmr."""
     from dist_mapreduce_spark.plans.similarity import (
-        ivf_cells_df,
+        assign_cells,
         ivf_probes_df,
-        ivf_ranked_cells_sql,
         trained_n_probe,
         trained_quantizer,
     )
@@ -539,13 +538,12 @@ def q_sim_topk_mmr_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "query_id bigint, step bigint, vec_id bigint,"
             " rel double, mmr double"
         )
-    ranked = ivf_ranked_cells_sql(cent_rows)
-    cells = ivf_cells_df(
+    cells = assign_cells(
         spark, emb.filter(F.col("embedding").isNotNull()), cent_rows
     )
     probes = ivf_probes_df(
         emb.filter(F.col("embedding").isNotNull()),
-        ranked,
+        cent_rows,
         MMR_QUERIES,
         n_probe=trained_n_probe(len(cent_rows), n_corpus),
     )
@@ -861,7 +859,7 @@ def _dense_chunk_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     (like a real model forward) is CPU-bound per chunk, and the
     documents parquet arrives as few splits — without the spread, one
     task encodes the whole corpus (observed pinning a single core for
-    minutes at the 20× stress; ivf_cells_df's discipline)."""
+    minutes at the 20× stress; assign_cells' discipline)."""
     return _dense_chunk_vectors_from_docs(
         spark, load_table(spark, sf_dir, "documents")
     )
@@ -933,10 +931,7 @@ def build_dense_index(
     lands partitioned by cell at ingest, and dense serving becomes
     partition pruning instead of a corpus scan."""
     from dist_mapreduce_spark.plans.ann_index import _index_dir
-    from dist_mapreduce_spark.plans.similarity import (
-        ivf_ranked_cells_sql,
-        trained_quantizer,
-    )
+    from dist_mapreduce_spark.plans.similarity import trained_quantizer
 
     import os
 
@@ -971,7 +966,7 @@ def q_search_dense_maxp_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     INDEX — the production composition search_dense_maxp's docstring
     promises: chunk vectors live hive-partitioned by their trained
     IVF cell (build_dense_index, the ingest job), the query batch
-    ranks the literal trained centroids in-plan and probes its np
+    ranks the trained centroids (probe_cells) and probes its np
     nearest cells, the union of probed cells lands as a literal
     ``cell IN (...)`` PARTITION FILTER on the index scan
     (sim_topk_ivf_pruned's exact serving shape), and per-document
@@ -998,10 +993,10 @@ def _serve_dense_pruned(
     n_chunks: int,
 ) -> DataFrame:
     """The pruned dense serving tail over ANY materialized dense-index
-    layout (full build or incremental append) — probes ranked in-plan,
-    the probed-cell union as a literal partition filter, MaxP + top-k.
-    Shared so the appended-index serving row proves layout equivalence
-    through the SAME code path and oracle."""
+    layout (full build or incremental append) — probes ranked by the
+    GEMM stage, the probed-cell union as a literal partition filter,
+    MaxP + top-k. Shared so the appended-index serving row proves
+    layout equivalence through the SAME code path and oracle."""
     empty = spark.createDataFrame(
         [],
         "query_id bigint, doc_id bigint, chunk_id bigint, score double,"
@@ -1010,7 +1005,7 @@ def _serve_dense_pruned(
     if not cent_rows:
         return empty
     from dist_mapreduce_spark.plans.similarity import (
-        ivf_ranked_cells_sql,
+        probe_cells,
         trained_n_probe,
     )
 
@@ -1018,14 +1013,8 @@ def _serve_dense_pruned(
     qv = cv.filter(
         (F.col("doc_id") < DENSE_QUERIES) & (F.col("chunk_id") == 0)
     ).select(F.col("doc_id").alias("query_id"), F.col("embedding").alias("qv"))
-    ranked_q = ivf_ranked_cells_sql(cent_rows, col="qv")
-    np = trained_n_probe(len(cent_rows), n_chunks)
-    probes = qv.select(
-        "query_id",
-        "qv",
-        F.explode(
-            F.expr(f"transform(slice({ranked_q}, 1, {np}), x -> x.c)")
-        ).alias("pcell"),
+    probes = probe_cells(
+        qv, cent_rows, trained_n_probe(len(cent_rows), n_chunks), vec_col="qv"
     )
     # Bounded driver pull: ≤ k cell ids, independent of batch size.
     union_cells = sorted(
@@ -1927,7 +1916,7 @@ def q_search_dense_maxp_retrained(
     today's corpus, so a PASS proves monitor → retrain → serve ends in
     the answers a from-scratch build would give."""
     from dist_mapreduce_spark.plans.similarity import (
-        ivf_ranked_cells_sql,
+        probe_cells,
         trained_n_probe,
     )
 
@@ -1945,14 +1934,8 @@ def q_search_dense_maxp_retrained(
     ).select(
         F.col("doc_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    ranked_q = ivf_ranked_cells_sql(cent_fresh, col="qv")
-    np = trained_n_probe(len(cent_fresh), n2)
-    probes = qv.select(
-        "query_id",
-        "qv",
-        F.explode(
-            F.expr(f"transform(slice({ranked_q}, 1, {np}), x -> x.c)")
-        ).alias("pcell"),
+    probes = probe_cells(
+        qv, cent_fresh, trained_n_probe(len(cent_fresh), n2), vec_col="qv"
     )
     union_cells = sorted(
         int(r["pcell"]) for r in probes.select("pcell").distinct().collect()
@@ -2243,7 +2226,7 @@ def q_search_dense_mmr_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not cent_rows:
         return empty
     from dist_mapreduce_spark.plans.similarity import (
-        ivf_ranked_cells_sql,
+        probe_cells,
         trained_n_probe,
     )
 
@@ -2251,14 +2234,8 @@ def q_search_dense_mmr_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = cv.filter(
         (F.col("doc_id") < DENSE_QUERIES) & (F.col("chunk_id") == 0)
     ).select(F.col("doc_id").alias("query_id"), F.col("embedding").alias("qv"))
-    ranked_q = ivf_ranked_cells_sql(cent_rows, col="qv")
-    np = trained_n_probe(len(cent_rows), n_chunks)
-    probes = qv.select(
-        "query_id",
-        "qv",
-        F.explode(
-            F.expr(f"transform(slice({ranked_q}, 1, {np}), x -> x.c)")
-        ).alias("pcell"),
+    probes = probe_cells(
+        qv, cent_rows, trained_n_probe(len(cent_rows), n_chunks), vec_col="qv"
     )
     union_cells = sorted(
         int(r["pcell"]) for r in probes.select("pcell").distinct().collect()

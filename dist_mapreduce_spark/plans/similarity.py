@@ -504,12 +504,6 @@ def ivf_cent_rows(emb: DataFrame) -> list[tuple[int, list[float]]]:
     )
 
 
-def _vec_lit(vec: list[float]) -> str:
-    # repr() round-trips the float32→double widening exactly, so the
-    # literal fold is bit-identical to the oracle's column fold.
-    return "array(" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in vec) + ")"
-
-
 def py_dot(a: list[float], b: list[float]) -> float:
     """The engines' sequential left fold, replayed in IEEE doubles."""
     acc = 0.0
@@ -525,175 +519,49 @@ def _py_norm(vec: list[float]) -> float:
     return math.sqrt(py_dot(vec, vec))
 
 
-def ivf_ranked_cells_sql(
-    cent_rows: list[tuple[int, list[float]]], col: str = "embedding"
-) -> str:
-    """Spark SQL expression: array of (−dot/|c|, cent_id) structs sorted
-    by the oracle's exact (score DESC, cent_id ASC) order, with the k
-    centroids inlined as literals — cell assignment as a PURE MAP."""
-    k = len(cent_rows)
-    cents = "array(" + ", ".join(_vec_lit(cv) for _, cv in cent_rows) + ")"
-    cids = "array(" + ", ".join(str(cid) for cid, _ in cent_rows) + ")"
-    cnorms = "array(" + ", ".join(
-        f"CAST({_py_norm(cv)!r} AS DOUBLE)" for _, cv in cent_rows
-    ) + ")"
-    dot = (
-        f"aggregate(zip_with({col}, element_at(__cents, i + 1),"
-        " (x, y) -> cast(x as double) * cast(y as double)),"
-        " cast(0.0 as double), (acc, v) -> acc + v)"
-    )
-    # Structs sort field-by-field: s = −(dot/|c|) ascending (= score
-    # descending), then cent_id ascending — the oracle's ORDER BY.
-    return (
-        f"array_sort(transform(sequence(0, {k - 1}), i -> named_struct("
-        f" 's', -({dot} / element_at(__cnorms, i + 1)),"
-        f" 'c', CAST(element_at(__cids, i + 1) AS BIGINT))))"
-    ).replace("__cents", cents).replace("__cids", cids).replace("__cnorms", cnorms)
-
-
-def ivf_cells_df(
-    spark: SparkSession,
-    emb: DataFrame,
-    cent_rows: list[tuple[int, list[float]]],
-) -> DataFrame:
-    """(vec_id, embedding, cell) — nearest-centroid assignment as one
-    map-side scan through the numpy GEMM stage (see assign_cells)."""
-    return assign_cells(spark, emb, cent_rows).select(
-        "vec_id", "embedding", "cell"
-    )
-
-
-def gemm_assign_cells(
-    df: DataFrame, cent_rows: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Append ``cell`` (nearest trained centroid by dot/|c|, cent_id
-    tiebreak) to every row of ``df`` with the score matrix computed as
-    ONE numpy GEMM per Arrow batch — the repo's one cell-assignment
-    kernel (SCALE.md: a generated per-row expression over k·dim
-    centroid literals was the dominant stress-scale cost of the
-    trained-index family; a batch×k×dim BLAS multiply is the same
-    flops at a ~10× smaller constant, off the expression interpreter
-    entirely).
-
-    Exact-semantics contract with ivf_ranked_cells_sql[0] — the
-    oracle's cell CTE (pinned by tests/test_gemm_assign.py against
-    that expression):
-    - valid rows (len == dim, all elements finite): argmax of
-      dot(v, c)/|c| over centroids, first-index (= smallest cent_id,
-      cent_rows being cid-sorted) on exact ties — the expression's
-      array_sort((s, c)) order. BLAS accumulation differs from the
-      sequential fold only in final ulps; gate corpora are pinned
-      set-equal.
-    - degenerate rows (NULL vector, ragged length, NULL/NaN element):
-      every dot folds to NULL in the expression, so ALL centroids tie
-      and the smallest cent_id wins — replicated here verbatim.
-      A ±inf ELEMENT raises ValueError (round-12): the expression
-      does NOT share the min-cent_id routing there (inf·0 = NaN for
-      some centroids, ±inf for others, so it can rank a real winner),
-      so rather than silently misplacing such vectors this path
-      refuses them loudly — embeddings with infinities are outside
-      the contract, and the embedding_audit ingest gate is the
-      upstream fix.
-    - a zero-norm CENTROID makes the expression's dot/|c| abort under
-      ANSI (DIVIDE_BY_ZERO), so this path raises ValueError up front
-      rather than inventing semantics the oracle lacks.
-
-    Preserves every input column; no shuffle (mapInPandas is
-    partition-preserving — repartition upstream for CPU spread, as
-    assign_cells does)."""
-    import numpy as _np
-
-    if not cent_rows:
-        raise ValueError("gemm_assign_cells: no centroids")
-    cids = [cid for cid, _ in cent_rows]
-    # Explicit raise, not assert: this guard protects tie CORRECTNESS
-    # (first-index argmax == min-cent_id only in sorted order) and
-    # must survive `python -O`.
-    if cids != sorted(cids):
-        raise ValueError(
-            "gemm_assign_cells: cent_rows must be cent_id-sorted —"
-            " first-index argmax is the min-cent_id tiebreak only in"
-            " sorted order"
-        )
-    dim = len(cent_rows[0][1])
-    cmat = _np.asarray([cv for _, cv in cent_rows], dtype=_np.float64)
-    norms = _np.sqrt((cmat * cmat).sum(axis=1))
-    if bool((norms == 0.0).any()):
-        raise ValueError(
-            "gemm_assign_cells: zero-norm centroid — the oracle's"
-            " ranking expression aborts on this too (ANSI DIVIDE_BY_ZERO)"
-        )
-    cid_arr = _np.asarray(cids, dtype=_np.int64)
-    # A FRESH StructType: StructType.add mutates in place, and
-    # df.schema returns the DataFrame's cached instance — mutating it
-    # makes df.columns grow a phantom `cell` and breaks mapInPandas's
-    # own column binding.
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("cell", LongType())]
-    )
-
-    def _assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cells = _np.full(len(pdf), cid_arr[0], dtype=_np.int64)
-            idx, rows = [], []
-            for i, v in enumerate(pdf[vec_col]):
-                if v is None:
-                    continue
-                a = _np.asarray(v, dtype=_np.float64)
-                if a.shape != (dim,):
-                    continue
-                if not _np.isfinite(a).all():
-                    # NULL elements arrive as NaN through the float64
-                    # conversion; NaN folds the SQL dot to NULL →
-                    # min-cent_id, replicated by skipping the GEMM.
-                    # ±inf is DIFFERENT: the SQL fold can rank a
-                    # real winner there, so fail loudly instead of
-                    # silently diverging (the documented contract,
-                    # now enforced inline).
-                    if _np.isinf(a).any():
-                        raise ValueError(
-                            "gemm_assign_cells: embedding with a ±inf"
-                            " element — outside the GEMM path's"
-                            " contract (the SQL fold can rank a"
-                            " real winner here); reject such rows"
-                            " upstream (embedding_audit) before"
-                            " assignment"
-                        )
-                    continue
-                idx.append(i)
-                rows.append(a)
-            if idx:
-                vmat = _np.stack(rows)          # b×dim
-                # Block the GEMM so the score matrix stays ~32 MB
-                # regardless of Arrow batch size × k (at K_MAX=4096 a
-                # 10k-row batch would otherwise allocate 327 MB per
-                # task). Same argmax, bounded memory.
-                blk = max(1, (4 << 20) // max(len(cent_rows), 1))
-                out_idx = _np.asarray(idx)
-                for lo in range(0, vmat.shape[0], blk):
-                    scores = vmat[lo:lo + blk] @ cmat.T   # the GEMM
-                    scores /= norms                       # dot/|c|
-                    cells[out_idx[lo:lo + blk]] = cid_arr[
-                        _np.argmax(scores, axis=1)
-                    ]
-            out = pdf.copy()
-            out["cell"] = cells
-            yield out
-
-    return df.mapInPandas(_assign, out_schema)
-
-
-#: Guard band for the residency prefix (mirror of knn_graph's
-#: _GEMM_PAIR_EPS): BLAS and the sequential SQL fold agree to
+#: Guard band for the ranked prefix (mirror of knn_graph's
+#: _GEMM_PAIR_EPS): BLAS and the oracle's sequential fold agree to
 #: ~dim·ulp ≈ 1.4e-14 on unit-scale cosines, so 1e-9 over-covers by
 #: ~5 orders of magnitude while still never triggering on real score
 #: gaps.
 _GEMM_RANK_EPS = 1e-9
+
+
+def gemm_rank_block(vmat, cmat, norms, cvecs, r: int):
+    """Indices (b×r) of the top-``r`` centroids of every row of ``vmat``
+    (b×dim, all finite) by dot/|c| DESC, then index ASC — the package's
+    one centroid-ranking kernel. ``cmat`` (k×dim) and ``cvecs`` hold the
+    cid-sorted centroids, ``norms`` their exact _py_norm doubles.
+
+    GEMM, then /|c|, then a stable argsort (r = 1 takes argmax, whose
+    first-index rule is the stable sort's first column). BLAS and the
+    oracle's sequential fold agree only to ~dim·ulp, so a row where a
+    centroid outside the prefix scores within _GEMM_RANK_EPS of the
+    r-th best, or two prefix neighbours sit within it, is flagged by
+    one array pass, and only the flagged rows re-rank their contender
+    band (score >= r-th best − EPS) by the EXACT fold (py_dot /
+    _py_norm). Normal data (score gaps >> 1e-9) never pays."""
+    import numpy as _np
+
+    scores = vmat @ cmat.T      # the GEMM
+    scores /= norms             # dot/|c|
+    if r == 1:
+        top = _np.argmax(scores, axis=1)[:, None]
+    else:
+        top = _np.argsort(-scores, axis=1, kind="stable")[:, :r]
+    pref = _np.take_along_axis(scores, top, axis=1)
+    band = pref[:, -1:] - _GEMM_RANK_EPS
+    near = (scores >= band).sum(axis=1) > r
+    if r > 1:
+        near |= (pref[:, :-1] - pref[:, 1:]).min(axis=1) <= _GEMM_RANK_EPS
+    for b in _np.nonzero(near)[0]:
+        v = vmat[b].tolist()
+        exact = sorted(
+            (-(py_dot(v, cvecs[c]) / norms[c]), int(c))
+            for c in _np.nonzero(scores[b] >= band[b, 0])[0]
+        )
+        top[b] = [c for _s, c in exact[:r]]
+    return top
 
 
 def gemm_rank_cells(
@@ -702,41 +570,39 @@ def gemm_rank_cells(
     r: int,
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Append ``rcells`` (the TOP-``r`` centroid ids by dot/|c| DESC,
-    cent_id ASC — i.e. the first r entries of ivf_ranked_cells_sql's
-    array_sort'ed ranked-cells array) to every row of ``df``, scores
-    computed as one numpy GEMM per Arrow batch. gemm_assign_cells is
-    the r=1 special case; this is the RESIDENCY assignment the kNN
-    graph build needs (round-12 verdict item #1 — the build explodes
-    each vector to its KNN_RESIDENCY nearest cells, which before this
-    ran the full O(N·k·dim) ranked expression per row).
+    """Append ``rcells`` (the top-``r`` centroid ids by dot/|c| DESC,
+    cent_id ASC — the oracle's rkd order, crk <= r) to every row of
+    ``df``, ranked by gemm_rank_block over each Arrow batch. Every
+    centroid ranking in the package goes through here: r = 1 is cell
+    assignment (assign_cells), r = n is a probe or residency prefix
+    (probe_cells).
 
-    Same exact-semantics contract as gemm_assign_cells, extended to
-    the prefix: valid rows take the stable argsort of the GEMM scores
-    (stable = cid-ascending tiebreak, cent_rows being cid-sorted);
-    degenerate rows (NULL/ragged/NaN) fold every SQL score to
-    NULL so ALL centroids tie and the r SMALLEST cent_ids win —
-    replicated verbatim; ±inf elements raise (the enforced contract);
-    zero-norm centroids raise up front. Set-equality with the
-    expression's prefix is pinned by tests/test_gemm_assign.py.
+    Contract with the oracle's ranking:
+    - valid rows (len == dim, all elements finite) take the kernel's
+      order, near-ties finalized by the exact sequential fold.
+    - degenerate rows (NULL vector, ragged length, NULL/NaN element)
+      fold every oracle score to NULL, so ALL centroids tie and the r
+      SMALLEST cent_ids win — replicated verbatim.
+    - a ±inf ELEMENT raises ValueError: the fold can rank a real
+      winner there (inf·0 = NaN for some centroids, ±inf for others),
+      so rather than silently misplacing such vectors this path
+      refuses them loudly; the embedding_audit ingest gate is the
+      upstream fix.
+    - a zero-norm CENTROID makes dot/|c| abort under ANSI
+      (DIVIDE_BY_ZERO), so this path raises ValueError up front
+      rather than inventing semantics the oracle lacks.
 
-    NEAR-TIE exactness (round-13, advice item): BLAS and the SQL
-    sequential fold agree only to ~dim·ulp, so a GEMM score within
-    _GEMM_RANK_EPS of the Rth-best (or of its in-prefix neighbor)
-    could flip the prefix if ranked from GEMM numbers alone. Whenever
-    any such near-tie exists, the contender band (every centroid with
-    GEMM score >= Rth - EPS) is EXACT-RESCORED with the sequential
-    left-fold (py_dot / _py_norm — the same doubles the SQL literal
-    inlines) and the prefix is finalized from the exact scores — the
-    same guard-band-then-rescore contract _gemm_block_candidates uses
-    for pairs. Normal data (score gaps >> 1e-9) never pays; the
-    division uses _py_norm so the only GEMM-vs-SQL divergence the
-    band must absorb is the dot's accumulation order."""
+    Preserves every input column; no shuffle (mapInPandas is
+    partition-preserving — repartition upstream for CPU spread, as
+    assign_cells does)."""
     import numpy as _np
 
     if not cent_rows:
         raise ValueError("gemm_rank_cells: no centroids")
     cids = [cid for cid, _ in cent_rows]
+    # Explicit raise, not assert: this guard protects tie CORRECTNESS
+    # (index order is the min-cent_id tiebreak only in sorted order)
+    # and must survive `python -O`.
     if cids != sorted(cids):
         raise ValueError(
             "gemm_rank_cells: cent_rows must be cent_id-sorted —"
@@ -746,18 +612,22 @@ def gemm_rank_cells(
     r = min(r, len(cent_rows))
     dim = len(cent_rows[0][1])
     cmat = _np.asarray([cv for _, cv in cent_rows], dtype=_np.float64)
-    # EXACT norms (the SQL expression inlines _py_norm literals), so
-    # the only BLAS-vs-SQL divergence left is the dot's fold order —
-    # that is what the near-tie rescore band absorbs.
+    # EXACT norms (the oracle's sqrt of the left fold), so the only
+    # BLAS-vs-oracle divergence left is the dot's fold order — that is
+    # what the kernel's near-tie rescore absorbs.
     norms = _np.asarray([_py_norm(cv) for _, cv in cent_rows])
     if bool((norms == 0.0).any()):
         raise ValueError(
             "gemm_rank_cells: zero-norm centroid — the oracle's"
-            " ranking expression aborts on this too (ANSI DIVIDE_BY_ZERO)"
+            " ranking aborts on this too (ANSI DIVIDE_BY_ZERO)"
         )
     cvecs = [list(map(float, cv)) for _, cv in cent_rows]
     cid_arr = _np.asarray(cids, dtype=_np.int64)
-    default = [int(c) for c in cid_arr[:r]]  # all-NULL tie → min cids
+    # Bound the score matrix to ~32 MB whatever the Arrow batch size × k
+    # (at K_MAX=4096 a 10k-row batch would otherwise allocate 327 MB).
+    blk = max(1, (4 << 20) // len(cent_rows))
+    # A FRESH StructType: StructType.add mutates in place, and
+    # df.schema returns the DataFrame's cached instance.
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     out_schema = StructType(
@@ -768,68 +638,33 @@ def gemm_rank_cells(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            rcells = [default] * len(pdf)
-            idx, rows = [], []
-            for i, v in enumerate(pdf[vec_col]):
-                if v is None:
-                    continue
-                a = _np.asarray(v, dtype=_np.float64)
-                if a.shape != (dim,):
-                    continue
-                if not _np.isfinite(a).all():
-                    if _np.isinf(a).any():
-                        raise ValueError(
-                            "gemm_rank_cells: embedding with a ±inf"
-                            " element — outside the GEMM path's"
-                            " contract; reject such rows upstream"
-                            " (embedding_audit) before assignment"
-                        )
-                    continue
-                idx.append(i)
-                rows.append(a)
-            if idx:
-                vmat = _np.stack(rows)
-                blk = max(1, (4 << 20) // max(len(cent_rows), 1))
-                for lo in range(0, vmat.shape[0], blk):
-                    scores = vmat[lo:lo + blk] @ cmat.T
-                    scores /= norms
-                    # Stable argsort of -score = score DESC with the
-                    # ORIGINAL (cid-ascending) order kept on exact
-                    # ties — the SQL array_sort's (s, c) key.
-                    order = _np.argsort(-scores, axis=1, kind="stable")
-                    for b, row_ord in enumerate(order):
-                        srow = scores[b]
-                        band = srow[row_ord[r - 1]] - _GEMM_RANK_EPS
-                        cont = _np.nonzero(srow >= band)[0]
-                        pref = srow[row_ord[:r]]
-                        if cont.size > r or (
-                            r > 1
-                            and float(
-                                _np.min(pref[:-1] - pref[1:])
-                            ) <= _GEMM_RANK_EPS
-                        ):
-                            # Near-tie at (or inside) the prefix: the
-                            # GEMM ordering is not trustworthy to the
-                            # last ulp — finalize from the EXACT
-                            # sequential fold over the contender band.
-                            v = rows[lo + b]
-                            ex = sorted(
-                                (
-                                    -(py_dot(v, cvecs[c]) / norms[c]),
-                                    int(cid_arr[c]),
-                                )
-                                for c in cont
-                            )
-                            rcells[idx[lo + b]] = [
-                                cid for _s, cid in ex[:r]
-                            ]
-                        else:
-                            rcells[idx[lo + b]] = [
-                                int(c) for c in cid_arr[row_ord[:r]]
-                            ]
-            out = pdf.copy()
-            out["rcells"] = rcells
-            yield out
+            # All-NULL tie (degenerate rows) → the r smallest cids.
+            top = _np.tile(_np.arange(r), (len(pdf), 1))
+            vals = pdf[vec_col].to_numpy()
+            ok = _np.nonzero(
+                [v is not None and len(v) == dim for v in vals]
+            )[0]
+            if ok.size:
+                # NULL elements arrive as NaN through the float64
+                # conversion; NaN folds the oracle's dot to NULL →
+                # min-cent_id, replicated by leaving the row out.
+                vmat = _np.array(list(vals[ok]), dtype=_np.float64)
+                if bool(_np.isinf(vmat).any()):
+                    raise ValueError(
+                        "gemm_rank_cells: embedding with a ±inf"
+                        " element — outside the GEMM path's"
+                        " contract (the oracle's fold can rank a real"
+                        " winner here); reject such rows upstream"
+                        " (embedding_audit) before assignment"
+                    )
+                fin = _np.isfinite(vmat).all(axis=1)
+                ok, vmat = ok[fin], vmat[fin]
+                for lo in range(0, ok.size, blk):
+                    top[ok[lo:lo + blk]] = gemm_rank_block(
+                        vmat[lo:lo + blk], cmat, norms, cvecs, r
+                    )
+            pdf["rcells"] = list(cid_arr[top])
+            yield pdf
 
     return df.mapInPandas(_rank, out_schema)
 
@@ -840,30 +675,41 @@ def assign_cells(
     cent_rows: list[tuple[int, list[float]]],
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """The assignment stage every index build/lifecycle op routes
-    through: append ``cell`` to ``df`` via the numpy GEMM argmax
-    (gemm_assign_cells). Repartitions first: assignment is CPU-bound
-    per row and the source parquet's split count must not serialize
-    it."""
+    """Append ``cell`` (the nearest centroid, gemm_rank_cells at r = 1)
+    to ``df``. Repartitions first: assignment is CPU-bound per row and
+    the source parquet's split count must not serialize it."""
     df = df.repartition(spark.sparkContext.defaultParallelism)
-    return gemm_assign_cells(df, cent_rows, vec_col)
+    return gemm_rank_cells(df, cent_rows, 1, vec_col).withColumn(
+        "cell", F.col("rcells")[0]
+    ).drop("rcells")
+
+
+def probe_cells(
+    df: DataFrame,
+    cent_rows: list[tuple[int, list[float]]],
+    n: int,
+    vec_col: str = "embedding",
+    out_col: str = "pcell",
+) -> DataFrame:
+    """Every row of ``df`` exploded to its ``n`` nearest cells
+    (gemm_rank_cells' prefix) as ``out_col``."""
+    return gemm_rank_cells(df, cent_rows, n, vec_col).withColumn(
+        out_col, F.explode("rcells")
+    ).drop("rcells")
 
 
 def ivf_probes_df(
     emb: DataFrame,
-    ranked_cells: str,
+    cent_rows: list[tuple[int, list[float]]],
     n_queries: int = N_QUERIES,
     n_probe: int = N_PROBE,
 ) -> DataFrame:
     """(query_id, qv, pcell) — each query row exploded to its n_probe
     nearest cells, ranked on a `vec_id < n_queries`-pruned scan."""
-    return emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.explode(
-            F.expr(f"transform(slice({ranked_cells}, 1, {n_probe}), x -> x.c)")
-        ).alias("pcell"),
+    queries = emb.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
+    return probe_cells(queries, cent_rows, n_probe, vec_col="qv")
 
 
 def ivf_py_probe_cells(
@@ -1064,8 +910,8 @@ def trained_quantizer(
     K, run the integer Lloyd's trainer on the NULL-guarded frame, and
     dequantize the centroids to the exact doubles the oracle's cent
     CTE computes. cent_rows plugs into the UNCHANGED float machinery
-    (ivf_ranked_cells_sql / ivf_cells_df / ivf_probes_df /
-    ivf_py_probe_cells). Memoized per corpus fingerprint.
+    (assign_cells / ivf_probes_df / ivf_py_probe_cells). Memoized per
+    corpus fingerprint.
 
     Scale note: the trainer needs ~k·10³ points, not N — above
     2·TRAIN_SAMPLE_CAP rows it trains on the deterministic md5-stride
@@ -1143,11 +989,11 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans): the quantizer is k ≤ K_MAX centroids — small enough to
     pull to the driver once (k×dim floats, the same pull
     `kmeans_embeddings` makes), so cell assignment becomes a PURE MAP
-    over one corpus scan: a numpy GEMM stage (gemm_assign_cells)
-    picks the nearest cell with the oracle's exact tie-break, no N·k
-    join and no corpus-wide window shuffle. Queries rank the centroids,
-    inlined as literals, on a second, `vec_id < N_QUERIES`-pruned scan and
-    explode their np nearest cells; search is a broadcast equi-join
+    over one corpus scan: a numpy GEMM stage (assign_cells) picks the
+    nearest cell with the oracle's exact tie-break, no N·k join and no
+    corpus-wide window shuffle. Queries rank the centroids through the
+    same kernel (ivf_probes_df) on a second, `vec_id < N_QUERIES`-pruned
+    scan and explode their np nearest cells; search is a broadcast equi-join
     on cell id touching ~np/k of the corpus. At 100 TB the cell id is
     precomputed at ingest and the table is partitioned by it, so
     probing = partition pruning; training runs once on a sample
@@ -1157,7 +1003,7 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     not full cosine — the row's own norm is a positive per-row
     constant that cannot change the ranking, and ranking WITHOUT it
     means no per-row norm fold at all. The oracle ranks by the
-    identical expression; centroid norms are driver-computed literals
+    identical expression; centroid norms are driver-computed doubles
     (the same left fold in IEEE doubles). Search scores remain full
     cosine. The sampled-quantizer original stays value-oracled as
     sim_topk_ivf_sampled."""
@@ -1169,10 +1015,9 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "query_id bigint, vec_id bigint, score double, rk int"
         )
-    ranked_cells = ivf_ranked_cells_sql(cent_rows)
-    cells = ivf_cells_df(spark, emb, cent_rows)
+    cells = assign_cells(spark, emb, cent_rows)
     probes = ivf_probes_df(
-        emb, ranked_cells, n_probe=trained_n_probe(len(cent_rows), n)
+        emb, cent_rows, n_probe=trained_n_probe(len(cent_rows), n)
     )
     scored = (
         cells.join(
@@ -1208,9 +1053,8 @@ def q_sim_topk_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "query_id bigint, vec_id bigint, score double, rk int"
         )
-    ranked_cells = ivf_ranked_cells_sql(cent_rows)
-    cells = ivf_cells_df(spark, emb, cent_rows)
-    probes = ivf_probes_df(emb, ranked_cells)
+    cells = assign_cells(spark, emb, cent_rows)
+    probes = ivf_probes_df(emb, cent_rows)
     scored = (
         cells.join(
             F.broadcast(probes),

@@ -74,10 +74,9 @@ from dist_mapreduce_spark.plans.similarity import (
     N_PROBE,
     N_QUERIES,
     TOP_K,
-    ivf_cells_df,
+    assign_cells,
     ivf_cent_rows,
     ivf_probes_df,
-    ivf_ranked_cells_sql,
 )
 from dist_mapreduce_spark.sources.tables import load_table
 
@@ -417,11 +416,12 @@ def q_sim_cand_stats_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Sampled candidates: the sim_cand_stats IVF definition verbatim.
     cent_rows = ivf_cent_rows(emb)
-    ranked = ivf_ranked_cells_sql(cent_rows)
     scand = (
-        ivf_cells_df(spark, emb, cent_rows)
+        assign_cells(spark, emb, cent_rows)
         .join(
-            F.broadcast(ivf_probes_df(emb, ranked).select("query_id", "pcell")),
+            F.broadcast(
+                ivf_probes_df(emb, cent_rows).select("query_id", "pcell")
+            ),
             (F.col("cell") == F.col("pcell"))
             & (F.col("vec_id") != F.col("query_id")),
         )

@@ -432,7 +432,7 @@ def test_compact_rewrites_hot_cells_only(spark, tmp_path):
         compact_index_cells,
     )
     from dist_mapreduce_spark.plans.similarity import (
-        ivf_cells_df,
+        assign_cells,
         ivf_cent_rows,
     )
 
@@ -441,7 +441,12 @@ def test_compact_rewrites_hot_cells_only(spark, tmp_path):
     path = str(tmp_path / "idx")
     # repartition(1): exactly one base file per cell, so fragmentation
     # is entirely under the test's control.
-    cells = ivf_cells_df(spark, emb, cent_rows).repartition(1).cache()
+    cells = (
+        assign_cells(spark, emb, cent_rows)
+        .select("vec_id", "embedding", "cell")
+        .repartition(1)
+        .cache()
+    )
     cells.write.mode("overwrite").partitionBy("cell").parquet(path)
     hot = int(
         cells.groupBy("cell")
@@ -1014,10 +1019,8 @@ def test_retrain_walk_monitor_fires_then_staleness_rezeroes(spark, tmp_path):
         q_sim_index_retrain,
         q_sim_index_staleness,
     )
-    from dist_mapreduce_spark.plans.similarity import (
-        ivf_ranked_cells_sql,
-        trained_quantizer,
-    )
+    from dist_mapreduce_spark.plans.similarity import trained_quantizer
+    from tests.test_gemm_assign import ivf_ranked_cells_sql
 
     rows = []
     for i in range(300):

@@ -4,8 +4,23 @@ text — all built into Spark)."""
 
 from __future__ import annotations
 
+import tempfile
+
 import pytest
 from pyspark.sql import functions as F
+
+
+@pytest.fixture(autouse=True)
+def _default_outputs_in_tmp_path(monkeypatch, tmp_path):
+    """JobRunner's default output root (a mkdtemp) lands under the
+    test's tmp_path, so tests that submit without output_dir leave
+    nothing in the system temp dir."""
+    mkdtemp = tempfile.mkdtemp
+
+    def in_tmp_path(prefix=None):
+        return mkdtemp(prefix=prefix, dir=tmp_path)
+
+    monkeypatch.setattr(tempfile, "mkdtemp", in_tmp_path)
 
 
 @pytest.fixture()
@@ -275,3 +290,22 @@ def test_connector_builders_construct(spark):
     )
     s = kafka_sink(stream, "broker:9092", "out", "/tmp/ckpt")
     assert s is not None
+
+
+def test_default_output_dirs_unique_per_runner(spark, corpus):
+    """Job ids restart at 1 in every runner, so two runners (a
+    restarted server, or a second one on the same host) that submit
+    without output_dir must still write to distinct directories."""
+    import os
+
+    from dist_mapreduce_spark.api import COMPLETED, JobRunner
+
+    files = [str(corpus / "test1.txt")]
+    dirs = []
+    for _ in range(2):
+        runner = JobRunner(spark)
+        st = runner.wait(runner.submit_job(files, n_reduce=1))
+        dirs.append(st["output_dir"])
+        assert st["id"] == 1 and st["status"] == COMPLETED
+    assert dirs[0] != dirs[1]
+    assert all(os.path.isdir(d) for d in dirs)

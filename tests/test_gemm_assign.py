@@ -1,10 +1,12 @@
-"""GEMM assignment (round 11): the numpy/BLAS centroid assignment
-must land every vector in the same cell as the oracle's
-literal-centroid expression (ivf_ranked_cells_sql, evaluated here as
-the reference) — on the real gate corpus, on the dense chunk corpus,
-and on every degenerate row shape that expression tolerates (the
-contract gemm_assign_cells documents). The kNN kernels are pinned the
-same way against SQL-shaped reference chains or the DuckDB oracle."""
+"""GEMM ranking: the numpy/BLAS centroid ranking (gemm_rank_cells,
+and assign_cells at r = 1) must land every vector in the same cells,
+in the same order, as the oracle's ranking written as a Spark SQL
+expression over centroid literals (ivf_ranked_cells_sql below, the
+SQL-shaped reference) — on the real gate corpus, on the dense chunk
+corpus, and on every degenerate row shape that expression tolerates
+(the contract gemm_rank_cells documents). The kNN kernels are pinned
+the same way against SQL-shaped reference chains or the DuckDB
+oracle."""
 
 from __future__ import annotations
 
@@ -17,6 +19,41 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 
 
+def _vec_lit(vec: list[float]) -> str:
+    # repr() round-trips the float32→double widening exactly, so the
+    # literal fold is bit-identical to the oracle's column fold.
+    return "array(" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in vec) + ")"
+
+
+def ivf_ranked_cells_sql(
+    cent_rows: list[tuple[int, list[float]]], col: str = "embedding"
+) -> str:
+    """Spark SQL expression: array of (−dot/|c|, cent_id) structs sorted
+    by the oracle's exact (score DESC, cent_id ASC) order, with the k
+    centroids inlined as literals — the oracle's rkd ranking as a pure
+    map, evaluated by Spark's own sequential fold."""
+    from dist_mapreduce_spark.plans.similarity import _py_norm
+
+    k = len(cent_rows)
+    cents = "array(" + ", ".join(_vec_lit(cv) for _, cv in cent_rows) + ")"
+    cids = "array(" + ", ".join(str(cid) for cid, _ in cent_rows) + ")"
+    cnorms = "array(" + ", ".join(
+        f"CAST({_py_norm(cv)!r} AS DOUBLE)" for _, cv in cent_rows
+    ) + ")"
+    dot = (
+        f"aggregate(zip_with({col}, element_at(__cents, i + 1),"
+        " (x, y) -> cast(x as double) * cast(y as double)),"
+        " cast(0.0 as double), (acc, v) -> acc + v)"
+    )
+    # Structs sort field-by-field: s = −(dot/|c|) ascending (= score
+    # descending), then cent_id ascending — the oracle's ORDER BY.
+    return (
+        f"array_sort(transform(sequence(0, {k - 1}), i -> named_struct("
+        f" 's', -({dot} / element_at(__cnorms, i + 1)),"
+        f" 'c', CAST(element_at(__cids, i + 1) AS BIGINT))))"
+    ).replace("__cents", cents).replace("__cids", cids).replace("__cnorms", cnorms)
+
+
 def _cells_map(df):
     return {int(r["vec_id"]): int(r["cell"]) for r in df.collect()}
 
@@ -24,8 +61,6 @@ def _cells_map(df):
 def _literal_cells(df, cent_rows, vec_col="embedding"):
     """Reference: the oracle's cell CTE as the literal-centroid Spark
     expression (first entry of the (score DESC, cent_id) ranking)."""
-    from dist_mapreduce_spark.plans.similarity import ivf_ranked_cells_sql
-
     ranked = ivf_ranked_cells_sql(cent_rows, col=vec_col)
     return _cells_map(
         df.select("vec_id", F.expr(f"{ranked}[0].c").alias("cell"))
@@ -216,13 +251,13 @@ def test_gemm_inf_element_raises_literal_unchanged(spark):
 def test_gemm_zero_norm_centroid_raises(spark):
     """The literal path aborts (ANSI DIVIDE_BY_ZERO) on a zero-norm
     centroid; the GEMM path must refuse up front, not invent a cell."""
-    from dist_mapreduce_spark.plans.similarity import gemm_assign_cells
+    from dist_mapreduce_spark.plans.similarity import assign_cells
 
     df = spark.createDataFrame(
         [(1, [1.0, 0.0])], "vec_id long, embedding array<double>"
     )
     with pytest.raises(ValueError, match="zero-norm"):
-        gemm_assign_cells(df, [(0, [0.0, 0.0]), (1, [1.0, 0.0])])
+        assign_cells(spark, df, [(0, [0.0, 0.0]), (1, [1.0, 0.0])])
 
 
 def test_gemm_tiebreak_is_min_cent_id(spark):
@@ -244,15 +279,15 @@ def test_gemm_tiebreak_is_min_cent_id(spark):
 
 
 def test_gemm_preserves_extra_columns(spark):
-    """gemm_assign_cells must carry every input column through the
-    Arrow stage — the dense build rides doc_id/chunk_id alongside."""
-    from dist_mapreduce_spark.plans.similarity import gemm_assign_cells
+    """assign_cells must carry every input column through the Arrow
+    stage — the dense build rides doc_id/chunk_id alongside."""
+    from dist_mapreduce_spark.plans.similarity import assign_cells
 
     df = spark.createDataFrame(
         [(1, 10, [1.0, 0.0]), (2, 20, [0.0, 1.0])],
         "vec_id long, extra long, embedding array<double>",
     )
-    out = gemm_assign_cells(df, [(0, [1.0, 0.0]), (1, [0.0, 1.0])])
+    out = assign_cells(spark, df, [(0, [1.0, 0.0]), (1, [0.0, 1.0])])
     got = {
         (int(r["vec_id"]), int(r["extra"]), int(r["cell"]))
         for r in out.collect()
@@ -349,7 +384,6 @@ def test_gemm_rank_cells_matches_literal_prefix(spark):
     from dist_mapreduce_spark.plans.similarity import (
         gemm_rank_cells,
         ivf_cent_rows,
-        ivf_ranked_cells_sql,
     )
     from dist_mapreduce_spark.sources.tables import load_table
 
@@ -380,7 +414,7 @@ def test_gemm_rank_cells_matches_literal_prefix(spark):
 def test_gemm_rank_cells_degenerates_and_inf(spark):
     """Degenerate rows fold every literal score to NULL → ALL
     centroids tie → the R smallest cent_ids, in order; ±inf raises
-    (the enforced contract, same as gemm_assign_cells)."""
+    (the enforced contract, same as assign_cells)."""
     from dist_mapreduce_spark.plans.similarity import gemm_rank_cells
 
     cents = [(3, [1.0, 0.0]), (7, [0.0, 1.0]), (9, [0.5, 0.5])]
@@ -413,10 +447,7 @@ def test_gemm_rank_cells_near_tie_rescored(spark):
     scale-invariant, so the min-cent_id order must win)."""
     from pyspark.sql import functions as F
 
-    from dist_mapreduce_spark.plans.similarity import (
-        gemm_rank_cells,
-        ivf_ranked_cells_sql,
-    )
+    from dist_mapreduce_spark.plans.similarity import gemm_rank_cells
 
     # cid 3 scores exactly 1.0; cid 7 scores 1/sqrt(1+1.96e-10)
     # ≈ 1 − 9.8e-11 — a gap 10× inside the 1e-9 band.
@@ -599,3 +630,39 @@ def test_probe_truth_gemm_equals_literal_and_adversarial(spark, tmp_path):
     lit = rows(_literal_probe_truth(df))
     gem = rows(_probe_truth(df))
     assert lit == gem and len(lit) > 0
+
+
+def test_assign_near_tie_takes_exact_rescore(spark):
+    """r = 1 (cell assignment) goes through the same near-tie rescore
+    as the prefix: when the GEMM numbers put a centroid within
+    _GEMM_RANK_EPS of the best, the winner comes from the exact
+    sequential fold, not from argmax. The kernel is fed a GEMM-side
+    matrix perturbed by 2e-10 (standing in for BLAS accumulation
+    error), under which plain argmax picks the other cell."""
+    import numpy as np
+
+    from dist_mapreduce_spark.plans.similarity import (
+        _py_norm,
+        assign_cells,
+        gemm_rank_block,
+    )
+
+    # Exact scores for v = (1, 0): cid 3 → 1.0, cid 7 → 1 − 9.8e-11.
+    cents = [(3, [1.0, 0.0]), (7, [1.0, 1.4e-5])]
+    cvecs = [cv for _, cv in cents]
+    norms = np.asarray([_py_norm(cv) for cv in cvecs])
+    vmat = np.asarray([[1.0, 0.0]])
+    blas_side = np.asarray([[1.0 - 2e-10, 0.0], [1.0, 1.4e-5]])
+    assert int(np.argmax((vmat @ blas_side.T) / norms, axis=1)[0]) == 1
+    top = gemm_rank_block(vmat, blas_side, norms, cvecs, 1)
+    assert top.tolist() == [[0]]
+
+    # End to end: assign_cells lands the near-tie row where the SQL
+    # reference does.
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 1.4e-5])],
+        "vec_id long, embedding array<double>",
+    )
+    lit = _literal_cells(df, cents)
+    gem = _cells_map(assign_cells(spark, df, cents).select("vec_id", "cell"))
+    assert lit == gem == {1: 3, 2: 7}

@@ -148,3 +148,23 @@ def test_trained_quantizer_job_count_does_not_grow_with_rounds(spark, monkeypatc
 
     jobs = {n_iter: jobs_for_one_run(n_iter) for n_iter in (1, 5, 9)}
     assert jobs == {1: 3, 5: 3, 9: 3}, jobs
+
+
+def test_graph_components_keeps_singleton_nation(spark, tmp_path):
+    """graph_components labels through the shared propagation loop,
+    which only sees edge-incident nodes; a nation with ONE supplier has
+    no edges, so only the left join back onto the supplier list keeps
+    it (as its own component). A chain-shaped nation checks that the
+    labels still reach the nation minimum."""
+    rows = [(k, 1) for k in (10, 11, 12, 13, 14, 15, 16)]
+    rows += [(3, 2)]                 # one-supplier nation
+    rows += [(20, 3), (21, 3)]
+    spark.createDataFrame(
+        rows, "s_suppkey long, s_nationkey long"
+    ).write.parquet(str(tmp_path / "supplier.parquet"))
+    got = {
+        r["node"]: r["component"]
+        for r in _q("graph_components")(spark, str(tmp_path)).collect()
+    }
+    want = {k: min(s for s, n in rows if n == nk) for k, nk in rows}
+    assert got == want

@@ -64,11 +64,12 @@ def test_lsh_plan_shape(spark):
 def test_ivf_plan_shape(spark):
     """Round-4 re-plan: map-side cell assignment — no N·k join, no
     corpus-wide ranking window; was 10 shuffles / 3 scans. Exactly
-    one Python stage: the GEMM cell assignment."""
+    two Python stages, both the one GEMM ranking kernel: the corpus
+    side's cell assignment and the query side's probe ranking."""
     info = _audit(spark, "sim_topk_ivf")
     assert info["shuffles"] <= 3, info
     assert len(info["scan_cols"]) <= 2, info
-    assert info["python_stages"] == 1, info
+    assert info["python_stages"] == 2, info
 
 
 def test_dedup_minhash_no_cartesian_no_python(spark):
@@ -373,11 +374,12 @@ def test_passage_maxp_two_shuffles_beyond_scan(spark):
 def test_contamination_eval_side_broadcasts(spark):
     """The eval slice (benchmark-sized) must broadcast onto the
     cell-blocked train side — never a shuffled join of the corpus.
-    Exactly one Python stage: the GEMM cell assignment."""
+    Exactly two Python stages, both the one GEMM ranking kernel: the
+    train side's cell assignment and the eval side's residency cells."""
     info = _audit(spark, "contamination_embedding")
     assert info["broadcast_joins"] >= 1, info
     assert info["sortmerge_joins"] == 0, info
-    assert info["python_stages"] == 1, info
+    assert info["python_stages"] == 2, info
 
 
 def test_interval_overlap_is_equi_join_on_bins(spark):

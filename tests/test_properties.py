@@ -464,10 +464,8 @@ def test_knn_cell_subsplit_is_inert_below_cap(spark):
         KNN_RESIDENCY,
         _emb,
     )
-    from dist_mapreduce_spark.plans.similarity import (
-        ivf_cent_rows,
-        ivf_ranked_cells_sql,
-    )
+    from dist_mapreduce_spark.plans.similarity import ivf_cent_rows
+    from tests.test_gemm_assign import ivf_ranked_cells_sql
 
     emb = _emb(spark, SF_SMOKE_DIR).filter(F.col("embedding").isNotNull())
     ranked = ivf_ranked_cells_sql(ivf_cent_rows(emb))
@@ -539,10 +537,8 @@ def test_knn_cell_subsplit_vertex_complete_and_oracle_parity(
     assert {r["src_id"] for r in got} == set(range(n))
     # (b) sub-cell hard bound: recompute the split and check ≤ CAP.
     from dist_mapreduce_spark.plans.knn_graph import KNN_RESIDENCY, _emb
-    from dist_mapreduce_spark.plans.similarity import (
-        ivf_cent_rows,
-        ivf_ranked_cells_sql,
-    )
+    from dist_mapreduce_spark.plans.similarity import ivf_cent_rows
+    from tests.test_gemm_assign import ivf_ranked_cells_sql
 
     emb = _emb(spark, str(sf)).filter(F.col("embedding").isNotNull())
     ranked = ivf_ranked_cells_sql(ivf_cent_rows(emb))

@@ -370,10 +370,8 @@ def test_dense_upsert_changes_chunk_cardinality(spark, tmp_path):
         _dense_chunk_vectors,
         q_dense_index_upsert,
     )
-    from dist_mapreduce_spark.plans.similarity import (
-        ivf_ranked_cells_sql,
-        trained_quantizer,
-    )
+    from dist_mapreduce_spark.plans.similarity import trained_quantizer
+    from tests.test_gemm_assign import ivf_ranked_cells_sql
 
     rows = [(11, " ".join(f"w{j}" for j in range(30)), "en", "webA")]
     for i in range(2, 30):  # none of these hit i % 97 == 11
@@ -520,10 +518,8 @@ def test_dense_retrain_walk_fires_rebuilds_and_serves(spark, tmp_path):
         q_dense_index_staleness,
         q_search_dense_maxp_retrained,
     )
-    from dist_mapreduce_spark.plans.similarity import (
-        ivf_ranked_cells_sql,
-        trained_quantizer,
-    )
+    from dist_mapreduce_spark.plans.similarity import trained_quantizer
+    from tests.test_gemm_assign import ivf_ranked_cells_sql
 
     rows = [(i, " ".join(f"q{i}_{j}" for j in range(8))) for i in range(3)]
     rows += [
