@@ -50,9 +50,11 @@ from dist_mapreduce_spark.functions.vectors import (
     dot_duckdb_sql,
 )
 from dist_mapreduce_spark.plans.index_commit import (
-    commit_cell_swap,
     index_data_dir,
+    index_read,
     index_snapshot,
+    read_manifest,
+    rewrite_cells,
     write_index_base,
 )
 from dist_mapreduce_spark.plans.registry import ORACLES, query
@@ -65,11 +67,13 @@ from dist_mapreduce_spark.plans.similarity import (
     TRAINED_CELLS_CTE,
     TRAINED_NPROBE_CTES,
     assign_cells,
+    assigned_cell_ids,
     ivf_probes_df,
     ivf_py_probe_cells,
     lsh_candidates,
     probe_cells,
     py_dot,
+    stat_hash,
     trained_n_probe,
     trained_quantizer,
     trained_topk_oracle,
@@ -100,35 +104,69 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 _INDEX_COLS = ("vec_id", "embedding", "cell")
 
 
-#: Index paths already built by THIS process, keyed to a fingerprint
-#: of the corpus files they were built from — serving queries reuse
-#: the materialized index instead of rebuilding it per query (ingest
-#: runs once; serving reads). Per-process only: a fresh process always
-#: rebuilds; and within a process a corpus REWRITTEN at the same path
+def _index_rows(
+    spark: SparkSession, emb: DataFrame, cent_rows: list
+) -> DataFrame:
+    """``emb`` assigned to cells as _INDEX_COLS rows: only vec_id and
+    embedding go through the assignment stage's shuffle and Arrow
+    batches (``label`` is never scanned for it)."""
+    return assign_cells(spark, emb.select("vec_id", "embedding"), cent_rows)
+
+
+#: THE build-once guard of every materialized index in the package:
+#: index path -> fingerprint of the source table it was built from
+#: (the index paths are all distinct). Serving queries reuse the
+#: materialized index instead of rebuilding it per query (ingest runs
+#: once; serving reads). Per-process only: a fresh process always
+#: rebuilds; and within a process a source REWRITTEN at the same path
 #: (a stress harness redoing its tmp dir in place) changes the
 #: fingerprint and forces a rebuild instead of serving a stale index
 #: (round-6 advice).
-_BUILT_THIS_SESSION: dict[str, str] = {}
+_BUILT: dict[str, str] = {}
 
 
-def _corpus_fingerprint(sf_dir: str) -> str:
-    """Cheap identity of the embeddings source: (path, size, mtime_ns)
-    of every file under it — an os.stat sweep, no data read. This is
-    the same freshness signal a table format's snapshot id provides at
-    scale; mtime granularity is ns so even an immediate in-place
-    rewrite changes the key."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    h = hashlib.md5()
-    if os.path.isfile(src):
-        st = os.stat(src)
-        h.update(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode())
-    elif os.path.isdir(src):
-        for droot, _, files in sorted(os.walk(src)):
-            for f in sorted(files):
-                p = os.path.join(droot, f)
-                st = os.stat(p)
-                h.update(f"{p}:{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()
+def source_fingerprint(sf_dir: str, table: str) -> str:
+    """Cheap identity of a source table: similarity.stat_hash over
+    every file of ``<sf_dir>/<table>.parquet`` (a file or a dir)."""
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    if os.path.isdir(src):
+        paths = [os.path.join(d, f) for d, _, fs in os.walk(src) for f in fs]
+    else:
+        paths = [src] if os.path.isfile(src) else []
+    return stat_hash(paths)
+
+
+def build_once(path: str, sf_dir: str, table: str, build) -> None:
+    """Run ``build()`` unless this process already built ``path`` from
+    the current files of ``table`` (and the path still exists)."""
+    fp = source_fingerprint(sf_dir, table)
+    if _BUILT.get(path) == fp and os.path.isdir(path):
+        return
+    build()
+    _BUILT[path] = fp
+
+
+_EMPTY_AUDIT_SCHEMA = (
+    "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
+    " max_id bigint, dim_sum bigint"
+)
+
+
+def _cell_audit(back: DataFrame) -> DataFrame:
+    """The per-cell index audit every lifecycle row returns (the
+    sim_index_build shape): count, Mersenne-folded id checksum, id
+    range, embedding elements — computed from read-back files so a
+    PASS certifies the on-disk layout, not the pre-write frame."""
+    return back.groupBy(F.col("cell").cast("long").alias("cell")).agg(
+        F.count(F.lit(1)).alias("n_vecs"),
+        F.expr(
+            f"CAST(sum(CAST(vec_id AS DECIMAL(38,0))) % {CHECKSUM_MOD}"
+            f" AS BIGINT)"
+        ).alias("id_sum"),
+        F.min("vec_id").alias("min_id"),
+        F.max("vec_id").alias("max_id"),
+        F.sum(F.size("embedding").cast("long")).alias("dim_sum"),
+    )
 
 
 def build_ivf_index(
@@ -150,18 +188,16 @@ def build_ivf_index(
     path = _index_dir("ivf_index", sf_dir)
     if not cent_rows:
         return path, cent_rows, n_corpus
-    fp = _corpus_fingerprint(sf_dir)
-    if _BUILT_THIS_SESSION.get(path) == fp and os.path.isdir(path):
-        return path, cent_rows, n_corpus
     # The lifecycle indexes' assignment, with `label` riding along so
     # metadata-filtered serving (sim_topk_filtered_ivf) can push its
     # predicate into the pruned scan (PushedFilters) instead of
     # joining attributes back at query time.
-    cells = assign_cells(spark, emb, cent_rows).select(
-        "vec_id", "embedding", "label", "cell"
+    build_once(
+        path, sf_dir, "embeddings",
+        lambda: assign_cells(spark, emb, cent_rows)
+        .select("vec_id", "embedding", "label", "cell")
+        .write.mode("overwrite").partitionBy("cell").parquet(path),
     )
-    cells.write.mode("overwrite").partitionBy("cell").parquet(path)
-    _BUILT_THIS_SESSION[path] = fp
     return path, cent_rows, n_corpus
 
 
@@ -194,25 +230,8 @@ def q_sim_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitoring query."""
     path, cent_rows, n_corpus = build_ivf_index(spark, sf_dir)
     if not cent_rows:
-        return spark.createDataFrame(
-            [],
-            "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
-            " max_id bigint, dim_sum bigint",
-        )
-    back = spark.read.parquet(path)
-    return (
-        back.groupBy(F.col("cell").cast("long").alias("cell"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.expr(
-                f"CAST(sum(CAST(vec_id AS DECIMAL(38,0))) % {CHECKSUM_MOD}"
-                f" AS BIGINT)"
-            ).alias("id_sum"),
-            F.min("vec_id").alias("min_id"),
-            F.max("vec_id").alias("max_id"),
-            F.sum(F.size("embedding").cast("long")).alias("dim_sum"),
-        )
-    )
+        return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
+    return _cell_audit(spark.read.parquet(path))
 
 
 def serve_batched_from_index(
@@ -617,7 +636,7 @@ def q_sim_cand_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent_rows, n_all = trained_quantizer(emb)
     if cent_rows:
         ivf_c = (
-            assign_cells(spark, emb, cent_rows)
+            _index_rows(spark, emb, cent_rows)
             .join(
                 F.broadcast(
                     ivf_probes_df(
@@ -974,36 +993,15 @@ def q_sim_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent_rows, _n = trained_quantizer(emb)
     path = _index_dir("ivf_index_incr", sf_dir)
     if not cent_rows:
-        return spark.createDataFrame(
-            [],
-            "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
-            " max_id bigint, dim_sum bigint",
-        )
+        return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
     is_new = F.col("vec_id") % APPEND_MOD == APPEND_REM
-    base = assign_cells(spark, emb.filter(~is_new), cent_rows).select(
-        *_INDEX_COLS
-    )
+    base = _index_rows(spark, emb.filter(~is_new), cent_rows)
     # Overwrite clears any previous run's directory, so the append
     # below is idempotent run-to-run.
     base.write.mode("overwrite").partitionBy("cell").parquet(path)
-    batch = assign_cells(spark, emb.filter(is_new), cent_rows).select(
-        *_INDEX_COLS
-    )
+    batch = _index_rows(spark, emb.filter(is_new), cent_rows)
     batch.write.mode("append").partitionBy("cell").parquet(path)
-    back = spark.read.parquet(path)
-    return (
-        back.groupBy(F.col("cell").cast("long").alias("cell"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.expr(
-                f"CAST(sum(CAST(vec_id AS DECIMAL(38,0))) % {CHECKSUM_MOD}"
-                f" AS BIGINT)"
-            ).alias("id_sum"),
-            F.min("vec_id").alias("min_id"),
-            F.max("vec_id").alias("max_id"),
-            F.sum(F.size("embedding").cast("long")).alias("dim_sum"),
-        )
-    )
+    return _cell_audit(spark.read.parquet(path))
 
 
 # ----------------------------------------------------- delete / compact
@@ -1055,7 +1053,7 @@ def q_sim_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
        ids, and write the survivors to a staging directory partitioned
        by cell;
     3. publish ATOMICALLY through the manifest commit (round-13:
-       commit_cell_swap — untouched cells carried over by hardlink,
+       rewrite_cells — untouched cells carried over by hardlink,
        rewritten cells moved in, ONE manifest flip makes the new
        generation visible; a crash between two cell swaps leaves the
        old generation intact and current, never a mix — the
@@ -1078,58 +1076,32 @@ def q_sim_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join removes a tombstoned NULL row from that cell like any
     other (pinned by test_lifecycle_oracle_match_with_null_embeddings
     _in_batch)."""
-    import shutil
-
     emb = _emb(spark, sf_dir)
     cent_rows, n_corpus = trained_quantizer(emb)
     path = _index_dir("ivf_index_del", sf_dir)
     if not cent_rows:
-        return spark.createDataFrame(
-            [],
-            "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
-            " max_id bigint, dim_sum bigint",
-        )
+        return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
     # Fresh full build each run (the demo needs a pre-delete index; a
     # production deployment starts from the live one).
-    write_index_base(
-        assign_cells(spark, emb, cent_rows).select(*_INDEX_COLS), path
-    )
-    is_del = F.expr(_DELETE_PRED_SQL)
-    tomb = emb.filter(is_del).select("vec_id")
-    # Affected cells: assign ONLY the tombstone batch (pure map over
-    # ~1% of rows), pull the distinct cell ids — bounded by k.
-    del_cells = sorted(
-        int(r["cell"])
-        for r in assign_cells(spark, emb.filter(is_del), cent_rows)
-        .select("cell")
-        .distinct()
-        .collect()
-    )
-    if del_cells:
-        stage = _index_dir("ivf_index_del_stage", sf_dir)
-        shutil.rmtree(stage, ignore_errors=True)
-        affected = spark.read.parquet(index_data_dir(path)).filter(
-            F.col("cell").isin(del_cells)
-        )
-        survivors = affected.join(F.broadcast(tomb), "vec_id", "left_anti")
-        survivors.write.mode("overwrite").partitionBy("cell").parquet(stage)
-        # Atomic publish: hardlink-carry untouched cells, move the
-        # rewritten ones in (absent in staging == cell emptied by the
-        # delete), flip the manifest LAST — old-or-new, never a mix.
-        commit_cell_swap(path, stage, del_cells)
-    back = spark.read.parquet(index_data_dir(path))
-    return (
-        back.groupBy(F.col("cell").cast("long").alias("cell"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.expr(
-                f"CAST(sum(CAST(vec_id AS DECIMAL(38,0))) % {CHECKSUM_MOD}"
-                f" AS BIGINT)"
-            ).alias("id_sum"),
-            F.min("vec_id").alias("min_id"),
-            F.max("vec_id").alias("max_id"),
-            F.sum(F.size("embedding").cast("long")).alias("dim_sum"),
-        )
+    write_index_base(_index_rows(spark, emb, cent_rows), path)
+    _tombstone_delete(spark, emb, cent_rows, path)
+    return _cell_audit(index_read(spark, path))
+
+
+def _tombstone_delete(
+    spark: SparkSession, emb: DataFrame, cent_rows: list, path: str
+) -> None:
+    """Apply the _DELETE_PRED_SQL tombstone batch to the index at
+    ``path``: assign ONLY the batch (pure map over ~1% of rows) for
+    the affected cells (bounded by k), anti-join the tombstone ids out
+    of them, and publish atomically (rewrite_cells: untouched cells
+    carried over, a cell emptied by the delete dropped, the manifest
+    flipped LAST — old-or-new, never a mix)."""
+    batch = emb.filter(F.expr(_DELETE_PRED_SQL))
+    tomb = F.broadcast(batch.select("vec_id"))
+    rewrite_cells(
+        spark, path, assigned_cell_ids(spark, batch, cent_rows),
+        lambda rows: rows.join(tomb, "vec_id", "left_anti"),
     )
 
 
@@ -1183,7 +1155,7 @@ def q_sim_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
        old rows (anti-join), union the batch's new rows — every new
        row lands in an affected cell by construction;
     3. stage + atomic manifest commit, as sim_index_delete
-       (commit_cell_swap: old-or-new generation, never a mix).
+       (rewrite_cells: old-or-new generation, never a mix).
 
     Oracle: the index-build audit over the post-upsert corpus with the
     SAME frozen quantizer — merged-after-upsert must equal a full
@@ -1196,66 +1168,28 @@ def q_sim_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL vector are NULL, so old and new assignment both land on the
     lowest centroid id — the driver pulls only see real cells and the
     swap rewrites that one cell (pinned by the same lifecycle test)."""
-    import shutil
-
     emb = _emb(spark, sf_dir)
     cent_rows, n_corpus = trained_quantizer(emb)
     path = _index_dir("ivf_index_ups", sf_dir)
     if not cent_rows:
-        return spark.createDataFrame(
-            [],
-            "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
-            " max_id bigint, dim_sum bigint",
-        )
+        return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
     # Fresh full build each run (pre-upsert state).
-    write_index_base(
-        assign_cells(spark, emb, cent_rows).select(*_INDEX_COLS), path
-    )
+    write_index_base(_index_rows(spark, emb, cent_rows), path)
     is_ups = F.expr(_UPSERT_PRED_SQL)
     new_batch = (
         emb.filter(is_ups)
         .select("vec_id", F.reverse("embedding").alias("embedding"))
     )
-    old_cells = {
-        int(r["cell"])
-        for r in assign_cells(spark, emb.filter(is_ups), cent_rows)
-        .select("cell")
-        .distinct()
-        .collect()
-    }
-    new_assigned = assign_cells(spark, new_batch, cent_rows)
-    new_cells = {
-        int(r["cell"])
-        for r in new_assigned.select("cell").distinct().collect()
-    }
-    ups_cells = sorted(old_cells | new_cells)
-    if ups_cells:
-        stage = _index_dir("ivf_index_ups_stage", sf_dir)
-        shutil.rmtree(stage, ignore_errors=True)
-        tomb = new_batch.select("vec_id")
-        affected = spark.read.parquet(index_data_dir(path)).filter(
-            F.col("cell").isin(ups_cells)
-        )
-        survivors = affected.join(F.broadcast(tomb), "vec_id", "left_anti")
-        merged = survivors.select(*_INDEX_COLS).unionByName(
-            new_assigned.select(*_INDEX_COLS)
-        )
-        merged.write.mode("overwrite").partitionBy("cell").parquet(stage)
-        commit_cell_swap(path, stage, ups_cells)
-    back = spark.read.parquet(index_data_dir(path))
-    return (
-        back.groupBy(F.col("cell").cast("long").alias("cell"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.expr(
-                f"CAST(sum(CAST(vec_id AS DECIMAL(38,0))) % {CHECKSUM_MOD}"
-                f" AS BIGINT)"
-            ).alias("id_sum"),
-            F.min("vec_id").alias("min_id"),
-            F.max("vec_id").alias("max_id"),
-            F.sum(F.size("embedding").cast("long")).alias("dim_sum"),
-        )
+    ups_cells = set(assigned_cell_ids(spark, emb.filter(is_ups), cent_rows))
+    ups_cells |= set(assigned_cell_ids(spark, new_batch, cent_rows))
+    tomb = F.broadcast(new_batch.select("vec_id"))
+    rewrite_cells(
+        spark, path, ups_cells,
+        lambda rows: rows.join(tomb, "vec_id", "left_anti")
+        .select(*_INDEX_COLS)
+        .unionByName(assign_cells(spark, new_batch, cent_rows)),
     )
+    return _cell_audit(index_read(spark, path))
 
 
 # ----------------------------------- quantizer staleness monitor (r10)
@@ -1552,9 +1486,6 @@ _UPS_CTE = (
     f"  ELSE embedding END AS embedding FROM embeddings)"
 )
 
-_RETRAINED_BUILT: dict[str, str] = {}
-
-
 def _ups_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The post-upsert corpus (the staleness/retrain scenario)."""
     emb = _emb(spark, sf_dir)
@@ -1580,15 +1511,13 @@ def build_retrained_index(
     path = _index_dir("ivf_index_retrained", sf_dir)
     if not cent_fresh:
         return path, cent_fresh, n
-    fp = _corpus_fingerprint(sf_dir)
-    if _RETRAINED_BUILT.get(path) == fp and os.path.isdir(path):
-        return path, cent_fresh, n
-    cells = assign_cells(spark, ups, cent_fresh)
     # Atomic publish (round-13): the fresh assignment lands as a new
     # generation and ONE manifest flip replaces the old index — a
     # crash mid-retrain leaves the previous generation current.
-    write_index_base(cells, path)
-    _RETRAINED_BUILT[path] = fp
+    build_once(
+        path, sf_dir, "embeddings",
+        lambda: write_index_base(assign_cells(spark, ups, cent_fresh), path),
+    )
     return path, cent_fresh, n
 
 
@@ -1632,25 +1561,8 @@ def q_sim_index_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     can move any vector, so there is no affected-cell subset to stage."""
     path, cent_fresh, _n = build_retrained_index(spark, sf_dir)
     if not cent_fresh:
-        return spark.createDataFrame(
-            [],
-            "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
-            " max_id bigint, dim_sum bigint",
-        )
-    back = spark.read.parquet(index_data_dir(path))
-    return (
-        back.groupBy(F.col("cell").cast("long").alias("cell"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.expr(
-                f"CAST(sum(CAST(vec_id AS DECIMAL(38,0))) % {CHECKSUM_MOD}"
-                f" AS BIGINT)"
-            ).alias("id_sum"),
-            F.min("vec_id").alias("min_id"),
-            F.max("vec_id").alias("max_id"),
-            F.sum(F.size("embedding").cast("long")).alias("dim_sum"),
-        )
-    )
+        return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
+    return _cell_audit(index_read(spark, path))
 
 
 #: trained_topk_oracle with the ENTIRE chain re-sourced from the
@@ -1790,9 +1702,7 @@ def q_sim_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint)."""
     dec_rows = q_sim_index_staleness(spark, sf_dir).collect()
     empty = spark.createDataFrame(
-        [],
-        "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
-        " max_id bigint, dim_sum bigint, decision string",
+        [], _EMPTY_AUDIT_SCHEMA + ", decision string"
     )
     if not dec_rows:
         return empty
@@ -1817,9 +1727,17 @@ COMPACT_MIN_FILES = 2
 
 def _cell_fragments(path: str) -> dict[int, int]:
     """cell id -> parquet fragment count, from a directory listing (the
-    metadata-only sweep a table format's manifest gives for free).
+    metadata-only sweep a table format's manifest gives for free) — or,
+    on a file_manifest root, from the manifest's per-cell file lists.
     Accepts either an index ROOT (manifest-resolved to the committed
     generation) or a flat cell-directory layout."""
+    man = read_manifest(path) or {}
+    if man.get("mode") == "file_manifest":
+        return {
+            int(k.split("=", 1)[1]): len(v)
+            for k, v in sorted(man["files"].items())
+            if k.startswith("cell=")
+        }
     path = index_data_dir(path)
     out: dict[int, int] = {}
     for d in sorted(os.listdir(path)):
@@ -1844,38 +1762,13 @@ def compact_index_cells(
     one-file-per-cell guarantee comes from hash-repartitioning the
     affected rows on `cell` before the partitioned write: all of a
     cell's rows land in exactly one task, so partitionBy emits exactly
-    one file for it. Publication is the atomic manifest commit
-    (commit_cell_swap) on manifest-rooted indexes; legacy flat roots
-    keep the in-place swap. Returns the compacted cell ids."""
-    import shutil
-
-    from dist_mapreduce_spark.plans.index_commit import current_generation
-
-    data = index_data_dir(path)
-    frag = sorted(
-        c for c, n in _cell_fragments(data).items() if n > min_files
+    one file for it. ``path`` is a manifest-rooted index; publication
+    is the atomic manifest commit (rewrite_cells). Returns the
+    compacted cell ids."""
+    frag = sorted(c for c, n in _cell_fragments(path).items() if n > min_files)
+    rewrite_cells(
+        spark, path, frag, lambda rows: rows.repartition(len(frag), "cell")
     )
-    if not frag:
-        return frag
-    stage = path + "_compact_stage"
-    shutil.rmtree(stage, ignore_errors=True)
-    affected = spark.read.parquet(data).filter(F.col("cell").isin(frag))
-    (
-        affected.repartition(len(frag), "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(stage)
-    )
-    if current_generation(path) is not None:
-        commit_cell_swap(path, stage, frag)
-        return frag
-    for c in frag:
-        dst = os.path.join(path, f"cell={c}")
-        src = os.path.join(stage, f"cell={c}")
-        shutil.rmtree(dst, ignore_errors=True)
-        if os.path.isdir(src):
-            shutil.move(src, dst)
-    shutil.rmtree(stage, ignore_errors=True)
     return frag
 
 
@@ -1904,20 +1797,14 @@ def q_sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent_rows, n_corpus = trained_quantizer(emb)
     path = _index_dir("ivf_index_cpt", sf_dir)
     if not cent_rows:
-        return spark.createDataFrame(
-            [],
-            "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
-            " max_id bigint, dim_sum bigint",
-        )
+        return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
     mod = COMPACT_BATCHES + 1
     # Assign cells ONCE and cache (reads only the immutable source
     # parquet, never the index path this query rewrites) — the 7
     # micro-batch writes then filter the cached assignment instead of
     # re-running the GEMM assignment per batch.
-    cells_all = (
-        assign_cells(spark, emb, cent_rows)
-        .select(*_INDEX_COLS)
-        .withColumn("b", F.col("vec_id") % mod)
+    cells_all = _index_rows(spark, emb, cent_rows).withColumn(
+        "b", F.col("vec_id") % mod
     )
     cells_all.cache()
     try:
@@ -1945,20 +1832,7 @@ def q_sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         cells_all.unpersist()
     compact_index_cells(spark, path)
-    back = spark.read.parquet(index_data_dir(path))
-    return (
-        back.groupBy(F.col("cell").cast("long").alias("cell"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.expr(
-                f"CAST(sum(CAST(vec_id AS DECIMAL(38,0))) % {CHECKSUM_MOD}"
-                f" AS BIGINT)"
-            ).alias("id_sum"),
-            F.min("vec_id").alias("min_id"),
-            F.max("vec_id").alias("max_id"),
-            F.sum(F.size("embedding").cast("long")).alias("dim_sum"),
-        )
-    )
+    return _cell_audit(index_read(spark, path))
 
 
 # ------------------------------------------------------- semantic dedup
@@ -2014,7 +1888,9 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("canonical_id"),
             F.lit(False).alias("is_dup"),
         )
-    cells = assign_cells(spark, emb, cent_rows)
+    # Assigned ONCE: both self-join sides read the checkpointed blocks
+    # (an aliased lazy frame would run the GEMM stage per side).
+    cells = _index_rows(spark, emb, cent_rows).localCheckpoint()
     a, b = cells.alias("a"), cells.alias("b")
     dup = (
         a.join(
@@ -2078,11 +1954,7 @@ def q_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     cent_rows, n_corpus = trained_quantizer(emb)
     if not cent_rows:
-        return spark.createDataFrame(
-            [],
-            "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
-            " max_id bigint, dim_sum bigint",
-        )
+        return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
     path = _index_dir("ivf_index_stream", sf_dir)
     stage = _index_dir("ivf_stream_stage", sf_dir)
     ckpt = _index_dir("ivf_stream_ckpt", sf_dir)
@@ -2091,8 +1963,8 @@ def q_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = F.col("vec_id") % APPEND_MOD == APPEND_REM
     # Bulk backfill: base index, overwrite (clears prior runs), staged
     # as ingest_batch=-1 under each cell directory.
-    assign_cells(spark, emb.filter(~is_new), cent_rows).select(
-        *_INDEX_COLS, F.lit(-1).alias("ingest_batch")
+    _index_rows(spark, emb.filter(~is_new), cent_rows).withColumn(
+        "ingest_batch", F.lit(-1)
     ).write.mode("overwrite").partitionBy("cell", "ingest_batch").parquet(path)
     # Stage the streaming tail as 3 files -> 3 micro-batches.
     arrivals = emb.filter(is_new).select("vec_id", "embedding")
@@ -2131,20 +2003,7 @@ def q_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         capture_stream_plan(q, "stream_index_append")
     finally:
         q.stop()
-    back = spark.read.parquet(path)
-    return (
-        back.groupBy(F.col("cell").cast("long").alias("cell"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.expr(
-                f"CAST(sum(CAST(vec_id AS DECIMAL(38,0))) % {CHECKSUM_MOD}"
-                f" AS BIGINT)"
-            ).alias("id_sum"),
-            F.min("vec_id").alias("min_id"),
-            F.max("vec_id").alias("max_id"),
-            F.sum(F.size("embedding").cast("long")).alias("dim_sum"),
-        )
-    )
+    return _cell_audit(spark.read.parquet(path))
 
 
 # ------------------------------------------------------------ IVF + PQ
@@ -2282,7 +2141,7 @@ def q_sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     codebook = pq_codebook(cb_rows)
     rows = (
-        assign_cells(spark, emb.select("vec_id", "embedding"), cent_rows)
+        _index_rows(spark, emb, cent_rows)
         .withColumn("codes", F.expr(pq_cells_expr(codebook)))
         .select("vec_id", "cell", "codes")
     )
@@ -2422,19 +2281,15 @@ def build_ivfpq_index(spark: SparkSession, sf_dir: str) -> tuple:
     path = _index_dir("ivfpq_index", sf_dir)
     if not cent_rows or not cb_rows:
         return path, cent_rows, cb_rows
-    fp = _corpus_fingerprint(sf_dir)
-    if _BUILT_THIS_SESSION.get(path) == fp and os.path.isdir(path):
-        return path, cent_rows, cb_rows
-    codebook = pq_codebook(cb_rows)
-    (
-        assign_cells(spark, emb.select("vec_id", "embedding"), cent_rows)
-        .withColumn("codes", F.expr(pq_cells_expr(codebook)))
+    build_once(
+        path, sf_dir, "embeddings",
+        lambda: _index_rows(spark, emb, cent_rows)
+        .withColumn("codes", F.expr(pq_cells_expr(pq_codebook(cb_rows))))
         .select("vec_id", "embedding", "codes", "cell")
         .write.mode("overwrite")
         .partitionBy("cell")
-        .parquet(path)
+        .parquet(path),
     )
-    _BUILT_THIS_SESSION[path] = fp
     return path, cent_rows, cb_rows
 
 
@@ -3272,7 +3127,7 @@ def q_sim_topk_ivfpq_res(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(int(cid), cv) for cid, cv in cent_rows], "cell long, cvec array<double>"
     )
     rows = (
-        assign_cells(spark, emb.select("vec_id", "embedding"), cent_rows)
+        _index_rows(spark, emb, cent_rows)
         .join(F.broadcast(cent_df), "cell")
         .withColumn("res", F.expr(sub_spark_sql("embedding", "cvec")))
         .withColumn("codes", F.expr(pq_cells_expr(rcb, "res")))
@@ -3448,7 +3303,7 @@ def q_contamination_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "vec_id bigint, eval_id bigint, cos_sim double"
         )
     is_eval = F.col("vec_id") % CONTAM_MOD == CONTAM_REM
-    tr = assign_cells(spark, emb.filter(~is_eval), cent_rows)
+    tr = _index_rows(spark, emb.filter(~is_eval), cent_rows)
     ev = probe_cells(
         emb.filter(is_eval & F.col("embedding").isNotNull()).select(
             F.col("vec_id").alias("eval_id"),
@@ -3490,24 +3345,25 @@ def build_ivfpq_res_index(spark: SparkSession, sf_dir: str) -> tuple:
     path = _index_dir("ivfpq_res_index", sf_dir)
     if not cent_rows or not cb_rows:
         return path, cent_rows, cb_rows
-    fp = _corpus_fingerprint(sf_dir)
-    if _BUILT_THIS_SESSION.get(path) == fp and os.path.isdir(path):
-        return path, cent_rows, cb_rows
-    rcb = _res_codebook(cent_rows, cb_rows)
-    cent_df = spark.createDataFrame(
-        [(int(cid), cv) for cid, cv in cent_rows], "cell long, cvec array<double>"
-    )
-    (
-        assign_cells(spark, emb.select("vec_id", "embedding"), cent_rows)
-        .join(F.broadcast(cent_df), "cell")
-        .withColumn("res", F.expr(sub_spark_sql("embedding", "cvec")))
-        .withColumn("codes", F.expr(pq_cells_expr(rcb, "res")))
-        .select("vec_id", "embedding", "codes", "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-    _BUILT_THIS_SESSION[path] = fp
+
+    def build() -> None:
+        rcb = _res_codebook(cent_rows, cb_rows)
+        cent_df = spark.createDataFrame(
+            [(int(cid), cv) for cid, cv in cent_rows],
+            "cell long, cvec array<double>",
+        )
+        (
+            _index_rows(spark, emb, cent_rows)
+            .join(F.broadcast(cent_df), "cell")
+            .withColumn("res", F.expr(sub_spark_sql("embedding", "cvec")))
+            .withColumn("codes", F.expr(pq_cells_expr(rcb, "res")))
+            .select("vec_id", "embedding", "codes", "cell")
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(path)
+        )
+
+    build_once(path, sf_dir, "embeddings", build)
     return path, cent_rows, cb_rows
 
 
@@ -3694,86 +3550,19 @@ def q_sim_index_delete_fm(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells — here selected by the manifest's file-list filter, the
     Iceberg form of PartitionFilters — and the publish moves only the
     rewritten cells' files)."""
-    import shutil
-
-    from dist_mapreduce_spark.plans.index_commit import (
-        index_read,
-        write_stage,
-    )
-
     emb = _emb(spark, sf_dir)
     cent_rows, _n_corpus = trained_quantizer(emb)
     path = _index_dir("ivf_index_del_fm", sf_dir)
     if not cent_rows:
-        return spark.createDataFrame(
-            [],
-            "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
-            " max_id bigint, dim_sum bigint",
-        )
+        return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
     write_index_base(
-        assign_cells(spark, emb, cent_rows).select(*_INDEX_COLS),
-        path,
-        mode="file_manifest",
+        _index_rows(spark, emb, cent_rows), path, mode="file_manifest"
     )
-    is_del = F.expr(_DELETE_PRED_SQL)
-    tomb = emb.filter(is_del).select("vec_id")
-    del_cells = sorted(
-        int(r["cell"])
-        for r in assign_cells(spark, emb.filter(is_del), cent_rows)
-        .select("cell")
-        .distinct()
-        .collect()
-    )
-    if del_cells:
-        stage = _index_dir("ivf_index_del_fm_stage", sf_dir)
-        shutil.rmtree(stage, ignore_errors=True)
-        affected = index_read(spark, path, cells=del_cells)
-        survivors = affected.join(F.broadcast(tomb), "vec_id", "left_anti")
-        write_stage(survivors, stage, ("cell",), mode="file_manifest")
-        commit_cell_swap(path, stage, del_cells)
-    back = index_read(spark, path)
-    return (
-        back.groupBy(F.col("cell").cast("long").alias("cell"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.expr(
-                f"CAST(sum(CAST(vec_id AS DECIMAL(38,0))) % {CHECKSUM_MOD}"
-                f" AS BIGINT)"
-            ).alias("id_sum"),
-            F.min("vec_id").alias("min_id"),
-            F.max("vec_id").alias("max_id"),
-            F.sum(F.size("embedding").cast("long")).alias("dim_sum"),
-        )
-    )
+    _tombstone_delete(spark, emb, cent_rows, path)
+    return _cell_audit(index_read(spark, path))
 
 
 # -------- pinned reader snapshots + mode migration (round 15)
-
-
-def _cell_audit(back: DataFrame) -> DataFrame:
-    """The standard per-cell index audit (the sim_index_build shape):
-    count, Mersenne-folded id checksum, id range, embedding elements —
-    computed from read-back files so a PASS certifies the on-disk
-    layout, not the pre-write frame."""
-    return (
-        back.groupBy(F.col("cell").cast("long").alias("cell"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.expr(
-                f"CAST(sum(CAST(vec_id AS DECIMAL(38,0))) % {CHECKSUM_MOD}"
-                f" AS BIGINT)"
-            ).alias("id_sum"),
-            F.min("vec_id").alias("min_id"),
-            F.max("vec_id").alias("max_id"),
-            F.sum(F.size("embedding").cast("long")).alias("dim_sum"),
-        )
-    )
-
-
-_EMPTY_AUDIT_SCHEMA = (
-    "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
-    " max_id bigint, dim_sum bigint"
-)
 
 
 @query("sim_index_snapshot", oracle=ORACLES["sim_index_build"])
@@ -3781,7 +3570,7 @@ def q_sim_index_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generation-pinned reader session (round-14 verdict item #4,
     plans/index_commit.py index_snapshot): pin the freshly built index,
     then mutate it TWICE behind the pin — the tombstone delete
-    (commit_cell_swap → gen-2) followed by a full rebuild of the
+    (rewrite_cells → gen-2) followed by a full rebuild of the
     survivors (write_index_base → gen-3), pushing the pinned gen-1
     beyond the one-cycle blind GC grace so ONLY the pin keeps it alive
     — and audit the index THROUGH THE SNAPSHOT. The oracle is
@@ -3796,52 +3585,26 @@ def q_sim_index_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     that GC consults; the pinned read is the same pruned scan as any
     other — no copies, no extra I/O, exactly Iceberg's snapshot-id
     read reduced to its core."""
-    import shutil
-
     emb = _emb(spark, sf_dir)
     cent_rows, _n_corpus = trained_quantizer(emb)
     path = _index_dir("ivf_index_pin", sf_dir)
     if not cent_rows:
         return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
-    write_index_base(
-        assign_cells(spark, emb, cent_rows).select(*_INDEX_COLS), path
-    )
+    write_index_base(_index_rows(spark, emb, cent_rows), path)
     # The pin is NOT context-managed here: the returned DataFrame is
     # lazy and the harness materializes it after this function exits,
     # so releasing on exit would drop the protection before the read
     # happens. The pin ages out by TTL (the root is per-process
     # scratch; a long session would call snap.refresh()).
     snap = index_snapshot(path)
-    # Mutation 1: the tombstone delete, same lifecycle as
-    # sim_index_delete (stage survivors of affected cells, atomic
-    # cell swap).
-    is_del = F.expr(_DELETE_PRED_SQL)
-    tomb = emb.filter(is_del).select("vec_id")
-    del_cells = sorted(
-        int(r["cell"])
-        for r in assign_cells(spark, emb.filter(is_del), cent_rows)
-        .select("cell")
-        .distinct()
-        .collect()
-    )
-    if del_cells:
-        stage = _index_dir("ivf_index_pin_stage", sf_dir)
-        shutil.rmtree(stage, ignore_errors=True)
-        affected = spark.read.parquet(index_data_dir(path)).filter(
-            F.col("cell").isin(del_cells)
-        )
-        survivors = affected.join(
-            F.broadcast(tomb), "vec_id", "left_anti"
-        )
-        survivors.write.mode("overwrite").partitionBy("cell").parquet(
-            stage
-        )
-        commit_cell_swap(path, stage, del_cells)
+    # Mutation 1: the tombstone delete, sim_index_delete's lifecycle
+    # (stage survivors of affected cells, atomic cell swap).
+    _tombstone_delete(spark, emb, cent_rows, path)
     # Mutation 2: a full republish of the post-delete files (no
     # reassignment compute needed — the content is already cell-
     # assigned) — the pinned gen-1 is now beyond the blind
     # one-cycle grace; only the pin protects it.
-    write_index_base(spark.read.parquet(index_data_dir(path)), path)
+    write_index_base(index_read(spark, path), path)
     return _cell_audit(snap.read(spark))
 
 
@@ -3852,7 +3615,7 @@ def q_sim_index_migrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     honor stated intent): build the index in POSIX hardlink mode, then
     migrate it to the object-store ``file_manifest`` mode with one
     explicit full rebuild, then run the tombstone delete THROUGH the
-    migrated root (staging + commit_cell_swap inherit the recorded
+    migrated root (rewrite_cells stages and commits in the recorded
     file-manifest protocol: survivors' files moved in, untouched cells
     carried by manifest re-listing). The oracle is sim_index_delete's
     VERBATIM, so a PASS value-certifies the whole migration chain —
@@ -3863,38 +3626,15 @@ def q_sim_index_migrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment moving 100 TB to an object store pays one write
     either way); everything after is the normal incremental lifecycle
     with manifest-level pruning in place of PartitionFilters."""
-    import shutil
-
-    from dist_mapreduce_spark.plans.index_commit import (
-        index_read,
-        read_manifest,
-        write_stage,
-    )
-
     emb = _emb(spark, sf_dir)
     cent_rows, _n_corpus = trained_quantizer(emb)
     path = _index_dir("ivf_index_mig", sf_dir)
     if not cent_rows:
         return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
-    cells = assign_cells(spark, emb, cent_rows).select(*_INDEX_COLS)
+    cells = _index_rows(spark, emb, cent_rows)
     write_index_base(cells, path, mode="hardlink")
     # The migration: same content, explicit new mode, one rebuild.
     write_index_base(cells, path, mode="file_manifest")
     assert read_manifest(path).get("mode") == "file_manifest"
-    is_del = F.expr(_DELETE_PRED_SQL)
-    tomb = emb.filter(is_del).select("vec_id")
-    del_cells = sorted(
-        int(r["cell"])
-        for r in assign_cells(spark, emb.filter(is_del), cent_rows)
-        .select("cell")
-        .distinct()
-        .collect()
-    )
-    if del_cells:
-        stage = _index_dir("ivf_index_mig_stage", sf_dir)
-        shutil.rmtree(stage, ignore_errors=True)
-        affected = index_read(spark, path, cells=del_cells)
-        survivors = affected.join(F.broadcast(tomb), "vec_id", "left_anti")
-        write_stage(survivors, stage, ("cell",), mode="file_manifest")
-        commit_cell_swap(path, stage, del_cells)
+    _tombstone_delete(spark, emb, cent_rows, path)
     return _cell_audit(index_read(spark, path))

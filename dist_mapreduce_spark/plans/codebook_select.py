@@ -156,7 +156,9 @@ def q_sim_codebook_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         cid: [int(x * KMEANS_SCALE) for x in fv] for cid, fv in cent_rows
     }
     cells = assign_cells(
-        spark, emb.filter(F.col("embedding").isNotNull()), cent_rows
+        spark,
+        emb.filter(F.col("embedding").isNotNull()).select("vec_id", "embedding"),
+        cent_rows,
     )
     # The statistic runs on the TRAINER'S SAMPLE (round 10 — the
     # oracle's gm/st read the e frame, which is the sampled trainer

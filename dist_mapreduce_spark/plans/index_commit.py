@@ -64,6 +64,9 @@ rewrites carry untouched cells by re-listing their existing paths
 (zero data movement, zero per-file ops), readers consume the pruned
 explicit file list via index_read, and the flip stays the single
 atomic publish either way. Kill-mid-swap is pinned in BOTH modes.
+Partial rewrites go through rewrite_cells, which reads, stages and
+publishes in the mode the root's manifest records — no caller picks a
+reader or a stage layout.
 """
 
 from __future__ import annotations
@@ -804,6 +807,31 @@ def commit_cell_swap(
             _gc_generations(root, keep=new, grace=cur, grace_dirs=outgoing)
         shutil.rmtree(stage, ignore_errors=True)
     return os.path.join(root, f"gen-{new}")
+
+
+def rewrite_cells(spark, root: str, cells, rewrite) -> None:
+    """Replace the committed rows of ``cells`` with ``rewrite(rows)``
+    and publish atomically — the one partial-rewrite path behind every
+    index mutation (delete, upsert, compaction). The root decides how
+    it is read and staged, never the caller: the affected rows come
+    from index_read, the stage is written in the commit mode the
+    root's manifest records (to ``<root>_stage``), and commit_cell_swap
+    publishes it (a cell absent from the rewrite's output is dropped).
+    A no-op when ``cells`` is empty."""
+    cells = sorted({int(c) for c in cells})
+    if not cells:
+        return
+    man = read_manifest(root)
+    if man is None:
+        raise ValueError(
+            f"rewrite_cells: {root} has no manifest — publish the base"
+            " index with write_index_base first"
+        )
+    stage = os.path.normpath(root) + "_stage"
+    shutil.rmtree(stage, ignore_errors=True)
+    rows = index_read(spark, root, cells)
+    write_stage(rewrite(rows), stage, ("cell",), man.get("mode", "hardlink"))
+    commit_cell_swap(root, stage, cells)
 
 
 # ---------------- generation-pinned reader snapshots (round 15)

@@ -186,9 +186,12 @@ def knn_res_frame(
             ),
         )
     )
-    # Lazy checkpoint: materialized by the first consumer's action,
-    # reused by every later one (the monitor drops from 31 shuffles to
-    # reading this frame + two aggregates).
+    # localCheckpoint(eager=False): under AQE the call runs every
+    # shuffle stage below the frame right away (the rank window's
+    # exchange, rsplit's aggregate); only the final stage waits for
+    # the first consumer's action, and every later consumer reuses
+    # the blocks (the monitor drops from 31 shuffles to reading this
+    # frame + two aggregates). docs/SCALE.md has the measurement.
     out = (
         res.localCheckpoint(eager=False),
         rsplit.localCheckpoint(eager=False),
@@ -1305,13 +1308,16 @@ def q_knn_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     corpv = (
         emb.select("vec_id")
-        .repartition(spark.sparkContext.defaultParallelism)
         .withColumn("g", F.expr(_G_SQL))
         .withColumn("cvec", F.expr(_CVEC_SPARK))
         .drop("g")
     )
     cents = [(g, _py_clust_centroid(g)) for g in range(K_CLUST)]
-    cells = assign_cells(spark, corpv, cents, vec_col="cvec")
+    # Assigned ONCE (assign_cells' repartition is the only spread):
+    # both self-join sides, the probe rows and the truth scan read the
+    # checkpointed blocks instead of re-deriving cvec and re-running
+    # the GEMM stage per consumer.
+    cells = assign_cells(spark, corpv, cents, vec_col="cvec").localCheckpoint()
     a, b = cells.alias("a"), cells.alias("b")
     pr = (
         a.join(
@@ -1332,11 +1338,11 @@ def q_knn_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= KNN_K)
         .select("src_id", "dst_id")
     )
-    probe = corpv.filter(F.col("vec_id") < KNN_PROBE).select(
+    probe = cells.filter(F.col("vec_id") < KNN_PROBE).select(
         F.col("vec_id").alias("src_id"), F.col("cvec").alias("qv")
     )
     tr = (
-        corpv.select(F.col("vec_id").alias("dst_id"), F.col("cvec").alias("ev"))
+        cells.select(F.col("vec_id").alias("dst_id"), F.col("cvec").alias("ev"))
         .join(F.broadcast(probe), F.col("dst_id") != F.col("src_id"))
         .withColumn("score", F.expr(cosine_spark_sql("qv", "ev")))
         .select("src_id", "dst_id", "score")
@@ -1783,31 +1789,23 @@ GRAPH_BEAM = 10  # frontier width kept per hop (score DESC, id ASC)
 GRAPH_HOPS = 3   # expansion rounds from the seed (the query's node)
 GRAPH_SEEDS = 10  # IVF probe-cell entry points added to the seed set
 
-#: Graph store built by THIS process, keyed to the corpus fingerprint
-#: (build_ivf_index's convention): serving reads the materialized
-#: artifact instead of rebuilding the graph per query.
-_GRAPH_STORE_BUILT: dict[str, str] = {}
-
 
 def stored_knn_graph(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the kNN graph once per corpus and return its ROOT
-    (crash-atomic manifest publish — plans/index_commit.py); graph
-    serving walks the stored edges, the same ingest-once/serve-many
-    split every index family in this repo uses."""
-    import os
-
-    from dist_mapreduce_spark.plans.ann_index import (
-        _corpus_fingerprint,
-        _index_dir,
-    )
+    """Materialize the kNN graph once per corpus (ann_index.build_once)
+    and return its ROOT (crash-atomic manifest publish —
+    plans/index_commit.py); graph serving walks the stored edges, the
+    same ingest-once/serve-many split every index family in this repo
+    uses."""
+    from dist_mapreduce_spark.plans.ann_index import _index_dir, build_once
     from dist_mapreduce_spark.plans.index_commit import write_index_base
 
     path = _index_dir("knn_graph_store", sf_dir)
-    fp = _corpus_fingerprint(sf_dir)
-    if _GRAPH_STORE_BUILT.get(path) == fp and os.path.isdir(path):
-        return path
-    write_index_base(q_knn_graph(spark, sf_dir), path, partition_cols=())
-    _GRAPH_STORE_BUILT[path] = fp
+    build_once(
+        path, sf_dir, "embeddings",
+        lambda: write_index_base(
+            q_knn_graph(spark, sf_dir), path, partition_cols=()
+        ),
+    )
     return path
 
 

@@ -1456,9 +1456,12 @@ def propagate_min_labels(pairs: DataFrame) -> DataFrame:
     one narrow join per round against O(diameter)-many fewer
     checkpoint barriers + convergence collects. Shared by
     dedup_cluster, dedup_cluster_collapsed and graph_components."""
-    # Lazy checkpoint (round 16): the round-0 frontier count below is
-    # the first action, so ONE job materializes the edge blocks AND the
-    # init labels instead of paying a separate eager-checkpoint job.
+    # eager=False is NOT lazy under AQE: the call plans the frame and
+    # runs every shuffle stage below it right then (measured at seed
+    # 11, perfbench snapshot 1: 7 jobs / 5.1 s here, including the
+    # minhash stages upstream; docs/SCALE.md). Only the final stage
+    # waits for the first action; eager=False saves the separate
+    # materializing count an eager checkpoint adds.
     edges = symmetric_edges(pairs, "doc_a", "doc_b").localCheckpoint(
         eager=False
     )
@@ -1495,10 +1498,11 @@ def propagate_min_labels(pairs: DataFrame) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    # Lazy checkpoint + the convergence action: ONE job both
-    # materializes the round's label blocks and returns the frontier
-    # size the fixpoint test needs (labels are monotone non-increasing,
-    # so `no node changed` ⇔ the old sum(label)-unchanged test).
+    # The convergence action (2 jobs per count, measured): it runs the
+    # checkpoint's final stage — the shuffles below ran at the
+    # localCheckpoint call — and returns the frontier size the
+    # fixpoint test needs (labels are monotone non-increasing, so `no
+    # node changed` ⇔ the old sum(label)-unchanged test).
     n_changed = labels.filter("chg").count()
     # Round 0 happened in the fused init above; iteration numbering is
     # unchanged from the pre-fusion loop (round `it` computes the same

@@ -26,6 +26,22 @@ from dist_mapreduce_spark.functions.vectors import (
     cosine_spark_sql,
 )
 from dist_mapreduce_spark.operators import text_analysis as ta
+from dist_mapreduce_spark.plans.ann_index import (
+    CHECKSUM_MOD,
+    RETRAIN_STALE_PPM,
+    _EMPTY_AUDIT_SCHEMA,
+    _cell_audit,
+    _index_dir,
+    build_once,
+    compact_index_cells,
+    staleness_decision_df,
+)
+from dist_mapreduce_spark.plans.index_commit import (
+    index_data_dir,
+    index_read,
+    rewrite_cells,
+    write_index_base,
+)
 from dist_mapreduce_spark.plans.registry import query
 from dist_mapreduce_spark.sources.tables import load_table
 
@@ -539,7 +555,9 @@ def q_sim_topk_mmr_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             " rel double, mmr double"
         )
     cells = assign_cells(
-        spark, emb.filter(F.col("embedding").isNotNull()), cent_rows
+        spark,
+        emb.filter(F.col("embedding").isNotNull()).select("vec_id", "embedding"),
+        cent_rows,
     )
     probes = ivf_probes_df(
         emb.filter(F.col("embedding").isNotNull()),
@@ -571,6 +589,9 @@ def q_sim_topk_mmr_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 DENSE_QUERIES = 3
 DENSE_TOPK = 10
 DENSE_DIM = 64
+
+#: The columns of a dense-index row.
+_DENSE_COLS = ("vec_id", "doc_id", "chunk_id", "embedding", "cell")
 
 
 def _dense_embed_duck(text_col: str) -> str:
@@ -828,30 +849,6 @@ def _dense_pruned_oracle() -> str:
     )
 
 
-#: Dense-index paths built by THIS process, keyed to the documents
-#: source fingerprint (build_ivf_index's convention — a rewritten
-#: corpus forces a rebuild instead of serving a stale index).
-_DENSE_BUILT: dict[str, str] = {}
-
-
-def _docs_fingerprint(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    h = hashlib.md5()
-    if os.path.isfile(src):
-        st = os.stat(src)
-        h.update(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode())
-    elif os.path.isdir(src):
-        for droot, _, files in sorted(os.walk(src)):
-            for f in sorted(files):
-                p = os.path.join(droot, f)
-                st = os.stat(p)
-                h.update(f"{p}:{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()
-
-
 def _dense_chunk_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, doc_id, chunk_id, embedding): the stub-encoded chunk
     corpus — search_dense_maxp's ck frame plus the scalar vec_id the
@@ -930,10 +927,10 @@ def build_dense_index(
     search_dense_maxp executed: at 100 TB the encoder fleet's output
     lands partitioned by cell at ingest, and dense serving becomes
     partition pruning instead of a corpus scan."""
-    from dist_mapreduce_spark.plans.ann_index import _index_dir
-    from dist_mapreduce_spark.plans.similarity import trained_quantizer
-
-    import os
+    from dist_mapreduce_spark.plans.similarity import (
+        assign_cells,
+        trained_quantizer,
+    )
 
     cv = _dense_chunk_vectors(spark, sf_dir)
     cent_rows, n_chunks = trained_quantizer(
@@ -942,21 +939,16 @@ def build_dense_index(
     path = _index_dir("dense_index", sf_dir)
     if not cent_rows:
         return path, cent_rows, n_chunks
-    fp = _docs_fingerprint(sf_dir)
-    if _DENSE_BUILT.get(path) == fp and os.path.isdir(path):
-        return path, cent_rows, n_chunks
-    from dist_mapreduce_spark.plans.similarity import assign_cells
-
     # GEMM assignment stage: at stress scale the full-corpus
     # assignment is THE dominant build cost (SCALE.md).
-    (
-        assign_cells(spark, cv, cent_rows)
-        .select("vec_id", "doc_id", "chunk_id", "embedding", "cell")
+    build_once(
+        path, sf_dir, "documents",
+        lambda: assign_cells(spark, cv, cent_rows)
+        .select(*_DENSE_COLS)
         .write.mode("overwrite")
         .partitionBy("cell")
-        .parquet(path)
+        .parquet(path),
     )
-    _DENSE_BUILT[path] = fp
     return path, cent_rows, n_chunks
 
 
@@ -1061,11 +1053,6 @@ DENSE_APPEND_MOD, DENSE_APPEND_REM = 83, 5
 
 _DENSE_APPEND_PRED = f"(doc_id % {DENSE_APPEND_MOD}) = {DENSE_APPEND_REM}"
 
-#: Mersenne fold for exact-int checksums (ann_index.CHECKSUM_MOD).
-_DENSE_CHECKSUM_MOD = (1 << 61) - 1
-
-_DENSE_BUILT_INCR: dict[str, str] = {}
-
 
 def build_dense_index_incr(
     spark: SparkSession, sf_dir: str
@@ -1080,13 +1067,10 @@ def build_dense_index_incr(
     APPEND into the existing cell directories. Base rows never move
     (frozen-quantizer append semantics), so the incremental cost is
     ∝ the new batch, not the corpus."""
-    from dist_mapreduce_spark.plans.ann_index import _index_dir
     from dist_mapreduce_spark.plans.similarity import (
         assign_cells,
         trained_quantizer,
     )
-
-    import os
 
     cv = _dense_chunk_vectors(spark, sf_dir)
     cent_rows, n_chunks = trained_quantizer(
@@ -1095,28 +1079,28 @@ def build_dense_index_incr(
     path = _index_dir("dense_index_incr", sf_dir)
     if not cent_rows:
         return path, cent_rows, n_chunks
-    fp = _docs_fingerprint(sf_dir)
-    if _DENSE_BUILT_INCR.get(path) == fp and os.path.isdir(path):
-        return path, cent_rows, n_chunks
     is_new = F.expr(_DENSE_APPEND_PRED)
-    cols = ["vec_id", "doc_id", "chunk_id", "embedding", "cell"]
-    from dist_mapreduce_spark.plans.index_commit import write_index_base
-
     # The base AND the incremental batch stage into the SAME
     # uncommitted generation (extra_writes runs before the manifest
     # flip), so base + append publish as one atomic unit — a reader
     # or crash between the two can never see a base-only index
     # presented as committed (round-13 advice). Idempotent
     # run-to-run: each call publishes a fresh generation.
-    batch = assign_cells(spark, cv.filter(is_new), cent_rows).select(*cols)
-    data = write_index_base(
-        assign_cells(spark, cv.filter(~is_new), cent_rows).select(*cols),
-        path,
-        extra_writes=lambda gen_dir: batch.write.mode("append")
-        .partitionBy("cell")
-        .parquet(gen_dir),
+    batch = assign_cells(spark, cv.filter(is_new), cent_rows).select(
+        *_DENSE_COLS
     )
-    _DENSE_BUILT_INCR[path] = fp
+    build_once(
+        path, sf_dir, "documents",
+        lambda: write_index_base(
+            assign_cells(spark, cv.filter(~is_new), cent_rows).select(
+                *_DENSE_COLS
+            ),
+            path,
+            extra_writes=lambda gen_dir: batch.write.mode("append")
+            .partitionBy("cell")
+            .parquet(gen_dir),
+        ),
+    )
     return path, cent_rows, n_chunks
 
 
@@ -1127,7 +1111,7 @@ def build_dense_index_incr(
         f" {_dense_trained_ctes()}"
         f" SELECT CAST(cell AS BIGINT) AS cell,"
         f"  CAST(count(*) AS BIGINT) AS n_vecs,"
-        f"  CAST(sum(CAST(vec_id AS HUGEINT)) % {_DENSE_CHECKSUM_MOD}"
+        f"  CAST(sum(CAST(vec_id AS HUGEINT)) % {CHECKSUM_MOD}"
         f"   AS BIGINT) AS id_sum,"
         f"  min(vec_id) AS min_id, max(vec_id) AS max_id,"
         f"  CAST(sum(CAST(len(embedding) AS BIGINT)) AS BIGINT) AS dim_sum"
@@ -1150,27 +1134,8 @@ def q_dense_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     the base layout is untouched. The audit is one narrow aggregate."""
     path, cent_rows, _n = build_dense_index_incr(spark, sf_dir)
     if not cent_rows:
-        return spark.createDataFrame(
-            [],
-            "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
-            " max_id bigint, dim_sum bigint",
-        )
-    from dist_mapreduce_spark.plans.index_commit import index_data_dir
-
-    back = spark.read.parquet(index_data_dir(path))
-    return (
-        back.groupBy(F.col("cell").cast("long").alias("cell"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.expr(
-                f"CAST(sum(CAST(vec_id AS DECIMAL(38,0)))"
-                f" % {_DENSE_CHECKSUM_MOD} AS BIGINT)"
-            ).alias("id_sum"),
-            F.min("vec_id").alias("min_id"),
-            F.max("vec_id").alias("max_id"),
-            F.sum(F.size("embedding").cast("long")).alias("dim_sum"),
-        )
-    )
+        return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
+    return _cell_audit(index_read(spark, path))
 
 
 @query(
@@ -1180,7 +1145,7 @@ def q_dense_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" {_dense_trained_ctes()}"
         f" SELECT CAST(cell AS BIGINT) AS cell,"
         f"  CAST(count(*) AS BIGINT) AS n_vecs,"
-        f"  CAST(sum(CAST(vec_id AS HUGEINT)) % {_DENSE_CHECKSUM_MOD}"
+        f"  CAST(sum(CAST(vec_id AS HUGEINT)) % {CHECKSUM_MOD}"
         f"   AS BIGINT) AS id_sum,"
         f"  min(vec_id) AS min_id, max(vec_id) AS max_id,"
         f"  CAST(sum(CAST(len(embedding) AS BIGINT)) AS BIGINT) AS dim_sum"
@@ -1203,32 +1168,11 @@ def q_dense_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     read); the rewrite reads only hot-cell rows, hash-repartitioned on
     cell so each emits exactly one file; the audit is one narrow
     aggregate."""
-    from dist_mapreduce_spark.plans.ann_index import compact_index_cells
-
     path, cent_rows, _n = build_dense_index_incr(spark, sf_dir)
     if not cent_rows:
-        return spark.createDataFrame(
-            [],
-            "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
-            " max_id bigint, dim_sum bigint",
-        )
-    from dist_mapreduce_spark.plans.index_commit import index_data_dir
-
+        return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
     compact_index_cells(spark, path)
-    back = spark.read.parquet(index_data_dir(path))
-    return (
-        back.groupBy(F.col("cell").cast("long").alias("cell"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.expr(
-                f"CAST(sum(CAST(vec_id AS DECIMAL(38,0)))"
-                f" % {_DENSE_CHECKSUM_MOD} AS BIGINT)"
-            ).alias("id_sum"),
-            F.min("vec_id").alias("min_id"),
-            F.max("vec_id").alias("max_id"),
-            F.sum(F.size("embedding").cast("long")).alias("dim_sum"),
-        )
-    )
+    return _cell_audit(index_read(spark, path))
 
 
 @query("search_dense_maxp_appended", oracle=_dense_pruned_oracle())
@@ -1242,8 +1186,6 @@ def q_search_dense_maxp_appended(
     (incremental base+append directories instead of one full build).
     A PASS proves serving is indifferent to HOW the cells were
     materialized — appends never change what a query retrieves."""
-    from dist_mapreduce_spark.plans.index_commit import index_data_dir
-
     path, cent_rows, n_chunks = build_dense_index_incr(spark, sf_dir)
     return _serve_dense_pruned(
         spark, sf_dir, index_data_dir(path), cent_rows, n_chunks
@@ -1341,30 +1283,11 @@ def _dense_cell_stats_sql(cells: str) -> str:
     return (
         f" SELECT CAST(cell AS BIGINT) AS cell,"
         f"  CAST(count(*) AS BIGINT) AS n_vecs,"
-        f"  CAST(sum(CAST(vec_id AS HUGEINT)) % {_DENSE_CHECKSUM_MOD}"
+        f"  CAST(sum(CAST(vec_id AS HUGEINT)) % {CHECKSUM_MOD}"
         f"   AS BIGINT) AS id_sum,"
         f"  min(vec_id) AS min_id, max(vec_id) AS max_id,"
         f"  CAST(sum(CAST(len(embedding) AS BIGINT)) AS BIGINT) AS dim_sum"
         f" FROM {cells} GROUP BY cell"
-    )
-
-
-_DENSE_STATS_SCHEMA = (
-    "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
-    " max_id bigint, dim_sum bigint"
-)
-
-
-def _dense_cell_stats(back: DataFrame) -> DataFrame:
-    return back.groupBy(F.col("cell").cast("long").alias("cell")).agg(
-        F.count(F.lit(1)).alias("n_vecs"),
-        F.expr(
-            f"CAST(sum(CAST(vec_id AS DECIMAL(38,0)))"
-            f" % {_DENSE_CHECKSUM_MOD} AS BIGINT)"
-        ).alias("id_sum"),
-        F.min("vec_id").alias("min_id"),
-        F.max("vec_id").alias("max_id"),
-        F.sum(F.size("embedding").cast("long")).alias("dim_sum"),
     )
 
 
@@ -1387,12 +1310,9 @@ def q_dense_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the frozen quantizer (oracle: the trained chain with only
     the assignment source filtered). Rewrite cost ∝ rows in touched
     cells; untouched cells are never read."""
-    import os
-    import shutil
-
-    from dist_mapreduce_spark.plans.ann_index import _index_dir
     from dist_mapreduce_spark.plans.similarity import (
         assign_cells,
+        assigned_cell_ids,
         trained_quantizer,
     )
 
@@ -1401,39 +1321,20 @@ def q_dense_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         cv.select("vec_id", "embedding"), derived=True
     )
     if not cent_rows:
-        return spark.createDataFrame([], _DENSE_STATS_SCHEMA)
-    from dist_mapreduce_spark.plans.index_commit import (
-        commit_cell_swap,
-        index_data_dir,
-        write_index_base,
-    )
-
+        return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
     path = _index_dir("dense_index_del", sf_dir)
-    cols = ["vec_id", "doc_id", "chunk_id", "embedding", "cell"]
     # Fresh full build each run (the demo needs a pre-delete index).
     write_index_base(
-        assign_cells(spark, cv, cent_rows).select(*cols), path
+        assign_cells(spark, cv, cent_rows).select(*_DENSE_COLS), path
     )
     is_del = F.expr(_DENSE_DEL_DOC_PRED)
-    del_cells = sorted(
-        int(r["cell"])
-        for r in assign_cells(spark, cv.filter(is_del), cent_rows)
-        .select("cell")
-        .distinct()
-        .collect()
+    # Atomic publish: ONE manifest flip (round-13) — a crash between
+    # cell swaps leaves the pre-delete generation current.
+    rewrite_cells(
+        spark, path, assigned_cell_ids(spark, cv.filter(is_del), cent_rows),
+        lambda rows: rows.filter(~is_del),
     )
-    if del_cells:
-        stage = _index_dir("dense_index_del_stage", sf_dir)
-        shutil.rmtree(stage, ignore_errors=True)
-        affected = spark.read.parquet(index_data_dir(path)).filter(
-            F.col("cell").isin(del_cells)
-        )
-        survivors = affected.filter(~F.expr(_DENSE_DEL_DOC_PRED))
-        survivors.write.mode("overwrite").partitionBy("cell").parquet(stage)
-        # Atomic publish: ONE manifest flip (round-13) — a crash
-        # between cell swaps leaves the pre-delete generation current.
-        commit_cell_swap(path, stage, del_cells)
-    return _dense_cell_stats(spark.read.parquet(index_data_dir(path)))
+    return _cell_audit(index_read(spark, path))
 
 
 @query(
@@ -1460,12 +1361,9 @@ def q_dense_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edited batch + the frozen assignment of their union). This is
     the cross-cardinality case sim_index_upsert (1:1 vector swap)
     cannot exercise."""
-    import os
-    import shutil
-
-    from dist_mapreduce_spark.plans.ann_index import _index_dir
     from dist_mapreduce_spark.plans.similarity import (
         assign_cells,
+        assigned_cell_ids,
         trained_quantizer,
     )
 
@@ -1474,18 +1372,11 @@ def q_dense_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         cv.select("vec_id", "embedding"), derived=True
     )
     if not cent_rows:
-        return spark.createDataFrame([], _DENSE_STATS_SCHEMA)
-    from dist_mapreduce_spark.plans.index_commit import (
-        commit_cell_swap,
-        index_data_dir,
-        write_index_base,
-    )
-
+        return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
     path = _index_dir("dense_index_ups", sf_dir)
-    cols = ["vec_id", "doc_id", "chunk_id", "embedding", "cell"]
     # Fresh full build each run (pre-upsert state).
     write_index_base(
-        assign_cells(spark, cv, cent_rows).select(*cols), path
+        assign_cells(spark, cv, cent_rows).select(*_DENSE_COLS), path
     )
     is_ups = F.expr(_DENSE_UPS_DOC_PRED)
     # Re-chunk + re-encode ONLY the edited batch, from the edited text.
@@ -1498,34 +1389,18 @@ def q_dense_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     new_cv = _dense_chunk_vectors_from_docs(spark, edited_docs)
-    new_assigned = assign_cells(spark, new_cv, cent_rows).select(*cols)
-    old_cells = {
-        int(r["cell"])
-        for r in assign_cells(spark, cv.filter(is_ups), cent_rows)
-        .select("cell")
-        .distinct()
-        .collect()
-    }
-    new_cells = {
-        int(r["cell"])
-        for r in new_assigned.select("cell").distinct().collect()
-    }
-    ups_cells = sorted(old_cells | new_cells)
-    if ups_cells:
-        stage = _index_dir("dense_index_ups_stage", sf_dir)
-        shutil.rmtree(stage, ignore_errors=True)
-        affected = spark.read.parquet(index_data_dir(path)).filter(
-            F.col("cell").isin(ups_cells)
-        )
-        merged = affected.filter(~F.expr(_DENSE_UPS_DOC_PRED)).unionByName(
-            new_assigned.filter(F.col("cell").isin(ups_cells)).select(
-                *affected.columns
-            )
-        )
-        merged.write.mode("overwrite").partitionBy("cell").parquet(stage)
-        # Atomic publish: ONE manifest flip (round-13).
-        commit_cell_swap(path, stage, ups_cells)
-    return _dense_cell_stats(spark.read.parquet(index_data_dir(path)))
+    ups_cells = set(assigned_cell_ids(spark, cv.filter(is_ups), cent_rows))
+    ups_cells |= set(assigned_cell_ids(spark, new_cv, cent_rows))
+    # Atomic publish: ONE manifest flip (round-13).
+    rewrite_cells(
+        spark, path, ups_cells,
+        lambda rows: rows.filter(~is_ups).unionByName(
+            assign_cells(spark, new_cv, cent_rows)
+            .filter(F.col("cell").isin(sorted(ups_cells)))
+            .select(*rows.columns)
+        ),
+    )
+    return _cell_audit(index_read(spark, path))
 
 
 # ----- dense-index staleness monitor + retrain (round 12, item #3)
@@ -1601,7 +1476,6 @@ def _dense_staleness_oracle() -> str:
     of cu via ucells) vs fresh chain (trained AND assigned on cu),
     compared over the fresh trainer's sample (fe) in int64 fixed
     point."""
-    from dist_mapreduce_spark.plans.ann_index import RETRAIN_STALE_PPM
     from dist_mapreduce_spark.plans.iterative import (
         DIM as KDIM,
         N_ITER,
@@ -1697,7 +1571,6 @@ def q_dense_index_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two training runs on the trainer's sample + one
     statistics scan + a 64-row mean pull — strictly cheaper than the
     rebuild it gates, which is the point of a monitor."""
-    from dist_mapreduce_spark.plans.ann_index import staleness_decision_df
     from dist_mapreduce_spark.plans.similarity import (
         _frame_fingerprint,
         trained_quantizer,
@@ -1727,9 +1600,6 @@ def q_dense_index_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
     return staleness_decision_df(spark, cu, cent_frozen, cent_fresh, n2)
 
 
-_DENSE_RETRAINED_BUILT: dict[str, str] = {}
-
-
 def build_dense_retrained_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, list, int]:
@@ -1739,9 +1609,6 @@ def build_dense_retrained_index(
     EVERY chunk vector, rewrite the cell directories wholesale.
     Memoized per documents fingerprint (build_dense_index's
     convention)."""
-    import os
-
-    from dist_mapreduce_spark.plans.ann_index import _index_dir
     from dist_mapreduce_spark.plans.similarity import (
         assign_cells,
         trained_quantizer,
@@ -1754,20 +1621,14 @@ def build_dense_retrained_index(
     path = _index_dir("dense_index_retrained", sf_dir)
     if not cent_fresh:
         return path, cent_fresh, n2
-    fp = _docs_fingerprint(sf_dir)
-    if _DENSE_RETRAINED_BUILT.get(path) == fp and os.path.isdir(path):
-        return path, cent_fresh, n2
-    from dist_mapreduce_spark.plans.index_commit import write_index_base
-
     # Atomic publish (round-13): the fresh assignment lands as a new
     # generation; a crash mid-retrain leaves the old index current.
-    write_index_base(
-        assign_cells(spark, cu, cent_fresh).select(
-            "vec_id", "doc_id", "chunk_id", "embedding", "cell"
+    build_once(
+        path, sf_dir, "documents",
+        lambda: write_index_base(
+            assign_cells(spark, cu, cent_fresh).select(*_DENSE_COLS), path
         ),
-        path,
     )
-    _DENSE_RETRAINED_BUILT[path] = fp
     return path, cent_fresh, n2
 
 
@@ -1799,12 +1660,10 @@ def q_dense_index_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment scan (the GEMM stage — a retrain is exactly the
     full-corpus assignment it exists for), one partitioned write, one
     narrow read-back aggregate."""
-    from dist_mapreduce_spark.plans.index_commit import index_data_dir
-
     path, cent_fresh, _n2 = build_dense_retrained_index(spark, sf_dir)
     if not cent_fresh:
-        return spark.createDataFrame([], _DENSE_STATS_SCHEMA)
-    return _dense_cell_stats(spark.read.parquet(index_data_dir(path)))
+        return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
+    return _cell_audit(index_read(spark, path))
 
 
 def _dense_maintain_oracle() -> str:
@@ -1814,8 +1673,6 @@ def _dense_maintain_oracle() -> str:
     (keep arm: the frozen post-upsert assignment ucells = the upsert
     audit; retrain arm: the fresh chain's fcells = the retrain
     audit)."""
-    from dist_mapreduce_spark.plans.ann_index import RETRAIN_STALE_PPM
-
     base = _dense_staleness_oracle()
     marker = " SELECT n_vecs, wss_frozen_mean"
     idx = base.rindex(marker)
@@ -1824,7 +1681,7 @@ def _dense_maintain_oracle() -> str:
     stats = (
         "SELECT CAST(cell AS BIGINT) AS cell,"
         " CAST(count(*) AS BIGINT) AS n_vecs,"
-        f" CAST(sum(CAST(vec_id AS HUGEINT)) % {_DENSE_CHECKSUM_MOD}"
+        f" CAST(sum(CAST(vec_id AS HUGEINT)) % {CHECKSUM_MOD}"
         " AS BIGINT) AS id_sum,"
         " min(vec_id) AS min_id, max(vec_id) AS max_id,"
         " CAST(sum(CAST(len(embedding) AS BIGINT)) AS BIGINT) AS dim_sum,"
@@ -1857,7 +1714,7 @@ def q_dense_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture → keep; corpus-rewriting edit → retrain)."""
     dec_rows = q_dense_index_staleness(spark, sf_dir).collect()
     empty = spark.createDataFrame(
-        [], _DENSE_STATS_SCHEMA + ", decision string"
+        [], _EMPTY_AUDIT_SCHEMA + ", decision string"
     )
     if not dec_rows:
         return empty
@@ -1942,8 +1799,6 @@ def q_search_dense_maxp_retrained(
     )
     if not union_cells:
         return empty
-    from dist_mapreduce_spark.plans.index_commit import index_data_dir
-
     scan = spark.read.parquet(index_data_dir(path)).filter(
         F.col("cell").isin(union_cells)
     )

@@ -52,8 +52,10 @@ from dist_mapreduce_spark.functions.vectors import (
 )
 from dist_mapreduce_spark.plans.ann_index import (
     CHECKSUM_MOD,
-    _corpus_fingerprint,
+    _EMPTY_AUDIT_SCHEMA,
+    _cell_audit,
     _index_dir,
+    build_once,
 )
 from dist_mapreduce_spark.plans.iterative import (
     KMEANS_SCALE,
@@ -119,9 +121,6 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings")
 
 
-_BUILT: dict[str, str] = {}
-
-
 def build_trained_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str | None, list[list[int]]]:
@@ -133,23 +132,23 @@ def build_trained_index(
     if not centroids:
         return None, []
     path = _index_dir("trained_ivf", sf_dir)
-    key = _corpus_fingerprint(sf_dir)
-    if _BUILT.get(path) == key and os.path.isdir(path):
-        return path, centroids
-    cells = kmeans_assign_gemm(
-        kmeans_quantized(spark, sf_dir), centroids
-    ).select("vec_id", F.col("cluster").alias("cell"))
-    emb = _emb(spark, sf_dir).filter(F.col("embedding").isNotNull())
-    if os.path.isdir(path):
-        shutil.rmtree(path)
-    (
-        emb.join(cells, "vec_id")
-        .repartition("cell")
-        .write.partitionBy("cell")
-        .mode("overwrite")
-        .parquet(path)
-    )
-    _BUILT[path] = key
+
+    def build() -> None:
+        cells = kmeans_assign_gemm(
+            kmeans_quantized(spark, sf_dir), centroids
+        ).select("vec_id", F.col("cluster").alias("cell"))
+        emb = _emb(spark, sf_dir).filter(F.col("embedding").isNotNull())
+        if os.path.isdir(path):
+            shutil.rmtree(path)
+        (
+            emb.join(cells, "vec_id")
+            .repartition("cell")
+            .write.partitionBy("cell")
+            .mode("overwrite")
+            .parquet(path)
+        )
+
+    build_once(path, sf_dir, "embeddings", build)
     return path, centroids
 
 
@@ -182,22 +181,8 @@ def q_sim_index_build_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     write — training never becomes the bottleneck."""
     path, centroids = build_trained_index(spark, sf_dir)
     if path is None:
-        return spark.createDataFrame(
-            [],
-            "cell bigint, n_vecs bigint, id_sum bigint, min_id bigint,"
-            " max_id bigint, dim_sum bigint",
-        )
-    back = spark.read.parquet(path)
-    return back.groupBy(F.col("cell").cast("long").alias("cell")).agg(
-        F.count(F.lit(1)).alias("n_vecs"),
-        F.expr(
-            f"CAST(sum(CAST(vec_id AS DECIMAL(38,0))) % {CHECKSUM_MOD}"
-            f" AS BIGINT)"
-        ).alias("id_sum"),
-        F.min("vec_id").alias("min_id"),
-        F.max("vec_id").alias("max_id"),
-        F.sum(F.size("embedding").cast("long")).alias("dim_sum"),
-    )
+        return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
+    return _cell_audit(spark.read.parquet(path))
 
 
 def _py_quantize(vec: list[float]) -> list[int]:
@@ -417,7 +402,7 @@ def q_sim_cand_stats_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Sampled candidates: the sim_cand_stats IVF definition verbatim.
     cent_rows = ivf_cent_rows(emb)
     scand = (
-        assign_cells(spark, emb, cent_rows)
+        assign_cells(spark, emb.select("vec_id", "embedding"), cent_rows)
         .join(
             F.broadcast(
                 ivf_probes_df(emb, cent_rows).select("query_id", "pcell")

@@ -386,6 +386,39 @@ def test_build_memo_detects_in_process_corpus_rewrite(spark, tmp_path):
     assert (n1, n2) == (120, 80)
 
 
+def test_trained_memo_evicts_least_recently_used(spark, monkeypatch):
+    """similarity._TRAINED_MEMO is bounded: past _TRAINED_MEMO_CAP
+    distinct corpora the least recently USED entry is evicted (a hit
+    refreshes recency), so a loop over fresh snapshots cannot grow it
+    without bound — and an evicted corpus retrains on its next call."""
+    from collections import OrderedDict
+
+    from dist_mapreduce_spark.plans import similarity as S
+
+    monkeypatch.setattr(S, "_TRAINED_MEMO", OrderedDict())
+    monkeypatch.setattr(S, "_TRAINED_MEMO_CAP", 2)
+    trained = []
+    real = S.train_kmeans_centroids_df
+
+    def counting(q, k):
+        trained.append(k)
+        return real(q, k)
+
+    monkeypatch.setattr(S, "train_kmeans_centroids_df", counting)
+    emb = spark.read.parquet(SF + "/embeddings.parquet")
+    a, b, c = (emb.filter(F.col("vec_id") < n) for n in (100, 200, 300))
+    first_a = S.trained_quantizer(a)
+    S.trained_quantizer(b)
+    assert S.trained_quantizer(a) == first_a and len(trained) == 2
+    S.trained_quantizer(c)  # evicts b, the least recently used
+    assert len(S._TRAINED_MEMO) == 2 and len(trained) == 3
+    S.trained_quantizer(a)
+    assert len(trained) == 3, "a was used after b: it must still be memoized"
+    S.trained_quantizer(b)
+    assert len(trained) == 4, "the evicted corpus must retrain"
+    assert len(S._TRAINED_MEMO) == 2
+
+
 def test_filtered_scan_pushes_label_predicate(spark):
     """sim_topk_filtered_ivf's scan must carry BOTH pruning layers in
     one executed scan: the probed-cell IN-list as PartitionFilters
@@ -425,11 +458,17 @@ def test_compact_rewrites_hot_cells_only(spark, tmp_path):
     """sim_index_compact's physical contract (the gate oracle pins only
     content invariance): a compacted cell ends at ONE parquet fragment;
     cells at/below the threshold are never read and never rewritten —
-    their files stay byte-identical (names, sizes, mtimes); and a
-    second pass below threshold is a no-op."""
+    their files stay byte-identical (names, sizes, mtimes: the commit
+    carries them over by hardlink); and a second pass below threshold
+    is a no-op."""
     from dist_mapreduce_spark.plans.ann_index import (
         _cell_fragments,
         compact_index_cells,
+    )
+    from dist_mapreduce_spark.plans.index_commit import (
+        index_data_dir,
+        index_read,
+        write_index_base,
     )
     from dist_mapreduce_spark.plans.similarity import (
         assign_cells,
@@ -447,7 +486,6 @@ def test_compact_rewrites_hot_cells_only(spark, tmp_path):
         .repartition(1)
         .cache()
     )
-    cells.write.mode("overwrite").partitionBy("cell").parquet(path)
     hot = int(
         cells.groupBy("cell")
         .count()
@@ -455,8 +493,12 @@ def test_compact_rewrites_hot_cells_only(spark, tmp_path):
         .first()["cell"]
     )
     hot_rows = cells.filter(F.col("cell") == hot).repartition(1)
-    for _ in range(3):
-        hot_rows.write.mode("append").partitionBy("cell").parquet(path)
+
+    def fragment(gen_dir):
+        for _ in range(3):
+            hot_rows.write.mode("append").partitionBy("cell").parquet(gen_dir)
+
+    write_index_base(cells, path, extra_writes=fragment)
     cells.unpersist()
     before = _cell_fragments(path)
     assert before[hot] == 4
@@ -464,7 +506,7 @@ def test_compact_rewrites_hot_cells_only(spark, tmp_path):
     assert cool and all(before[c] == 1 for c in cool)
 
     def snap(cell):
-        d = os.path.join(path, f"cell={cell}")
+        d = os.path.join(index_data_dir(path), f"cell={cell}")
         return sorted(
             (f, os.stat(os.path.join(d, f)).st_size,
              os.stat(os.path.join(d, f)).st_mtime_ns)
@@ -472,16 +514,71 @@ def test_compact_rewrites_hot_cells_only(spark, tmp_path):
         )
 
     cool_snaps = {c: snap(c) for c in cool}
-    n_before = spark.read.parquet(path).count()
-    sum_before = spark.read.parquet(path).agg(F.sum("vec_id")).first()[0]
+    n_before = index_read(spark, path).count()
+    sum_before = index_read(spark, path).agg(F.sum("vec_id")).first()[0]
     assert compact_index_cells(spark, path, min_files=3) == [hot]
     after = _cell_fragments(path)
     assert after[hot] == 1
     assert {c: snap(c) for c in cool} == cool_snaps
-    back = spark.read.parquet(path)
+    back = index_read(spark, path)
     assert back.count() == n_before
     assert back.agg(F.sum("vec_id")).first()[0] == sum_before
     assert compact_index_cells(spark, path, min_files=3) == []
+
+
+def test_compact_file_manifest_root(spark, tmp_path):
+    """Compaction on a file_manifest root: the fragment census reads
+    the manifest's per-cell file lists (the generation dirs hold
+    `__part_cell=` dirs, which a directory listing does not count),
+    and rewrite_cells stages in the root's recorded mode — the hot
+    cell ends at one file, the content is unchanged and the root
+    stays in file_manifest mode."""
+    from dist_mapreduce_spark.plans.ann_index import (
+        _cell_fragments,
+        compact_index_cells,
+    )
+    from dist_mapreduce_spark.plans.index_commit import (
+        index_read,
+        read_manifest,
+        write_index_base,
+    )
+    from dist_mapreduce_spark.plans.similarity import (
+        assign_cells,
+        ivf_cent_rows,
+    )
+
+    emb = spark.read.parquet(SF + "/embeddings.parquet")
+    cent_rows = ivf_cent_rows(emb)
+    cells = (
+        assign_cells(spark, emb.select("vec_id", "embedding"), cent_rows)
+        .repartition(1)
+        .cache()
+    )
+    hot = int(cells.groupBy("cell").count().orderBy(F.desc("count")).first()[0])
+    hot_rows = cells.filter(F.col("cell") == hot).repartition(1)
+
+    def fragment(gen_dir):
+        # The file_manifest layout: `cell` stays a data column, the
+        # partition dir is its `__part_cell` mirror.
+        for _ in range(3):
+            hot_rows.withColumn("__part_cell", F.col("cell")).write.mode(
+                "append"
+            ).partitionBy("__part_cell").parquet(gen_dir)
+
+    path = str(tmp_path / "fm")
+    write_index_base(cells, path, extra_writes=fragment, mode="file_manifest")
+
+    def content():
+        rows = index_read(spark, path).select("vec_id", "cell").collect()
+        return sorted(tuple(r) for r in rows)
+
+    before = content()
+    cells.unpersist()
+    assert _cell_fragments(path)[hot] == 4
+    assert compact_index_cells(spark, path, min_files=3) == [hot]
+    assert _cell_fragments(path)[hot] == 1
+    assert read_manifest(path)["mode"] == "file_manifest"
+    assert content() == before
 
 
 def test_lifecycle_oracle_match_with_null_embeddings_in_batch(spark, tmp_path):

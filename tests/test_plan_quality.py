@@ -70,6 +70,22 @@ def test_ivf_plan_shape(spark):
     assert info["shuffles"] <= 3, info
     assert len(info["scan_cols"]) <= 2, info
     assert info["python_stages"] == 2, info
+    # Columns are projected before assignment: `label` is never
+    # scanned, shuffled or Arrow-serialized.
+    assert not any("label" in s for s in info["scan_cols"]), info
+
+
+@pytest.mark.parametrize(
+    "name, max_shuffles", [("dedup_semantic", 4), ("knn_clustered", 10)]
+)
+def test_self_joined_cells_assigned_once(spark, name, max_shuffles):
+    """A cell frame self-joined on cell is assigned ONCE before the
+    join: the GEMM stage never runs per join side (an aliased lazy
+    frame prints one mapInPandas under each side), and knn_clustered
+    spreads its corpus with assign_cells' repartition only."""
+    info = _audit(spark, name)
+    assert info["python_stages"] <= 1, info
+    assert info["shuffles"] <= max_shuffles, info
 
 
 def test_dedup_minhash_no_cartesian_no_python(spark):

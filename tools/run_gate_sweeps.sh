@@ -10,7 +10,7 @@ OUT=${2:-docs/gate}
 mkdir -p "$OUT"
 pids=()
 for SF in sf0.01 sf0.1 sf0.001; do
-  SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} \
+  SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)} \
     python tools/check_correctness.py "$DATA/$SF" \
     > "$OUT/${SF}.log" 2>"$OUT/${SF}.err" &
   pids+=($!)
