@@ -53,7 +53,6 @@ from dist_mapreduce_spark.plans.index_commit import (
     index_data_dir,
     index_read,
     index_snapshot,
-    read_manifest,
     rewrite_cells,
     write_index_base,
 )
@@ -1611,9 +1610,7 @@ def q_sim_serve_retrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not union_cells:
         return empty
-    scan = spark.read.parquet(index_data_dir(path)).filter(
-        F.col("cell").isin(union_cells)
-    )
+    scan = index_read(spark, path, union_cells)
     sc = (
         scan.join(
             F.broadcast(probes),
@@ -1727,17 +1724,9 @@ COMPACT_MIN_FILES = 2
 
 def _cell_fragments(path: str) -> dict[int, int]:
     """cell id -> parquet fragment count, from a directory listing (the
-    metadata-only sweep a table format's manifest gives for free) — or,
-    on a file_manifest root, from the manifest's per-cell file lists.
+    metadata-only sweep a table format's manifest gives for free).
     Accepts either an index ROOT (manifest-resolved to the committed
     generation) or a flat cell-directory layout."""
-    man = read_manifest(path) or {}
-    if man.get("mode") == "file_manifest":
-        return {
-            int(k.split("=", 1)[1]): len(v)
-            for k, v in sorted(man["files"].items())
-            if k.startswith("cell=")
-        }
     path = index_data_dir(path)
     out: dict[int, int] = {}
     for d in sorted(os.listdir(path)):
@@ -1808,26 +1797,14 @@ def q_sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells_all.cache()
     try:
-        # Base batch + every micro-batch append stage into the SAME
-        # uncommitted generation (extra_writes runs before the
-        # manifest flip) — fragmenting the cells exactly as an
+        # Base batch + every micro-batch append land in the SAME
+        # uncommitted generation — fragmenting the cells exactly as an
         # append-heavy ingest would, while the publication stays one
         # atomic unit (a crash mid-fragmentation leaves no partial
         # index committed; round-13 advice).
-        def _fragment(gen_dir: str) -> None:
-            for b in range(1, mod):
-                (
-                    cells_all.filter(F.col("b") == b)
-                    .drop("b")
-                    .write.mode("append")
-                    .partitionBy("cell")
-                    .parquet(gen_dir)
-                )
-
         write_index_base(
-            cells_all.filter(F.col("b") == 0).drop("b"),
+            [cells_all.filter(F.col("b") == b).drop("b") for b in range(mod)],
             path,
-            extra_writes=_fragment,
         )
     finally:
         cells_all.unpersist()
@@ -2529,21 +2506,23 @@ def q_stream_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") <= TOP_K)
         )
-        (
-            topk.withColumn("serve_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("serve_batch")
-            .parquet(out)
-        )
-        # Round-11 audit: record what THIS batch's serving plan does
+        # Round-11 audit: record what THIS batch's serving write ran
         # (the streaming wrapper's explain stops at the foreachBatch
         # boundary) — the pytest pin reads PartitionFilters off it.
         from dist_mapreduce_spark.streaming.windows import (
             capture_batch_plan,
         )
 
-        capture_batch_plan(topk, f"stream_serve_topk:batch{batch_id}")
+        with capture_batch_plan(
+            spark, f"stream_serve_topk:batch{batch_id}"
+        ):
+            (
+                topk.withColumn("serve_batch", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("serve_batch")
+                .parquet(out)
+            )
 
     q = (
         spark.readStream.schema(queries_df.schema)
@@ -3528,41 +3507,7 @@ def q_sim_topk_ivfpq_res_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------- file-manifest publication value row (round 14, #7)
-
-
-@query("sim_index_delete_fm", oracle=ORACLES["sim_index_delete"])
-def q_sim_index_delete_fm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The lifecycle DELETE published through the OBJECT-STORE commit
-    mode (``mode="file_manifest"`` — plans/index_commit.py, round 14),
-    held to the SAME value bar as the POSIX path: the oracle is
-    sim_index_delete's VERBATIM, so a PASS proves the file-list
-    protocol (partition columns as data columns, untouched cells
-    carried by manifest RE-LISTING with zero data movement, reads off
-    the pruned explicit file list via index_read) is content-exact to
-    the id-checksum level — the verbatim-oracle certification pattern
-    of the index lifecycle, applied to the publication layer.
-    Kill-mid-swap in this mode is pinned separately in
-    tests/test_index_commit.py.
-
-    Scale shape: identical to sim_index_delete (tombstone assignment
-    is a pure map over the ~1% batch; the rewrite reads only affected
-    cells — here selected by the manifest's file-list filter, the
-    Iceberg form of PartitionFilters — and the publish moves only the
-    rewritten cells' files)."""
-    emb = _emb(spark, sf_dir)
-    cent_rows, _n_corpus = trained_quantizer(emb)
-    path = _index_dir("ivf_index_del_fm", sf_dir)
-    if not cent_rows:
-        return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
-    write_index_base(
-        _index_rows(spark, emb, cent_rows), path, mode="file_manifest"
-    )
-    _tombstone_delete(spark, emb, cent_rows, path)
-    return _cell_audit(index_read(spark, path))
-
-
-# -------- pinned reader snapshots + mode migration (round 15)
+# -------------------------- pinned reader snapshots (round 15)
 
 
 @query("sim_index_snapshot", oracle=ORACLES["sim_index_build"])
@@ -3606,35 +3551,3 @@ def q_sim_index_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one-cycle grace; only the pin protects it.
     write_index_base(index_read(spark, path), path)
     return _cell_audit(snap.read(spark))
-
-
-@query("sim_index_migrate", oracle=ORACLES["sim_index_delete"])
-def q_sim_index_migrate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Commit-mode MIGRATION (round-14 advice: a full rebuild with an
-    explicit mode argument is the legitimate migration point and must
-    honor stated intent): build the index in POSIX hardlink mode, then
-    migrate it to the object-store ``file_manifest`` mode with one
-    explicit full rebuild, then run the tombstone delete THROUGH the
-    migrated root (rewrite_cells stages and commits in the recorded
-    file-manifest protocol: survivors' files moved in, untouched cells
-    carried by manifest re-listing). The oracle is sim_index_delete's
-    VERBATIM, so a PASS value-certifies the whole migration chain —
-    the explicit-mode rebuild, the file-list publication, and the
-    schema-parity read — to the id-checksum level.
-
-    Scale shape: the migration rebuild is the one full-copy step (a
-    deployment moving 100 TB to an object store pays one write
-    either way); everything after is the normal incremental lifecycle
-    with manifest-level pruning in place of PartitionFilters."""
-    emb = _emb(spark, sf_dir)
-    cent_rows, _n_corpus = trained_quantizer(emb)
-    path = _index_dir("ivf_index_mig", sf_dir)
-    if not cent_rows:
-        return spark.createDataFrame([], _EMPTY_AUDIT_SCHEMA)
-    cells = _index_rows(spark, emb, cent_rows)
-    write_index_base(cells, path, mode="hardlink")
-    # The migration: same content, explicit new mode, one rebuild.
-    write_index_base(cells, path, mode="file_manifest")
-    assert read_manifest(path).get("mode") == "file_manifest"
-    _tombstone_delete(spark, emb, cent_rows, path)
-    return _cell_audit(index_read(spark, path))

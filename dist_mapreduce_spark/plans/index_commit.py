@@ -45,8 +45,8 @@ Protocol (commit_cell_swap):
    index_data_dir just before the flip finishes its scan on intact
    files; older generations and abandoned scratch are swept.
 
-Readers call index_data_dir(root) and read the resolved ``gen-N``
-directory exactly as they read the flat layout before — same hive
+Readers call index_read(spark, root, cells), which scans the resolved
+``gen-N`` directory exactly as the flat layout was read before — same hive
 ``cell=`` partitioning, same PartitionFilters pruning, one extra path
 component. Roots without a manifest resolve to themselves (legacy
 flat layout), so mixed deployments keep working; a root whose
@@ -57,16 +57,11 @@ advice: never rmtree a root you cannot prove is fresh).
 
 At 100 TB: the manifest flip is O(1) regardless of index size; the
 hardlink carry-over is O(#files) metadata operations (never bytes),
-which is what compaction keeps bounded; on an object store the same
-protocol runs in ``mode="file_manifest"`` (round 14 — no longer a
-docstring promise): the manifest carries per-cell FILE LISTS, partial
-rewrites carry untouched cells by re-listing their existing paths
-(zero data movement, zero per-file ops), readers consume the pruned
-explicit file list via index_read, and the flip stays the single
-atomic publish either way. Kill-mid-swap is pinned in BOTH modes.
-Partial rewrites go through rewrite_cells, which reads, stages and
-publishes in the mode the root's manifest records — no caller picks a
-reader or a stage layout.
+which is what compaction keeps bounded. Partial rewrites go through
+rewrite_cells, which reads, stages and publishes in the one layout —
+no caller picks a reader or a stage layout. Every file operation here
+is POSIX; the lease and the flip are the two primitives a non-POSIX
+store would replace (set_commit_backend).
 """
 
 from __future__ import annotations
@@ -87,8 +82,7 @@ MANIFEST_NAME = "_MANIFEST.json"  # leading "_": ignored by Spark scans
 LOCK_NAME = "_COMMIT.lock"
 
 #: A crashed writer's abandoned lease is taken over after this many
-#: seconds (override: SPARK_GRAFT_COMMIT_LEASE_TTL). Commits here are
-#: seconds-long; 15 min is conservative.
+#: seconds. Commits here are seconds-long; 15 min is conservative.
 LEASE_TTL_SEC = 900.0
 
 
@@ -104,13 +98,6 @@ class ConcurrentCommitError(RuntimeError):
     writer lease (or flipped the manifest mid-commit). The commit
     protocol is single-writer; the loser raises instead of silently
     discarding the winner's generation."""
-
-
-def _lease_ttl() -> float:
-    try:
-        return float(os.environ.get("SPARK_GRAFT_COMMIT_LEASE_TTL", ""))
-    except ValueError:
-        return LEASE_TTL_SEC
 
 
 def _try_stale_takeover(lock: str) -> None:
@@ -145,7 +132,7 @@ def _try_stale_takeover(lock: str) -> None:
     try:
         st = os.fstat(hfd)
         age = time.time() - st.st_mtime
-        if age <= _lease_ttl():
+        if age <= LEASE_TTL_SEC:
             raise ConcurrentCommitError(
                 f"commit_lease: {lock} is held by a live commit"
                 f" ({age:.0f}s old); concurrent lifecycle ops on one"
@@ -206,11 +193,10 @@ class PosixCommitBackend:
       raising ConcurrentCommitError on precondition failure — the
       generation-CAS, done by the store instead of read-check-replace.
 
-    Everything above these two calls (generation layout, carry-over,
-    watermark, GC, ``mode="file_manifest"`` file listing) is already
-    object-store-shaped, so the backend is the ONLY porting surface
-    (round-14 verdict item: a documented pluggable lease/flip
-    abstraction)."""
+    These two calls are the seam such a backend plugs into (round-14
+    verdict item: a documented pluggable lease/flip abstraction); the
+    generation layout above them still assumes POSIX rename and
+    hardlink."""
 
     @contextlib.contextmanager
     def lease(self, root: str):
@@ -371,39 +357,16 @@ def _flip_manifest(
     get_commit_backend().flip(root, man, expect)
 
 
-def _manifest_dirs(man: dict | None) -> set[str]:
-    """Every top-level dir a manifest references: its generation dir,
-    plus (file_manifest mode) the dir of every listed file — cell file
-    lists (``files``) AND LSM carried-run file lists (``runs``) — the
-    set a reader resolving THAT manifest may be scanning."""
-    if man is None:
-        return set()
-    out = {f"gen-{int(man['gen'])}"}
-    if man.get("mode") == "file_manifest":
-        for key in ("files", "runs"):
-            out |= {
-                p.split(os.sep, 1)[0]
-                for ps in man.get(key, {}).values()
-                for p in ps
-            }
-    return out
-
-
-def _gc_generations(
-    root: str, keep: int, grace: int | None = None, grace_dirs=()
-) -> None:
+def _gc_generations(root: str, keep: int, grace: int | None = None) -> None:
     """Drop every generation dir (and abandoned scratch) the manifest
     no longer references — EXCEPT ``gen-<grace>``, the generation the
     current flip just dereferenced (it survives one commit cycle so a
     reader that resolved index_data_dir just before the flip finishes
-    its scan on intact files — round-13 advice); EXCEPT any dir in
-    ``grace_dirs`` (round 15: a file_manifest manifest can reference
-    files across MANY generation dirs, so the outgoing manifest's
-    whole referenced set gets the one-cycle grace — e.g. across an
-    explicit mode migration); and EXCEPT any generation a live reader
-    PIN references (index_snapshot — grace defined against pinned
-    readers, not just one blind cycle). Best-effort: a failure here
-    never affects correctness — unreferenced dirs are invisible."""
+    its scan on intact files — round-13 advice), and EXCEPT any
+    generation a live reader PIN references (index_snapshot — grace
+    defined against pinned readers, not just one blind cycle).
+    Best-effort: a failure here never affects correctness —
+    unreferenced dirs are invisible."""
     pinned = _live_pinned_dirs(root)
     for d in os.listdir(root):
         full = os.path.join(root, d)
@@ -411,226 +374,57 @@ def _gc_generations(
             continue
         if d == f"gen-{keep}" or (grace is not None and d == f"gen-{grace}"):
             continue
-        if d in pinned or d in grace_dirs:
+        if d in pinned:
             continue
         if d.startswith("gen-") or d.startswith(".gen-"):
             shutil.rmtree(full, ignore_errors=True)
 
 
-# ---------------- object-store commit mode (round 14, verdict item #7)
-#
-# The hardlink carry-over assumes a POSIX filesystem (rename + ln).
-# On an object store neither exists; the table-format answer (Iceberg/
-# Delta) is to never move data at all: data files are immutable blobs,
-# and the manifest lists the CURRENT FILE SET — carry-over is manifest
-# re-listing, pruning is manifest-level file filtering (not directory
-# listing). ``mode="file_manifest"`` is that protocol behind the same
-# API:
-#
-# - the physical write keeps each partition column AS A DATA COLUMN
-#   (the hive dir name becomes __part_<col>=v, reader-irrelevant),
-#   because readers consume an explicit file list, where hive
-#   path-inference does not apply;
-# - the manifest carries {"mode": "file_manifest", "files":
-#   {"cell=3": [relpaths...]}}; commit_cell_swap REPLACES the affected
-#   keys with the stage's files (moved into the new generation dir)
-#   and RE-LISTS the untouched keys' existing paths verbatim — zero
-#   data movement and zero per-file metadata ops for untouched cells;
-# - readers call index_read(spark, root, cells=...) — pruning is the
-#   manifest-side file-list filter, the Iceberg shape of
-#   PartitionFilters;
-# - GC deletes only generation dirs no referenced file lives in
-#   (plus the usual one-cycle grace).
-#
-# The ONE atomic step is the same manifest flip in both modes.
-
-#: Resolution order for the commit mode: explicit argument, then this
-#: env var, then "hardlink" (the POSIX default). A root that was
-#: committed in file_manifest mode STAYS in it — the recorded manifest
-#: mode wins over both.
-COMMIT_MODE_ENV = "SPARK_GRAFT_COMMIT_MODE"
-_PART_PREFIX = "__part_"
+def write_stage(frames, dest: str, partition_cols=("cell",)) -> None:
+    """Write a staged rewrite or a whole generation to ``dest``:
+    ``frames`` is one DataFrame, or a list of them — the first
+    overwrites ``dest`` and each later one is appended by the same
+    partitioned writer (a base plus its appended batches)."""
+    if not isinstance(frames, (list, tuple)):
+        frames = [frames]
+    for i, df in enumerate(frames):
+        writer = df.write.mode("append" if i else "overwrite")
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.parquet(dest)
 
 
-def _resolve_mode(root: str, explicit: str | None) -> str:
-    """Commit mode for a FULL REBUILD of ``root`` (the only caller is
-    write_index_base): an explicit argument wins — a full rebuild is
-    the one legitimate mode-migration point, and silently overriding
-    the caller's stated intent with the recorded mode was a round-14
-    advice item — then the recorded manifest mode (partial rewrites
-    always inherit it), then the env default for fresh roots."""
-    if explicit is not None and explicit not in (
-        "hardlink",
-        "file_manifest",
-    ):
-        raise ValueError(
-            f"_resolve_mode: unknown commit mode {explicit!r}"
-            " (expected 'hardlink' or 'file_manifest')"
-        )
-    if explicit:
-        return explicit
-    man = read_manifest(root)
-    if man and man.get("mode") == "file_manifest":
-        return "file_manifest"
-    if man is not None:
-        return "hardlink"
-    return os.environ.get(COMMIT_MODE_ENV, "hardlink")
-
-
-def write_stage(df, dest: str, partition_cols=("cell",), mode="hardlink"):
-    """Write a staged rewrite (or a base generation) in the layout the
-    chosen commit mode expects. file_manifest mode mirrors every
-    partition column into the data (hive path inference does not apply
-    to explicit file lists)."""
-    if mode == "file_manifest" and partition_cols:
-        from pyspark.sql import functions as F
-
-        out = df
-        mirrors = []
-        for c in partition_cols:
-            m = _PART_PREFIX + c
-            out = out.withColumn(m, F.col(c))
-            mirrors.append(m)
-        out.write.mode("overwrite").partitionBy(*mirrors).parquet(dest)
-        return
-    writer = df.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(dest)
-
-
-def _collect_files(root: str, gen_dir: str) -> dict[str, list[str]]:
-    """{partition key ("cell=3", or "" when unpartitioned): [paths
-    relative to root]} for every parquet file under ``gen_dir``.
-    ``__part_<col>=v`` dirs normalize to ``<col>=v`` keys, so staged
-    file-mode layouts and plain hive layouts list identically."""
-    out: dict[str, list[str]] = {}
-
-    def walk(d: str, key: str) -> None:
-        for name in sorted(os.listdir(d)):
-            full = os.path.join(d, name)
-            if os.path.isdir(full):
-                seg = name
-                if seg.startswith(_PART_PREFIX):
-                    seg = seg[len(_PART_PREFIX):]
-                walk(full, seg if "=" in seg else key)
-            elif name.endswith(".parquet"):
-                out.setdefault(key, []).append(
-                    os.path.relpath(full, root)
-                )
-
-    walk(gen_dir, "")
-    return out
-
-
-def _files_from_man(root: str, man: dict, cells=None) -> list[str]:
-    """File list of a file_manifest MANIFEST dict (absolute paths),
-    optionally pruned to ``cells`` — shared by the live reader
-    (index_files) and pinned snapshots so the pruning logic cannot
-    diverge between them."""
-    fm = man["files"]
-    if cells is None:
-        keys = sorted(fm)
-    else:
-        keys = [k for c in cells if (k := f"cell={int(c)}") in fm]
-    return [os.path.join(root, p) for k in keys for p in fm[k]]
-
-
-def _read_from_man(spark, root: str, man, data_dir: str, cells=None):
-    """Mode-dispatching read against a RESOLVED manifest + data dir —
-    the one implementation behind index_read (live) and
-    IndexSnapshot.read (pinned): explicit pruned file list with the
-    __part_* discovery columns dropped in file_manifest mode, the
-    generation directory with a hive cell filter otherwise."""
+def _read_cells(spark, data_dir: str, cells=None):
+    """Read a RESOLVED data dir, pruned to ``cells`` by the hive
+    partition filter — the one implementation behind index_read (live)
+    and IndexSnapshot.read (pinned)."""
     from pyspark.sql import functions as F
 
-    if man and man.get("mode") == "file_manifest":
-        files = _files_from_man(root, man, cells)
-        if not files:
-            raise ValueError(
-                f"index read: no committed files in {root} match"
-                f" cells={cells!r} — the manifest's pruning filter"
-                " removed everything (a pyspark read of zero paths"
-                " would fail with an unrelated error)"
-            )
-        df = spark.read.parquet(*files)
-        # Partition discovery infers the internal __part_<col>=v dir
-        # segments as extra columns on explicit file lists; drop them
-        # so both modes return the SAME schema (the real column is a
-        # data column in file_manifest layouts) — round-14 advice.
-        mirrors = [c for c in df.columns if c.startswith(_PART_PREFIX)]
-        return df.drop(*mirrors) if mirrors else df
     df = spark.read.parquet(data_dir)
     if cells is not None:
         df = df.filter(F.col("cell").isin([int(c) for c in cells]))
     return df
 
 
-def index_files(root: str, cells=None) -> list[str]:
-    """The committed file list of a file_manifest root (absolute
-    paths), optionally pruned to ``cells`` — the manifest-level
-    pruning an object-store deployment uses in place of directory
-    PartitionFilters."""
-    man = read_manifest(root) or {}
-    if man.get("mode") != "file_manifest":
-        raise ValueError(f"index_files: {root} is not file_manifest-rooted")
-    return _files_from_man(root, man, cells)
-
-
 def index_read(spark, root: str, cells=None):
-    """Mode-dispatching reader: file_manifest roots read their pruned
-    explicit file list (partition columns are data columns there);
-    hardlink/legacy roots read the resolved generation directory (the
-    caller filters on the hive partition column as before)."""
-    return _read_from_man(
-        spark, root, read_manifest(root), index_data_dir(root), cells
-    )
+    """The committed rows of ``root`` — its manifest's generation dir,
+    or the root itself for a legacy flat layout — optionally pruned to
+    ``cells`` (a literal IN-list PartitionFilter on the scan)."""
+    return _read_cells(spark, index_data_dir(root), cells)
 
 
-def _gc_file_generations(
-    root: str,
-    files: dict[str, list[str]],
-    keep: int,
-    grace: int | None,
-    grace_dirs=(),
-) -> None:
-    """file_manifest GC: a generation dir survives iff a referenced
-    file lives in it, plus the keep/grace dirs, any dir a live reader
-    pin references, and any dir the OUTGOING manifest referenced
-    (``grace_dirs`` — round 15: the one-cycle reader grace must cover
-    every dir the just-dereferenced file list touched, not only
-    gen-<cur>); everything else (including abandoned scratch) is
-    swept."""
-    referenced = {p.split(os.sep, 1)[0] for ps in files.values() for p in ps}
-    referenced |= _live_pinned_dirs(root)
-    referenced |= set(grace_dirs)
-    for d in os.listdir(root):
-        full = os.path.join(root, d)
-        if not os.path.isdir(full):
-            continue
-        if d in referenced or d == f"gen-{keep}":
-            continue
-        if grace is not None and d == f"gen-{grace}":
-            continue
-        if d.startswith("gen-") or d.startswith(".gen-"):
-            shutil.rmtree(full, ignore_errors=True)
-
-
-def write_index_base(
-    df, root: str, partition_cols=("cell",), extra_writes=None,
-    mode: str | None = None,
-) -> str:
-    """Publish ``df`` as a complete new generation of ``root`` (the
-    full build / full retrain path). The Spark write lands in a hidden
-    scratch dir, ``extra_writes(scratch)`` (if given) appends
-    follow-up batches INTO THE SAME UNCOMMITTED generation — so
-    base + appends publish as one atomic unit (round-13 advice: the
-    incremental-append paths used to append after the flip, exposing
-    a base-only index as committed) — then the scratch renames to the
-    generation dir and the manifest flips. A crash anywhere before the
-    flip leaves the previous generation (or the legacy flat layout —
-    which is now cleared only AFTER its replacement is committed)
-    untouched and current. Returns the new data dir."""
+def write_index_base(frames, root: str, partition_cols=("cell",)) -> str:
+    """Publish ``frames`` as a complete new generation of ``root`` (the
+    full build / full retrain path). ``frames`` is one DataFrame, or a
+    list: the base, then the batches appended to it. write_stage lands
+    them all in ONE hidden scratch dir — so base + appends publish as
+    one atomic unit (round-13 advice: the incremental-append paths
+    used to append after the flip, exposing a base-only index as
+    committed) — then the scratch renames to the generation dir and
+    the manifest flips. A crash anywhere before the flip leaves the
+    previous generation (or the legacy flat layout — which is now
+    cleared only AFTER its replacement is committed) untouched and
+    current. Returns the new data dir."""
     cur = current_generation(root)  # raises on corrupt manifest
     with commit_lease(root):
         cur = current_generation(root)  # re-read under the lease
@@ -645,33 +439,19 @@ def write_index_base(
             legacy_migration = True
             os.makedirs(root, exist_ok=True)
             cur = 0
-        # Every dir the OUTGOING manifest references gets the
-        # one-cycle reader grace — across a file_manifest root (or an
-        # explicit mode migration) that set spans many generations,
-        # not just gen-<cur> (round 15).
-        outgoing = _manifest_dirs(read_manifest(root))
-        mode = _resolve_mode(root, mode)
         new = cur + 1
         gen_dir = os.path.join(root, f"gen-{new}")
         scratch = os.path.join(root, f".gen-{new}.tmp")
         shutil.rmtree(scratch, ignore_errors=True)
-        write_stage(df, scratch, partition_cols, mode)
-        if extra_writes is not None:
-            extra_writes(scratch)
+        write_stage(frames, scratch, partition_cols)
         # A prior attempt that crashed between THIS rename and the
         # flip left gen-<new> orphaned (unreferenced — the manifest
         # still names gen-<cur>, and we hold the lease); clear it or
         # the rename wedges on ENOTEMPTY forever (round-15).
         shutil.rmtree(gen_dir, ignore_errors=True)
         os.rename(scratch, gen_dir)
-        extra = None
-        if mode == "file_manifest":
-            extra = {
-                "mode": "file_manifest",
-                "files": _collect_files(root, gen_dir),
-            }
         _flip_manifest(
-            root, new, extra, expect=cur if not legacy_migration else None
+            root, new, expect=cur if not legacy_migration else None
         )
         if legacy_migration:
             # The replacement is committed; NOW the flat-layout
@@ -688,21 +468,7 @@ def write_index_base(
                 else:
                     with contextlib.suppress(FileNotFoundError):
                         os.unlink(full)
-        if mode == "file_manifest":
-            _gc_file_generations(
-                root,
-                extra["files"],
-                keep=new,
-                grace=cur if cur >= 1 else None,
-                grace_dirs=outgoing,
-            )
-        else:
-            _gc_generations(
-                root,
-                keep=new,
-                grace=cur if cur >= 1 else None,
-                grace_dirs=outgoing,
-            )
+        _gc_generations(root, keep=new, grace=cur if cur >= 1 else None)
     return gen_dir
 
 
@@ -751,30 +517,22 @@ def commit_cell_swap(
                 " base index with write_index_base first"
             )
         cur = int(man["gen"])
-        file_mode = man.get("mode") == "file_manifest"
         src_dir = os.path.join(root, f"gen-{cur}")
         new = cur + 1
         scratch = os.path.join(root, f".gen-{new}.tmp")
         shutil.rmtree(scratch, ignore_errors=True)
         os.makedirs(scratch)
         affected = {f"cell={int(c)}" for c in affected_cells}
-        if not file_mode:
-            # POSIX carry-over: hardlink the untouched cells into the
-            # next generation. file_manifest mode skips this entirely —
-            # untouched cells are carried by RE-LISTING their existing
-            # paths in the manifest (zero data movement, the Iceberg
-            # shape).
-            for d in os.listdir(src_dir):
-                if d.startswith("cell=") and d not in affected:
-                    _link_tree(
-                        os.path.join(src_dir, d), os.path.join(scratch, d)
-                    )
+        # Carry-over: hardlink the untouched cells into the next
+        # generation.
+        for d in os.listdir(src_dir):
+            if d.startswith("cell=") and d not in affected:
+                _link_tree(os.path.join(src_dir, d), os.path.join(scratch, d))
         moves = 0
         for c in sorted(int(c) for c in affected_cells):
-            for stage_dir in (f"cell={c}", f"{_PART_PREFIX}cell={c}"):
-                s = os.path.join(stage, stage_dir)
-                if os.path.isdir(s):
-                    shutil.move(s, os.path.join(scratch, stage_dir))
+            s = os.path.join(stage, f"cell={c}")
+            if os.path.isdir(s):
+                shutil.move(s, os.path.join(scratch, f"cell={c}"))
             moves += 1
             if _fail_after_moves is not None and moves >= _fail_after_moves:
                 raise RuntimeError(
@@ -787,24 +545,8 @@ def commit_cell_swap(
         # and unreferenced; clear it so the retry can rename.
         shutil.rmtree(gen_dir, ignore_errors=True)
         os.rename(scratch, gen_dir)
-        outgoing = _manifest_dirs(man)
-        if file_mode:
-            files = {
-                k: v for k, v in man["files"].items() if k not in affected
-            }
-            files.update(_collect_files(root, gen_dir))
-            _flip_manifest(
-                root,
-                new,
-                {"mode": "file_manifest", "files": files},
-                expect=cur,
-            )
-            _gc_file_generations(
-                root, files, keep=new, grace=cur, grace_dirs=outgoing
-            )
-        else:
-            _flip_manifest(root, new, expect=cur)
-            _gc_generations(root, keep=new, grace=cur, grace_dirs=outgoing)
+        _flip_manifest(root, new, expect=cur)
+        _gc_generations(root, keep=new, grace=cur)
         shutil.rmtree(stage, ignore_errors=True)
     return os.path.join(root, f"gen-{new}")
 
@@ -812,17 +554,15 @@ def commit_cell_swap(
 def rewrite_cells(spark, root: str, cells, rewrite) -> None:
     """Replace the committed rows of ``cells`` with ``rewrite(rows)``
     and publish atomically — the one partial-rewrite path behind every
-    index mutation (delete, upsert, compaction). The root decides how
-    it is read and staged, never the caller: the affected rows come
-    from index_read, the stage is written in the commit mode the
-    root's manifest records (to ``<root>_stage``), and commit_cell_swap
-    publishes it (a cell absent from the rewrite's output is dropped).
-    A no-op when ``cells`` is empty."""
+    index mutation (delete, upsert, compaction): the affected rows come
+    from index_read, the rewrite is staged by write_stage (to
+    ``<root>_stage``), and commit_cell_swap publishes it (a cell absent
+    from the rewrite's output is dropped). A no-op when ``cells`` is
+    empty."""
     cells = sorted({int(c) for c in cells})
     if not cells:
         return
-    man = read_manifest(root)
-    if man is None:
+    if read_manifest(root) is None:
         raise ValueError(
             f"rewrite_cells: {root} has no manifest — publish the base"
             " index with write_index_base first"
@@ -830,7 +570,7 @@ def rewrite_cells(spark, root: str, cells, rewrite) -> None:
     stage = os.path.normpath(root) + "_stage"
     shutil.rmtree(stage, ignore_errors=True)
     rows = index_read(spark, root, cells)
-    write_stage(rewrite(rows), stage, ("cell",), man.get("mode", "hardlink"))
+    write_stage(rewrite(rows), stage)
     commit_cell_swap(root, stage, cells)
 
 
@@ -844,22 +584,14 @@ def rewrite_cells(spark, root: str, cells, rewrite) -> None:
 # and every read through the handle serves the pinned generation — and
 # GC keeps any generation a live pin references, so grace is defined
 # against actual pinned readers instead of one blind cycle (round-14
-# verdict item #4). Pins expire after PIN_TTL_SEC (env
-# SPARK_GRAFT_PIN_TTL) so a crashed reader never blocks GC forever;
-# long sessions call refresh() to re-stamp.
+# verdict item #4). Pins expire after PIN_TTL_SEC so a crashed reader
+# never blocks GC forever; long sessions call refresh() to re-stamp.
 
 PIN_DIR = "_PINS"
 
 #: A pin abandoned by a crashed reader stops protecting its
-#: generation after this many seconds (env SPARK_GRAFT_PIN_TTL).
+#: generation after this many seconds.
 PIN_TTL_SEC = 3600.0
-
-
-def _pin_ttl() -> float:
-    try:
-        return float(os.environ.get("SPARK_GRAFT_PIN_TTL", ""))
-    except ValueError:
-        return PIN_TTL_SEC
 
 
 def _live_pinned_dirs(root: str) -> set[str]:
@@ -879,7 +611,7 @@ def _live_pinned_dirs(root: str) -> set[str]:
         try:
             with open(path) as fh:
                 rec = json.load(fh)
-            if now - float(rec["ts"]) > _pin_ttl():
+            if now - float(rec["ts"]) > PIN_TTL_SEC:
                 # Re-read immediately before the unlink: refresh()
                 # os.replace()s the pin with a fresh ts, and sweeping
                 # a pin that was re-stamped between our read and the
@@ -887,7 +619,7 @@ def _live_pinned_dirs(root: str) -> set[str]:
                 try:
                     with open(path) as fh:
                         rec2 = json.load(fh)
-                    if time.time() - float(rec2["ts"]) <= _pin_ttl():
+                    if time.time() - float(rec2["ts"]) <= PIN_TTL_SEC:
                         out.update(rec2["dirs"])
                         continue
                 except (OSError, ValueError, KeyError, TypeError):
@@ -936,38 +668,22 @@ class IndexSnapshot:
     @property
     def data_dir(self) -> str:
         """The pinned generation dir (root itself for legacy flat
-        layouts) — hardlink-mode readers scan this directly."""
+        layouts)."""
         if self.gen is None:
             return self.root
         return os.path.join(self.root, f"gen-{self.gen}")
 
-    def files(self, cells=None) -> list[str]:
-        """Pinned file list (file_manifest mode), optionally pruned."""
-        man = self.manifest or {}
-        if man.get("mode") != "file_manifest":
-            raise ValueError(
-                f"IndexSnapshot.files: {self.root} is not"
-                " file_manifest-rooted"
-            )
-        return _files_from_man(self.root, man, cells)
-
     def read(self, spark, cells=None):
-        """Mode-dispatching read of the PINNED generation — same
-        contract (and same schema) as index_read (literally the same
-        implementation, resolved against the pinned manifest), immune
-        to flips."""
-        return _read_from_man(
-            spark, self.root, self.manifest, self.data_dir, cells
-        )
+        """Read of the PINNED generation — same contract (and same
+        schema) as index_read (literally the same implementation,
+        resolved against the pinned manifest), immune to flips."""
+        return _read_cells(spark, self.data_dir, cells)
 
     def lsm_read(self, spark):
         """The merge-on-read view AS OF the snapshot: exactly the run
         set that was live at pin time (base + runs above the pinned
         watermark, enumerated then) — ingests and compactions after
-        the pin stay invisible. On a file_manifest store the pin holds
-        the run FILE LISTS of pin time (they may span generations), so
-        the read is the same explicit-file merge the live reader
-        uses."""
+        the pin stay invisible."""
         from pyspark.sql import functions as F
 
         if self._runs is None:
@@ -975,29 +691,6 @@ class IndexSnapshot:
                 f"IndexSnapshot.lsm_read: {self.root} was not pinned"
                 " as an LSM run store"
             )
-        if isinstance(self._runs, dict):
-            carried = self._runs["carried"]
-            dir_ids = self._runs["dir_ids"]
-            parts = []
-            if carried:
-                parts.append(_read_runs(spark, self.root, carried))
-            if dir_ids:
-                parts.append(
-                    spark.read.parquet(self.data_dir).filter(
-                        F.col("ingest_batch").isin(
-                            [int(b) for b in dir_ids]
-                        )
-                    )
-                )
-            if not parts:
-                raise ValueError(
-                    f"IndexSnapshot.lsm_read: {self.root} had no live"
-                    " runs at pin time"
-                )
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
         df = spark.read.parquet(self.data_dir)
         return df.filter(
             F.col("ingest_batch").isin([int(b) for b in self._runs])
@@ -1042,7 +735,7 @@ def index_snapshot(root: str) -> IndexSnapshot:
         if man is None:
             return IndexSnapshot(root, None, None, None, [])
         gen = int(man["gen"])
-        dirs = sorted(_manifest_dirs(man))
+        dirs = [f"gen-{gen}"]
         pins = os.path.join(root, PIN_DIR)
         os.makedirs(pins, exist_ok=True)
         path = os.path.join(pins, uuid.uuid4().hex + ".json")
@@ -1054,42 +747,12 @@ def index_snapshot(root: str) -> IndexSnapshot:
                 if "folded_through" in man:  # an LSM run store
                     ft = man.get("folded_through")
                     gen_dir = os.path.join(root, f"gen-{gen}")
-                    if man.get("mode") == "file_manifest":
-                        # Pin MANIFEST-CARRIED runs as file lists
-                        # (complete and immutable by construction —
-                        # they were listed by a flip that happened
-                        # after their write, and live in older
-                        # generation dirs the pin's dir set keeps
-                        # alive) but pin CURRENT-GENERATION runs as
-                        # IDS resolved at read time, like the
-                        # directory-mode pin: a dir listing taken
-                        # while a sink's job commit is moving files
-                        # in would freeze a PARTIAL file list —
-                        # silent under-count for a SUM fold — whereas
-                        # ids read live are complete by read time.
-                        carried = {
-                            int(b): list(ps)
-                            for b, ps in (man.get("runs") or {}).items()
-                            if _run_is_live(int(b), ft)
-                        }
-                        dir_ids = sorted(
-                            b
-                            for b in _lsm_dir_run_files(root, gen_dir)
-                            if b not in carried and _run_is_live(b, ft)
-                        )
-                        runs = {
-                            "carried": carried,
-                            "dir_ids": dir_ids,
-                        }
-                    else:
-                        runs = sorted(
-                            b
-                            for d in os.listdir(gen_dir)
-                            if d.startswith("ingest_batch=")
-                            and _run_is_live(
-                                (b := int(d.split("=", 1)[1])), ft
-                            )
-                        )
+                    runs = sorted(
+                        b
+                        for d in os.listdir(gen_dir)
+                        if d.startswith("ingest_batch=")
+                        and _run_is_live((b := int(d.split("=", 1)[1])), ft)
+                    )
             except FileNotFoundError:
                 # The gen dir vanished despite the manifest check —
                 # extreme churn; drop this pin and retry.
@@ -1151,155 +814,38 @@ def index_snapshot(root: str) -> IndexSnapshot:
 #: never collide with a live run.
 LSM_BASE_BATCH = -1
 
+#: How long a sink's first batch waits out a held lease before
+#: recording its stream id (a 100 TB fold can hold it for minutes).
+SINK_LEASE_WAIT_SEC = 30.0
+
+#: How long a sink waits for an in-flight commit to release its lease
+#: before the post-write generation recheck (folds normally take
+#: seconds).
+SINK_COMMIT_WAIT_SEC = 300.0
+
 STREAM_ID_NAME = "_LSM_STREAM_ID"
 
 
-def lsm_run_dir(root: str, mode: str | None = None) -> str:
+def lsm_run_dir(root: str) -> str:
     """Resolve (initializing on first use) the directory a streaming
     sink writes its ``ingest_batch=<id>`` runs into — the current
     generation of the manifest-rooted store. NOTE: the resolution is
     only valid for ONE write — sinks must re-resolve per batch (or use
-    lsm_write_run, which also closes the write/flip race).
-
-    ``mode`` (or SPARK_GRAFT_COMMIT_MODE) is consulted only at FIRST
-    initialization and recorded in the manifest — an existing store
-    keeps its recorded commit mode, exactly the cell-index rule. In
-    ``file_manifest`` mode the sink's write path is UNCHANGED (runs
-    land as hive ``ingest_batch=<id>`` dirs in the current generation
-    and are discovered by listing — a sink holds no lease and commits
-    no manifest); what changes is COMPACTION's carry-over (manifest
-    file-list re-listing instead of hardlink trees — zero data
-    movement for late runs on object stores) and the reader (explicit
-    file lists for the base + carried runs)."""
-    if mode not in (None, "hardlink", "file_manifest"):
-        raise ValueError(f"lsm_run_dir: unknown commit mode {mode!r}")
-
-    def check_conflict(man: dict | None) -> None:
-        # Existing store: the recorded mode is sticky. An EXPLICIT
-        # conflicting request is refused instead of silently ignored
-        # (the _resolve_mode / round-14-advice convention — there is
-        # no rebuild here to honor a migration through).
-        if man is None or mode is None:
-            return
-        recorded = (
-            "file_manifest"
-            if man.get("mode") == "file_manifest"
-            else "hardlink"
-        )
-        if mode != recorded:
-            raise ValueError(
-                f"lsm_run_dir: {root} is committed in {recorded!r}"
-                f" mode; explicit mode={mode!r} conflicts — LSM run"
-                " stores migrate by compact-into-a-fresh-root, not"
-                " in place"
-            )
-
-    # ONE manifest read serves the conflict check, the init decision,
-    # and the data-dir resolution (this is the per-micro-batch sink
-    # hot path — on the object-store backends fm mode exists for,
-    # every extra read is a GET).
+    lsm_write_run, which also closes the write/flip race)."""
+    # ONE manifest read serves the init decision and the data-dir
+    # resolution (this is the per-micro-batch sink hot path).
     man = read_manifest(root)
-    check_conflict(man)
     if man is None:
-        init_mode = mode
-        if init_mode is None:
-            init_mode = os.environ.get(COMMIT_MODE_ENV) or None
-            if init_mode not in (None, "hardlink", "file_manifest"):
-                raise ValueError(
-                    f"lsm_run_dir: unknown commit mode {init_mode!r}"
-                    f" (from {COMMIT_MODE_ENV})"
-                )
         with commit_lease(root):
             man = read_manifest(root)  # re-check under the lease
             if man is None:
                 gen_dir = os.path.join(root, "gen-1")
                 os.makedirs(gen_dir, exist_ok=True)
-                extra = {"folded_through": None}
-                if init_mode == "file_manifest":
-                    extra["mode"] = "file_manifest"
-                _flip_manifest(root, 1, extra, expect=None)
+                _flip_manifest(
+                    root, 1, {"folded_through": None}, expect=None
+                )
                 return gen_dir
-            # Lost a first-init race: the conflict check must re-run
-            # against the WINNER's manifest, or a conflicting explicit
-            # mode is silently accepted in exactly the interleaving
-            # the lease exists to close.
-            check_conflict(man)
     return _manifest_data_dir(root, man)
-
-
-def _lsm_dir_run_files(root: str, gen_dir: str) -> dict[int, list[str]]:
-    """{batch id: [root-relative parquet paths]} for every
-    ``ingest_batch=<id>`` run directory physically under ``gen_dir``
-    (the sink's write target). Runs whose directory holds no parquet
-    yet (a write in flight) list as absent — exactly what the
-    directory-mode snapshot sees for them."""
-    out: dict[int, list[str]] = {}
-    for d in sorted(os.listdir(gen_dir)):
-        if not d.startswith("ingest_batch="):
-            continue
-        full = os.path.join(gen_dir, d)
-        if not os.path.isdir(full):
-            continue
-        files = [
-            os.path.join(os.path.relpath(full, root), f)
-            for f in sorted(os.listdir(full))
-            if f.endswith(".parquet")
-        ]
-        if files:
-            out[int(d.split("=", 1)[1])] = files
-    return out
-
-
-def _lsm_run_files(root: str, man: dict | None) -> dict[int, list[str]]:
-    """The committed run set of a file_manifest LSM store: the
-    manifest's carried-run file lists, OVERRIDDEN by any run directory
-    physically present in the current generation — a racing sink's
-    republish of a carried run supersedes the manifest's old-
-    generation copy (identical logical content, newer physical copy;
-    dynamic overwrite makes the pair interchangeable), and fresh runs
-    exist only in the directory. Ghost filtering (folded_through) is
-    the CALLER's job — this is the raw file index."""
-    man = man or {}
-    merged: dict[int, list[str]] = {
-        int(b): list(ps) for b, ps in (man.get("runs") or {}).items()
-    }
-    if man.get("gen") is not None:
-        try:
-            merged.update(
-                _lsm_dir_run_files(root, _manifest_data_dir(root, man))
-            )
-        except FileNotFoundError:
-            pass
-    return merged
-
-
-def _read_runs(spark, root: str, run_files: dict[int, list[str]]):
-    """Explicit-file merge-on-read for a file_manifest LSM store:
-    group the run files by top-level generation dir and read each
-    group with ITS basePath (hive inference recovers ingest_batch from
-    the path under that generation), then union — one read per
-    referenced generation, never a directory scan of dereferenced
-    generations. Same schema as the directory-mode read."""
-    groups: dict[str, list[str]] = {}
-    for ps in run_files.values():
-        for p in ps:
-            groups.setdefault(p.split(os.sep, 1)[0], []).append(
-                os.path.join(root, p)
-            )
-    dfs = [
-        spark.read.option("basePath", os.path.join(root, top)).parquet(
-            *sorted(paths)
-        )
-        for top, paths in sorted(groups.items())
-    ]
-    if not dfs:
-        raise ValueError(
-            f"lsm read: {root} has no committed or live run files"
-        )
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
 
 
 def _stream_id(ckpt: str) -> str:
@@ -1329,17 +875,9 @@ def _record_sink_stream(root: str, sid: str) -> None:
     under the writer lease, preserving gen and folded_through). The
     record happens once per stream (its first batch), so a held lease
     here usually means a compaction is mid-fold — wait it out rather
-    than failing the stream. The wait deadline defaults to 30 s and is
-    configurable via SPARK_GRAFT_SINK_LEASE_WAIT (seconds): a 100 TB
-    fold can hold the lease for minutes, and a stream started
-    mid-compaction should wait it out, not die on its first batch
-    (round-14 verdict: the fixed cap was a rough edge)."""
-    try:
-        deadline = float(
-            os.environ.get("SPARK_GRAFT_SINK_LEASE_WAIT", "30")
-        )
-    except ValueError:
-        deadline = 30.0
+    than failing the stream, for up to SINK_LEASE_WAIT_SEC: a stream
+    started mid-compaction should wait it out, not die on its first
+    batch."""
     t0 = time.monotonic()
     while True:
         try:
@@ -1353,7 +891,7 @@ def _record_sink_stream(root: str, sid: str) -> None:
                 _flip_manifest(root, gen, extra, expect=gen)
             return
         except ConcurrentCommitError:
-            if time.monotonic() - t0 >= deadline:
+            if time.monotonic() - t0 >= SINK_LEASE_WAIT_SEC:
                 raise
             time.sleep(0.5)
 
@@ -1465,25 +1003,18 @@ def _await_commit_quiescence(root: str) -> None:
     recheck happens-after any in-flight compaction's flip — the
     ordering that makes "generation stable across the write" a real
     publication proof instead of a racy observation. Bounded by
-    SPARK_GRAFT_SINK_COMMIT_WAIT seconds (default 300 — folds are
-    normally seconds; a fold outrunning the bound degrades to the
+    SINK_COMMIT_WAIT_SEC (a fold outrunning the bound degrades to the
     round-14 behavior, where lsm_compact's post-flip carry-over pass
     is the remaining net). A TTL-stale lock (crashed writer) does not
     block."""
-    try:
-        deadline = float(
-            os.environ.get("SPARK_GRAFT_SINK_COMMIT_WAIT", "300")
-        )
-    except ValueError:
-        deadline = 300.0
     lock = os.path.join(root, LOCK_NAME)
     t0 = time.monotonic()
-    while time.monotonic() - t0 < deadline:
+    while time.monotonic() - t0 < SINK_COMMIT_WAIT_SEC:
         try:
             age = time.time() - os.stat(lock).st_mtime
         except (FileNotFoundError, NotADirectoryError):
             return
-        if age > _lease_ttl():
+        if age > LEASE_TTL_SEC:
             return  # crashed writer's leftover, not a live commit
         time.sleep(0.05)
 
@@ -1507,29 +1038,17 @@ def _run_is_live(b: int, ft) -> bool:
 
 def lsm_read(spark, root: str):
     """The merge-on-read view: base run + every run ABOVE the
-    folded_through watermark (_run_is_live). file_manifest stores
-    read the committed file lists (base + carried runs, possibly
-    spanning generations) merged with the current generation's
-    directory-listed fresh runs; directory-mode stores scan the
-    generation dir as before. The watermark comes from the SAME
-    manifest read as the run lists — reading it separately would let
-    a compaction flip land between the two reads and pair the STALE
-    run set with the NEW watermark, silently dropping every
-    just-folded run from the view."""
+    folded_through watermark (_run_is_live), scanned from the
+    generation dir. The watermark comes from the SAME manifest read as
+    the dir — reading it separately would let a compaction flip land
+    between the two reads and pair the STALE run set with the NEW
+    watermark, silently dropping every just-folded run from the
+    view."""
     from pyspark.sql import functions as F
 
-    man = read_manifest(root) or {}
-    ft = man.get("folded_through")
-    if man.get("mode") == "file_manifest":
-        live = {
-            b: ps
-            for b, ps in _lsm_run_files(root, man).items()
-            if _run_is_live(b, ft)
-        }
-        return _read_runs(spark, root, live)
-    df = spark.read.parquet(
-        _manifest_data_dir(root, man if man else None)
-    )
+    man = read_manifest(root)
+    ft = (man or {}).get("folded_through")
+    df = spark.read.parquet(_manifest_data_dir(root, man))
     if ft is not None:
         df = df.filter(
             (F.col("ingest_batch") == LSM_BASE_BATCH)
@@ -1540,19 +1059,15 @@ def lsm_read(spark, root: str):
 
 def lsm_live_runs(root: str) -> list[int]:
     """Run ids a reader currently merges (metadata only: the directory
-    listing, merged with the manifest's carried-run lists on a
-    file_manifest store). Watermark and run lists from ONE manifest
-    read — see lsm_read."""
-    man = read_manifest(root) or {}
-    ft = man.get("folded_through")
-    if man.get("mode") == "file_manifest":
-        ids = _lsm_run_files(root, man).keys()
-    else:
-        ids = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(_manifest_data_dir(root, man if man else None))
-            if d.startswith("ingest_batch=")
-        ]
+    listing). Watermark and run ids from ONE manifest read — see
+    lsm_read."""
+    man = read_manifest(root)
+    ft = (man or {}).get("folded_through")
+    ids = [
+        int(d.split("=", 1)[1])
+        for d in os.listdir(_manifest_data_dir(root, man))
+        if d.startswith("ingest_batch=")
+    ]
     return sorted(b for b in ids if _run_is_live(b, ft))
 
 
@@ -1600,41 +1115,22 @@ def lsm_compact(
 
         cur = current_generation(root)  # re-read under the lease
         man = read_manifest(root) or {}
-        file_mode = man.get("mode") == "file_manifest"
         old_ft = lsm_folded_through(root)
         old_dir = os.path.join(root, f"gen-{cur}")
-        # THE one snapshot: every decision below derives from it. In
-        # file_manifest mode the snapshot is the committed run lists
-        # merged with the current generation's directory (carried runs
-        # from earlier compactions live in OLDER generation dirs and
-        # are reachable only through the manifest).
-        if file_mode:
-            live_files = {
-                b: ps
-                for b, ps in _lsm_run_files(root, man).items()
-                if _run_is_live(b, old_ft)
-            }
-            live_ids = sorted(live_files)
-        else:
-            snap = sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(old_dir)
-                if d.startswith("ingest_batch=")
-            )
-            live_ids = [b for b in snap if _run_is_live(b, old_ft)]
+        # THE one snapshot: every decision below derives from it.
+        snap = sorted(
+            int(d.split("=", 1)[1])
+            for d in os.listdir(old_dir)
+            if d.startswith("ingest_batch=")
+        )
+        live_ids = [b for b in snap if _run_is_live(b, old_ft)]
         real = [b for b in live_ids if b != LSM_BASE_BATCH]
         if not live_ids:
             return old_ft  # empty store: nothing to fold
         new_ft = max(real) if real else old_ft
-        if file_mode:
-            live = _read_runs(spark, root, live_files)
-        else:
-            live = spark.read.option("basePath", old_dir).parquet(
-                *[
-                    os.path.join(old_dir, f"ingest_batch={b}")
-                    for b in live_ids
-                ]
-            )
+        live = spark.read.option("basePath", old_dir).parquet(
+            *[os.path.join(old_dir, f"ingest_batch={b}") for b in live_ids]
+        )
         base = fold(live.drop("ingest_batch")).withColumn(
             "ingest_batch", F.lit(LSM_BASE_BATCH)
         )
@@ -1698,53 +1194,6 @@ def lsm_compact(
 
         extra = {k: v for k, v in man.items() if k != "gen"}
         extra["folded_through"] = new_ft
-        outgoing = _manifest_dirs(man)
-        if file_mode:
-            # Carry-over by manifest RE-LISTING (the Iceberg shape the
-            # cell swap already uses): a late run's files stay where
-            # the sink wrote them — zero data movement, zero per-file
-            # metadata ops — and the new manifest simply lists them.
-            # Same two-pass structure as the hardlink branch, with the
-            # post-flip pass an ADDENDUM FLIP (same generation,
-            # extended run list) instead of link repair.
-            runs = {
-                str(b): ps
-                for b, ps in _lsm_dir_run_files(root, gen_dir).items()
-            }
-
-            def late_runs() -> dict[int, list[str]]:
-                return {
-                    b: ps
-                    for b, ps in _lsm_dir_run_files(root, old_dir).items()
-                    if b != LSM_BASE_BATCH and _run_is_live(b, new_ft)
-                }
-
-            runs.update(
-                {str(b): ps for b, ps in late_runs().items()}
-            )
-            if _between_carryover_and_flip is not None:
-                _between_carryover_and_flip()
-            extra["runs"] = runs
-            _flip_manifest(root, new, extra, expect=cur)
-            # Second pass, post-flip: a write that completed after the
-            # pre-flip listing whose writer then died before its
-            # recheck (live writers' rechecks wait out THIS lease and
-            # republish themselves into gen-<new>, where the reader's
-            # directory merge finds them without any manifest entry).
-            new_dir_ids = set(_lsm_dir_run_files(root, gen_dir))
-            missed = {
-                b: ps
-                for b, ps in late_runs().items()
-                if str(b) not in runs and b not in new_dir_ids
-            }
-            if missed:
-                runs.update({str(b): ps for b, ps in missed.items()})
-                extra["runs"] = runs
-                _flip_manifest(root, new, extra, expect=new)
-            _gc_file_generations(
-                root, runs, keep=new, grace=cur, grace_dirs=outgoing
-            )
-            return new_ft
         carry_over()
         if _between_carryover_and_flip is not None:
             _between_carryover_and_flip()
@@ -1755,5 +1204,5 @@ def lsm_compact(
         # THIS lease and republish themselves). Still inside the
         # lease, so no republish can race the links.
         carry_over()
-        _gc_generations(root, keep=new, grace=cur, grace_dirs=outgoing)
+        _gc_generations(root, keep=new, grace=cur)
     return new_ft

@@ -1982,7 +1982,7 @@ def q_sim_topk_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     the walk stays independent of corpus size (the graph-ANN selling
     point); the stored graph is the ingest-time artifact
     knn_graph/append/delete maintain, published crash-atomically."""
-    from dist_mapreduce_spark.plans.index_commit import index_data_dir
+    from dist_mapreduce_spark.plans.index_commit import index_read
     from dist_mapreduce_spark.plans.similarity import N_QUERIES, TOP_K
 
     emb = _emb(spark, sf_dir).filter(F.col("embedding").isNotNull())
@@ -1992,7 +1992,7 @@ def q_sim_topk_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not ivf_cent_rows(emb):
         return empty
     path = stored_knn_graph(spark, sf_dir)
-    g = spark.read.parquet(index_data_dir(path)).select("src_id", "dst_id")
+    g = index_read(spark, path).select("src_id", "dst_id")
     und = (
         g.union(
             g.select(

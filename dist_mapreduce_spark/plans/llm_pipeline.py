@@ -3385,10 +3385,9 @@ LSM_MAINTAIN_RUNS = 1
 LSM_MAINT_SPLIT = 3
 
 
-def _dedup_maintain_paths(sf_dir: str, variant: str = "") -> tuple[str, str]:
+def _dedup_maintain_paths(sf_dir: str) -> tuple[str, str]:
     """(stage, runs-root) for the maintenance-policy row — its own
-    store, so it never races the streaming row's; ``variant`` keys the
-    commit-mode twin's store apart from the default row's."""
+    store, so it never races the streaming row's."""
     import hashlib as _hl
 
     from dist_mapreduce_spark.scratch import scratch_root
@@ -3396,8 +3395,8 @@ def _dedup_maintain_paths(sf_dir: str, variant: str = "") -> tuple[str, str]:
     scratch = scratch_root()
     tag = _hl.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
     return (
-        os.path.join(scratch, f"dedup_maint{variant}_stage_{tag}"),
-        os.path.join(scratch, f"dedup_maint{variant}_runs_{tag}"),
+        os.path.join(scratch, f"dedup_maint_stage_{tag}"),
+        os.path.join(scratch, f"dedup_maint_runs_{tag}"),
     )
 
 
@@ -3453,19 +3452,6 @@ def q_lsm_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints in the runs, never corpus size); the keep arm costs
     nothing. This is the off-peak cron a 100 TB dedup fleet actually
     schedules — monitor, then act — run as ONE operator."""
-    return _lsm_maintain_impl(spark, sf_dir)
-
-
-def _lsm_maintain_impl(
-    spark: SparkSession,
-    sf_dir: str,
-    mode: str | None = None,
-    variant: str = "",
-) -> DataFrame:
-    """Shared body of the lsm_maintain policy rows: ``mode`` pins the
-    run store's commit mode at initialization (None = the recorded /
-    env default), ``variant`` keys the store paths so the commit-mode
-    twins never clobber each other's stores inside one gate sweep."""
     import shutil
 
     from dist_mapreduce_spark.plans.index_commit import (
@@ -3476,10 +3462,10 @@ def _lsm_maintain_impl(
         lsm_write_run,
     )
 
-    stage, runs = _dedup_maintain_paths(sf_dir, variant)
+    stage, runs = _dedup_maintain_paths(sf_dir)
     for d in (stage, runs):
         shutil.rmtree(d, ignore_errors=True)
-    lsm_run_dir(runs, mode=mode)
+    lsm_run_dir(runs)
     fp = _docs(spark, sf_dir).select(
         "doc_id",
         ta.normalized_fingerprint(F.col("text")).alias("fp"),
@@ -3512,30 +3498,6 @@ def _lsm_maintain_impl(
     idx = _dedup_corpus_index(spark, sf_dir)
     return _dedup_incr_verdicts(spark, stage, idx, in_batch).withColumn(
         "decision", F.lit(decision)
-    )
-
-
-@query("lsm_maintain_fm", oracle=_ORACLES["lsm_maintain"])
-def q_lsm_maintain_fm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LSM maintenance policy with the run store committed in the
-    OBJECT-STORE mode (``mode="file_manifest"`` — round-15, closing
-    round-14 verdict item #6): same ingest, same policy, but the
-    compaction's late-run carry-over is manifest file-list RE-LISTING
-    (zero data movement — a late run's parquet stays in the generation
-    dir the sink wrote it to, and the flipped manifest points at it)
-    and the reader merges the committed file lists with the current
-    generation's fresh runs. The oracle is lsm_maintain's VERBATIM —
-    the sim_index_delete_fm certification pattern: a PASS proves the
-    file-list run protocol is verdict-exact, not just plausible.
-    Kill-mid-compact, the carry-over residual window, republish
-    dedup, and pinned as-of reads are pytest-pinned for this mode in
-    tests/test_index_commit.py.
-
-    Scale shape: identical to lsm_maintain, minus the hardlink/byte
-    copies for carried runs — on an object store the carry-over cost
-    drops from O(late-run bytes) to O(1) manifest entries."""
-    return _lsm_maintain_impl(
-        spark, sf_dir, mode="file_manifest", variant="fm"
     )
 
 

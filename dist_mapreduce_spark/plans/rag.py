@@ -37,7 +37,6 @@ from dist_mapreduce_spark.plans.ann_index import (
     staleness_decision_df,
 )
 from dist_mapreduce_spark.plans.index_commit import (
-    index_data_dir,
     index_read,
     rewrite_cells,
     write_index_base,
@@ -1014,7 +1013,7 @@ def _serve_dense_pruned(
     )
     if not union_cells:
         return empty
-    scan = spark.read.parquet(path).filter(F.col("cell").isin(union_cells))
+    scan = index_read(spark, path, union_cells)
     sc = (
         scan.join(
             F.broadcast(probes),
@@ -1080,25 +1079,21 @@ def build_dense_index_incr(
     if not cent_rows:
         return path, cent_rows, n_chunks
     is_new = F.expr(_DENSE_APPEND_PRED)
-    # The base AND the incremental batch stage into the SAME
-    # uncommitted generation (extra_writes runs before the manifest
-    # flip), so base + append publish as one atomic unit — a reader
-    # or crash between the two can never see a base-only index
+    # The base AND the incremental batch land in the SAME uncommitted
+    # generation, so base + append publish as one atomic unit — a
+    # reader or crash between the two can never see a base-only index
     # presented as committed (round-13 advice). Idempotent
     # run-to-run: each call publishes a fresh generation.
-    batch = assign_cells(spark, cv.filter(is_new), cent_rows).select(
-        *_DENSE_COLS
-    )
     build_once(
         path, sf_dir, "documents",
         lambda: write_index_base(
-            assign_cells(spark, cv.filter(~is_new), cent_rows).select(
-                *_DENSE_COLS
-            ),
+            [
+                assign_cells(spark, cv.filter(pred), cent_rows).select(
+                    *_DENSE_COLS
+                )
+                for pred in (~is_new, is_new)
+            ],
             path,
-            extra_writes=lambda gen_dir: batch.write.mode("append")
-            .partitionBy("cell")
-            .parquet(gen_dir),
         ),
     )
     return path, cent_rows, n_chunks
@@ -1187,9 +1182,7 @@ def q_search_dense_maxp_appended(
     A PASS proves serving is indifferent to HOW the cells were
     materialized — appends never change what a query retrieves."""
     path, cent_rows, n_chunks = build_dense_index_incr(spark, sf_dir)
-    return _serve_dense_pruned(
-        spark, sf_dir, index_data_dir(path), cent_rows, n_chunks
-    )
+    return _serve_dense_pruned(spark, sf_dir, path, cent_rows, n_chunks)
 
 
 # -------- dense-index delete (takedown) + upsert (edit) — round 11
@@ -1799,9 +1792,7 @@ def q_search_dense_maxp_retrained(
     )
     if not union_cells:
         return empty
-    scan = spark.read.parquet(index_data_dir(path)).filter(
-        F.col("cell").isin(union_cells)
-    )
+    scan = index_read(spark, path, union_cells)
     sc = (
         scan.join(
             F.broadcast(probes),

@@ -16,6 +16,8 @@ source/sink).
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,17 +45,52 @@ def capture_stream_plan(q, label: str = "stream") -> None:
         pass
 
 
-def capture_batch_plan(batch_df: DataFrame, label: str) -> None:
-    """Record the executed plan of a BATCH frame evaluated inside a
-    foreachBatch sink (the serving scan of stream_serve_topk, the
-    merge of stream_index_append) — the per-batch plans the streaming
-    wrapper's own explain does not show."""
-    try:
-        STREAM_PLAN_LOG.append(
-            (label, batch_df._jdf.queryExecution().executedPlan().toString())
-        )
-    except Exception:
+class _WritePlanListener:
+    """QueryExecutionListener (through the py4j callback server) that
+    keeps the executed plan of the last action its session completes."""
+
+    def __init__(self):
+        self.plan: str | None = None
+
+    def onSuccess(self, func_name, qe, duration_ns):
+        self.plan = qe.executedPlan().toString()
+
+    def onFailure(self, func_name, qe, exception):
         pass
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+
+@contextlib.contextmanager
+def capture_batch_plan(spark: SparkSession, label: str):
+    """Record the executed plan of the last action ``spark`` runs inside
+    the block — the write a foreachBatch sink performs (the serving
+    write of stream_serve_topk), whose per-batch plan the streaming
+    wrapper's own explain does not show. The plan is the one the write
+    actually ran (final AQE plan), read from the write's own
+    QueryExecution once the listener bus has drained. Capture must
+    never fail the batch it audits."""
+    from pyspark.java_gateway import ensure_callback_server_started
+
+    try:
+        ensure_callback_server_started(spark.sparkContext._gateway)
+        manager = spark._jsparkSession.listenerManager()
+        listener = _WritePlanListener()
+        manager.register(listener)
+    except Exception:
+        listener = None
+    try:
+        yield
+    finally:
+        if listener is not None:
+            try:
+                spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+                manager.unregister(listener)
+                if listener.plan is not None:
+                    STREAM_PLAN_LOG.append((label, listener.plan))
+            except Exception:
+                pass
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

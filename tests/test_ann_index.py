@@ -493,12 +493,9 @@ def test_compact_rewrites_hot_cells_only(spark, tmp_path):
         .first()["cell"]
     )
     hot_rows = cells.filter(F.col("cell") == hot).repartition(1)
-
-    def fragment(gen_dir):
-        for _ in range(3):
-            hot_rows.write.mode("append").partitionBy("cell").parquet(gen_dir)
-
-    write_index_base(cells, path, extra_writes=fragment)
+    # The base plus three appended batches of the hot cell, all in one
+    # generation.
+    write_index_base([cells] + [hot_rows] * 3, path)
     cells.unpersist()
     before = _cell_fragments(path)
     assert before[hot] == 4
@@ -524,61 +521,6 @@ def test_compact_rewrites_hot_cells_only(spark, tmp_path):
     assert back.count() == n_before
     assert back.agg(F.sum("vec_id")).first()[0] == sum_before
     assert compact_index_cells(spark, path, min_files=3) == []
-
-
-def test_compact_file_manifest_root(spark, tmp_path):
-    """Compaction on a file_manifest root: the fragment census reads
-    the manifest's per-cell file lists (the generation dirs hold
-    `__part_cell=` dirs, which a directory listing does not count),
-    and rewrite_cells stages in the root's recorded mode — the hot
-    cell ends at one file, the content is unchanged and the root
-    stays in file_manifest mode."""
-    from dist_mapreduce_spark.plans.ann_index import (
-        _cell_fragments,
-        compact_index_cells,
-    )
-    from dist_mapreduce_spark.plans.index_commit import (
-        index_read,
-        read_manifest,
-        write_index_base,
-    )
-    from dist_mapreduce_spark.plans.similarity import (
-        assign_cells,
-        ivf_cent_rows,
-    )
-
-    emb = spark.read.parquet(SF + "/embeddings.parquet")
-    cent_rows = ivf_cent_rows(emb)
-    cells = (
-        assign_cells(spark, emb.select("vec_id", "embedding"), cent_rows)
-        .repartition(1)
-        .cache()
-    )
-    hot = int(cells.groupBy("cell").count().orderBy(F.desc("count")).first()[0])
-    hot_rows = cells.filter(F.col("cell") == hot).repartition(1)
-
-    def fragment(gen_dir):
-        # The file_manifest layout: `cell` stays a data column, the
-        # partition dir is its `__part_cell` mirror.
-        for _ in range(3):
-            hot_rows.withColumn("__part_cell", F.col("cell")).write.mode(
-                "append"
-            ).partitionBy("__part_cell").parquet(gen_dir)
-
-    path = str(tmp_path / "fm")
-    write_index_base(cells, path, extra_writes=fragment, mode="file_manifest")
-
-    def content():
-        rows = index_read(spark, path).select("vec_id", "cell").collect()
-        return sorted(tuple(r) for r in rows)
-
-    before = content()
-    cells.unpersist()
-    assert _cell_fragments(path)[hot] == 4
-    assert compact_index_cells(spark, path, min_files=3) == [hot]
-    assert _cell_fragments(path)[hot] == 1
-    assert read_manifest(path)["mode"] == "file_manifest"
-    assert content() == before
 
 
 def test_lifecycle_oracle_match_with_null_embeddings_in_batch(spark, tmp_path):

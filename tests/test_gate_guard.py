@@ -93,3 +93,36 @@ def test_local_gate_has_three_scale_gemm_section():
         assert int(n_pass) == int(n_total), (
             f"GEMM gate shows failures: {n_pass}/{n_total}"
         )
+
+
+@pytest.mark.parametrize(
+    "tool", ["check_correctness", "explain_audit", "stream_explain", "dump_plans"]
+)
+def test_tools_reject_unknown_query_names(tool):
+    """A gate run over a stale name list must fail, not print `0/0 ok`:
+    every tool that takes query names exits 2 on an unknown one and
+    lists the valid names."""
+    import subprocess
+    import sys
+
+    args = ["/nonexistent-sf", "no_such_query"]
+    if tool == "dump_plans":
+        args = ["/nonexistent-sf", "unused_outdir", "tag", "no_such_query"]
+    r = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", f"{tool}.py"), *args],
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert r.returncode == 2, (r.returncode, r.stdout[-500:], r.stderr[-500:])
+    assert "no_such_query" in r.stderr and "\ntokenize\n" in r.stderr
+
+
+def test_check_correctness_imports_as_a_module():
+    """perfbench's oracle imports `canon` and `values_equal` from
+    tools.check_correctness; the tool's command-line checks must stay
+    out of that import."""
+    import importlib
+
+    mod = importlib.import_module("tools.check_correctness")
+    assert callable(mod.canon) and callable(mod.values_equal)

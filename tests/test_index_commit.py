@@ -12,6 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from dist_mapreduce_spark.plans import index_commit
 from dist_mapreduce_spark.plans.index_commit import (
     MANIFEST_NAME,
     commit_cell_swap,
@@ -33,6 +34,18 @@ def _snapshot(spark, root):
 
 
 BASE = [(i, i % 3) for i in range(30)]  # cells 0,1,2 × 10 rows
+
+
+class _CrashingBatch:
+    """Stands in for an appended batch whose write dies after the
+    base has landed in the uncommitted generation."""
+
+    def __init__(self, msg):
+        self.msg = msg
+
+    @property
+    def write(self):
+        raise RuntimeError(self.msg)
 
 
 def test_write_index_base_flips_generations_and_gcs(spark, tmp_path):
@@ -352,13 +365,9 @@ def test_legacy_migration_preserves_flat_data_until_commit(
     _mk_df(spark, BASE).write.partitionBy("cell").parquet(flat)
     before = _snapshot(spark, flat)
 
-    def boom(_gen_dir):
-        raise RuntimeError("injected crash mid-migration")
-
+    boom = _CrashingBatch("injected crash mid-migration")
     with pytest.raises(RuntimeError, match="mid-migration"):
-        write_index_base(
-            _mk_df(spark, BASE[:6]), flat, extra_writes=boom
-        )
+        write_index_base([_mk_df(spark, BASE[:6]), boom], flat)
     # Crash before the flip: still a legacy root, data intact.
     assert current_generation(flat) is None
     assert index_data_dir(flat) == flat
@@ -371,7 +380,7 @@ def test_legacy_migration_preserves_flat_data_until_commit(
 
 
 def test_base_and_appends_publish_atomically(spark, tmp_path):
-    """extra_writes stages follow-up appends INSIDE the uncommitted
+    """write_index_base stages follow-up appends INSIDE the uncommitted
     generation: a crash between base and append leaves the PREVIOUS
     generation current (never a base-only index), and a clean run
     publishes base+append as one unit — round-13 advice on
@@ -381,22 +390,13 @@ def test_base_and_appends_publish_atomically(spark, tmp_path):
     before = _snapshot(spark, root)
     batch = [(500, 0), (501, 1)]
 
-    def crash_after_base(_gen_dir):
-        raise RuntimeError("injected crash between base and append")
-
+    crash_after_base = _CrashingBatch("injected crash between base and append")
     with pytest.raises(RuntimeError, match="between base and append"):
-        write_index_base(
-            _mk_df(spark, BASE[:9]), root, extra_writes=crash_after_base
-        )
+        write_index_base([_mk_df(spark, BASE[:9]), crash_after_base], root)
     assert current_generation(root) == 1
     assert _snapshot(spark, root) == before, "no base-only index visible"
 
-    def append(gen_dir):
-        _mk_df(spark, batch).write.mode("append").partitionBy(
-            "cell"
-        ).parquet(gen_dir)
-
-    write_index_base(_mk_df(spark, BASE[:9]), root, extra_writes=append)
+    write_index_base([_mk_df(spark, BASE[:9]), _mk_df(spark, batch)], root)
     assert _snapshot(spark, root) == sorted(BASE[:9] + batch)
 
 
@@ -434,7 +434,7 @@ def test_stale_lease_is_taken_over(spark, tmp_path, monkeypatch):
     with open(lock, "w") as fh:
         fh.write("{}")
     os.utime(lock, (1, 1))  # ancient mtime = crashed writer
-    monkeypatch.setenv("SPARK_GRAFT_COMMIT_LEASE_TTL", "60")
+    monkeypatch.setattr(index_commit, "LEASE_TTL_SEC", 60.0)
     write_index_base(_mk_df(spark, BASE[:3]), root)
     assert current_generation(root) == 2
     assert not os.path.exists(lock)
@@ -485,7 +485,7 @@ def test_lsm_compact_while_ingesting_loses_no_rows(
     # thread), so the happens-after wait must time out fast — this
     # test exercises exactly the degraded path the pre/post-flip
     # carry-over passes exist for.
-    monkeypatch.setenv("SPARK_GRAFT_SINK_COMMIT_WAIT", "0.1")
+    monkeypatch.setattr(index_commit, "SINK_COMMIT_WAIT_SEC", 0.1)
 
     def run_frame(base_val):
         return spark.createDataFrame(
@@ -613,144 +613,6 @@ def test_lsm_maintain_policy_arms(spark, tmp_path):
         "keep arm must leave the run store un-compacted",
         live,
     )
-
-
-# ------------- object-store commit mode: file_manifest (round 14, #7)
-
-
-def _snapshot_fm(spark, root):
-    from dist_mapreduce_spark.plans.index_commit import index_read
-
-    return sorted(
-        (int(r["vec_id"]), int(r["cell"]))
-        for r in index_read(spark, root).select("vec_id", "cell").collect()
-    )
-
-
-def test_file_manifest_commit_and_pruned_read(spark, tmp_path):
-    """file_manifest mode: the manifest lists the committed file set
-    (partition columns ride as data columns); index_read serves the
-    full set and the cells= pruning reads ONLY the listed files — the
-    manifest-level pruning an object store uses in place of directory
-    PartitionFilters."""
-    from dist_mapreduce_spark.plans.index_commit import (
-        index_files,
-        index_read,
-        read_manifest,
-    )
-
-    root = str(tmp_path / "idx")
-    write_index_base(_mk_df(spark, BASE), root, mode="file_manifest")
-    man = read_manifest(root)
-    assert man["mode"] == "file_manifest" and set(man["files"]) == {
-        "cell=0",
-        "cell=1",
-        "cell=2",
-    }
-    assert _snapshot_fm(spark, root) == sorted(BASE)
-    pruned = index_read(spark, root, cells=[1])
-    assert sorted(int(r["vec_id"]) for r in pruned.collect()) == [
-        i for i in range(30) if i % 3 == 1
-    ]
-    assert set(pruned.inputFiles()) == {
-        "file://" + p if not p.startswith("file:") else p
-        for p in index_files(root, cells=[1])
-    } or len(pruned.inputFiles()) == len(index_files(root, cells=[1]))
-
-
-def test_file_manifest_swap_relists_untouched_cells(spark, tmp_path):
-    """The object-store point: a partial rewrite must carry untouched
-    cells by MANIFEST RE-LISTING — their parquet files stay at their
-    original paths (same inode, same generation dir), with zero data
-    movement and zero per-file metadata ops."""
-    from dist_mapreduce_spark.plans.index_commit import (
-        read_manifest,
-        write_stage,
-    )
-
-    root = str(tmp_path / "idx")
-    write_index_base(_mk_df(spark, BASE), root, mode="file_manifest")
-    before = read_manifest(root)["files"]
-    stage = str(tmp_path / "stage")
-    new0 = [(100, 0), (101, 0)]
-    write_stage(_mk_df(spark, new0), stage, mode="file_manifest")
-    commit_cell_swap(root, stage, [0, 1])  # rewrite 0, empty 1
-    man = read_manifest(root)
-    assert man["gen"] == 2 and man["mode"] == "file_manifest"
-    files = man["files"]
-    assert "cell=1" not in files, "emptied cell must drop from the manifest"
-    assert files["cell=2"] == before["cell=2"], (
-        "untouched cell must be re-listed verbatim (gen-1 paths)"
-    )
-    assert all(p.startswith("gen-1/") for p in files["cell=2"])
-    assert all(p.startswith("gen-2/") for p in files["cell=0"])
-    want = sorted(new0 + [r for r in BASE if r[1] == 2])
-    assert _snapshot_fm(spark, root) == want
-    # gen-1 survives because referenced files live in it (not grace).
-    assert os.path.isdir(os.path.join(root, "gen-1"))
-
-
-def test_file_manifest_kill_mid_swap_old_then_new(spark, tmp_path):
-    """The kill-mid-swap pin, file_manifest mode (round-13 verdict
-    item #7's done-criterion): a crash between two cell moves leaves
-    the old manifest current and the reader on the OLD file set in
-    full; the rerun publishes the new set in full. Never a mix."""
-    from dist_mapreduce_spark.plans.index_commit import write_stage
-
-    root = str(tmp_path / "idx")
-    write_index_base(_mk_df(spark, BASE), root, mode="file_manifest")
-    before = _snapshot_fm(spark, root)
-    new_rows = [(200, 0), (201, 1), (202, 2)]
-    stage = str(tmp_path / "stage")
-    write_stage(_mk_df(spark, new_rows), stage, mode="file_manifest")
-    with pytest.raises(RuntimeError, match="injected crash"):
-        commit_cell_swap(root, stage, [0, 1, 2], _fail_after_moves=2)
-    assert current_generation(root) == 1
-    assert _snapshot_fm(spark, root) == before
-    write_stage(_mk_df(spark, new_rows), stage, mode="file_manifest")
-    commit_cell_swap(root, stage, [0, 1, 2])
-    assert current_generation(root) == 2
-    assert _snapshot_fm(spark, root) == sorted(new_rows)
-    assert not any(
-        d.startswith(".gen-") for d in os.listdir(root)
-    ), os.listdir(root)
-
-
-def test_file_manifest_mode_is_sticky_and_gc_keeps_referenced(
-    spark, tmp_path
-):
-    """A root committed in file_manifest mode stays in it (the
-    manifest mode wins over the argument/env), and GC never deletes a
-    generation dir a referenced file lives in — only generations no
-    current file needs, past the grace window."""
-    from dist_mapreduce_spark.plans.index_commit import (
-        read_manifest,
-        write_stage,
-    )
-
-    root = str(tmp_path / "idx")
-    write_index_base(_mk_df(spark, BASE), root, mode="file_manifest")
-    # Re-publish WITHOUT the explicit mode: must stay file_manifest.
-    write_index_base(_mk_df(spark, BASE[:10]), root)
-    assert read_manifest(root)["mode"] == "file_manifest"
-    assert _snapshot_fm(spark, root) == sorted(BASE[:10])
-    # Swap cell 0 twice; gen-2 keeps cells 1,2's referenced files
-    # through both, while gen-3 (pure-swap generation) is swept once
-    # its cell-0 files are superseded and the grace window passes.
-    for val in (300, 301):
-        stage = str(tmp_path / f"stage{val}")
-        write_stage(
-            _mk_df(spark, [(val, 0)]), stage, mode="file_manifest"
-        )
-        commit_cell_swap(root, stage, [0])
-    man = read_manifest(root)
-    assert man["gen"] == 4
-    assert all(
-        p.startswith("gen-2/") for p in man["files"]["cell=1"]
-    ), man["files"]
-    assert os.path.isdir(os.path.join(root, "gen-2"))
-    want = sorted([(301, 0)] + [r for r in BASE[:10] if r[1] in (1, 2)])
-    assert _snapshot_fm(spark, root) == want
 
 
 def test_lsm_maintain_cms_policy_arms(spark, tmp_path):
@@ -905,7 +767,7 @@ def test_double_takeover_admits_at_most_one_writer(
     with open(lock, "w") as fh:
         fh.write("{}")
     os.utime(lock, (1, 1))  # ancient mtime = crashed writer
-    monkeypatch.setenv("SPARK_GRAFT_COMMIT_LEASE_TTL", "60")
+    monkeypatch.setattr(index_commit, "LEASE_TTL_SEC", 60.0)
 
     barrier = threading.Barrier(4)
     active = []
@@ -961,7 +823,7 @@ def test_takeover_refused_while_live_writer_holds_flock(
     try:
         fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
         os.utime(lock, (1, 1))  # mtime says stale; flock says alive
-        monkeypatch.setenv("SPARK_GRAFT_COMMIT_LEASE_TTL", "60")
+        monkeypatch.setattr(index_commit, "LEASE_TTL_SEC", 60.0)
         with pytest.raises(ConcurrentCommitError, match="flock"):
             with commit_lease(root):
                 pass
@@ -1068,55 +930,6 @@ def test_epoch_guard_ambiguous_unrecorded_stream_requires_opt_in(
     assert read_manifest(root).get("sink_stream") is not None
 
 
-def test_rebuild_honors_explicit_mode_migration(spark, tmp_path):
-    """round-14 advice item #4: a full rebuild with an explicit mode
-    argument is a legitimate mode-migration point — the stated intent
-    wins over the recorded manifest mode, in both directions."""
-    from dist_mapreduce_spark.plans.index_commit import (
-        index_read,
-        read_manifest,
-    )
-
-    root = str(tmp_path / "idx")
-    write_index_base(_mk_df(spark, BASE), root, mode="hardlink")
-    assert read_manifest(root).get("mode") is None  # hardlink
-    # hardlink -> file_manifest
-    write_index_base(_mk_df(spark, BASE), root, mode="file_manifest")
-    man = read_manifest(root)
-    assert man.get("mode") == "file_manifest" and man["files"]
-    got = sorted(
-        (int(r["vec_id"]), int(r["cell"]))
-        for r in index_read(spark, root).collect()
-    )
-    assert got == sorted(BASE)
-    # file_manifest -> hardlink (the round-14 silent-override case)
-    write_index_base(_mk_df(spark, BASE[:9]), root, mode="hardlink")
-    man = read_manifest(root)
-    assert man.get("mode") is None and "files" not in man
-    assert _snapshot(spark, root) == sorted(BASE[:9])
-
-
-def test_index_read_same_schema_in_both_modes(spark, tmp_path):
-    """round-14 advice item #5: file_manifest reads must not leak the
-    internal __part_<col> partition-discovery column — both modes
-    return the same columns for the same index."""
-    from dist_mapreduce_spark.plans.index_commit import index_read
-
-    hl = str(tmp_path / "hl")
-    fm = str(tmp_path / "fm")
-    write_index_base(_mk_df(spark, BASE), hl, mode="hardlink")
-    write_index_base(_mk_df(spark, BASE), fm, mode="file_manifest")
-    df_hl = index_read(spark, hl, cells=[0, 1])
-    df_fm = index_read(spark, fm, cells=[0, 1])
-    assert sorted(df_hl.columns) == sorted(df_fm.columns) == [
-        "cell",
-        "vec_id",
-    ]
-    assert sorted(
-        (int(r["vec_id"]), int(r["cell"])) for r in df_fm.collect()
-    ) == sorted(r for r in BASE if r[1] in (0, 1))
-
-
 def test_index_snapshot_pins_generation_across_commits(spark, tmp_path):
     """round-14 verdict item #4: a pinned reader session survives any
     number of commits — GC keeps the pinned generation alive past the
@@ -1151,36 +964,16 @@ def test_expired_pin_never_blocks_gc_and_refresh_extends(
     root = str(tmp_path / "idx")
     write_index_base(_mk_df(spark, BASE), root)
     snap = index_snapshot(root)
-    monkeypatch.setenv("SPARK_GRAFT_PIN_TTL", "3600")
+    monkeypatch.setattr(index_commit, "PIN_TTL_SEC", 3600.0)
     snap.refresh()
     write_index_base(_mk_df(spark, BASE[:9]), root)
     write_index_base(_mk_df(spark, BASE[:6]), root)
     assert os.path.isdir(os.path.join(root, "gen-1"))  # fresh pin holds
-    monkeypatch.setenv("SPARK_GRAFT_PIN_TTL", "0")
+    monkeypatch.setattr(index_commit, "PIN_TTL_SEC", 0.0)
     write_index_base(_mk_df(spark, BASE[:3]), root)
     assert not os.path.isdir(
         os.path.join(root, "gen-1")
     ), "an expired pin must not block GC"
-
-
-def test_index_snapshot_file_manifest_mode(spark, tmp_path):
-    """Pinned reads work in the object-store commit mode too: the pin
-    records every dir the pinned FILE LIST references, and the read
-    replays that list (schema-parity drop included)."""
-    from dist_mapreduce_spark.plans.index_commit import index_snapshot
-
-    root = str(tmp_path / "fm")
-    write_index_base(_mk_df(spark, BASE), root, mode="file_manifest")
-    snap = index_snapshot(root)
-    for gen_rows in (BASE[:9], BASE[:6], BASE[:3]):
-        write_index_base(_mk_df(spark, gen_rows), root, mode="file_manifest")
-    got = sorted(
-        (int(r["vec_id"]), int(r["cell"]))
-        for r in snap.read(spark, cells=[0, 1, 2]).collect()
-    )
-    assert got == sorted(BASE)
-    assert sorted(snap.read(spark).columns) == ["cell", "vec_id"]
-    snap.release()
 
 
 def test_snapshot_lsm_read_as_of(spark, tmp_path):
@@ -1236,12 +1029,12 @@ def test_sink_lease_wait_deadline_is_configurable(
 
     root = str(tmp_path / "lsm")
     lsm_run_dir(root)
-    monkeypatch.setenv("SPARK_GRAFT_SINK_LEASE_WAIT", "0.6")
+    monkeypatch.setattr(index_commit, "SINK_LEASE_WAIT_SEC", 0.6)
     with commit_lease(root):
         t0 = _t.monotonic()
         with pytest.raises(ConcurrentCommitError):
             _record_sink_stream(root, "sid-test")
-        assert _t.monotonic() - t0 < 10, "deadline must honor the env"
+        assert _t.monotonic() - t0 < 10, "deadline must honor the knob"
 
 
 def test_pluggable_backend_conditional_put_lifecycle(spark, tmp_path):
@@ -1317,12 +1110,12 @@ def test_pluggable_backend_conditional_put_lifecycle(spark, tmp_path):
     set_commit_backend(backend)
     try:
         root = str(tmp_path / "idx")
-        write_index_base(_mk_df(spark, BASE), root, mode="file_manifest")
+        write_index_base(_mk_df(spark, BASE), root)
         new0 = [(700, 0)]
         from dist_mapreduce_spark.plans.index_commit import write_stage
 
         stage = str(tmp_path / "stage")
-        write_stage(_mk_df(spark, new0), stage, ("cell",), "file_manifest")
+        write_stage(_mk_df(spark, new0), stage)
         commit_cell_swap(root, stage, [0])
         assert backend.flips >= 2, "lifecycle must publish via the backend"
         from dist_mapreduce_spark.plans.index_commit import index_read
@@ -1352,20 +1145,10 @@ def test_lsm_chaos_concurrent_sinks_and_compactions(spark, tmp_path):
     story (snapshot-first watermark, pre+post-flip carry-over,
     looped sink recheck) under scheduler-chosen timings instead of
     injected ones; the seed is fixed so a failure reproduces."""
-    _lsm_chaos(spark, tmp_path, mode=None)
+    _lsm_chaos(spark, tmp_path)
 
 
-def test_lsm_chaos_file_manifest_mode(spark, tmp_path):
-    """The same chaos drive with the store committed in file_manifest
-    mode: the manifest-relisting carry-over, the addendum flip, and
-    the directory-supersedes-manifest read merge must hold under
-    scheduler-chosen sink/compactor timings too — carried-and-then-
-    republished runs are the exact double-count hazard the SUM fold
-    detects."""
-    _lsm_chaos(spark, tmp_path, mode="file_manifest")
-
-
-def _lsm_chaos(spark, tmp_path, mode):
+def _lsm_chaos(spark, tmp_path):
     import random
     import threading
 
@@ -1377,7 +1160,7 @@ def _lsm_chaos(spark, tmp_path, mode):
     )
 
     root = str(tmp_path / "lsm")
-    lsm_run_dir(root, mode=mode)
+    lsm_run_dir(root)
     rng = random.Random(1507)
     n_batches = 10
     fold = lambda df: df.groupBy("k").agg(F.sum("v").alias("v"))
@@ -1550,347 +1333,3 @@ def test_randomized_crash_points_never_tear_a_generation(spark, tmp_path):
             current = expected
     finally:
         ic.set_commit_backend(prev)
-
-
-def test_migration_gc_graces_all_outgoing_manifest_dirs(spark, tmp_path):
-    """Round-15 (review finding): a file_manifest manifest can
-    reference files across MANY generation dirs; the one-cycle reader
-    grace must cover that whole set when the next commit (including
-    an explicit fm→hardlink migration) lands — not just gen-<cur> —
-    or a reader resolving the outgoing file list loses files
-    mid-scan. The NEXT commit after that sweeps them."""
-    from dist_mapreduce_spark.plans.index_commit import (
-        read_manifest,
-        write_stage,
-    )
-
-    root = str(tmp_path / "fm")
-    write_index_base(_mk_df(spark, BASE), root, mode="file_manifest")
-    # Two cell swaps: the manifest now references files in gen-1
-    # (untouched cells, carried by re-listing) AND gen-2/gen-3.
-    for step, cell in enumerate((0, 1)):
-        stage = str(tmp_path / f"stage{step}")
-        write_stage(
-            _mk_df(spark, [(900 + step, cell)]),
-            stage,
-            ("cell",),
-            "file_manifest",
-        )
-        commit_cell_swap(root, stage, [cell])
-    man = read_manifest(root)
-    referenced = {p.split(os.sep, 1)[0] for ps in man["files"].values() for p in ps}
-    assert "gen-1" in referenced, "precondition: old gens still referenced"
-    # Explicit migration to hardlink mode: ONE commit later, every
-    # dir the outgoing fm manifest referenced must still exist.
-    write_index_base(_mk_df(spark, BASE[:6]), root, mode="hardlink")
-    for d in referenced:
-        assert os.path.isdir(os.path.join(root, d)), (
-            f"{d} was referenced by the outgoing manifest and must"
-            " survive one grace cycle"
-        )
-    # The commit after that sweeps them.
-    write_index_base(_mk_df(spark, BASE[:3]), root)
-    assert not os.path.isdir(os.path.join(root, "gen-1"))
-    assert _snapshot(spark, root) == sorted(BASE[:3])
-
-
-# ---------------- LSM run stores in file_manifest mode (round 15)
-
-
-def _fm_run_frame(spark, b):
-    return spark.createDataFrame(
-        [(k, b * 10 + k) for k in range(3)], "k int, v long"
-    )
-
-
-def _fm_fold():
-    return lambda df: df.groupBy("k").agg(F.sum("v").alias("v"))
-
-
-def _fm_drained(spark, root):
-    from dist_mapreduce_spark.plans.index_commit import lsm_read
-
-    return sorted(
-        (int(r["k"]), int(r["v"]))
-        for r in _fm_fold()(
-            lsm_read(spark, root).drop("ingest_batch")
-        ).collect()
-    )
-
-
-def test_lsm_file_manifest_carryover_relists_instead_of_copying(
-    spark, tmp_path
-):
-    """round-14 verdict item #6: on a file_manifest LSM store a late
-    run landing in the residual window (between the carry-over listing
-    and the flip) survives by MANIFEST RE-LISTING — its parquet files
-    stay byte-for-byte where the sink wrote them, in the OLD
-    generation dir, with the new manifest pointing at them (zero data
-    movement, the object-store shape) — and reads lose no rows for
-    the non-idempotent SUM fold."""
-    import os
-
-    from dist_mapreduce_spark.plans.index_commit import (
-        index_data_dir,
-        lsm_live_runs,
-        lsm_compact,
-        lsm_run_dir,
-        lsm_write_run,
-        read_manifest,
-    )
-
-    root = str(tmp_path / "lsmfm")
-    lsm_run_dir(root, mode="file_manifest")
-    assert (read_manifest(root) or {}).get("mode") == "file_manifest"
-    for b in range(2):
-        lsm_write_run(_fm_run_frame(spark, b), root, b)
-
-    def sneak_in_run_2():
-        old = index_data_dir(root)
-        (
-            _fm_run_frame(spark, 2)
-            .withColumn("ingest_batch", F.lit(2))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(old)
-        )
-
-    lsm_compact(
-        spark, root, _fm_fold(),
-        _between_carryover_and_flip=sneak_in_run_2,
-    )
-    man = read_manifest(root)
-    assert man["gen"] == 2 and man.get("mode") == "file_manifest"
-    # The carried run is referenced IN PLACE: every one of its listed
-    # files still lives under gen-1 (no copy into gen-2), and all
-    # listed paths exist.
-    carried = man["runs"]["2"]
-    assert carried and all(p.startswith("gen-1/") for p in carried)
-    assert all(os.path.isfile(os.path.join(root, p)) for p in carried)
-    assert not os.path.isdir(
-        os.path.join(root, "gen-2", "ingest_batch=2")
-    ), "fm carry-over must not materialize the run in the new gen"
-    assert 2 in lsm_live_runs(root)
-    want = sorted((k, (0 + 10 + 20) + 3 * k) for k in range(3))
-    assert _fm_drained(spark, root) == want
-    # The NEXT compact folds the carried (cross-generation) run too,
-    # and GC then sweeps its now-unreferenced source generation.
-    lsm_compact(spark, root, _fm_fold())
-    assert lsm_live_runs(root) == [-1]
-    assert _fm_drained(spark, root) == want
-    # One more cycle releases the grace on gen-1.
-    lsm_write_run(_fm_run_frame(spark, 5), root, 5)
-    lsm_compact(spark, root, _fm_fold())
-    assert not os.path.isdir(os.path.join(root, "gen-1"))
-
-
-def test_lsm_fm_kill_mid_compact_then_retry(spark, tmp_path):
-    """Kill-mid-compact pinned in file_manifest mode (the verdict's
-    'Done' condition): a crash before the flip leaves the old run set
-    current and complete; the retry publishes cleanly."""
-    import pytest as _pytest
-
-    from dist_mapreduce_spark.plans.index_commit import (
-        lsm_compact,
-        lsm_live_runs,
-        lsm_run_dir,
-        lsm_write_run,
-        read_manifest,
-    )
-
-    root = str(tmp_path / "lsmfmk")
-    lsm_run_dir(root, mode="file_manifest")
-    for b in range(3):
-        lsm_write_run(_fm_run_frame(spark, b), root, b)
-    want = sorted((k, (0 + 10 + 20) + 3 * k) for k in range(3))
-    with _pytest.raises(RuntimeError, match="injected crash"):
-        lsm_compact(spark, root, _fm_fold(), _fail_before_flip=True)
-    assert read_manifest(root)["gen"] == 1, "old manifest must stay current"
-    assert sorted(lsm_live_runs(root)) == [0, 1, 2]
-    assert _fm_drained(spark, root) == want
-    lsm_compact(spark, root, _fm_fold())
-    assert lsm_live_runs(root) == [-1]
-    assert _fm_drained(spark, root) == want
-
-
-def test_lsm_fm_republished_run_reads_once(spark, tmp_path):
-    """A carried run the sink then REPUBLISHES into the new generation
-    (the live-writer recheck path) exists in two physical places —
-    the old gen files the manifest lists and the new gen directory.
-    The reader must merge exactly ONE copy (directory supersedes
-    manifest), or the SUM fold double-counts; and replay ghosts at or
-    under the watermark stay dropped."""
-    from dist_mapreduce_spark.plans.index_commit import (
-        index_data_dir,
-        lsm_compact,
-        lsm_read,
-        lsm_run_dir,
-        lsm_write_run,
-        read_manifest,
-    )
-
-    root = str(tmp_path / "lsmfmd")
-    lsm_run_dir(root, mode="file_manifest")
-    for b in range(2):
-        lsm_write_run(_fm_run_frame(spark, b), root, b)
-
-    def sneak_in_run_2():
-        (
-            _fm_run_frame(spark, 2)
-            .withColumn("ingest_batch", F.lit(2))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(index_data_dir(root))
-        )
-
-    lsm_compact(
-        spark, root, _fm_fold(),
-        _between_carryover_and_flip=sneak_in_run_2,
-    )
-    assert "2" in read_manifest(root)["runs"]
-    # The sink's replay republishes batch 2 wholesale into the NEW
-    # generation (what lsm_write_run's recheck does on a raced flip).
-    lsm_write_run(_fm_run_frame(spark, 2), root, 2)
-    rows = lsm_read(spark, root).filter(F.col("ingest_batch") == 2)
-    assert rows.count() == 3, "republished run must be read exactly once"
-    want = sorted((k, (0 + 10 + 20) + 3 * k) for k in range(3))
-    assert _fm_drained(spark, root) == want
-    # Replay ghost: a batch at or under the watermark re-lands (same
-    # stream semantics) — readers must keep ignoring it.
-    lsm_write_run(_fm_run_frame(spark, 1), root, 1)
-    assert _fm_drained(spark, root) == want
-
-
-def test_lsm_maintain_green_in_file_manifest_mode(spark, monkeypatch):
-    """The verdict's 'Done' bar: q_lsm_maintain (the maintenance
-    policy over the dedup run store) must produce the SAME verdicts
-    with the store committed in file_manifest mode as in the default
-    hardlink mode — the commit mode is storage plumbing, never
-    semantics."""
-    import shutil
-
-    from dist_mapreduce_spark.plans.index_commit import read_manifest
-    from dist_mapreduce_spark.plans.llm_pipeline import (
-        _dedup_maintain_paths,
-        q_lsm_maintain,
-    )
-    from tests.conftest import SF_SMOKE
-
-    def rows_of(df):
-        return sorted(
-            (int(r["doc_id"]), r["status"], r["canonical_id"], r["decision"])
-            for r in df.collect()
-        )
-
-    want = rows_of(q_lsm_maintain(spark, SF_SMOKE))  # hardlink run
-    stage, runs = _dedup_maintain_paths(SF_SMOKE)
-    for d in (stage, runs):
-        shutil.rmtree(d, ignore_errors=True)
-    monkeypatch.setenv("SPARK_GRAFT_COMMIT_MODE", "file_manifest")
-    got = rows_of(q_lsm_maintain(spark, SF_SMOKE))
-    man = read_manifest(runs)
-    assert man is not None and man.get("mode") == "file_manifest"
-    assert man["gen"] >= 2 and "runs" in man, "the policy compacted in fm mode"
-    assert got == want
-
-
-def test_snapshot_lsm_read_as_of_fm(spark, tmp_path):
-    """Pinned reader snapshots hold on file_manifest LSM stores too:
-    the pin freezes the run FILE LISTS of pin time, so a compaction
-    AND fresh ingest behind the pin stay invisible, even though the
-    pinned runs' files span generations."""
-    from dist_mapreduce_spark.plans.index_commit import (
-        index_snapshot,
-        lsm_compact,
-        lsm_run_dir,
-        lsm_write_run,
-    )
-
-    root = str(tmp_path / "lsmfms")
-    lsm_run_dir(root, mode="file_manifest")
-    for b in range(2):
-        lsm_write_run(_fm_run_frame(spark, b), root, b)
-    want_pin = sorted((k, 10 + 2 * k) for k in range(3))
-    with index_snapshot(root) as pin:
-        lsm_compact(spark, root, _fm_fold())
-        lsm_write_run(_fm_run_frame(spark, 2), root, 2)
-        got = sorted(
-            (int(r["k"]), int(r["v"]))
-            for r in _fm_fold()(
-                pin.lsm_read(spark).drop("ingest_batch")
-            ).collect()
-        )
-        assert got == want_pin, "pinned view must be as-of pin time"
-    want_live = sorted((k, 30 + 3 * k) for k in range(3))
-    assert _fm_drained(spark, root) == want_live
-
-
-def test_stream_lsm_maintain_compacts_mid_stream_fm(spark, monkeypatch):
-    """The live-stream maintenance composition on a file_manifest
-    store: the mid-stream compaction publishes by manifest re-listing
-    and later batches land in the new generation via the sink's
-    per-batch resolution — drained verdicts stay bit-equal to the
-    plain ingest row's, and the store's physical walk matches the
-    hardlink twin's (folded base + post-compact run above the
-    watermark)."""
-    from dist_mapreduce_spark.plans.index_commit import (
-        lsm_folded_through,
-        lsm_live_runs,
-        read_manifest,
-    )
-    from dist_mapreduce_spark.plans.llm_pipeline import (
-        _dedup_live_maint_paths,
-        q_stream_dedup_incremental,
-        q_stream_lsm_maintain,
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_COMMIT_MODE", "file_manifest")
-    got = sorted(
-        tuple(r) for r in q_stream_lsm_maintain(spark, SF_SMOKE).collect()
-    )
-    _stage, _ckpt, runs = _dedup_live_maint_paths(SF_SMOKE)
-    man = read_manifest(runs)
-    assert man is not None and man.get("mode") == "file_manifest"
-    assert lsm_folded_through(runs) == 1, "compaction must fire at batch 1"
-    assert lsm_live_runs(runs) == [-1, 2], lsm_live_runs(runs)
-    monkeypatch.delenv("SPARK_GRAFT_COMMIT_MODE")
-    plain = sorted(
-        tuple(r)
-        for r in q_stream_dedup_incremental(spark, SF_SMOKE).collect()
-    )
-    assert got == plain
-
-
-def test_lsm_run_dir_mode_validation_and_conflict_refusal(
-    spark, tmp_path, monkeypatch
-):
-    """Review fixes (round 15): an unknown mode string raises even on
-    an ALREADY-initialized store (it used to be silently ignored once
-    the init branch was skipped), and an explicit mode conflicting
-    with the recorded one is refused instead of ignored — LSM stores
-    migrate by compact-into-a-fresh-root, not silently in place."""
-    import pytest as _pytest
-
-    from dist_mapreduce_spark.plans.index_commit import (
-        lsm_run_dir,
-        lsm_write_run,
-    )
-
-    # The ambient env must not leak into the 'hardlink default' init
-    # below (the fm gate sweeps export this very variable).
-    monkeypatch.delenv("SPARK_GRAFT_COMMIT_MODE", raising=False)
-    root = str(tmp_path / "lsmmv")
-    lsm_run_dir(root, mode="file_manifest")
-    lsm_write_run(_fm_run_frame(spark, 0), root, 0)
-    with _pytest.raises(ValueError, match="unknown commit mode"):
-        lsm_run_dir(root, mode="file_manifes")  # typo, existing store
-    with _pytest.raises(ValueError, match="conflicts"):
-        lsm_run_dir(root, mode="hardlink")
-    assert lsm_run_dir(root, mode="file_manifest")  # matching: fine
-    assert lsm_run_dir(root)  # unspecified: recorded mode, fine
-    root2 = str(tmp_path / "lsmmv2")
-    lsm_run_dir(root2)  # hardlink default
-    with _pytest.raises(ValueError, match="conflicts"):
-        lsm_run_dir(root2, mode="file_manifest")

@@ -677,7 +677,8 @@ def test_stream_serve_topk_plan_partition_filters_per_batch(spark):
     """Round-11 plan pin: EVERY serving micro-batch's executed plan
     must prune the materialized index by the batch's probed cells —
     a literal `cell IN (...)` PartitionFilter on the index scan, per
-    batch, never a full-index scan."""
+    batch, never a full-index scan — and must be the final AQE plan of
+    the batch's write."""
     from dist_mapreduce_spark.plans import registry
     from dist_mapreduce_spark.streaming.windows import STREAM_PLAN_LOG
 
@@ -689,6 +690,8 @@ def test_stream_serve_topk_plan_partition_filters_per_batch(spark):
     ]
     assert len(batch_plans) >= 2, "expected one plan per micro-batch"
     for p in batch_plans:
+        # The plan of the write that ran, not of an unexecuted frame.
+        assert "isFinalPlan=true" in p, p[:500]
         assert "PartitionFilters" in p and "cell" in p.split(
             "PartitionFilters"
         )[1][:200], p[:500]

@@ -77,6 +77,9 @@ def _release_arenas() -> None:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    from query_names import known_queries
+
+    qs = known_queries(only)
 
     import __spark_entry__ as e
     from dist_mapreduce_spark.session import get_spark
@@ -124,7 +127,7 @@ def main() -> int:
             )
         return c
 
-    qs, oracles = e.queries(), e.oracle_sql()
+    oracles = e.oracle_sql()
     failures = []
     n_run = 0
     for name, fn in qs.items():

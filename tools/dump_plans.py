@@ -19,14 +19,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> int:
     sf_dir, outdir, tag, *names = sys.argv[1:]
-    import __spark_entry__ as e
+    from query_names import known_queries
 
-    qs = e.queries()
-    unknown = [n for n in names if n not in qs]
-    if unknown:
-        print(f"unknown queries: {unknown}; valid names:", file=sys.stderr)
-        print("\n".join(sorted(qs)), file=sys.stderr)
-        return 2
+    qs = known_queries(names)
     from dist_mapreduce_spark.session import get_spark
 
     spark = get_spark("dump_plans")

@@ -136,12 +136,14 @@ def audit(name: str, fn, spark, sf_dir: str) -> dict:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    from query_names import known_queries
 
-    import __spark_entry__ as e
+    qs = known_queries(only)
+
     from dist_mapreduce_spark.session import get_spark
 
     spark = get_spark("explain_audit")
-    for name, fn in e.queries().items():
+    for name, fn in qs.items():
         if only and name not in only:
             continue
         if name.startswith("stream_"):

@@ -28,14 +28,15 @@ from explain_audit import parse_plan  # noqa: E402
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    from query_names import known_queries
 
-    import __spark_entry__ as e
+    qs = known_queries(only)
 
     from dist_mapreduce_spark.session import get_spark
     from dist_mapreduce_spark.streaming.windows import STREAM_PLAN_LOG
 
     spark = get_spark("stream_explain")
-    for name, fn in e.queries().items():
+    for name, fn in qs.items():
         if not name.startswith("stream_"):
             continue
         if only and name not in only:
