@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from dist_mapreduce_spark.functions.vectors import cosine_duckdb_sql, cosine_spark_sql
 from dist_mapreduce_spark.plans.registry import query
+from dist_mapreduce_spark.session import spread
 from dist_mapreduce_spark.plans.similarity import (
     IVF_CELLS_CTE,
     assign_cells,
@@ -86,16 +87,13 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings")
 
 
-def _residency_explode(
-    spark: SparkSession, emb: DataFrame, cent_rows: list
-) -> DataFrame:
+def _residency_explode(emb: DataFrame, cent_rows: list) -> DataFrame:
     """(vec_id, embedding, rcell): each vector exploded to its
     KNN_RESIDENCY nearest cells. The top-R ranking runs as one numpy
     GEMM per Arrow batch (probe_cells — the oracle's rkd prefix,
     stable-argsort tiebreak, exact rescore on near-ties)."""
-    spread = emb.repartition(spark.sparkContext.defaultParallelism)
     return probe_cells(
-        spread, cent_rows, KNN_RESIDENCY, out_col="rcell"
+        spread(emb), cent_rows, KNN_RESIDENCY, out_col="rcell"
     ).select("vec_id", "embedding", "rcell")
 
 
@@ -152,7 +150,7 @@ def knn_res_frame(
     if hit is not None:
         _RES_MEMO.move_to_end(key)  # LRU: refresh recency on hit
         return hit
-    res0 = _residency_explode(spark, emb, cent_rows)
+    res0 = _residency_explode(emb, cent_rows)
     wc = Window.partitionBy("rcell").orderBy("vec_id")
     rpos = res0.withColumn("gpos", F.row_number().over(wc) - 1)
     rsplit = (
@@ -1461,7 +1459,7 @@ def q_knn_graph_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent_rows = ivf_cent_rows(reps)
     if not cent_rows:
         return empty
-    res0 = _residency_explode(spark, reps, cent_rows)
+    res0 = _residency_explode(reps, cent_rows)
     # Same vertex-complete hot-cell sub-split as q_knn_graph.
     wc = Window.partitionBy("rcell").orderBy("vec_id")
     rpos = res0.withColumn("gpos", F.row_number().over(wc) - 1)

@@ -5,20 +5,22 @@ source string, n_chars bigint).
 
 Parity approach: integer counts and md5-derived hashes (identical in
 every engine); double arithmetic only as single shared expression
-trees; minhash constants generated once in Python and inlined into both
-the Spark plan and the DuckDB oracle.
+trees; minhash constants generated once in Python, inlined into the
+DuckDB oracle and closed over by the MinHash kernel.
 """
 
 from __future__ import annotations
 
 import os
 import random
+import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dist_mapreduce_spark.operators import text_analysis as ta
 from dist_mapreduce_spark.plans.registry import query
+from dist_mapreduce_spark.session import spread
 from dist_mapreduce_spark.sources.tables import load_table
 
 
@@ -38,26 +40,6 @@ _D_TOKS = f"list_filter(string_split_regex(text, '{_D_WS}+'), w -> w <> '')"
 #: oracles that join on it; must stay the twin of
 #: ta.normalized_fingerprint.
 _D_FP = f"md5(regexp_replace(lower(trim(text)), '{_D_WS}+', ' ', 'g'))"
-
-
-def _word_shingles(arr, k: int = 3):
-    """Distinct k-word shingles of a token array, SAFE for arrays
-    shorter than k under ANSI mode: Spark's sequence(1, 0) is
-    DESCENDING (yields [1, 0], not empty), so the window count is
-    floored at one dummy window whose overshooting indices go through
-    null-safe try_element_at (plain element_at throws
-    INVALID_ARRAY_INDEX on an empty/short doc — a crash the driver
-    corpus never triggers but any real corpus with a blank document
-    does), and slice(..., 1, n) then drops the dummy. Matches DuckDB's
-    naturally empty range(1, n+1)."""
-    n = F.greatest(F.size(arr) - (k - 1), F.lit(0))
-    win = F.transform(
-        F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
-        lambda i: F.concat_ws(
-            " ", *[F.try_element_at(arr, i + F.lit(o)) for o in range(k)]
-        ),
-    )
-    return F.array_distinct(F.slice(win, F.lit(1), n))
 
 
 # ------------------------------------------------------------ text stats
@@ -394,7 +376,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -------------------------------------------------------------- minhash
 
 # Deterministic universal-hash parameters for MinHash, generated once
-# with a fixed seed and inlined into BOTH plans (Spark + oracle).
+# with a fixed seed and used by BOTH engines (kernel + oracle).
 _rng = random.Random(20260813)
 N_HASHES = 16
 # Universal hash family h_i(x) = (a_i * (x mod p) + b_i) mod p over the
@@ -413,6 +395,7 @@ MINHASH_AB = [
 # recall at jaccard ≥ 0.5; precision comes from the exact-verify stage.
 N_BANDS, ROWS_PER_BAND = 8, 2
 assert N_BANDS * ROWS_PER_BAND == N_HASHES, "banding must tile the signature"
+assert ROWS_PER_BAND * 31 <= 63, "a band key packs its minhashes 31 bits each"
 JACCARD_THRESHOLD = 0.1  # low: surface weak near-dups in the synthetic corpus
 # Skew guard for the band self-join: a bucket of b identical-signature
 # docs contributes b(b-1)/2 candidate pairs, so one boilerplate bucket
@@ -482,86 +465,100 @@ def _duck_minhash_oracle(docs_src: str = "documents") -> str:
     )
 
 
+#: The kernel's output: one row per document that has a shingle.
+_SIG_SCHEMA = "doc_id long, harr array<long>, bk array<long>"
+
+
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """The pinned (doc_id, harr, bk) frame of a (doc_id, text, …)
+    frame: ``harr`` is the sorted distinct 48-bit shingle hashes (the
+    oracle's ``SELECT DISTINCT doc_id, h``) and ``bk`` the N_BANDS band
+    keys. Every shingle hasher in the package reads this frame.
+
+    One Arrow stage, spread over the session's cores. Per document:
+    whitespace tokens (ta.WS_CHARS, empties dropped), the distinct word
+    3-shingles joined by one space, h = the first 12 hex digits of the
+    shingle's UTF-8 md5, then the N_HASHES universal minhashes over
+    ``harr`` — exact in int64, since a_i < 2^31 and h mod p < 2^31.
+    A band key packs the band's ROWS_PER_BAND minhashes (each < 2^31)
+    31 bits apiece, so it is injective on them: two docs share a key
+    iff they share the oracle's md5-of-minhashes band hash, md5
+    collisions aside. Docs with NULL text or fewer than 3 tokens emit
+    no row (they have no shingle, so they never band, size or pair); a
+    NULL doc_id stays NULL through Arrow and never pairs."""
+    import numpy as np
+
+    a, b = np.asarray(MINHASH_AB, dtype=np.int64).T
+    ws = re.compile(f"[{ta.WS_CHARS}]+")
+
+    def _sign(batches):
+        import hashlib
+
+        import pyarrow as pa
+
+        for batch in batches:
+            keep, sizes, hashes = [], [], []
+            for i, text in enumerate(batch.column("text").to_pylist()):
+                if text is None:
+                    continue
+                toks = [w for w in ws.split(text) if w]
+                shingles = {
+                    " ".join(toks[j:j + 3]) for j in range(len(toks) - 2)
+                }
+                if not shingles:
+                    continue
+                h = np.unique(np.fromiter(
+                    (
+                        int.from_bytes(
+                            hashlib.md5(s.encode("utf-8")).digest()[:6], "big"
+                        )
+                        for s in shingles
+                    ),
+                    np.int64,
+                    len(shingles),
+                ))
+                keep.append(i)
+                sizes.append(len(h))
+                hashes.append(h)
+            if not keep:
+                continue
+            offsets = np.zeros(len(keep) + 1, dtype=np.int32)
+            np.cumsum(sizes, out=offsets[1:])
+            flat = np.concatenate(hashes)
+            hm = flat % MINHASH_P
+            mh = np.stack([
+                np.minimum.reduceat((a[i] * hm + b[i]) % MINHASH_P, offsets[:-1])
+                for i in range(N_HASHES)
+            ])
+            bk = mh[0::ROWS_PER_BAND]
+            for r in range(1, ROWS_PER_BAND):
+                bk = (bk << 31) | mh[r::ROWS_PER_BAND]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("doc_id").take(pa.array(keep, pa.int32())),
+                    pa.ListArray.from_arrays(offsets, flat),
+                    pa.ListArray.from_arrays(
+                        np.arange(0, N_BANDS * len(keep) + 1, N_BANDS, dtype=np.int32),
+                        bk.T.ravel(),
+                    ),
+                ],
+                names=["doc_id", "harr", "bk"],
+            )
+
+    return (
+        spread(docs.select("doc_id", "text"))
+        .mapInArrow(_sign, _SIG_SCHEMA)
+        .cache()
+    )
+
+
 def minhash_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """The MinHash + LSH banding near-dup pipeline over an arbitrary
     (doc_id, text, …) frame — shared by dedup_minhash (full corpus) and
     dedup_minhash_collapsed (exact-dup representatives only)."""
-    # Materialize the token array as a real column first: inlining the
-    # split expression into every element_at makes codegen re-run the
-    # regex split per index access — O(n²) regex work per document.
-    tok_df = docs.select("doc_id", ta.ws_tokens(F.col("text")).alias("t"))
-    toks = F.col("t")
-    shingles = _word_shingles(toks)
-    # Round 15 (guide §2.4): the materialized intermediate is ONE row
-    # per document — the distinct-shingle 48-bit hash ARRAY — not the
-    # exploded (doc_id, h) table (~shingles-per-doc × larger, the
-    # "30× corpus" intermediate docs/SCALE.md used to budget for).
-    # Everything downstream derives map-side from this compact frame:
-    # the 16 minhashes are per-row array folds (no aggregation, no
-    # exchange — the old groupBy(doc_id) shuffle and its second cache
-    # barrier are gone), set sizes are size(harr), and the
-    # intersection join's sides re-explode the cached array on the fly
-    # (the md5+conv hashing — the measured 1.2 s of a 3.7 s cold run at
-    # sf0.1 — still happens exactly once per shingle, inside the pin).
-    # Docs with no shingles (< 3 tokens) are filtered here: they had no
-    # rows in the old exploded table, so they never banded, never sized,
-    # never paired — identical membership.
-    # NOTE the filter sits ABOVE the pin, not inside it: below the pin
-    # it collapses into the projection and Catalyst inlines the whole
-    # tokenize→shingle→md5 chain into BOTH the predicate and the output
-    # column — the full hashing pass evaluated twice (measured 12 s vs
-    # 1.2 s at sf0.1). Above the pin it is a size() check on cached
-    # rows.
-    doc_sh = (
-        tok_df.select("doc_id", shingles.alias("sh"))
-        .select(
-            "doc_id",
-            F.expr(
-                "transform(sh, s ->"
-                " cast(conv(substr(md5(s), 1, 12), 16, 10) as bigint))"
-            ).alias("harr"),
-        )
-        .cache()
-        .filter(F.size("harr") > 0)
-    )
-    # Per-doc minhash signature, map-side: min over the SAME universal
-    # hash of the SAME 48-bit values the old shingle-table aggregation
-    # folded — array_min and the MIN aggregate are the same fold, so
-    # signatures (and every band hash) are bit-identical.
-    mh = doc_sh.select(
-        "doc_id",
-        *[
-            F.array_min(
-                F.expr(
-                    f"transform(harr, x ->"
-                    f" ({a}L * (x % {MINHASH_P}L) + {b}L) % {MINHASH_P}L)"
-                )
-            ).alias(f"mh{i}")
-            for i, (a, b) in enumerate(MINHASH_AB)
-        ],
-    )
-    # All 8 band signatures in ONE pass: explode an array of
-    # (band_id, band_hash) structs. A per-band union would re-evaluate
-    # the whole shingle→minhash pipeline N_BANDS times.
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        "_",
-                        *[
-                            F.col(f"mh{band * ROWS_PER_BAND + r}").cast("string")
-                            for r in range(ROWS_PER_BAND)
-                        ],
-                    )
-                ).alias("band_hash"),
-            )
-            for band in range(N_BANDS)
-        ]
-    )
-    bands = mh.select("doc_id", F.explode(band_structs).alias("b")).select(
-        "doc_id", F.col("b.band_id").alias("band_id"), F.col("b.band_hash").alias("band_hash")
+    sig = minhash_signatures(docs)
+    bands = sig.select(
+        "doc_id", F.posexplode("bk").alias("band_id", "band_hash")
     )
     # Bucket-size cap (see BAND_BUCKET_CAP): deterministic keep-lowest
     # sample per band bucket. The row_number shuffles on the same
@@ -576,6 +573,7 @@ def minhash_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
         .filter(F.col("rn") <= BAND_BUCKET_CAP)
         .drop("rn")
     )
+
     # In-bucket pair generation (round 15, guide §2.4 "remove shuffles
     # outright"): the former a×b self-join on (band_id, band_hash)
     # re-planned the ENTIRE capped-band pipeline on its broadcast build
@@ -604,35 +602,35 @@ def minhash_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
         .select("p.doc_a", "p.doc_b")
         .distinct()
     )
-    # Exact-verify stage as a per-pair ARRAY INTERSECTION (round 16,
-    # guide §2.3/§3 — the round-15 verdict's residual-audit item): join
-    # each candidate pair to the two compact harr rows and compute
-    # |A∩B| = size(array_intersect) map-side, instead of re-exploding
-    # BOTH sides into a corpus×30 (doc_id, h) table and shuffling it
-    # keyed on h + two more joins to attach set sizes. The candidate
-    # frame is bounded by banding + the bucket cap, so AQE broadcasts
-    # it and the verify stage never shuffles the shingle arrays at all.
-    # Value-identical: harr's entries are distinct per doc (distinct
-    # shingle strings; a within-doc 48-bit hash collision is the only
-    # way to a duplicate, and the round-15 exploded path already relied
-    # on its absence — WITH a duplicate its multiplicity-counting join
-    # would have failed the oracle's DISTINCT-h semantics, which every
-    # gate SF passes), so size(array_intersect) equals the old
-    # equi-join match count and size(harr) the old per-doc set size.
-    # A (theoretical) zero-common candidate now scores jaccard 0.0 and
-    # is dropped by the same threshold filter that dropped it before
-    # (the old inner join simply never emitted it).
-    ha = doc_sh.select(F.col("doc_id").alias("da"), F.col("harr").alias("ha"))
-    hb = doc_sh.select(F.col("doc_id").alias("db"), F.col("harr").alias("hb"))
+    # Exact verify as a per-pair array intersection: join each candidate
+    # pair to its two compact harr rows and compute |A∩B| map-side. The
+    # candidate frame is bounded by banding and the bucket cap, so AQE
+    # broadcasts it and the shingle arrays never shuffle. harr is a
+    # sorted set by construction, so size(array_intersect) is |A∩B| and
+    # size(harr) is |A|; a zero-common candidate scores 0.0 and falls
+    # to the threshold.
+    # (common, na, nb) come out of a one-row Generate so that the
+    # intersection runs ONCE per pair: computed in a plain projection,
+    # predicate pushdown inlines the jaccard filter into the join
+    # condition (numerator and denominator) and the projection
+    # evaluates it a third time. Pushdown does not cross a Generate.
+    ha = sig.select(F.col("doc_id").alias("da"), F.col("harr").alias("ha"))
+    hb = sig.select(F.col("doc_id").alias("db"), F.col("harr").alias("hb"))
     jac = (
         cand.join(ha, F.col("da") == F.col("doc_a"))
         .join(hb, F.col("db") == F.col("doc_b"))
         .select(
             "doc_a",
             "doc_b",
-            F.size(F.array_intersect("ha", "hb")).cast("long").alias("common"),
-            F.size("ha").cast("long").alias("na"),
-            F.size("hb").cast("long").alias("nb"),
+            F.inline(
+                F.array(
+                    F.struct(
+                        F.size(F.array_intersect("ha", "hb")).cast("long").alias("common"),
+                        F.size("ha").cast("long").alias("na"),
+                        F.size("hb").cast("long").alias("nb"),
+                    )
+                )
+            ),
         )
         .select(
             "doc_a",
@@ -651,9 +649,11 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH banding near-dup detection, the 100 TB dedup path:
 
     1. word 3-shingles per doc (distinct), hashed to 48-bit ints;
-    2. 16 universal minhashes per doc — ONE aggregation, not 16 passes;
+    2. 16 universal minhashes per doc, in the same Arrow pass
+       (minhash_signatures);
     3. 8 bands × 2 rows (N_BANDS × ROWS_PER_BAND, asserted to tile
-       N_HASHES); band signature = md5 of the band's minhashes;
+       N_HASHES); band key = the band's minhashes packed into one
+       long (the oracle's md5 of them buckets the same docs);
     4. candidate pairs = docs sharing any (band_id, band_hash) — an
        equi-join on the band key, which is the shuffle-friendly trick:
        candidate generation is a hash join, never an all-pairs product.
@@ -904,29 +904,12 @@ def q_dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the dedup path itself — sampling the probe is exactly how you
     estimate recall on a 100 TB corpus without an all-pairs pass.
     """
-    docs = _docs(spark, sf_dir)
-    tok_df = docs.select("doc_id", ta.ws_tokens(F.col("text")).alias("t"))
-    toks = F.col("t")
-    shingles = _word_shingles(toks)
-    # Same compact per-doc hash-array pin as minhash_pairs (round 15):
-    # the md5+conv hashing runs once per shingle inside the pin, set
-    # sizes are size(harr) map-side (the old groupBy(doc_id) count and
-    # its shuffle are gone), and the self-join sides re-explode the
-    # cached array on the fly. Docs with no shingles had no exploded
-    # rows before, so filtering them keeps membership identical.
-    doc_sh = (
-        tok_df.select("doc_id", shingles.alias("sh")).select(
-            "doc_id",
-            F.expr(
-                "transform(sh, s ->"
-                " cast(conv(substr(md5(s), 1, 12), 16, 10) as bigint))"
-            ).alias("harr"),
-        )
-        .cache()
-        .filter(F.size("harr") > 0)
-    )
-    sizes = doc_sh.select("doc_id", F.size("harr").cast("long").alias("n"))
-    shingle = doc_sh.select("doc_id", F.explode("harr").alias("h"))
+    # The compact per-doc hash array is minhash_pairs' pin (the same
+    # frame dedup_minhash below reads): set sizes are size(harr)
+    # map-side and the self-join sides re-explode the cached array.
+    sig = minhash_signatures(_docs(spark, sf_dir))
+    sizes = sig.select("doc_id", F.size("harr").cast("long").alias("n"))
+    shingle = sig.select("doc_id", F.explode("harr").alias("h"))
     x = shingle.filter(F.col("doc_id") % RECALL_PROBE_MOD == 0).alias("x")
     y = shingle.alias("y")
     inter = (
@@ -1284,28 +1267,13 @@ def q_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     are precisely the skewed join keys; the 20× replication stress
     (tools/stress.py) is the adversarial case this bounds."""
     docs = _docs(spark, sf_dir)
-    tok_df = docs.select("doc_id", ta.ws_tokens(F.col("text")).alias("t"))
-    toks = F.col("t")
-    shingles = _word_shingles(toks)
-    # Per-doc hash-array pin (round 16 — minhash_pairs' compact
-    # intermediate, verdict item #4): the tokenize→shingle→md5 chain
-    # runs ONCE inside the pin; the three consumers below (the hot-set
-    # aggregate, the eval side, the train side) re-explode the cached
-    # array instead of each re-deriving the full hashing pass. The
-    # exploded rows are expression-identical to the old
-    # select(explode(shingles)) chain, so every downstream value is
-    # unchanged.
-    doc_sh = (
-        tok_df.select("doc_id", shingles.alias("sh")).select(
-            "doc_id",
-            F.expr(
-                "transform(sh, s ->"
-                " cast(conv(substr(md5(s), 1, 12), 16, 10) as bigint))"
-            ).alias("harr"),
-        )
-        .cache()
+    # The per-doc hash array is minhash_pairs' pin: the three consumers
+    # below (the hot-set aggregate, the eval side, the train side)
+    # re-explode the cached array instead of each re-deriving the
+    # hashing pass.
+    shingle = minhash_signatures(docs).select(
+        "doc_id", F.explode("harr").alias("h")
     )
-    shingle = doc_sh.select("doc_id", F.explode("harr").alias("h"))
     n_docs = docs.agg(F.count(F.lit(1)).alias("_n_docs"))
     hot = (
         shingle.join(F.broadcast(n_docs))

@@ -42,6 +42,7 @@ from dist_mapreduce_spark.plans.index_commit import (
     write_index_base,
 )
 from dist_mapreduce_spark.plans.registry import query
+from dist_mapreduce_spark.session import spread
 from dist_mapreduce_spark.sources.tables import load_table
 
 # ------------------------------------------------------------ chunking
@@ -715,10 +716,8 @@ def q_search_dense_maxp(spark: SparkSession, sf_dir: str) -> DataFrame:
     DENSE_QUERIES documents' first chunks."""
     # Repartition before the CPU-bound stub encode (see
     # _dense_chunk_vectors — one source split must not serialize it).
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .repartition(spark.sparkContext.defaultParallelism)
+    d = spread(
+        load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     )
     toks = ta.ws_tokens(F.col("text"))
     starts = F.when(
@@ -868,10 +867,7 @@ def _dense_chunk_vectors_from_docs(
     frame — the round-11 lifecycle ops feed it edited/sliced document
     sets (upsert batches) while the full corpus keeps the one-arg
     entry point above."""
-    d = (
-        docs.filter(F.col("text").isNotNull())
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    d = spread(docs.filter(F.col("text").isNotNull()))
     toks = ta.ws_tokens(F.col("text"))
     starts = F.when(
         F.size(F.col("toks")) <= 0, F.array().cast("array<int>")
@@ -1934,10 +1930,8 @@ def _dense_chunk_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact frame a real encoder fleet reads. Repartitioned so the
     downstream Arrow encoder stage gets parallel batches regardless of
     how few splits the source parquet arrives as."""
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .repartition(spark.sparkContext.defaultParallelism)
+    d = spread(
+        load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     )
     toks = ta.ws_tokens(F.col("text"))
     starts = F.when(

@@ -30,6 +30,7 @@ from dist_mapreduce_spark.functions.vectors import (
     norm2_spark_sql,
 )
 from dist_mapreduce_spark.plans.registry import query
+from dist_mapreduce_spark.session import spread
 from dist_mapreduce_spark.sources.tables import load_table
 
 N_QUERIES = 5        # query set: vec_id < 5
@@ -487,7 +488,6 @@ def ivf_topk_oracle(n_queries: int) -> str:
     )
 
 
-IVF_PROBES_CTE = ivf_probes_cte(N_QUERIES)
 IVF_TOPK_ORACLE = ivf_topk_oracle(N_QUERIES)
 
 
@@ -679,7 +679,7 @@ def assign_cells(
     """Append ``cell`` (the nearest centroid, gemm_rank_cells at r = 1)
     to ``df``. Repartitions first: assignment is CPU-bound per row and
     the source parquet's split count must not serialize it."""
-    df = df.repartition(spark.sparkContext.defaultParallelism)
+    df = spread(df)
     return gemm_rank_cells(df, cent_rows, 1, vec_col).withColumn(
         "cell", F.col("rcells")[0]
     ).drop("rcells")
@@ -1706,7 +1706,7 @@ def q_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         for qid, _ in q_rows
     )
     scored = (
-        emb.repartition(spark.sparkContext.defaultParallelism)
+        spread(emb)
         .withColumn("cells", F.expr(cells_expr))
         .select(
             "vec_id",
@@ -1748,7 +1748,6 @@ def q_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ADC pre-rank is closer to exact and the rerank depth can be shallow.
 # Train/encode/reconstruct are closed-form deterministic corpus
 # functions, so the whole pipeline stays exactly oracle-checkable.
-SQ_LEVELS = 255.0   # 8-bit code points 0..255
 SQ_RERANK = 32      # exact-rerank depth: SQ8's ADC ranks on 64 bytes
 #                     (vs PQ's 8), and the measured sf0.1 sweep is
 #                     recall@10 = 1.0 at EVERY depth 16/32/64/128 —
@@ -1934,7 +1933,7 @@ def q_sim_topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
         for qid, qv in q_rows
     )
     scored = (
-        conf.repartition(spark.sparkContext.defaultParallelism)
+        spread(conf)
         .withColumn("codes", F.expr(sq8_codes_expr(lo, hi)))
         .withColumn("recon", F.expr(sq8_recon_expr(lo, hi)))
         .select(
@@ -2175,7 +2174,7 @@ def q_sim_topk_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
         for qid, qv in q_rows
     )
     hammed = (
-        conf.repartition(spark.sparkContext.defaultParallelism)
+        spread(conf)
         .withColumn("sig_lo", F.expr(_bin_sig_expr(mid, 0)))
         .withColumn("sig_hi", F.expr(_bin_sig_expr(mid, 1)))
         .select(

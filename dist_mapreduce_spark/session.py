@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: The one logger get_spark quiets below WARN (to ERROR).
 WINDOW_EXEC_LOGGER = "org.apache.spark.sql.execution.window.WindowExec"
@@ -80,3 +80,12 @@ def get_spark(
         WINDOW_EXEC_LOGGER, jvm.org.apache.logging.log4j.Level.ERROR
     )
     return spark
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` over ``defaultParallelism`` partitions — the
+    one way the package spreads a CPU-bound stage (a GEMM, an encoder,
+    the MinHash kernel) whose input arrives as a single split: every
+    test and gate parquet file is one row group, so its scan is one
+    task however many cores the session has."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)

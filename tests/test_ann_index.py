@@ -28,6 +28,51 @@ def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _plan_nodes(df) -> list:
+    """Every node of df's executed plan, INCLUDING adaptive query
+    stages (AQE wraps the join plan; collectLeaves alone stops at
+    stage boundaries)."""
+
+    def walk(node, out):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            walk(node.executedPlan(), out)
+            return
+        if name.endswith("QueryStageExec"):
+            walk(node.plan(), out)
+            return
+        out.append(node)
+        it = node.children().iterator()
+        while it.hasNext():
+            walk(it.next(), out)
+
+    nodes: list = []
+    walk(df._jdf.queryExecution().executedPlan(), nodes)
+    return nodes
+
+
+def _scans_under(nodes: list, root: str) -> list:
+    """The file scans among ``nodes`` that read below directory
+    ``root``, matched on the root paths the scan's file index holds —
+    not on its printed location, which Spark cuts at
+    spark.sql.maxMetadataStringLength characters."""
+    root = os.path.abspath(root).rstrip("/")
+
+    def reads_root(node) -> bool:
+        it = node.relation().location().rootPaths().iterator()
+        while it.hasNext():
+            p = it.next().toUri().getPath().rstrip("/")
+            if p == root or p.startswith(root + "/"):
+                return True
+        return False
+
+    return [
+        n
+        for n in nodes
+        if n.getClass().getSimpleName() == "FileSourceScanExec" and reads_root(n)
+    ]
+
+
 def _scan_partitions_read(df) -> int:
     """numPartitions metric of the (single) parquet scan leaf — the
     count of hive partition DIRECTORIES the executed scan actually
@@ -643,30 +688,7 @@ def test_batched_serving_one_scan_union_of_probed_cells(spark):
     rows = df.collect()
     assert len({r["query_id"] for r in rows}) == len(q_rows)
 
-    # Walk the executed plan INCLUDING adaptive query stages (AQE wraps
-    # the join plan; collectLeaves alone stops at stage boundaries).
-    def walk(node, out):
-        name = node.getClass().getSimpleName()
-        if name == "AdaptiveSparkPlanExec":
-            walk(node.executedPlan(), out)
-            return
-        if name.endswith("QueryStageExec"):
-            walk(node.plan(), out)
-            return
-        out.append(node)
-        it = node.children().iterator()
-        while it.hasNext():
-            walk(it.next(), out)
-
-    nodes: list = []
-    walk(df._jdf.queryExecution().executedPlan(), nodes)
-    tag = os.path.basename(path)
-    index_scans = [
-        n
-        for n in nodes
-        if n.getClass().getSimpleName() == "FileSourceScanExec"
-        and tag in n.toString()
-    ]
+    index_scans = _scans_under(_plan_nodes(df), path)
     assert len(index_scans) == 1, f"expected ONE index scan, saw {len(index_scans)}"
     plan_str = index_scans[0].toString()
     assert "PartitionFilters" in plan_str and "cell" in plan_str, plan_str
@@ -772,29 +794,8 @@ def test_ivfpq_pruned_serves_stored_codes(spark):
     pruned = {tuple(r) for r in df.collect()}
     assert batch == pruned and len(pruned) > 0
     path, _, _ = build_ivfpq_index(spark, SF)
-    tag = os.path.basename(path)
-
-    def walk(node, out):
-        name = node.getClass().getSimpleName()
-        if name == "AdaptiveSparkPlanExec":
-            walk(node.executedPlan(), out)
-            return
-        if name.endswith("QueryStageExec"):
-            walk(node.plan(), out)
-            return
-        out.append(node)
-        it = node.children().iterator()
-        while it.hasNext():
-            walk(it.next(), out)
-
-    nodes: list = []
-    walk(df._jdf.queryExecution().executedPlan(), nodes)
-    index_scans = [
-        n
-        for n in nodes
-        if n.getClass().getSimpleName() == "FileSourceScanExec"
-        and tag in n.toString()
-    ]
+    nodes = _plan_nodes(df)
+    index_scans = _scans_under(nodes, path)
     assert index_scans, "no scan of the codes-augmented index found"
     assert any("codes" in n.toString() for n in index_scans)
     for n in index_scans:

@@ -66,15 +66,15 @@ def test_avi_roundtrip_property(payload):
 
 
 def test_word_shingles_safe_on_blank_docs(spark):
-    """ANSI-mode regression: the shingle builder (used by
-    dedup_minhash / _recall / contamination_ngram) must not throw
+    """ANSI-mode regression: the SQL shingle builder (the reference
+    the MinHash kernel is tested against) must not throw
     INVALID_ARRAY_INDEX on empty or sub-k token arrays — blank
     documents exist in real corpora even though the driver corpus has
     none."""
     from pyspark.sql import functions as F
 
     from dist_mapreduce_spark.operators.text_analysis import ws_tokens
-    from dist_mapreduce_spark.plans.llm_pipeline import _word_shingles
+    from tests.test_minhash_kernel import _word_shingles
 
     df = spark.createDataFrame(
         [(0, ""), (1, "   "), (2, "one"), (3, "one two"),

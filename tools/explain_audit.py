@@ -24,6 +24,139 @@ def _content_pos(line: str) -> int:
     return m.start() if m is not None else len(line)
 
 
+def _tree_lines(plan: str) -> list[str]:
+    """The plan's tree lines. An expression that holds a newline (a
+    regex literal over whitespace, say) prints across several lines;
+    after the first line every tree line starts with indentation or a
+    tree-drawing prefix, so a line that starts with anything else
+    continues the line above it."""
+    lines: list[str] = []
+    for line in plan.splitlines():
+        if lines and _content_pos(line) == 0:
+            lines[-1] += "\n" + line
+        else:
+            lines.append(line)
+    return lines
+
+
+_HEADER = re.compile(r"^( *)\+- == (Final|Current|Initial) Plan ==")
+
+#: Nodes that print no child line: scans (an InMemoryTableScan's
+#: relation is an inner child, two levels down) and finished adaptive
+#: plans (their plans print under headers; an unexecuted one prints
+#: its plan as its child).
+_LEAVES = ("FileScan", "Scan", "LocalTableScan", "Range", "ReusedExchange",
+           "BatchScan", "InMemoryTableScan", "AdaptiveSparkPlan")
+
+
+def _node_name(content: str) -> str:
+    name = re.sub(r"^\*\(\d+\) ", "", content).split(" ", 1)[0]
+    if name == "AdaptiveSparkPlan" and "isFinalPlan=true" not in content:
+        return "AdaptiveSparkPlan(unfinished)"
+    return name
+
+
+class _Section:
+    """One tree printed from column ``base``: the whole plan, or the
+    body under one ``== ... Plan ==`` header."""
+
+    def __init__(self, base: int, depth: int, dropped: bool = False,
+                 initial: bool = False):
+        self.base = base
+        self.depth = depth  # true depth of the section's root
+        self.dropped = dropped  # inside an initial plan
+        self.initial = initial  # the body of an initial-plan header itself
+        self.last = -1  # level of the section's last line
+        self.more: dict[int, bool] = {}  # level -> printed ":-"
+        self.names: dict[int, str] = {}  # level -> node name
+        # header column of each adaptive node -> (its depth, headers seen)
+        self.adaptive: dict[int, tuple[int, int]] = {}
+
+    def takes(self, level: int, name: str, executed: bool) -> bool:
+        if self.initial and executed and "InMemoryRelation" not in (
+            self.names.get(k) for k in range(level)
+        ):
+            return False
+        if self.last < 0:
+            return level == 0
+        if level == self.last + 1:
+            return self.names[self.last] not in _LEAVES
+        if level == self.last + 2:
+            return (
+                "Subquery" in name
+                or name == "InMemoryRelation"
+                or self.names.get(level - 2) == "InMemoryRelation"
+            )
+        return 1 <= level <= self.last and self.more.get(level, False)
+
+
+def _final_tree(plan: str) -> str:
+    """The executed plan's tree without its initial plans, each line
+    re-indented to its true depth.
+
+    A finalized adaptive plan prints its initial plan after the final
+    one, and so does every adaptive plan nested in it (a cached relation
+    built over an exchange, a dynamic-pruning subquery). Spark prints a
+    nested plan's ``== Final Plan ==`` / ``== Initial Plan ==`` headers
+    at 3 × the adaptive node's depth within the tree section it sits
+    in, not at the node's column, and the section's body below at that
+    column + 3; the enclosing tree then resumes at its own columns, its
+    `:` marks lost. So indentation alone cannot delimit a block: each
+    section is followed as a tree. A line continues a section when it
+    is a child of the section's last line (one level deeper; two for an
+    inner child — a cached relation, its plan, a subquery), or a later
+    sibling of a node printed with `:-` (more siblings to come); a leaf
+    has no child, and an executed node (a query stage, a codegen id)
+    sits in an initial plan only under a cached relation. Anything else
+    closes the section and is tried against the one around it. Initial-plan
+    sections and header lines are dropped."""
+    top = _Section(base=0, depth=0)
+    stack = [top]
+    out: list[str] = []
+    for line in _tree_lines(plan):
+        m = _HEADER.match(line)
+        if m:
+            # The innermost adaptive node at this column still waiting
+            # for this header: its first one, then its initial plan.
+            col, initial = len(m.group(1)), m.group(2) == "Initial"
+            owners = [k for k, sec in enumerate(stack)
+                      if sec.adaptive.get(col, (0, 2))[1] == int(initial)]
+            if not owners:
+                continue
+            del stack[owners[-1] + 1:]
+            sec = stack[-1]
+            depth = sec.adaptive[col][0]
+            sec.adaptive[col] = (depth, int(initial) + 1)
+            stack.append(_Section(col + 3, depth + 1, sec.dropped or initial, initial))
+            continue
+        cp = _content_pos(line)
+        first = len(line) - len(line.lstrip(" "))
+        name = _node_name(line[cp:])
+        # Query stages and codegen ids exist only once a plan has run:
+        # in an initial plan they appear only under a cached relation.
+        executed = "QueryStage" in name or name == "AQEShuffleRead" or bool(
+            re.match(r"\*\(\d+\) ", line[cp:])
+        )
+        while True:
+            sec = stack[-1]
+            rel = cp - sec.base
+            level = rel // 3
+            fits = first >= sec.base and rel % 3 == 0 and sec.takes(level, name, executed)
+            if fits or sec is top:
+                break
+            stack.pop()
+        level = max(level, 0)
+        sec.last = level
+        sec.more[level] = line[cp - 3:cp - 1] == ":-"
+        sec.names[level] = name
+        depth = sec.depth + level
+        if name.startswith("AdaptiveSparkPlan"):
+            sec.adaptive[3 * level] = (depth, 0)
+        if not sec.dropped:
+            out.append("   " * depth + ("+- " if depth else "") + line[cp:])
+    return "\n".join(out)
+
+
 def _dedupe_cached(plan: str) -> str:
     """Drop REPRINTS of cached subplans (round-15 ADVICE): every
     InMemoryTableScan re-prints its InMemoryRelation's entire cached
@@ -33,7 +166,7 @@ def _dedupe_cached(plan: str) -> str:
     plan, so deduping on the expr-id-normalized subtree counts each
     cache entry exactly once — the first print survives, later
     reprints keep only their one-line InMemoryRelation marker."""
-    lines = plan.splitlines()
+    lines = _tree_lines(plan)
     out: list[str] = []
     seen: set[str] = set()
     i = 0
@@ -54,12 +187,14 @@ def _dedupe_cached(plan: str) -> str:
         # prefixes) and carry fresh expr/codegen ids.
         body = "\n".join(ln[_content_pos(ln):] for ln in block)
         key = re.sub(r"#\d+L?|plan_id=\d+|\*\(\d+\)", "#", body)
+        out.append(line)
         if key in seen:
-            out.append(line)  # keep the marker, drop the cached body
+            i = j  # keep the marker, drop the cached body
         else:
+            # Walk into the first print: it holds the reprints of the
+            # cached relations its own plan reads.
             seen.add(key)
-            out.extend(block)
-        i = j
+            i += 1
     return "\n".join(out)
 
 
@@ -69,7 +204,7 @@ def _windows_over_agg(plan: str) -> list[bool]:
     (bounded) frame — the invariant that makes a single-partition
     global window safe (round-15 verdict item: a global window over an
     unbounded key space would single-partition the corpus)."""
-    lines = plan.splitlines()
+    lines = _tree_lines(plan)
     flags: list[bool] = []
     for i, line in enumerate(lines):
         if not re.search(r"\bWindow(GroupLimit)? \[", line):
@@ -93,10 +228,7 @@ def parse_plan(name: str, plan: str) -> dict:
     string — shared by the batch audit below and the streaming audit
     (tools/stream_explain.py parses micro-batch executed plans with
     the SAME extraction so the EXPLAIN.md columns mean one thing)."""
-    # The finalized adaptive plan prints "+- == Initial Plan ==" after
-    # the real one — drop it or every count doubles.
-    plan = plan.split("== Initial Plan ==")[0]
-    plan = _dedupe_cached(plan)
+    plan = _dedupe_cached(_final_tree(plan))
     # toString truncates long schema lists mid-entry ("struct<a:int,b..."
     # with no closing '>'), so capture to end-of-line and trim. A
     # zero-column count(*) scan renders as an explicit sentinel, not ''
@@ -115,6 +247,7 @@ def parse_plan(name: str, plan: str) -> dict:
         "codegen_spans": len(set(re.findall(r"\*\((\d+)\)", plan))),
         "python_stages": plan.count("ArrowEvalPython")
         + plan.count("MapInPandas")
+        + plan.count("MapInArrow")
         + plan.count("FlatMapGroupsInPandas"),
         "scan_cols": [s[:80] for s in scans],
         "pushed_filters": [p for p in pushed if p],
